@@ -10,7 +10,9 @@ object RunSome {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val spark = Sessions.local()
+    val w0 = System.nanoTime()
     Tables.all.foreach(t => Tables.df(spark, sfDir, t).count())
+    println(f"[runsome] tables warm: ${(System.nanoTime() - w0) / 1e9}%.2f s")
     args.drop(1).foreach { prefix =>
       val name = SparkEntry.queries.keys.toSeq.sorted.find(_.startsWith(prefix))
         .getOrElse(sys.error(s"no query matches prefix $prefix"))

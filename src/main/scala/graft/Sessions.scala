@@ -49,6 +49,15 @@ object Sessions {
       .config("spark.sql.maxPlanStringLength", "8192")
       // events.parquet carries INT64 TIMESTAMP(NANOS) — see Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Without native Hadoop IO, the stock `file:` FileSystem forks a
+      // `chmod` for every file and dir it creates: parquet parts, .crc
+      // sidecars, _SUCCESS, committer task/job dirs, the stream's
+      // landing files: 284 forks of 3-4 ms each in one q226 + q227
+      // pass at sf0.1. graft.io.LocalFileSystem sets the same bits
+      // through java.nio. The key binds only the `file:` scheme, so an
+      // HDFS/S3 deployment never resolves it, and unlike the checkpoint
+      // manager below it needs no master guard.
+      .config("spark.hadoop.fs.file.impl", "graft.io.LocalFileSystem")
     // Local masters checkpoint streams to the local FS, where the default
     // FileContext-based manager FORKS a process per permission-carrying
     // call (no native Hadoop IO → Shell.runCommand `chmod`/`ls -ld`) on
@@ -67,15 +76,36 @@ object Sessions {
       Runtime.getRuntime.availableProcessors().toString)
     val spark = builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the maxPlanStringLength cap above fires routinely by design; the
-    // per-truncation WARN would spam every bench/verify log. Stated
-    // trade: this silences the WHOLE logger, not just that message —
-    // acceptable because the class emits only string-truncation
-    // notices (no correctness signals), and ERROR-level still passes.
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.catalyst.util.StringUtils",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    quietPlanTruncation()
     spark
+  }
+
+  /** The maxPlanStringLength cap above fires routinely by design, and
+    * its per-truncation WARN would spam every bench/verify log. Drop
+    * exactly that notice with a regex filter on its logger; every
+    * other message of `catalyst.util.StringUtils` still passes at the
+    * session's level. */
+  private[graft] def quietPlanTruncation(): Unit = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.config.LoggerConfig
+    import org.apache.logging.log4j.core.filter.RegexFilter
+    val name = "org.apache.spark.sql.catalyst.util.StringUtils"
+    LogManager.getContext(false) match {
+      case ctx: LoggerContext =>
+        val cfg = ctx.getConfiguration
+        val own = cfg.getLoggerConfig(name) match {
+          case lc if lc.getName == name => lc
+          case _ => // level null: inherit, so setLogLevel still governs it
+            val lc = new LoggerConfig(name, null, true)
+            cfg.addLogger(name, lc)
+            lc
+        }
+        own.addFilter(RegexFilter.createFilter(
+          "(?s)Truncated the string representation of a plan since it was too long.*",
+          null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+        ctx.updateLoggers()
+      case _ => () // another logging backend: leave it as configured
+    }
   }
 }

@@ -248,13 +248,16 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
     * manifest protocol — direct write to a fresh epoch prefix, then
     * manifest + pointer commit replacing the batch's entry.
     *
-    * The write shuffle targets exactly `buckets` partitions keyed on
-    * the bucket, yielding ~one file per bucket per delta: deltas are
-    * BATCH-sized, and letting the session's shuffle partitions each
-    * write into every bucket dir produced up to 32x16 tiny files per
-    * delta — measured as a dominant replay cost (file-open overhead on
-    * both sides). At production batch sizes the partition count scales
-    * with batch bytes over target file size instead. */
+    * The write shuffle is keyed on the bucket alone, so every bucket
+    * lands in exactly ONE reducer and each commit (delta or base)
+    * holds at most one file per bucket dir — the invariant reads rely
+    * on (DeltaStoreLayoutSpec pins it). Letting an unkeyed shuffle
+    * write every partition into every bucket dir produced up to 32x16
+    * tiny files per delta, measured as a dominant replay cost. The
+    * partition COUNT is the session's (shuffle partitions, coalesced
+    * by AQE to the bytes written): a 10-row delta runs one write task,
+    * a large one up to the session's parallelism, and `buckets` only
+    * sets the [[gb]] hash. */
   def append(df: DataFrame, batchId: Int, within: Seq[Column]): Unit =
     appendWith(df, batchId, within, Seq("gbucket"))
 
@@ -280,7 +283,7 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
       println(s"[store] appendWith batch=$batchId dir=$dir thread=${Thread.currentThread().getName}")
     checkProtocol()
     def write(target: java.io.File): Unit =
-      df.repartition(buckets, col("gbucket"))
+      df.repartition(col("gbucket"))
         .sortWithinPartitions((partCols.map(col) ++ within): _*)
         .write.partitionBy(partCols: _*).mode("overwrite")
         .parquet(target.getPath)
@@ -385,7 +388,7 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
     if (live.nonEmpty) {
       val k = live.map(_._2).max
       val folded = mkFolded(())
-        .repartition(buckets, col("gbucket"))
+        .repartition(col("gbucket"))
         .sortWithinPartitions((partCols.map(col) ++ within): _*)
       if (manifest) {
         val (epoch0, _) = readManifest().getOrElse((0L, Nil))

@@ -29,6 +29,14 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * java.nio performs the same operations as plain syscalls; checkpoint
   * metadata never needs Hadoop permission semantics.
   *
+  * Data writes (parquet parts, committer dirs, the stream's `in/`
+  * files) fork no more either: they go through the `file:` FileSystem
+  * [[graft.io.LocalFileSystem]], which sets permissions through nio.
+  * This manager stays for its non-overwrite close. That close is one
+  * atomic `createLink`, while Spark's FileSystemBasedCheckpointFileManager
+  * checks `exists` and then renames, which leaves a window for a second
+  * writer between the two.
+  *
   * Scale note: this is LOCAL-FS ONLY and wired up only for `local[*]`
   * sessions (Sessions.local). A cluster deployment checkpoints to
   * HDFS/S3, where the default FileContext/FileSystem managers are
