@@ -39,6 +39,14 @@ object Q {
         System.getProperty("java.io.tmpdir", "/tmp")).stripSuffix("/") +
       s"/graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
 
+  /** [[scratch]] emptied by [[rmrf]]: the root a commit-protocol query
+    * starts from, so a rerun never sees a previous run's stores. */
+  def fresh(s: SparkSession, tag: String, dir: String): String = {
+    val root = scratch(s, tag, dir)
+    rmrf(new java.io.File(root))
+    root
+  }
+
   /** Fixed-location artifact dir a DuckDB oracle can read back. Unlike
     * [[scratch]] the root is NOT scale-dir-keyed — the oracle SQL is a
     * static string, so the path must be knowable without `dir` — and

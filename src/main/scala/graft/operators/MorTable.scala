@@ -149,9 +149,7 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // DeltaStore batch ids are Int; a stream epoch past 2^31 must
-        // fail loudly, not wrap negative and corrupt the LWW order
-        require(id <= Int.MaxValue, s"stream batch id $id exceeds Int range")
+        val bid = graft.streaming.Replay.batchId(id)
         val b = orderCol match {
           case Some(c) => batch
             .withColumn("_vrn", row_number().over(
@@ -160,7 +158,7 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
             .where(col("_vrn") === 1).drop("_vrn")
           case None => batch.dropDuplicates(keyCols)
         }
-        if (!b.isEmpty) upsert(b, id.toInt)
+        if (!b.isEmpty) upsert(b, bid)
         compactEvery.foreach { n =>
           if (id % n == n - 1) compact(batch.sparkSession,
             StructType(batch.schema.fields.toSeq))

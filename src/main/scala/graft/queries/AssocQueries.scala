@@ -440,9 +440,7 @@ object AssocQueries {
     Q(
       "q224_triangle_count_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q224_triidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q224_triidx", dir)
         val minSupport = 5L
         val os = Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
@@ -498,9 +496,9 @@ object AssocQueries {
 
     // ----------------------------------------------------------------
     // q225: STREAMING triangle maintenance — q224's TriIndex fold
-    // deployed at the ingestion edge under the q152 two-wave
-    // checkpoint-resume protocol, making q203's oracle gate the SAME
-    // count through three consumers (the q62/q219/q221 move): one-shot
+    // deployed at the ingestion edge through Replay.stream, making
+    // q203's oracle gate the SAME count through three consumers (the
+    // q62/q219/q221 move): one-shot
     // (q203), batch-incremental (q224), and this stream. Per
     // micro-batch the state IO is O(batch) on BOTH sides: foldWave
     // appends only the batch's adjacency/degree rows and reads only
@@ -514,9 +512,7 @@ object AssocQueries {
     Q(
       "q225_stream_triangles",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q225_streamtri", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q225_streamtri", dir)
         val minSupport = 5L
         val os = Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
@@ -532,55 +528,34 @@ object AssocQueries {
           .where(col("w") >= minSupport)
           .select("u", "v")
           .localCheckpoint()
-        val skType = Tables.lineitem(s, dir).schema("l_suppkey").dataType
-        val eSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("u", skType),
-          org.apache.spark.sql.types.StructField("v", skType)))
         def latestTotalBelow(id: Long): Long =
-          Option(new java.io.File(s"$out/total").listFiles()).toSeq.flatten
-            .map(_.getName).filter(_.startsWith("state="))
-            .map(_.stripPrefix("state=").toLong).filter(_ < id)
-            .maxOption.map { k =>
-              s.read.parquet(s"$out/total/state=$k").head().getLong(0)
-            }.getOrElse(0L)
-        def drain(): Unit = {
-          val q = s.readStream.schema(eSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction policy at batch start (threshold 0 —
-              // fires under this two-batch gate): only the durably-
-              // committed tail folds; the degree fold is additive, so
-              // the batch's own delta must stay live for replay
-              graft.operators.TriIndex.maybeCompact(s, s"$out/store",
-                maxDeltas = 0, upTo = Some(id.toInt - 1))
-              require(graft.operators.DeltaStore(s"$out/store")
-                .deltaCount(Some(id.toInt - 1)) == 0,
-                "q225: compaction policy left committed deltas live")
-              val delta = graft.operators.TriIndex
-                .foldWave(s, b, s"$out/store", id.toInt)
-              val total = latestTotalBelow(id) + delta
-              s.createDataFrame(
-                  java.util.List.of(org.apache.spark.sql.Row(total)),
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("total",
-                      org.apache.spark.sql.types.LongType))))
-                .coalesce(1).write.mode("overwrite")
-                .parquet(s"$out/total/state=$id")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q225 drain did not finish in 300 s")
-          }
+          graft.streaming.Replay.latestBelow(s"$out/total", id).map { k =>
+            s.read.parquet(s"$out/total/state=$k").head().getLong(0)
+          }.getOrElse(0L)
+        graft.streaming.Replay.stream(s, out,
+            Seq(edges.where(pmod(hash(col("u"), col("v")), lit(2)) === 0),
+              edges.where(pmod(hash(col("u"), col("v")), lit(2)) === 1)),
+            parts = 2) { (b, id) =>
+          // auto-compaction policy at batch start (threshold 0 —
+          // fires under this two-batch gate): only the durably-
+          // committed tail folds; the degree fold is additive, so
+          // the batch's own delta must stay live for replay
+          graft.operators.TriIndex.maybeCompact(s, s"$out/store",
+            maxDeltas = 0, upTo = Some(id - 1))
+          require(graft.operators.DeltaStore(s"$out/store")
+            .deltaCount(Some(id - 1)) == 0,
+            "q225: compaction policy left committed deltas live")
+          val delta = graft.operators.TriIndex
+            .foldWave(s, b, s"$out/store", id)
+          val total = latestTotalBelow(id) + delta
+          s.createDataFrame(
+              java.util.List.of(org.apache.spark.sql.Row(total)),
+              org.apache.spark.sql.types.StructType(Seq(
+                org.apache.spark.sql.types.StructField("total",
+                  org.apache.spark.sql.types.LongType))))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$out/total/state=$id")
         }
-        edges.where(pmod(hash(col("u"), col("v")), lit(2)) === 0)
-          .repartition(2).write.parquet(s"$out/in")
-        drain()
-        edges.where(pmod(hash(col("u"), col("v")), lit(2)) === 1)
-          .repartition(2).write.mode("append").parquet(s"$out/in")
-        drain()
         // every consumer of the pinned frame has run (waves landed,
         // report reads the committed store) - release its blocks
         graft.Q.unpin(edges)
@@ -609,9 +584,9 @@ object AssocQueries {
 
     // ----------------------------------------------------------------
     // q220: STREAMING skyline maintenance — q214's fold deployed at
-    // the ingestion edge under the q152 two-wave checkpoint-resume
-    // protocol, making q200's oracle gate the SAME frontier through
-    // three consumers (the q192/q209/q216 move): one-shot (q200),
+    // the ingestion edge through Replay.stream, making q200's oracle
+    // gate the SAME frontier through three consumers (the
+    // q192/q209/q216 move): one-shot (q200),
     // batch-incremental (q214), and this stream. Each micro-batch
     // folds frontier ∪ batch through the skyline operator (the
     // skyline(A∪B) = skyline(skyline(A)∪B) identity — frontier-sized
@@ -619,10 +594,9 @@ object AssocQueries {
     // VERSIONED state dir keyed by the STREAMING batch id; a batch
     // reads the newest state BELOW its own id, so a checkpoint replay
     // recomputes from the same predecessor and overwrites its own
-    // version — deterministic under the replay contract. The stream
-    // is started THREE times on one checkpoint (three waves, so the
-    // version-GC policy below has a superseded version to collect);
-    // the report reads the final version. AUTO-GC policy (the
+    // version — deterministic under the replay contract. Three waves,
+    // so the version-GC policy below has a superseded version to
+    // collect; the report reads the final version. AUTO-GC policy (the
     // snapshot-state analog of delta auto-compaction): at batch start,
     // versions below the batch's replay predecessor can never be read
     // again — neither by this batch nor by a replay of it — and are
@@ -630,59 +604,36 @@ object AssocQueries {
     Q(
       "q220_stream_skyline",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q220_streamsky", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q220_streamsky", dir)
         val parts = Tables.part(s, dir)
           .select("p_partkey", "p_retailprice", "p_size")
-        def latestBelow(id: Long): Option[String] =
-          Option(new java.io.File(s"$out/sky").listFiles()).toSeq.flatten
-            .map(_.getName).filter(_.startsWith("state="))
-            .map(_.stripPrefix("state=").toLong).filter(_ < id)
-            .maxOption.map(k => s"$out/sky/state=$k")
-        def drain(): Unit = {
-          val q = s.readStream.schema(parts.schema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // version-GC policy: everything below the replay
-              // predecessor is unreachable — delete, then assert the
-              // bound (predecessor + at most this batch's own stale
-              // version from a crashed attempt)
-              latestBelow(id).foreach { keep =>
-                Option(new java.io.File(s"$out/sky").listFiles())
-                  .toSeq.flatten
-                  .filter(f => f.getName.startsWith("state=") &&
-                    f.getName.stripPrefix("state=").toLong <
-                      keep.stripPrefix(s"$out/sky/state=").toLong)
-                  .foreach(rm)
-                require(Option(new java.io.File(s"$out/sky").listFiles())
-                  .toSeq.flatten.count(_.getName.startsWith("state=")) <= 2,
-                  "q220: version GC did not bound live state")
-              }
-              val prev = latestBelow(id)
-                .map(s.read.parquet(_)).getOrElse(b.limit(0))
-              graft.operators.Skyline
-                .skyline2d(prev.unionByName(b), "p_retailprice", "p_size")
-                .write.mode("overwrite").parquet(s"$out/sky/state=$id")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q220 drain did not finish in 300 s")
+        def latestBelow(id: Long): Option[Long] =
+          graft.streaming.Replay.latestBelow(s"$out/sky", id)
+        graft.streaming.Replay.stream(s, out,
+            (0 until 3).map(i => parts.where(col("p_partkey") % 3 === i)),
+            parts = 2) { (b, id) =>
+          // version-GC policy: everything below the replay
+          // predecessor is unreachable — delete, then assert the
+          // bound (predecessor + at most this batch's own stale
+          // version from a crashed attempt)
+          latestBelow(id).foreach { keep =>
+            Option(new java.io.File(s"$out/sky").listFiles())
+              .toSeq.flatten
+              .filter(f => f.getName.startsWith("state=") &&
+                f.getName.stripPrefix("state=").toLong < keep)
+              .foreach(graft.Q.rmrf)
+            require(Option(new java.io.File(s"$out/sky").listFiles())
+              .toSeq.flatten.count(_.getName.startsWith("state=")) <= 2,
+              "q220: version GC did not bound live state")
           }
+          val prev = latestBelow(id)
+            .map(k => s.read.parquet(s"$out/sky/state=$k"))
+            .getOrElse(b.limit(0))
+          graft.operators.Skyline
+            .skyline2d(prev.unionByName(b), "p_retailprice", "p_size")
+            .write.mode("overwrite").parquet(s"$out/sky/state=$id")
         }
-        parts.where(col("p_partkey") % 3 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        parts.where(col("p_partkey") % 3 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
-        parts.where(col("p_partkey") % 3 === 2).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
-        s.read.parquet(latestBelow(Long.MaxValue).get)
+        s.read.parquet(s"$out/sky/state=${latestBelow(Long.MaxValue).get}")
           .select("p_partkey", "p_retailprice", "p_size")
           .orderBy("p_partkey")
       },
@@ -1131,9 +1082,7 @@ object AssocQueries {
     Q(
       "q226_chi2_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q226_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q226_cells", dir)
         // derived ONCE (the q221 move): all three wave filters consume
         // this frame instead of re-scanning events per wave
         val ev = Tables.df(s, dir, "events")
@@ -1160,57 +1109,34 @@ object AssocQueries {
 
     // ----------------------------------------------------------------
     // q227: STREAMING CHI-SQUARE — q226's additive cell fold driven
-    // from a checkpointed stream under the q152 two-wave checkpoint-
-    // resume protocol, closing the three-consumer symmetry for the
-    // contingency statistic (one-shot q211, batch-incremental q226,
-    // this stream — the q62/q219/q221 move). appendBatch performs NO
+    // from a checkpointed stream (Replay.stream), closing the
+    // three-consumer symmetry for the contingency statistic (one-shot
+    // q211, batch-incremental q226, this stream — the q62/q219/q221
+    // move). appendBatch performs NO
     // reads of stored state, so a checkpoint replay rewrites its delta
     // from the batch alone — the simplest exactly-once contract in the
-    // engine. The stream is started twice on one checkpoint; the
-    // statistic is computed from the folded cells AFTER the drains by
-    // q211's arithmetic unchanged.
+    // engine. The statistic is computed from the folded cells AFTER
+    // the drains by q211's arithmetic unchanged.
     Q(
       "q227_stream_chi2",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q227_streamchi2", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q227_streamchi2", dir)
         val ev = Tables.df(s, dir, "events")
           .where(col("event_type").isin(chi2Types: _*))
           .select(col("event_id"), col("event_type"),
             (col("value") >= 50.0).as("hi"))
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("hi",
-            org.apache.spark.sql.types.BooleanType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction policy at batch start: the cell fold is
-              // additive, so only the durably-committed tail may fold
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                chi2CellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, chi2CellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q227 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              ev.where(pmod(hash(col("event_id")), lit(2)) === i)
+                .select("event_type", "hi")),
+            parts = 8) { (b, id) =>
+          // auto-compaction policy at batch start: the cell fold is
+          // additive, so only the durably-committed tail may fold
+          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+            chi2CellSchema, maxDeltas = 0, upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendBatch(s, b,
+            s"$out/store", id, chi2CellSchema)
         }
-        ev.where(pmod(hash(col("event_id")), lit(2)) === 0)
-          .select("event_type", "hi")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        ev.where(pmod(hash(col("event_id")), lit(2)) === 1)
-          .select("event_type", "hi")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         chi2FromCells(
           graft.operators.StatCellIndex.cells(s, s"$out/store",
             chi2CellSchema))
@@ -1230,9 +1156,7 @@ object AssocQueries {
     Q(
       "q228_kendall_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q228_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q228_cells", dir)
         val d18 = org.apache.spark.sql.types.DecimalType(18, 0)
         val li = Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_linenumber"),
@@ -1264,18 +1188,16 @@ object AssocQueries {
 
     // ----------------------------------------------------------------
     // q229: STREAMING KENDALL TAU-B — q228's cell fold at the
-    // ingestion edge under the q152 two-wave checkpoint-resume
-    // protocol: q223's oracle now gates the SAME statistic through
-    // three consumers (one-shot, batch-incremental, stream). Replay
+    // ingestion edge (Replay.stream): q223's oracle now gates the SAME
+    // statistic through three consumers (one-shot, batch-incremental,
+    // stream). Replay
     // safety is appendBatch's no-read contract; per micro-batch the
     // state IO is one grouped count to O(cells) rows and one atomic
     // delta, independent of corpus size.
     Q(
       "q229_stream_kendall",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q229_streamkendall", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q229_streamkendall", dir)
         val d18 = org.apache.spark.sql.types.DecimalType(18, 0)
         val li = Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_linenumber"),
@@ -1283,37 +1205,17 @@ object AssocQueries {
             (Q.dec2(col("l_extendedprice")) * 100).cast("long").as("cents"))
           .selectExpr("l_orderkey", "l_linenumber", "x",
             "cents div 100000 AS y")
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("x",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("y",
-            org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction policy at batch start (q227 discipline)
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                kendallCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, kendallCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q229 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === i)
+                .select("x", "y")),
+            parts = 8) { (b, id) =>
+          // auto-compaction policy at batch start (q227 discipline)
+          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+            kendallCellSchema, maxDeltas = 0, upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendBatch(s, b,
+            s"$out/store", id, kendallCellSchema)
         }
-        li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === 0)
-          .select("x", "y")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === 1)
-          .select("x", "y")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         kendallFromCells(
           graft.operators.StatCellIndex.cells(s, s"$out/store",
             kendallCellSchema)
@@ -1332,9 +1234,7 @@ object AssocQueries {
     Q(
       "q231_ks_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q231_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q231_cells", dir)
         // derived ONCE (the q221 move): the three wave filters consume
         // this frame instead of re-scanning orders per wave
         val o = Tables.orders(s, dir).select(
@@ -1365,52 +1265,30 @@ object AssocQueries {
 
     // ----------------------------------------------------------------
     // q232: STREAMING KOLMOGOROV-SMIRNOV — q231's cell fold at the
-    // ingestion edge under the q152 two-wave checkpoint-resume
-    // protocol; replay safety is appendBatch's no-read contract, and
-    // the auto-compaction policy folds the committed tail at each
+    // ingestion edge (Replay.stream); replay safety is appendBatch's
+    // no-read contract, and the auto-compaction policy folds the
+    // committed tail at each
     // batch start (the q227/q229 discipline). q215's oracle now gates
     // the statistic through three consumers.
     Q(
       "q232_stream_ks",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q232_streamks", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q232_streamks", dir)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
           when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
             .otherwise(0L).as("is_a"),
           floor(Q.dec2(col("o_totalprice"))).cast("long").as("v"))
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("is_a",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                ksCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, ksCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q232 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              o.where(pmod(hash(col("o_orderkey")), lit(2)) === i)
+                .select("is_a", "v")),
+            parts = 8) { (b, id) =>
+          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+            ksCellSchema, maxDeltas = 0, upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendBatch(s, b,
+            s"$out/store", id, ksCellSchema)
         }
-        o.where(pmod(hash(col("o_orderkey")), lit(2)) === 0)
-          .select("is_a", "v")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        o.where(pmod(hash(col("o_orderkey")), lit(2)) === 1)
-          .select("is_a", "v")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         ksFromByV(
           graft.operators.StatCellIndex.cells(s, s"$out/store", ksCellSchema)
             .groupBy("v")
@@ -1432,9 +1310,7 @@ object AssocQueries {
     Q(
       "q233_mwu_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q233_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q233_cells", dir)
         // derived ONCE (the q221 move)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
@@ -1464,44 +1340,22 @@ object AssocQueries {
     Q(
       "q234_stream_mwu",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q234_streammwu", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q234_streammwu", dir)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
           when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
             .otherwise(0L).as("is_a"),
           floor(Q.dec2(col("o_totalprice"))).cast("long").as("v"))
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("is_a",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                ksCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, ksCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q234 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              o.where(pmod(hash(col("o_orderkey")), lit(2)) === i)
+                .select("is_a", "v")),
+            parts = 8) { (b, id) =>
+          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+            ksCellSchema, maxDeltas = 0, upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendBatch(s, b,
+            s"$out/store", id, ksCellSchema)
         }
-        o.where(pmod(hash(col("o_orderkey")), lit(2)) === 0)
-          .select("is_a", "v")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        o.where(pmod(hash(col("o_orderkey")), lit(2)) === 1)
-          .select("is_a", "v")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         mwuFromByV(
           graft.operators.StatCellIndex.cells(s, s"$out/store", ksCellSchema)
             .groupBy("v")
@@ -1523,9 +1377,7 @@ object AssocQueries {
     Q(
       "q235_spearman_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q235_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q235_cells", dir)
         // derived ONCE (the q221 move)
         val li = Tables.lineitem(s, dir).select(
           col("l_orderkey"), col("l_linenumber"),
@@ -1552,43 +1404,21 @@ object AssocQueries {
     Q(
       "q236_stream_spearman",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q236_streamsp", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q236_streamsp", dir)
         val li = Tables.lineitem(s, dir).select(
           col("l_orderkey"), col("l_linenumber"),
           Q.dec2(col("l_quantity")).cast("long").as("x"),
           floor(Q.dec2(col("l_extendedprice"))).cast("long").as("y"))
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("x",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("y",
-            org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                kendallCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, kendallCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q236 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === i)
+                .select("x", "y")),
+            parts = 8) { (b, id) =>
+          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+            kendallCellSchema, maxDeltas = 0, upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendBatch(s, b,
+            s"$out/store", id, kendallCellSchema)
         }
-        li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === 0)
-          .select("x", "y")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === 1)
-          .select("x", "y")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         spearmanFromCells(
           graft.operators.StatCellIndex.cells(s, s"$out/store",
             kendallCellSchema))
@@ -1605,9 +1435,7 @@ object AssocQueries {
     Q(
       "q237_benford_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q237_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q237_cells", dir)
         // derived ONCE (the q221 move)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
@@ -1635,42 +1463,22 @@ object AssocQueries {
     Q(
       "q238_stream_benford",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q238_streambenford", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q238_streambenford", dir)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"),
           substring(
             (Q.dec2(col("o_totalprice")) * 100).cast("long").cast("string"),
             1, 1).cast("int").as("digit"))
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("digit",
-            org.apache.spark.sql.types.IntegerType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                benfordCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, benfordCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q238 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              o.where(pmod(hash(col("o_orderkey")), lit(2)) === i)
+                .select("digit")),
+            parts = 8) { (b, id) =>
+          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+            benfordCellSchema, maxDeltas = 0, upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendBatch(s, b,
+            s"$out/store", id, benfordCellSchema)
         }
-        o.where(pmod(hash(col("o_orderkey")), lit(2)) === 0)
-          .select("digit")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        o.where(pmod(hash(col("o_orderkey")), lit(2)) === 1)
-          .select("digit")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         benfordFromCounts(
           graft.operators.StatCellIndex.cells(s, s"$out/store",
             benfordCellSchema)
@@ -1692,9 +1500,7 @@ object AssocQueries {
     Q(
       "q239_ab_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q239_cells", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q239_cells", dir)
         // derived ONCE (the q221 move)
         val ev = Tables.df(s, dir, "events").select(
           col("event_id"), col("user_id"),
@@ -1722,42 +1528,20 @@ object AssocQueries {
     Q(
       "q240_stream_ab",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q240_streamab", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q240_streamab", dir)
         val ev = Tables.df(s, dir, "events").select(
           col("event_id"), col("user_id"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("is_p"))
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("is_p",
-            org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-                abCellSchema, maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendBatch(s, b,
-                s"$out/store", id.toInt, abCellSchema)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q240 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              ev.where(pmod(hash(col("event_id")), lit(2)) === i)
+                .select("user_id", "is_p")),
+            parts = 8) { (b, id) =>
+          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
+            abCellSchema, maxDeltas = 0, upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendBatch(s, b,
+            s"$out/store", id, abCellSchema)
         }
-        ev.where(pmod(hash(col("event_id")), lit(2)) === 0)
-          .select("user_id", "is_p")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        ev.where(pmod(hash(col("event_id")), lit(2)) === 1)
-          .select("user_id", "is_p")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         abTestFromUsers(
           graft.operators.StatCellIndex.cells(s, s"$out/store", abCellSchema)
             .groupBy("user_id")
@@ -1779,9 +1563,7 @@ object AssocQueries {
     Q(
       "q241_concentration_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q241_moments", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q241_moments", dir)
         // derived ONCE (the q221 move)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"), col("o_custkey").as("ck"),
@@ -1807,43 +1589,21 @@ object AssocQueries {
     Q(
       "q242_stream_concentration",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q242_streamconc", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q242_streamconc", dir)
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"), col("o_custkey").as("ck"),
           (Q.dec2(col("o_totalprice")) * 100).cast("long").as("rev_c"))
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("ck",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("rev_c",
-            org.apache.spark.sql.types.LongType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
-                revMomentSchema, Seq("rev_c"), maxDeltas = 0,
-                upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendAgg(s, b,
-                s"$out/store", id.toInt, revMomentSchema, Seq("rev_c"))
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q242 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              o.where(pmod(hash(col("o_orderkey")), lit(2)) === i)
+                .select("ck", "rev_c")),
+            parts = 8) { (b, id) =>
+          graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
+            revMomentSchema, Seq("rev_c"), maxDeltas = 0,
+            upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendAgg(s, b,
+            s"$out/store", id, revMomentSchema, Seq("rev_c"))
         }
-        o.where(pmod(hash(col("o_orderkey")), lit(2)) === 0)
-          .select("ck", "rev_c")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        o.where(pmod(hash(col("o_orderkey")), lit(2)) === 1)
-          .select("ck", "rev_c")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         concentrationFromRev(
           graft.operators.StatCellIndex.table(s, s"$out/store",
             revMomentSchema, Seq("rev_c")))
@@ -1864,9 +1624,7 @@ object AssocQueries {
     Q(
       "q245_basket_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q245_basket", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q245_basket", dir)
         // derived ONCE (the q221 move): all three wave filters consume
         // this frame; without the cut every wave re-ran the lineitem
         // scan + brand broadcast join
@@ -1898,9 +1656,7 @@ object AssocQueries {
     Q(
       "q246_stream_basket",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q246_streambasket", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q246_streambasket", dir)
         // derived ONCE (the q221 move): both wave writes filter this
         // frame instead of re-running the scan + brand join
         val lines = Tables.lineitem(s, dir)
@@ -1911,36 +1667,16 @@ object AssocQueries {
           .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
             col("p_brand").as("brand"))
           .localCheckpoint()
-        val inSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("ok",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("brand",
-            org.apache.spark.sql.types.StringType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.BasketIndex.maybeCompact(s, s"$out/store",
-                maxDeltas = 0, upTo = Some(id.toInt - 1))
-              graft.operators.BasketIndex.appendWave(s, b,
-                s"$out/store", id.toInt)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q246 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              lines.where(pmod(hash(col("ok"), col("ln")), lit(2)) === i)
+                .select("ok", "brand")),
+            parts = 8) { (b, id) =>
+          graft.operators.BasketIndex.maybeCompact(s, s"$out/store",
+            maxDeltas = 0, upTo = Some(id - 1))
+          graft.operators.BasketIndex.appendWave(s, b,
+            s"$out/store", id)
         }
-        lines.where(pmod(hash(col("ok"), col("ln")), lit(2)) === 0)
-          .select("ok", "brand")
-          .repartition(8).write.parquet(s"$out/in")
-        drain()
-        lines.where(pmod(hash(col("ok"), col("ln")), lit(2)) === 1)
-          .select("ok", "brand")
-          .repartition(8).write.mode("append").parquet(s"$out/in")
-        drain()
         // every consumer of the pinned frame has run (waves landed,
         // report reads the committed store) - release its blocks
         graft.Q.unpin(lines)
@@ -1972,9 +1708,7 @@ object AssocQueries {
     Q(
       "q214_skyline_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q214_skyidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q214_skyidx", dir)
         val parts = Tables.part(s, dir)
           .select("p_partkey", "p_retailprice", "p_size")
         // waves by key parity — NOT time/value-ordered: the fold

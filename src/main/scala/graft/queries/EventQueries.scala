@@ -320,9 +320,7 @@ object EventQueries {
       "q209_scd2_incremental",
       (s, dir) => {
         import graft.operators.Scd2Index
-        val root = graft.Q.scratch(s, "q209_scd2idx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q209_scd2idx", dir)
         // derived ONCE (the q221 move): the midpoint agg and both wave
         // filters consume this frame — 3 scans of events become 1
         val ev = Tables.events(s, dir)
@@ -703,10 +701,9 @@ object EventQueries {
 
     // ----------------------------------------------------------------
     // q210: STREAMING FUNNEL — q191's ordered conversion funnel
-    // maintained at the ingestion edge, under the q152 two-wave
-    // checkpoint-resume protocol (input lands in two waves split by
-    // event_id parity; the stream is STARTED TWICE on one checkpoint,
-    // so the resume path itself sits under the gate).
+    // maintained at the ingestion edge through Replay.stream (waves
+    // split by event_id parity, so the resume path itself sits under
+    // the gate).
     //
     // WHY the maintained state is the stage-event CANDIDATE LOG and
     // not per-batch anchors: funnel anchors are NOT additive across
@@ -740,48 +737,29 @@ object EventQueries {
     Q(
       "q210_stream_funnel",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q210_streamfunnel", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q210_streamfunnel", dir)
         val gap = 7L * 24 * 3600 * 1000000L
         val stages = Seq("view", "click", "purchase")
         val ev = Tables.df(s, dir, "events")
           .selectExpr("event_id", "user_id",
             s"${Tables.eventsTsMicrosSql(s, dir)} as us", "event_type")
         def latestBelow(id: Long): Option[String] =
-          Option(new java.io.File(s"$out/state").listFiles()).toSeq.flatten
-            .map(_.getName).filter(_.startsWith("state="))
-            .map(_.stripPrefix("state=").toLong).filter(_ < id)
-            .maxOption.map(k => s"$out/state/state=$k")
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              val rows = b.where(col("event_type")
-                  .isin("view", "click", "purchase"))
-                .select("user_id", "event_type", "us")
-              val prev = latestBelow(id)
-                .map(s.read.parquet(_)).getOrElse(rows.limit(0))
-              graft.operators.Funnel.pruneCandidates(
-                  prev.unionByName(rows),
-                  "user_id", "event_type", "us", stages, gap)
-                .write.mode("overwrite").parquet(s"$out/state/state=$id")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q210 drain did not finish in 300 s")
-          }
+          graft.streaming.Replay.latestBelow(s"$out/state", id)
+            .map(k => s"$out/state/state=$k")
+        graft.streaming.Replay.stream(s, out,
+            Seq(ev.where(col("event_id") % 2 === 0),
+              ev.where(col("event_id") % 2 === 1)),
+            parts = 2, perFile = true) { (b, id) =>
+          val rows = b.where(col("event_type")
+              .isin("view", "click", "purchase"))
+            .select("user_id", "event_type", "us")
+          val prev = latestBelow(id)
+            .map(s.read.parquet(_)).getOrElse(rows.limit(0))
+          graft.operators.Funnel.pruneCandidates(
+              prev.unionByName(rows),
+              "user_id", "event_type", "us", stages, gap)
+            .write.mode("overwrite").parquet(s"$out/state/state=$id")
         }
-        ev.where(col("event_id") % 2 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        ev.where(col("event_id") % 2 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         // report over the final in-loop-pruned state — the gate
         // certifies per-batch prune folds + report == one-shot funnel
         graft.operators.Funnel.report(
@@ -834,17 +812,15 @@ object EventQueries {
     // interleave times and trip the horizon guard by design); delta id
     // = the streaming batch id, so a checkpoint replay rewrites the
     // SAME delta idempotently and the horizon guard excludes the
-    // batch's own delta — exactly-once by construction. The stream is
-    // STARTED TWICE on one checkpoint (the q152 resume protocol): a
-    // re-processed wave 1 would stitch duplicated runs and fail the
-    // n_events columns, so the resume path itself is under the gate.
+    // batch's own delta — exactly-once by construction. Under
+    // Replay.stream's resume a re-processed wave 1 would stitch
+    // duplicated runs and fail the n_events columns, so the resume
+    // path itself is under the gate.
     Q(
       "q216_stream_scd2",
       (s, dir) => {
         import graft.operators.Scd2Index
-        val out = graft.Q.scratch(s, "q216_streamscd2", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q216_streamscd2", dir)
         // derived ONCE (the q221 move): the midpoint agg and both wave
         // landing writes consume this frame — 3 scans of events become 1
         val ev = Tables.events(s, dir)
@@ -855,36 +831,22 @@ object EventQueries {
         val mid = ev.agg(
           ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
           .head().getLong(0)
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction POLICY at batch start: fold the
-              // durably-committed delta tail (never the batch's own
-              // delta — a replayed batch must still exclude-and-replace
-              // it), threshold 0 so the policy fires under this gate;
-              // the postcondition is asserted, the firing itself is
-              // pinned in AutoCompactSpec
-              Scd2Index.maybeCompact(s, s"$out/store", maxDeltas = 0,
-                upTo = Some(id.toInt - 1))
-              require(graft.operators.DeltaStore(s"$out/store")
-                .deltaCount(Some(id.toInt - 1)) == 0,
-                "q216: compaction policy left committed deltas live")
-              Scd2Index.appendBatch(s, b, s"$out/store", id.toInt)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q216 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            Seq(ev.where(col("us") <= mid), ev.where(col("us") > mid)),
+            parts = 2) { (b, id) =>
+          // auto-compaction POLICY at batch start: fold the
+          // durably-committed delta tail (never the batch's own
+          // delta — a replayed batch must still exclude-and-replace
+          // it), threshold 0 so the policy fires under this gate;
+          // the postcondition is asserted, the firing itself is
+          // pinned in AutoCompactSpec
+          Scd2Index.maybeCompact(s, s"$out/store", maxDeltas = 0,
+            upTo = Some(id - 1))
+          require(graft.operators.DeltaStore(s"$out/store")
+            .deltaCount(Some(id - 1)) == 0,
+            "q216: compaction policy left committed deltas live")
+          Scd2Index.appendBatch(s, b, s"$out/store", id)
         }
-        ev.where(col("us") <= mid).repartition(2).write.parquet(s"$out/in")
-        drain()
-        ev.where(col("us") > mid).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         // every consumer of the pinned frame has run (waves landed,
         // report reads the committed store) - release its blocks
         graft.Q.unpin(ev)
@@ -953,9 +915,7 @@ object EventQueries {
       "q222_scd2_late_data",
       (s, dir) => {
         import graft.operators.{DeltaStore, MorTable, Scd2, Scd2Index}
-        val root = graft.Q.scratch(s, "q222_scd2late", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q222_scd2late", dir)
         // derived ONCE (the q221 move): the midpoint agg, the three
         // wave filters, and the repair's affected-key set consume this
         // frame — without the cut each bronze+silver feed re-scanned
@@ -1039,9 +999,7 @@ object EventQueries {
       "q230_scd2_backfill",
       (s, dir) => {
         import graft.operators.{DeltaStore, MorTable, Scd2Index}
-        val root = graft.Q.scratch(s, "q230_scd2bf", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q230_scd2bf", dir)
         // derived ONCE (the q221 move): the threshold agg, the four
         // wave filters, and the late key set each consumed this frame —
         // without the cut that was ~9 scans of events per run (every

@@ -253,9 +253,7 @@ object ExtraQueries {
     Q(
       "q121_stream_asof_enrich",
       (s, dir) => {
-        val out = Q.scratch(s, "q121_streamasof", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q121_streamasof", dir)
         val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
         ev.repartition(4).write.parquet(s"$out/in")
         val winner = org.apache.spark.sql.expressions.Window
@@ -267,21 +265,13 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "2").parquet(s"$out/in")
-          .writeStream
-          .option("checkpointLocation", s"$out/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.streaming.Replay.run(out, s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "2").parquet(s"$out/in")) {
+          (b, _) =>
             AsOfJoin.asofBackwardBroadcast(b, orders,
                 "user_id", "o_custkey", "ts", "o_orderdate",
                 Seq("asof_orderkey", "asof_totalprice"))
               .write.mode("append").parquet(s"$out/enriched")
-          }
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException("q121 drain did not finish in 300 s")
         }
         s.read.parquet(s"$out/enriched")
           .select("event_id", "user_id", "ts", "asof_orderkey", "asof_totalprice")
@@ -358,9 +348,7 @@ object ExtraQueries {
     // (asofSalted, 8 buckets) against the static deduped orders —
     // the deployment for a hot-keyed fact stream whose right side is
     // too big to broadcast, where AQE cannot split the custom exec's
-    // exchange (q185's regime, streamed). q152's two-wave resume
-    // protocol: input lands in TWO waves, the stream STARTS TWICE on
-    // one checkpoint, the second start must process only wave 2.
+    // exchange (q185's regime, streamed through Replay.stream).
     // Backward as-of against a static right is row-local per left
     // row, so the union of per-batch outputs equals the one-shot
     // batch join — held to q41's oracle VERBATIM (the sixth
@@ -368,9 +356,7 @@ object ExtraQueries {
     Q(
       "q187_stream_asof_salted",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q187_streamasof", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q187_streamasof", dir)
         val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
         val winner = org.apache.spark.sql.expressions.Window
           .partitionBy("o_custkey", "o_orderdate")
@@ -381,31 +367,16 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              AsOfJoin.asofSalted(b, orders,
-                  "user_id", "o_custkey", "ts", "o_orderdate",
-                  payload = Seq("asof_orderkey", "asof_totalprice"),
-                  buckets = 8)
-                .write.mode("append").parquet(s"$out/joined")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q187 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            Seq(ev.where(col("event_id") % 2 === 0),
+              ev.where(col("event_id") % 2 === 1)),
+            parts = 2, perFile = true) { (b, _) =>
+          AsOfJoin.asofSalted(b, orders,
+              "user_id", "o_custkey", "ts", "o_orderdate",
+              payload = Seq("asof_orderkey", "asof_totalprice"),
+              buckets = 8)
+            .write.mode("append").parquet(s"$out/joined")
         }
-        ev.where(col("event_id") % 2 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        ev.where(col("event_id") % 2 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         s.read.parquet(s"$out/joined")
           .select("event_id", "user_id", "ts", "asof_orderkey",
             "asof_totalprice")
@@ -1341,9 +1312,7 @@ object ExtraQueries {
       "q114_incremental_ivf_lists",
       (s, dir) => {
         import graft.functions.DotProductF
-        val out = Q.scratch(s, "q114_ivflists", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q114_ivflists", dir)
         val cLit = SimilarityQueries.adaptiveWidthLit(
           SimilarityQueries.embCount(s, dir), 64)
         // derived ONCE (the q221 move): four batch filters + the final
@@ -1492,9 +1461,7 @@ object ExtraQueries {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         import graft.operators.SketchIndex
-        val out = Q.scratch(s, "q181_sketchidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q181_sketchidx", dir)
         // derived ONCE (the q221 move): four batch filters consume the
         // events scan — materialize once, filter blocks
         val ev = Tables.events(s, dir).localCheckpoint()
@@ -1511,13 +1478,12 @@ object ExtraQueries {
 
     // ----------------------------------------------------------------
     // q183: q181's sketch maintenance as an actual STREAM CONSUMER —
-    // events land in two waves, a checkpointed AvailableNow query
-    // appends each micro-batch's sketch slices through SketchIndex
-    // (delta id = the STREAMING batch id, so a replayed micro-batch
-    // replaces its own delta — exactly-once composition of the
-    // checkpoint contract with the store's idempotent commit), and the
-    // stream is STARTED TWICE on one checkpoint: a re-processed wave
-    // would double the additive cells and flip the hash. Serving reads
+    // events land in two waves (Replay.stream) and each micro-batch
+    // appends its sketch slices through SketchIndex (delta id = the
+    // STREAMING batch id, so a replayed micro-batch replaces its own
+    // delta — exactly-once composition of the checkpoint contract with
+    // the store's idempotent commit); a re-processed wave would double
+    // the additive cells and flip the hash. Serving reads
     // the maintained state with q181's exact report — and because the
     // merge is lossless whatever the batch boundaries, q44's one-shot
     // oracle STILL gates it verbatim: the same answer from the batch
@@ -1527,32 +1493,15 @@ object ExtraQueries {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         import graft.operators.SketchIndex
-        val out = Q.scratch(s, "q183_streamsketch", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q183_streamsketch", dir)
         val ev = Tables.events(s, dir)
         val in = ev.select("event_id", "event_type", "user_id", "value")
-        def drain(): Unit = {
-          val q = s.readStream.schema(in.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              SketchIndex.appendBatch(s, b, s"$out/state", bid.toInt)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q183 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            Seq(in.where(col("event_id") % 2 === 0),
+              in.where(col("event_id") % 2 === 1)),
+            parts = 2, perFile = true) { (b, id) =>
+          SketchIndex.appendBatch(s, b, s"$out/state", id)
         }
-        in.where(col("event_id") % 2 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        in.where(col("event_id") % 2 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         serveSketchReport(s, s"$out/state")
       },
       Some(sketchOracleSql))

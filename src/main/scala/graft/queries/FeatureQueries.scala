@@ -1207,9 +1207,7 @@ $selects
     Q(
       "q243_corr_incremental",
       (s, dir) => {
-        val root = Q.scratch(s, "q243_moments", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = Q.fresh(s, "q243_moments", dir)
         // project THEN pin (the r18 deferral condition now holds): the
         // wave filter needs only a 1-int wave key and the addends only
         // the 4 measure columns, so the checkpoint is 5 narrow columns
@@ -1237,52 +1235,35 @@ $selects
     Q(
       "q244_stream_corr",
       (s, dir) => {
-        val out = Q.scratch(s, "q244_streamcorr", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q244_streamcorr", dir)
         val li = Tables.lineitem(s, dir)
-        // the stream carries RAW measure rows (the production shape —
-        // and 4 narrow doubles, not 15 wide decimal addends, so the
-        // landing IO is the fact table's own width); the index computes
-        // the moment addends inside the micro-batch
-        val inSchema = org.apache.spark.sql.types.StructType(
-          corrCols.map(c => org.apache.spark.sql.types.StructField(c,
-            org.apache.spark.sql.types.DoubleType)))
-        def drain(): Unit = {
-          val q = s.readStream.schema(inSchema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
-                corrMomentSchema, corrValueCols, maxDeltas = 0,
-                upTo = Some(id.toInt - 1))
-              graft.operators.StatCellIndex.appendAgg(s,
-                b.select(corrRowExprs: _*),
-                s"$out/store", id.toInt, corrMomentSchema, corrValueCols)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q244 drain did not finish in 300 s")
-          }
-        }
         // project THEN pin (the q243 move): both landing writes filter
         // a 5-narrow-column checkpoint instead of re-scanning lineitem
         val src = li
           .select(pmod(hash(col("l_orderkey"), col("l_linenumber")),
             lit(2)).as("wv") +: corrCols.map(col): _*)
           .localCheckpoint()
-        src.where(col("wv") === 0)
-          .select(corrCols.map(col): _*)
-          .repartition(32).write.parquet(s"$out/in")
-        drain()
-        src.where(col("wv") === 1)
-          .select(corrCols.map(col): _*)
-          .repartition(32).write.mode("append").parquet(s"$out/in")
-        // both waves are landed; the drains read the landing files
+        // the stream carries RAW measure rows (the production shape —
+        // and 4 narrow doubles, not 15 wide decimal addends, so the
+        // landing IO is the fact table's own width); the index computes
+        // the moment addends inside the micro-batch
+        val waves = (0 until 2).map(i =>
+          src.where(col("wv") === i).select(corrCols.map(col): _*))
+        def fold(b: org.apache.spark.sql.DataFrame, id: Int): Unit = {
+          graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
+            corrMomentSchema, corrValueCols, maxDeltas = 0,
+            upTo = Some(id - 1))
+          graft.operators.StatCellIndex.appendAgg(s,
+            b.select(corrRowExprs: _*),
+            s"$out/store", id, corrMomentSchema, corrValueCols)
+        }
+        waves(0).repartition(32).write.parquet(s"$out/in")
+        graft.streaming.Replay.drain(s, out, waves(0).schema)(fold)
+        waves(1).repartition(32).write.mode("append").parquet(s"$out/in")
+        // both waves are landed; the second drain reads only the
+        // landing files, so the pin is released before it runs
         graft.Q.unpin(src)
-        drain()
+        graft.streaming.Replay.drain(s, out, waves(0).schema)(fold)
         corrFromMoments(
           graft.operators.StatCellIndex.table(s, s"$out/store",
             corrMomentSchema, corrValueCols).drop("k"))

@@ -444,10 +444,9 @@ object JoinQueries {
     // q152: STREAMING band join ACROSS A CHECKPOINT RESUME — q147's
     // broadcast band attribution (events = the fact stream, never
     // shuffled or sorted; purchases = the broadcast dim index) deployed
-    // as a micro-batched pipeline, with the resume path under the gate:
-    // the input lands in TWO waves and the stream is STARTED TWICE on
-    // the same checkpoint — the second start must recover the file
-    // offsets and process ONLY wave 2. Band enrichment is row-wise
+    // as a micro-batched pipeline through Replay.stream, with the
+    // resume path under the gate (a re-processed wave would double
+    // the attributed pairs). Band enrichment is row-wise
     // against a static right side, so the union of per-batch outputs
     // equals the one-shot batch join — which is why this entry is held
     // to q93/q146/q147's oracle VERBATIM.
@@ -455,9 +454,7 @@ object JoinQueries {
       "q152_stream_band_join",
       (s, dir) => {
         import graft.operators.BandJoin
-        val out = graft.Q.scratch(s, "q152_streamband", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q152_streamband", dir)
         val W = 86400000000L // 24 h in micros
         val ev = Tables.df(s, dir, "events")
           .selectExpr("event_id", "user_id",
@@ -465,36 +462,19 @@ object JoinQueries {
         val purch = ev.where(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"),
             col("event_id").as("purchase_id"), col("t_us").as("p_us"))
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              // event e attributes to purchase p iff t_e − t_p ∈ (0, W]
-              // ⇔ t_p − t_e ∈ (−W−1, −1] on integer micros (q147's
-              // exact reversal)
-              BandJoin.bandJoinBroadcast(b, purch,
-                  "user_id", "p_user", "t_us", "p_us",
-                  lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
-                .select("purchase_id", "event_type")
-                .write.mode("append").parquet(s"$out/pairs")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q152 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            Seq(ev.where(col("event_id") % 2 === 0),
+              ev.where(col("event_id") % 2 === 1)),
+            parts = 2, perFile = true) { (b, _) =>
+          // event e attributes to purchase p iff t_e − t_p ∈ (0, W]
+          // ⇔ t_p − t_e ∈ (−W−1, −1] on integer micros (q147's
+          // exact reversal)
+          BandJoin.bandJoinBroadcast(b, purch,
+              "user_id", "p_user", "t_us", "p_us",
+              lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
+            .select("purchase_id", "event_type")
+            .write.mode("append").parquet(s"$out/pairs")
         }
-        // wave 1 → drain → wave 2 appended → SECOND start on the SAME
-        // checkpoint (the resume: only wave 2's files are new)
-        ev.where(col("event_id") % 2 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        ev.where(col("event_id") % 2 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         val attributed = s.read.parquet(s"$out/pairs")
           .groupBy("purchase_id")
           .agg(count(lit(1)).as("n_attr"),
@@ -518,17 +498,15 @@ object JoinQueries {
     // This entry is the documented alternative: each micro-batch runs
     // the per-batch band join through BandJoinExec (both sides
     // exchanged+sorted per batch, spill-safe at any right-side size —
-    // the per-batch cost a fact-sized right FORCES). Same two-wave
-    // checkpoint-resume protocol, same oracle VERBATIM: band
+    // the per-batch cost a fact-sized right FORCES). Same Replay.stream
+    // deployment, same oracle VERBATIM: band
     // enrichment is row-wise, so the per-batch union still equals the
     // one-shot batch join.
     Q(
       "q161_stream_band_join_native",
       (s, dir) => {
         import graft.operators.BandJoin
-        val out = graft.Q.scratch(s, "q161_streamband", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q161_streamband", dir)
         val W = 86400000000L // 24 h in micros
         val ev = Tables.df(s, dir, "events")
           .selectExpr("event_id", "user_id",
@@ -536,33 +514,18 @@ object JoinQueries {
         val purch = ev.where(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"),
             col("event_id").as("purchase_id"), col("t_us").as("p_us"))
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              // same band reversal as q152 (t_p − t_e ∈ (−W−1, −1]),
-              // but through the co-partitioned sort-merge exec
-              BandJoin.bandJoinNative(b, purch,
-                  "user_id", "p_user", "t_us", "p_us",
-                  lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
-                .select("purchase_id", "event_type")
-                .write.mode("append").parquet(s"$out/pairs")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q161 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            Seq(ev.where(col("event_id") % 2 === 0),
+              ev.where(col("event_id") % 2 === 1)),
+            parts = 2, perFile = true) { (b, _) =>
+          // same band reversal as q152 (t_p − t_e ∈ (−W−1, −1]),
+          // but through the co-partitioned sort-merge exec
+          BandJoin.bandJoinNative(b, purch,
+              "user_id", "p_user", "t_us", "p_us",
+              lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
+            .select("purchase_id", "event_type")
+            .write.mode("append").parquet(s"$out/pairs")
         }
-        ev.where(col("event_id") % 2 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        ev.where(col("event_id") % 2 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         val attributed = s.read.parquet(s"$out/pairs")
           .groupBy("purchase_id")
           .agg(count(lit(1)).as("n_attr"),
@@ -599,8 +562,7 @@ object JoinQueries {
           // a fresh JVM starts a fresh in-memory metastore, but the
           // warehouse dir persists across runs — clear it or the
           // CREATE refuses (the BucketedJoinSpec lesson)
-          def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-          rm(new java.io.File(s"spark-warehouse/$n"))
+          graft.Q.rmrf(new java.io.File(s"spark-warehouse/$n"))
         }
         Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice")

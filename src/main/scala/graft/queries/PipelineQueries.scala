@@ -27,11 +27,6 @@ object PipelineQueries {
     "LIST_DISTINCT(LIST_TRANSFORM(GENERATE_SERIES(1, LEN(toks) - 2), " +
       "i -> CONCAT(toks[i], ' ', toks[i + 1], ' ', toks[i + 2])))"
 
-  /** Scratch root for the commit-protocol queries — shared helper, see
-    * [[graft.Q.scratch]]. */
-  private def scratch(s: org.apache.spark.sql.SparkSession, tag: String,
-                      dir: String): String = graft.Q.scratch(s, tag, dir)
-
   def defs: Vector[Q] = Vector(
     // ----------------------------------------------------------------
     // q65: DETERMINISTIC stratified sampling — the split every training
@@ -549,9 +544,7 @@ object PipelineQueries {
     Q(
       "q85_incremental_rollup_replay",
       (s, dir) => {
-        val out = scratch(s, "q85_rollup", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q85_rollup", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q112 move): the year
@@ -886,9 +879,7 @@ object PipelineQueries {
     Q(
       "q96_jsonl_roundtrip",
       (s, dir) => {
-        val out = scratch(s, "q96_jsonl", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q96_jsonl", dir)
         Tables.documents(s, dir)
           .write.mode("overwrite").option("compression", "gzip").json(out)
         val back = s.read
@@ -933,9 +924,7 @@ object PipelineQueries {
     Q(
       "q97_bloom_indexed_lookup",
       (s, dir) => {
-        val out = scratch(s, "q97_bloomidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q97_bloomidx", dir)
         graft.operators.BloomIndex.write(
           Tables.documents(s, dir), layoutCol = "source", keyCol = "doc_id",
           dir = out, nFiles = 16, expectedPerFile = 100000L, fpp = 0.01)
@@ -1001,9 +990,7 @@ object PipelineQueries {
     Q(
       "q91_orc_roundtrip",
       (s, dir) => {
-        val out = scratch(s, "q91_orc", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q91_orc", dir)
         Tables.lineitem(s, dir)
           .select("l_returnflag", "l_linestatus", "l_quantity",
             "l_extendedprice", "l_shipdate")
@@ -1046,9 +1033,7 @@ object PipelineQueries {
     Q(
       "q92_manifest_rollup_replay",
       (s, dir) => {
-        val out = scratch(s, "q92_manifest", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q92_manifest", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q112/q85 move) —
@@ -1124,9 +1109,7 @@ object PipelineQueries {
     Q(
       "q100_index_intersection_scan",
       (s, dir) => {
-        val out = scratch(s, "q100_idx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q100_idx", dir)
         val data = Tables.lineitem(s, dir).selectExpr(
           "l_partkey % 256 as px", "l_suppkey % 256 as sx",
           "l_orderkey as okey", "l_quantity as qty",
@@ -1175,9 +1158,7 @@ object PipelineQueries {
     Q(
       "q105_mor_rollup_replay",
       (s, dir) => {
-        val out = scratch(s, "q105_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q105_mor", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move): the
@@ -1257,9 +1238,7 @@ object PipelineQueries {
     Q(
       "q106_mor_delete_time_travel",
       (s, dir) => {
-        val out = scratch(s, "q106_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q106_mor", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move); the
@@ -1359,9 +1338,7 @@ object PipelineQueries {
     Q(
       "q107_mor_point_lookup",
       (s, dir) => {
-        val out = scratch(s, "q107_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q107_mor", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move)
@@ -1421,9 +1398,7 @@ object PipelineQueries {
     Q(
       "q108_incremental_stats",
       (s, dir) => {
-        val out = scratch(s, "q108_stats", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q108_stats", dir)
         val orders = Tables.orders(s, dir)
         val cols = Seq("o_orderkey", "o_custkey", "o_totalprice")
         val store = graft.operators.DeltaStore(out + "/stats", 4)
@@ -1478,9 +1453,7 @@ object PipelineQueries {
     Q(
       "q110_mor_change_feed",
       (s, dir) => {
-        val out = scratch(s, "q110_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q110_mor", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move); the
@@ -1544,9 +1517,7 @@ object PipelineQueries {
     Q(
       "q111_mor_bloom_lookup",
       (s, dir) => {
-        val out = scratch(s, "q111_mor", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q111_mor", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached (the q85/q92 move)
@@ -1613,9 +1584,7 @@ object PipelineQueries {
     Q(
       "q112_incremental_view_from_feed",
       (s, dir) => {
-        val out = scratch(s, "q112_ivm", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q112_ivm", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // ONE grouped pass over orders, cached — the year filter is a
@@ -1717,9 +1686,7 @@ object PipelineQueries {
     Q(
       "q115_stream_cdc_view",
       (s, dir) => {
-        val out = scratch(s, "q115_scdc", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q115_scdc", dir)
         val orders = Tables.orders(s, dir)
         val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
         // one grouped pass, cached (the q112 move): the year filter is
@@ -1749,36 +1716,16 @@ object PipelineQueries {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
         val applies = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
-        def drain(): org.apache.spark.sql.streaming.StreamingQuery =
-          s.readStream.schema(schema)
-          // per-drop micro-batches: each landed file is one complete
-          // ingest unit and must keep its OWN batch id (prices and the
-          // LWW winner depend on it)
-          .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-          .writeStream
-          .option("checkpointLocation", s"$out/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            val bid = id.toInt
-            mor.upsert(b.dropDuplicates("coin_id", "fetch_date"), bid)
-            applies += Future {
-              graft.operators.IncrementalView.applyFeed(vstore,
-                mor.changes(s, schema, bid - 1, bid, preimage = true)
-                  .select(col("coin_id"),
-                    year(col("fetch_date")).as("yr"),
-                    month(col("fetch_date")).as("mon"),
-                    col("op"), col("price_usd")),
-                Seq("coin_id", "yr", "mon"), "price_usd", bid)
-            }
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        def awaitDrain(tag: String): Unit = {
-          val q = drain()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException(
-              s"q115 drain $tag did not finish within 300 s")
+        def fold(b: org.apache.spark.sql.DataFrame, bid: Int): Unit = {
+          mor.upsert(b.dropDuplicates("coin_id", "fetch_date"), bid)
+          applies += Future {
+            graft.operators.IncrementalView.applyFeed(vstore,
+              mor.changes(s, schema, bid - 1, bid, preimage = true)
+                .select(col("coin_id"),
+                  year(col("fetch_date")).as("yr"),
+                  month(col("fetch_date")).as("mon"),
+                  col("op"), col("price_usd")),
+              Seq("coin_id", "yr", "mon"), "price_usd", bid)
           }
         }
         // drop with a PINNED, strictly-increasing mtime: the file
@@ -1801,13 +1748,14 @@ object PipelineQueries {
                     "would be nondeterministic on this filesystem")
             }
         }
-        // TWO drains over four drops — the kill-and-resume shape (the
-        // second query run resumes the SAME checkpoint) with the fixed
-        // per-run startup paid twice, not per drop
+        // TWO drains over four drops, so the fixed per-run startup is
+        // paid twice, not per drop; per-drop micro-batches: each landed
+        // file is one complete ingest unit and must keep its OWN batch
+        // id (prices and the LWW winner depend on it)
         drop(windows(0)._1, windows(0)._2, 0)
-        awaitDrain("first")
+        graft.streaming.Replay.drain(s, out, schema, perFile = true)(fold)
         (1 to 3).foreach(b => drop(windows(b)._1, windows(b)._2, b))
-        awaitDrain("resume")
+        graft.streaming.Replay.drain(s, out, schema, perFile = true)(fold)
         applies.foreach(Await.result(_,
           scala.concurrent.duration.Duration.Inf))
         base.unpersist(false)
@@ -1862,9 +1810,7 @@ object PipelineQueries {
     Q(
       "q145_stream_dedup_replay",
       (s, dir) => {
-        val out = scratch(s, "q145_sdedup", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q145_sdedup", dir)
         val ev = Tables.events(s, dir)
           .select("event_id", "ts", "user_id", "event_type", "value")
         ev.repartition(3).write.parquet(s"$out/in")
@@ -1878,16 +1824,8 @@ object PipelineQueries {
             .option("maxFilesPerTrigger", "2").parquet(s"$out/in")
             .withColumn("wmts", col("ts").cast("timestamp")),
           "wmts", "3650 days", Seq("event_id"))
-        val q = deduped.writeStream
-          .option("checkpointLocation", s"$out/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.drop("wmts").write.mode("append").parquet(s"$out/deduped")
-          }
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException("q145 drain did not finish in 300 s")
+        graft.streaming.Replay.run(out, deduped) { (b, _) =>
+          b.drop("wmts").write.mode("append").parquet(s"$out/deduped")
         }
         s.read.parquet(s"$out/deduped")
           .select("event_id", "ts", "user_id", "event_type", "value")
@@ -2165,9 +2103,7 @@ object PipelineQueries {
     Q(
       "q170_stream_decontamination",
       (s, dir) => {
-        val out = Q.scratch(s, "q170_streamdecon", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q170_streamdecon", dir)
         val docs = Tables.documents(s, dir)
         val evalTris = docs.where(col("doc_id") % 97 === 0)
           .withColumn("toks", expr(toksExpr))
@@ -2175,38 +2111,22 @@ object PipelineQueries {
           .distinct().withColumn("hit", lit(1L))
         val train = docs.where(col("doc_id") % 97 =!= 0)
           .select("doc_id", "text")
-        def drain(): Unit = {
-          val q = s.readStream.schema(train.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.withColumn("toks", expr(toksExpr))
-                .select(col("doc_id"), explode(expr(trisExpr)).as("tri"))
-                .join(broadcast(evalTris), Seq("tri"), "left")
-                .groupBy("doc_id")
-                .agg(count(lit(1)).as("n_tris"),
-                  sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-                .withColumn("contamination_q",
-                  floor(col("n_hits").cast("double") / col("n_tris").cast("double")
-                    * lit(1000000.0) + lit(0.5)).cast("bigint"))
-                .where(col("contamination_q") < 50000)
-                .write.mode("append").parquet(s"$out/kept")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q170 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            Seq(train.where(col("doc_id") % 2 === 0),
+              train.where(col("doc_id") % 2 === 1)),
+            parts = 2, perFile = true) { (b, _) =>
+          b.withColumn("toks", expr(toksExpr))
+            .select(col("doc_id"), explode(expr(trisExpr)).as("tri"))
+            .join(broadcast(evalTris), Seq("tri"), "left")
+            .groupBy("doc_id")
+            .agg(count(lit(1)).as("n_tris"),
+              sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+            .withColumn("contamination_q",
+              floor(col("n_hits").cast("double") / col("n_tris").cast("double")
+                * lit(1000000.0) + lit(0.5)).cast("bigint"))
+            .where(col("contamination_q") < 50000)
+            .write.mode("append").parquet(s"$out/kept")
         }
-        // wave 1 → drain → wave 2 appended → SECOND start, SAME checkpoint
-        train.where(col("doc_id") % 2 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        train.where(col("doc_id") % 2 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         s.read.parquet(s"$out/kept")
           .select("doc_id", "n_tris", "n_hits", "contamination_q")
           .orderBy("doc_id")
@@ -2387,9 +2307,7 @@ object PipelineQueries {
     Q(
       "q176_partition_pruned_scan",
       (s, dir) => {
-        val out = Q.scratch(s, "q176_part", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q176_part", dir)
         Tables.documents(s, dir)
           .write.partitionBy("lang").parquet(out)
         s.read.parquet(out)

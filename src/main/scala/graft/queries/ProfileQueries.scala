@@ -295,52 +295,34 @@ object ProfileQueries {
     // state that accumulates. The final audit folds that key-grain
     // state (sum counts, OR the per-batch flags — both additive, so
     // maintained == one-shot exactly) and re-derives the childless-
-    // parent side from the same keyset. Runs under the q152 two-wave
-    // checkpoint-resume protocol (waves split by event_id parity, the
-    // stream started twice on one checkpoint); held to q196's
+    // parent side from the same keyset. Runs through Replay.stream
+    // (waves split by event_id parity); held to q196's
     // events-relation oracle VERBATIM — orphans asserted exactly zero
     // on the clean corpus, coverage gaps carrying the hash weight.
     Q(
       "q212_stream_integrity",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q212_streamintegrity", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q212_streamintegrity", dir)
         val ev = Tables.df(s, dir, "events").selectExpr("event_id", "user_id")
         val parents = Tables.customer(s, dir)
           .select(col("c_custkey").as("k")).distinct()
-        def drain(): Unit = {
-          val q = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // State keyed by the STREAMING batch id and written with
-              // overwrite: foreachBatch is at-least-once, so a replayed
-              // micro-batch REWRITES its own contribution instead of
-              // double-counting it (the q216/q220 idempotence pattern —
-              // a bare append would inflate n_rows on replay).
-              b.select(col("user_id").as("k"))
-                .groupBy("k").agg(count(lit(1)).as("n_rows"))
-                .join(broadcast(parents.withColumn("__p", lit(1))),
-                  Seq("k"), "left")
-                .select(col("k"), col("n_rows"),
-                  col("__p").isNull.as("orphan"))
-                .write.mode("overwrite").parquet(s"$out/keys/batch=$id")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q212 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            Seq(ev.where(col("event_id") % 2 === 0),
+              ev.where(col("event_id") % 2 === 1)),
+            parts = 2, perFile = true) { (b, id) =>
+          // State keyed by the STREAMING batch id and written with
+          // overwrite: foreachBatch is at-least-once, so a replayed
+          // micro-batch REWRITES its own contribution instead of
+          // double-counting it (the q216/q220 idempotence pattern —
+          // a bare append would inflate n_rows on replay).
+          b.select(col("user_id").as("k"))
+            .groupBy("k").agg(count(lit(1)).as("n_rows"))
+            .join(broadcast(parents.withColumn("__p", lit(1))),
+              Seq("k"), "left")
+            .select(col("k"), col("n_rows"),
+              col("__p").isNull.as("orphan"))
+            .write.mode("overwrite").parquet(s"$out/keys/batch=$id")
         }
-        ev.where(col("event_id") % 2 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        ev.where(col("event_id") % 2 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         val state = s.read.parquet(s"$out/keys")
           .groupBy("k")
           .agg(sum("n_rows").as("n_rows"), expr("bool_or(orphan)").as("orphan"))

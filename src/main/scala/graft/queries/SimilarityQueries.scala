@@ -1079,9 +1079,7 @@ object SimilarityQueries {
     Q(
       "q219_dedup_components_incremental",
       (s, dir) => {
-        val root = graft.Q.scratch(s, "q219_ccidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(root))
+        val root = graft.Q.fresh(s, "q219_ccidx", dir)
         val names = blockedNames(s, dir)
         // land the pair derivation ONCE: each wave's fold evaluates its
         // edge frame several times (bucket collects + condense joins),
@@ -1132,9 +1130,9 @@ object SimilarityQueries {
 
     // ----------------------------------------------------------------
     // q221: STREAMING connected components — q219's CcIndex fold driven
-    // from a checkpointed stream under the q152 two-wave checkpoint-
-    // resume protocol, closing the last maintenance symmetry: q62's
-    // recursive-closure oracle now gates the SAME dedup labels through
+    // from a checkpointed stream (Replay.stream), closing the last
+    // maintenance symmetry: q62's recursive-closure oracle now gates
+    // the SAME dedup labels through
     // THREE consumers (the q192/q209/q216 move) — one-shot (q62),
     // batch-incremental (q219), and this stream. Each micro-batch of
     // near-dup edges folds through CcIndex.appendWave with wave id =
@@ -1154,9 +1152,7 @@ object SimilarityQueries {
     Q(
       "q221_stream_dedup_components",
       (s, dir) => {
-        val out = graft.Q.scratch(s, "q221_streamcc", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q221_streamcc", dir)
         val names = blockedNames(s, dir)
         // derived once, landed once (two wave writes filter it)
         val pairs = names.as("a").join(names.as("b"),
@@ -1164,35 +1160,21 @@ object SimilarityQueries {
               levenshtein(col("a.p_name"), col("b.p_name")) <= 2)
           .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"))
           .localCheckpoint()
-        def drain(): Unit = {
-          val q = s.readStream.schema(pairs.schema).parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              // auto-compaction policy at batch start (threshold 0 so
-              // it fires under this two-batch gate): folds only the
-              // durably-committed tail — the batch's own delta stays
-              // live for the bit-identical replay contract
-              graft.operators.CcIndex.maybeCompact(s, s"$out/store",
-                maxDeltas = 0, upTo = Some(id.toInt - 1))
-              require(graft.operators.DeltaStore(s"$out/store")
-                .deltaCount(Some(id.toInt - 1)) == 0,
-                "q221: compaction policy left committed deltas live")
-              graft.operators.CcIndex.appendWave(s, b, s"$out/store", id.toInt)
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q221 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            (0 until 2).map(i =>
+              pairs.where(pmod(hash(col("name_a"), col("name_b")), lit(2)) === i)),
+            parts = 2) { (b, id) =>
+          // auto-compaction policy at batch start (threshold 0 so
+          // it fires under this two-batch gate): folds only the
+          // durably-committed tail — the batch's own delta stays
+          // live for the bit-identical replay contract
+          graft.operators.CcIndex.maybeCompact(s, s"$out/store",
+            maxDeltas = 0, upTo = Some(id - 1))
+          require(graft.operators.DeltaStore(s"$out/store")
+            .deltaCount(Some(id - 1)) == 0,
+            "q221: compaction policy left committed deltas live")
+          graft.operators.CcIndex.appendWave(s, b, s"$out/store", id)
         }
-        pairs.where(pmod(hash(col("name_a"), col("name_b")), lit(2)) === 0)
-          .repartition(2).write.parquet(s"$out/in")
-        drain()
-        pairs.where(pmod(hash(col("name_a"), col("name_b")), lit(2)) === 1)
-          .repartition(2).write.mode("append").parquet(s"$out/in")
-        drain()
         // every consumer of the pinned frame has run (waves landed,
         // report reads the committed store) - release its blocks
         graft.Q.unpin(pairs)
@@ -1562,9 +1544,7 @@ object SimilarityQueries {
     Q(
       "q103_incremental_lsh_dedup",
       (s, dir) => {
-        val out = Q.scratch(s, "q103_lshidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q103_lshidx", dir)
         // scanned ONCE (the q221 move): four batch slices re-read the
         // text table otherwise
         val docs = Tables.documents(s, dir).localCheckpoint()
@@ -1666,9 +1646,7 @@ object SimilarityQueries {
     Q(
       "q104_incremental_embedding_neardup",
       (s, dir) => {
-        val out = Q.scratch(s, "q104_embidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q104_embidx", dir)
         val r = adaptiveWidthLit(embCount(s, dir), 32)
         // derived ONCE (the q221 move): four batch filters consume the
         // embeddings scan
@@ -1731,9 +1709,7 @@ object SimilarityQueries {
     Q(
       "q109_incremental_pq_codes",
       (s, dir) => {
-        val out = Q.scratch(s, "q109_codeidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q109_codeidx", dir)
         // derived ONCE (the q221 move): four batch filters + the ADC
         // search consume the embeddings scan
         val emb = Tables.embeddings(s, dir).localCheckpoint()

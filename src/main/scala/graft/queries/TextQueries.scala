@@ -663,9 +663,7 @@ object TextQueries {
       "q171_incremental_lm_counts",
       (s, dir) => {
         import graft.operators.LmIndex
-        val out = graft.Q.scratch(s, "q171_lmidx", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = graft.Q.fresh(s, "q171_lmidx", dir)
         // derived ONCE (the q221 move): the tokenize + bigram explode
         // ran FIVE times per run (4 batch filters + the scoring probe)
         // — materialize it once and filter blocks
@@ -740,15 +738,13 @@ object TextQueries {
     // broadcast table — no window at serve time, which also means
     // score-TIED docs at the cut are all kept (the documented
     // train/serve skew of threshold freezing; the oracle applies the
-    // identical >= rule). Two input waves, stream started TWICE on
-    // one checkpoint (the q152/q170 resume protocol under the gate).
+    // identical >= rule). Runs through Replay.stream, so the resume
+    // path is under the gate.
     Q(
       "q182_stream_quality_gate",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val out = Q.scratch(s, "q182_streamgate", dir)
-        def rm(f: java.io.File): Unit = graft.Q.rmrf(f)
-        rm(new java.io.File(out))
+        val out = Q.fresh(s, "q182_streamgate", dir)
         val allStops = (stop("en") ++ stop("es") ++ stop("de") ++ stop("fr")).distinct
         val nToks = expr(s"size($toksExpr)").cast(DoubleType)
         val alpha = length(regexp_replace(col("text"), "[^a-z]", "")).cast(DoubleType) /
@@ -772,30 +768,15 @@ object TextQueries {
           .where(col("rk") === greatest(expr("(n * 3) div 10"), lit(1L)))
           .select(col("source"), col("score_q").as("cut_q"))
         val in = docs.select("doc_id", "source", "text")
-        def drain(): Unit = {
-          val q = s.readStream.schema(in.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$out/in")
-            .writeStream
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.select(col("doc_id"), col("source"), scoreQ.as("score_q"))
-                .join(broadcast(cuts), Seq("source"))
-                .where(col("score_q") >= col("cut_q"))
-                .write.mode("append").parquet(s"$out/kept")
-            }
-            .start()
-          if (!q.awaitTermination(300000)) {
-            q.stop()
-            throw new IllegalStateException("q182 drain did not finish in 300 s")
-          }
+        graft.streaming.Replay.stream(s, out,
+            Seq(in.where(col("doc_id") % 2 === 0),
+              in.where(col("doc_id") % 2 === 1)),
+            parts = 2, perFile = true) { (b, _) =>
+          b.select(col("doc_id"), col("source"), scoreQ.as("score_q"))
+            .join(broadcast(cuts), Seq("source"))
+            .where(col("score_q") >= col("cut_q"))
+            .write.mode("append").parquet(s"$out/kept")
         }
-        in.where(col("doc_id") % 2 === 0).repartition(2)
-          .write.parquet(s"$out/in")
-        drain()
-        in.where(col("doc_id") % 2 === 1).repartition(2)
-          .write.mode("append").parquet(s"$out/in")
-        drain()
         s.read.parquet(s"$out/kept")
           .select("doc_id", "source", "score_q", "cut_q")
           .orderBy("doc_id")

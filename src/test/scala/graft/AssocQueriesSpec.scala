@@ -107,12 +107,7 @@ class AssocQueriesSpec extends AnyFunSuite {
     }.flatten ++ Seq(
       (200L, day + 720L * 60000000L),                 // day 1, 12:00
       (200L, day + 730L * 60000000L))
-    val out = graft.Q.scratch(spark, "q199_carryin", "spec")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(out))
+    val out = graft.Q.fresh(spark, "q199_carryin", "spec")
     ev.toDF("user_id", "us")
       .select(col("user_id"),
         expr("cast(timestamp_micros(us) as timestamp_ntz)").as("ts"))
