@@ -42,38 +42,16 @@ import org.apache.spark.sql.types._
   * sql/analysis_queries.sql's co-occurrence matrix family (README
   * query 7) generalized to support/confidence/lift.
   */
-object BasketIndex {
+final case class BasketIndex(root: String) extends Maintained {
+  import BasketIndex._
 
-  private val memSchema = StructType(Seq(
-    StructField("ok", LongType), StructField("brand", StringType)))
-  private val pairSchema = StructType(Seq(
-    StructField("brand_a", StringType), StructField("brand_b", StringType),
-    StructField("c", LongType)))
-  private val brandSchema = StructType(Seq(
-    StructField("brand", StringType), StructField("c", LongType)))
-  private val ordSchema = StructType(Seq(
-    StructField("k", IntegerType), StructField("c", LongType)))
-
-  /** Test seam: invoked on every pruned state read with (phase,
-    * buckets-read); specs assert strict-subset reads. No-op in
-    * production. */
-  private[graft] var onPrunedRead: (String, Seq[Int]) => Unit = (_, _) => ()
-
-  private val debug = sys.env.contains("GRAFT_BASKET_DEBUG")
-  private def timed[T](tag: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (debug) println(f"[basket] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    r
-  }
+  val store: DeltaStore = DeltaStore(root)
 
   /** Fold one wave of (order, brand) line rows (duplicates fine) into
     * the maintained counts: one bucket-pruned membership read, one
     * atomic grouped commit of fresh memberships + pair/brand/order
     * count deltas. */
-  def appendWave(spark: SparkSession, batch: DataFrame, root: String,
-                 waveId: Int, buckets: Int = 16): Unit = {
-    val store = DeltaStore(root, buckets)
+  def appendWave(spark: SparkSession, batch: DataFrame, waveId: Int): Unit = {
     store.heal()
     // REPARTITION-ONCE discipline: the membership distinct, the fresh
     // anti-join on (ok, brand), the pair join on ok, and the new-order
@@ -150,32 +128,25 @@ object BasketIndex {
   }
 
   /** The maintained (brand_a, brand_b, n_ab) pair counts. */
-  def pairs(spark: SparkSession, root: String,
-            buckets: Int = 16): DataFrame =
-    DeltaStore(root, buckets).read(spark, pairSchema, None,
-        table = Some("pairs"))
+  def pairs(spark: SparkSession): DataFrame =
+    store.read(spark, pairSchema, None, table = Some("pairs"))
       .groupBy("brand_a", "brand_b").agg(sum("c").as("n_ab"))
 
   /** The maintained per-brand order counts. */
-  def brands(spark: SparkSession, root: String,
-             buckets: Int = 16): DataFrame =
-    DeltaStore(root, buckets).read(spark, brandSchema, None,
-        table = Some("brands"))
+  def brands(spark: SparkSession): DataFrame =
+    store.read(spark, brandSchema, None, table = Some("brands"))
       .groupBy("brand").agg(sum("c").as("n"))
 
   /** The maintained distinct-order count (single row). */
-  def orderCount(spark: SparkSession, root: String,
-                 buckets: Int = 16): DataFrame =
-    DeltaStore(root, buckets).read(spark, ordSchema, None,
-        table = Some("ords"))
+  def orderCount(spark: SparkSession): DataFrame =
+    store.read(spark, ordSchema, None, table = Some("ords"))
       .agg(coalesce(sum("c"), lit(0L)).as("n_orders"))
 
   /** Fold deltas into one base: memberships are immutable rows
     * (identity fold — the anti-join already guarantees uniqueness);
     * the three count tables sum by key. One atomic grouped commit. */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16,
-              upTo: Option[Int] = None): Unit =
-    DeltaStore(root, buckets).compactTables(spark, Seq(
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compactTables(spark, Seq(
       ("mem", memSchema, col("ok"), (df: DataFrame) => df),
       ("pairs", pairSchema, struct(col("brand_a"), col("brand_b")),
         (df: DataFrame) => df.groupBy("brand_a", "brand_b")
@@ -185,15 +156,30 @@ object BasketIndex {
       ("ords", ordSchema, col("k"),
         (df: DataFrame) => df.groupBy("k").agg(sum("c").as("c")))),
       upTo)
+}
 
-  /** Compaction policy with the durability horizon (`upTo` = the
-    * durably-committed tail — the count folds are ADDITIVE, so a
-    * crashed batch's own delta must stay live for its replay to
-    * exclude-and-replace). Returns whether it fired. */
-  def maybeCompact(spark: SparkSession, root: String, maxDeltas: Int,
-                   upTo: Option[Int] = None, buckets: Int = 16): Boolean = {
-    val fire = DeltaStore(root, buckets).deltaCount(upTo) > maxDeltas
-    if (fire) compact(spark, root, buckets, upTo)
-    fire
+object BasketIndex {
+
+  private val memSchema = StructType(Seq(
+    StructField("ok", LongType), StructField("brand", StringType)))
+  private val pairSchema = StructType(Seq(
+    StructField("brand_a", StringType), StructField("brand_b", StringType),
+    StructField("c", LongType)))
+  private val brandSchema = StructType(Seq(
+    StructField("brand", StringType), StructField("c", LongType)))
+  private val ordSchema = StructType(Seq(
+    StructField("k", IntegerType), StructField("c", LongType)))
+
+  /** Test seam: invoked on every pruned state read with (phase,
+    * buckets-read); specs assert strict-subset reads. No-op in
+    * production. */
+  private[graft] var onPrunedRead: (String, Seq[Int]) => Unit = (_, _) => ()
+
+  private val debug = sys.env.contains("GRAFT_BASKET_DEBUG")
+  private def timed[T](tag: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    val r = f
+    if (debug) println(f"[basket] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+    r
   }
 }

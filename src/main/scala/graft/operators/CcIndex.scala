@@ -99,43 +99,21 @@ import org.apache.spark.sql.types._
   * edge columns rather than silently grouping by lexicographic order
   * of digit strings.
   */
-object CcIndex {
+final case class CcIndex(root: String) extends Maintained {
+  import CcIndex._
 
-  private val schema = StructType(Seq(
-    StructField("id", StringType), StructField("comp", StringType),
-    StructField("wave", IntegerType)))
-
-  private val c2bSchema = StructType(Seq(
-    StructField("comp", StringType), StructField("idb", IntegerType)))
-
-  /** Test seam: invoked on every pruned state read with (phase,
-    * buckets-read) — CcIndexSpec asserts the per-wave reads touch a
-    * strict subset of the buckets. Production leaves it a no-op. */
-  private[graft] var onPrunedRead: (String, Seq[Int]) => Unit = (_, _) => ()
-
-  /** Latest-wins per node — the resolve/compact fold: a node's current
-    * label is its highest-wave row. Associative (max-wave row of a
-    * union = max-wave row of per-part winners) and idempotent. A
-    * node's rows all share its id bucket, so the fold is exact over
-    * any bucket subset. */
-  private def resolve(rows: DataFrame): DataFrame =
-    rows
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("id").orderBy(col("wave").desc)))
-      .where(col("__rn") === 1)
-      .select("id", "comp", "wave")
+  val store: DeltaStore = DeltaStore(root)
 
   /** Fold one wave of new undirected edges (two STRING columns) into
     * the stored labels, committing ONLY changed + brand-new node rows
     * (one atomic grouped delta: labels + their comp→bucket map). */
-  def appendWave(spark: SparkSession, newPairs: DataFrame, root: String,
-                 waveId: Int, buckets: Int = 16, maxIter: Int = 20): Unit = {
+  def appendWave(spark: SparkSession, newPairs: DataFrame, waveId: Int,
+                 maxIter: Int = 20): Unit = {
     require(newPairs.schema.fields.take(2).forall(_.dataType == StringType),
       s"CcIndex: edge columns must be STRING (got ${newPairs.schema
         .fields.take(2).map(_.dataType.simpleString).mkString(", ")}) — " +
         "min-label semantics follow string order, so numeric ids must be " +
         "formatted fixed-width before indexing")
-    val store = DeltaStore(root, buckets)
     store.heal()
     val e = newPairs.toDF("a", "b")
     // the per-wave pinned intermediate (cond), released after the commit
@@ -224,16 +202,13 @@ object CcIndex {
     store.appendTables(
       lab.unionByName(c2bNew, allowMissingColumns = true),
       waveId, within = Seq(coalesce(col("id"), col("comp"))))
-    // the grouped commit was cond's last consumer — release its blocks
     pinned.foreach(graft.Q.unpin)
   }
 
   /** The maintained node-grain labels: (id, comp) for every node seen
     * so far — latest-wins over the live deltas. */
-  def labels(spark: SparkSession, root: String,
-             buckets: Int = 16): DataFrame =
-    resolve(DeltaStore(root, buckets).read(spark, schema, None,
-      table = Some("lab")))
+  def labels(spark: SparkSession): DataFrame =
+    resolve(store.read(spark, schema, None, table = Some("lab")))
       .select("id", "comp")
 
   /** Fold the per-wave deltas into one resolved base (atomic grouped
@@ -241,9 +216,7 @@ object CcIndex {
     * dropping stale pairs, so read pruning stays exact after compact.
     * Only compact waves that are durably past replay (see the replay
     * contract above). */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16,
-              upTo: Option[Int] = None): Unit = {
-    val store = DeltaStore(root, buckets)
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
     store.compactTables(spark, Seq(
       ("lab", schema, col("id"), (df: DataFrame) => resolve(df)),
       ("c2b", c2bSchema, col("comp"),
@@ -253,19 +226,31 @@ object CcIndex {
             .select(col("comp"), store.gb(col("id")).as("idb"))
             .distinct())),
       upTo)
-  }
+}
 
-  /** Compaction policy ([[DeltaStore.maybeCompact]] discipline): fold
-    * iff more than `maxDeltas` live deltas sit at or below `upTo`.
-    * Streaming deployments call this at the START of batch k with
-    * `upTo = Some(k - 1)` — everything folded is durably past replay
-    * and a crashed batch's own delta stays live for its replay to
-    * replace (the replay-contract note above, enforced mechanically).
-    * Returns whether it fired. */
-  def maybeCompact(spark: SparkSession, root: String, maxDeltas: Int,
-                   upTo: Option[Int] = None, buckets: Int = 16): Boolean = {
-    val fire = DeltaStore(root, buckets).deltaCount(upTo) > maxDeltas
-    if (fire) compact(spark, root, buckets, upTo)
-    fire
-  }
+object CcIndex {
+
+  private val schema = StructType(Seq(
+    StructField("id", StringType), StructField("comp", StringType),
+    StructField("wave", IntegerType)))
+
+  private val c2bSchema = StructType(Seq(
+    StructField("comp", StringType), StructField("idb", IntegerType)))
+
+  /** Test seam: invoked on every pruned state read with (phase,
+    * buckets-read) — CcIndexSpec asserts the per-wave reads touch a
+    * strict subset of the buckets. Production leaves it a no-op. */
+  private[graft] var onPrunedRead: (String, Seq[Int]) => Unit = (_, _) => ()
+
+  /** Latest-wins per node — the resolve/compact fold: a node's current
+    * label is its highest-wave row. Associative (max-wave row of a
+    * union = max-wave row of per-part winners) and idempotent. A
+    * node's rows all share its id bucket, so the fold is exact over
+    * any bucket subset. */
+  private def resolve(rows: DataFrame): DataFrame =
+    rows
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy("id").orderBy(col("wave").desc)))
+      .where(col("__rn") === 1)
+      .select("id", "comp", "wave")
 }

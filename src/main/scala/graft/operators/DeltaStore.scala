@@ -100,9 +100,9 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
   /** Live delta count (base excluded) — the read-amplification metric
     * a compaction policy watches: listing cost, fold width, and bloom-
     * probe count all follow the delta TAIL, not the batch id. With
-    * `upTo`, only deltas at or below that batch id count — the
-    * policy's view at the start of batch k is `upTo = Some(k - 1)`,
-    * the durably-committed tail. */
+    * `upTo`, only deltas at or below that batch id count — the view of
+    * [[Maintained.compactBefore]] at the start of batch k is
+    * `upTo = Some(k - 1)`, the durably-committed tail. */
   def deltaCount(upTo: Option[Int] = None): Int =
     liveEntries(None).count { case (isBase, id, _) =>
       !isBase && upTo.forall(id <= _) }
@@ -332,23 +332,6 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
         .withColumn("gbucket", gb(key))
     }
 
-  /** Compaction POLICY ([[compact]] gated on the live-delta count):
-    * fold iff more than `maxDeltas` live deltas sit at or below
-    * `upTo`; returns whether it fired. Streaming deployments call this
-    * at the START of batch k with `upTo = Some(k - 1)`: batch k-1's
-    * checkpoint commit precedes batch k (AvailableNow runs batches
-    * serially), so everything folded is durably past replay, while a
-    * CRASHED batch k's own stale delta stays LIVE for the replay to
-    * exclude-and-replace — folding it would double-count its rows
-    * under every non-idempotent merge. */
-  def maybeCompact(spark: SparkSession, schema: StructType, key: Column,
-                   fold: DataFrame => DataFrame, maxDeltas: Int,
-                   upTo: Option[Int] = None): Boolean = {
-    val fire = deltaCount(upTo) > maxDeltas
-    if (fire) compact(spark, schema, key, fold, upTo)
-    fire
-  }
-
   /** Grouped-commit fold of a multi-table store ([[appendTables]]):
     * each (name, schema, key, fold) is folded independently, and all
     * folds land in ONE base written by ONE Spark job and promoted by
@@ -369,16 +352,6 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
           .withColumn("gbucket", gb(key))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
-
-  /** [[maybeCompact]] for grouped multi-table stores. */
-  def maybeCompactTables(spark: SparkSession,
-                         tables: Seq[(String, StructType, Column, DataFrame => DataFrame)],
-                         maxDeltas: Int,
-                         upTo: Option[Int] = None): Boolean = {
-    val fire = deltaCount(upTo) > maxDeltas
-    if (fire) compactTables(spark, tables, upTo)
-    fire
-  }
 
   private def compactWith(partCols: Seq[String], within: Seq[Column],
                           upTo: Option[Int] = None)

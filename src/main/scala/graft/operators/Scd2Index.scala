@@ -58,6 +58,116 @@ import org.apache.spark.sql.types._
   * random time-split batches, the mid-stream compact, the
   * out-of-order refusal, and the backfill round trip.
   */
+final case class Scd2Index(root: String) extends Maintained {
+  import Scd2Index._
+
+  val store: DeltaStore = DeltaStore(root)
+
+  /** Compress one batch to its run fragments and append them as the
+    * delta for `batchId` — one atomic commit, no window ever spans
+    * stored state. Refuses a batch that starts at or before the stored
+    * horizon (see the class doc). */
+  def appendBatch(spark: SparkSession, batch: DataFrame, batchId: Int): Unit = {
+    store.heal()
+    val bounds = batch.agg(min("us"), max("us")).head()
+    val isEmpty = bounds.isNullAt(0)
+    if (!isEmpty) {
+      horizon(spark, store, batchId).foreach { hz =>
+        require(bounds.getLong(0) > hz,
+          s"batch $batchId starts at ${bounds.getLong(0)} <= stored horizon " +
+            s"$hz — out-of-order appends would stitch against the wrong " +
+            "neighbors; route late data through the merge-on-read path")
+      }
+    }
+    val frags = fragments(batch, batchId)
+      .withColumn("tbl", lit("runs"))
+      .withColumn("gbucket", store.gb(col("k")))
+    store.appendTables(frags, batchId, within = Seq(col("k"), col("from_us")))
+    if (!isEmpty)
+      store.writeSidecar(batchId, horizonSidecar,
+        java.nio.ByteBuffer.allocate(8).putLong(bounds.getLong(1)).array())
+  }
+
+  /** Re-admit repaired keys to the fast path (the q222→q230 move):
+    * `history` is the affected keys' FULL event history (same columns
+    * as [[appendBatch]] — the merge-on-read repair already assembled
+    * it), re-windowed here exactly like the one-shot build and
+    * committed as ONE atomic grouped catch-up delta: the rebuilt
+    * fragments (bid = `batchId`) plus one `reb` supersession row per
+    * key. No horizon guard — a full per-key rebuild replaces
+    * everything for that key by construction. Reads after this serve
+    * index-only; later in-order appends stitch on top. O(affected
+    * keys' events), never a corpus rebuild. */
+  def backfill(spark: SparkSession, history: DataFrame, batchId: Int): Unit = {
+    store.heal()
+    val bounds = history.agg(min("us"), max("us")).head()
+    val frags = fragments(history, batchId)
+      .withColumn("tbl", lit("runs"))
+      .withColumn("gbucket", store.gb(col("k")))
+    val reb = history.select("k").distinct()
+      .withColumn("b", lit(batchId.toLong))
+      .withColumn("tbl", lit("reb"))
+      .withColumn("gbucket", store.gb(col("k")))
+    store.appendTables(frags.unionByName(reb, allowMissingColumns = true),
+      batchId, within = Seq(col("k"), col("from_us")))
+    if (!bounds.isNullAt(0))
+      store.writeSidecar(batchId, horizonSidecar,
+        java.nio.ByteBuffer.allocate(8).putLong(bounds.getLong(1)).array())
+  }
+
+  /** Fold the fragment deltas into one stitched base (atomic grouped
+    * commit): supersession is applied FIRST (so the base carries only
+    * live fragments), rebuild records keep their newest row per key.
+    * The fresh base gets its own horizon sidecar (one aggregate, here
+    * at compact time rather than on every later append), so the
+    * guard's sidecar fast path stays complete after compaction.
+    * Advisory as always: a crash between commit and sidecar degrades
+    * the next append to the state-aggregate fallback, never to
+    * wrongness. Stitching a crashed batch's duplicated fragments would
+    * inflate run event counts, so only batches past replay may fold
+    * ([[Maintained]]'s horizon). */
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit = {
+    store.compactTables(spark, Seq(
+      ("runs", runSchema, col("k"),
+        (_: DataFrame) => stitch(liveRuns(spark, store, upTo))),
+      ("reb", rebSchema, col("k"),
+        (df: DataFrame) => df.groupBy("k").agg(max("b").as("b")))),
+      upTo)
+    // the sidecar describes the BASE's own rows: with a fold horizon,
+    // aggregate at that horizon, not over still-live later deltas (an
+    // overstated base horizon would make the guard refuse in-order
+    // batches)
+    val row = store.read(spark, runSchema, None, asOf = upTo,
+        table = Some("runs"))
+      .agg(max("last_us")).head()
+    if (!row.isNullAt(0))
+      store.live(None).collectFirst { case (true, _, d) => d }.foreach { d =>
+        java.nio.file.Files.write(
+          new java.io.File(d, horizonSidecar).toPath,
+          java.nio.ByteBuffer.allocate(8).putLong(row.getLong(0)).array())
+      }
+  }
+
+  /** The maintained dimension: stitched runs numbered per key in time
+    * order, half-open validity closed by the next run's start —
+    * identical, row for row, to [[Scd2.intervals]] over the union of
+    * all appended batches (under the append-order contract, with
+    * [[backfill]]-superseded fragments dropped first). */
+  def intervals(spark: SparkSession): DataFrame = {
+    val runs = stitch(liveRuns(spark, store))
+    val byKey = Window.partitionBy("k")
+    runs
+      .withColumn("island",
+        row_number().over(byKey.orderBy("from_us", "tie")).cast(LongType))
+      .withColumn("valid_to_us",
+        lead("from_us", 1).over(byKey.orderBy("island")))
+      .withColumn("is_current", col("valid_to_us").isNull)
+      .select(col("k"), col("island"), col("attr"),
+        col("from_us").as("valid_from_us"), col("valid_to_us"),
+        col("is_current"), col("n_events"))
+  }
+}
+
 object Scd2Index {
 
   // `tie` = the tiebreak of the run's FIRST event (in (us, tie) order).
@@ -161,126 +271,5 @@ object Scd2Index {
         min_by(col("tie"), struct(col("us"), col("tie"))).as("tie"))
       .select("k", "attr", "from_us", "last_us", "n_events", "tie")
       .withColumn("bid", lit(batchId.toLong))
-  }
-
-  /** Compress one batch to its run fragments and append them as the
-    * delta for `batchId` — one atomic commit, no window ever spans
-    * stored state. Refuses a batch that starts at or before the stored
-    * horizon (see the class doc). */
-  def appendBatch(spark: SparkSession, batch: DataFrame, root: String,
-                  batchId: Int, buckets: Int = 16): Unit = {
-    val store = DeltaStore(root, buckets)
-    store.heal()
-    val bounds = batch.agg(min("us"), max("us")).head()
-    val isEmpty = bounds.isNullAt(0)
-    if (!isEmpty) {
-      horizon(spark, store, batchId).foreach { hz =>
-        require(bounds.getLong(0) > hz,
-          s"batch $batchId starts at ${bounds.getLong(0)} <= stored horizon " +
-            s"$hz — out-of-order appends would stitch against the wrong " +
-            "neighbors; route late data through the merge-on-read path")
-      }
-    }
-    val frags = fragments(batch, batchId)
-      .withColumn("tbl", lit("runs"))
-      .withColumn("gbucket", store.gb(col("k")))
-    store.appendTables(frags, batchId, within = Seq(col("k"), col("from_us")))
-    if (!isEmpty)
-      store.writeSidecar(batchId, horizonSidecar,
-        java.nio.ByteBuffer.allocate(8).putLong(bounds.getLong(1)).array())
-  }
-
-  /** Re-admit repaired keys to the fast path (the q222→q230 move):
-    * `history` is the affected keys' FULL event history (same columns
-    * as [[appendBatch]] — the merge-on-read repair already assembled
-    * it), re-windowed here exactly like the one-shot build and
-    * committed as ONE atomic grouped catch-up delta: the rebuilt
-    * fragments (bid = `batchId`) plus one `reb` supersession row per
-    * key. No horizon guard — a full per-key rebuild replaces
-    * everything for that key by construction. Reads after this serve
-    * index-only; later in-order appends stitch on top. O(affected
-    * keys' events), never a corpus rebuild. */
-  def backfill(spark: SparkSession, history: DataFrame, root: String,
-               batchId: Int, buckets: Int = 16): Unit = {
-    val store = DeltaStore(root, buckets)
-    store.heal()
-    val bounds = history.agg(min("us"), max("us")).head()
-    val frags = fragments(history, batchId)
-      .withColumn("tbl", lit("runs"))
-      .withColumn("gbucket", store.gb(col("k")))
-    val reb = history.select("k").distinct()
-      .withColumn("b", lit(batchId.toLong))
-      .withColumn("tbl", lit("reb"))
-      .withColumn("gbucket", store.gb(col("k")))
-    store.appendTables(frags.unionByName(reb, allowMissingColumns = true),
-      batchId, within = Seq(col("k"), col("from_us")))
-    if (!bounds.isNullAt(0))
-      store.writeSidecar(batchId, horizonSidecar,
-        java.nio.ByteBuffer.allocate(8).putLong(bounds.getLong(1)).array())
-  }
-
-  /** Fold the fragment deltas into one stitched base (atomic grouped
-    * commit): supersession is applied FIRST (so the base carries only
-    * live fragments), rebuild records keep their newest row per key.
-    * The fresh base gets its own horizon sidecar (one aggregate, here
-    * at compact time rather than on every later append), so the
-    * guard's sidecar fast path stays complete after compaction.
-    * Advisory as always: a crash between commit and sidecar degrades
-    * the next append to the state-aggregate fallback, never to
-    * wrongness. */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16,
-              upTo: Option[Int] = None): Unit = {
-    val store = DeltaStore(root, buckets)
-    store.compactTables(spark, Seq(
-      ("runs", runSchema, col("k"),
-        (_: DataFrame) => stitch(liveRuns(spark, store, upTo))),
-      ("reb", rebSchema, col("k"),
-        (df: DataFrame) => df.groupBy("k").agg(max("b").as("b")))),
-      upTo)
-    // the sidecar describes the BASE's own rows: with a fold horizon,
-    // aggregate at that horizon, not over still-live later deltas (an
-    // overstated base horizon would make the guard refuse in-order
-    // batches)
-    val row = store.read(spark, runSchema, None, asOf = upTo,
-        table = Some("runs"))
-      .agg(max("last_us")).head()
-    if (!row.isNullAt(0))
-      store.live(None).collectFirst { case (true, _, d) => d }.foreach { d =>
-        java.nio.file.Files.write(
-          new java.io.File(d, horizonSidecar).toPath,
-          java.nio.ByteBuffer.allocate(8).putLong(row.getLong(0)).array())
-      }
-  }
-
-  /** Compaction policy: fold iff more than `maxDeltas` live deltas sit
-    * at or below `upTo`. Stitching duplicated fragments would inflate
-    * run event counts, so a crashed batch's own uncommitted delta must
-    * NOT fold — streaming deployments call this at the START of batch
-    * k with `upTo = Some(k - 1)`. Returns whether it fired. */
-  def maybeCompact(spark: SparkSession, root: String, maxDeltas: Int,
-                   upTo: Option[Int] = None, buckets: Int = 16): Boolean = {
-    val fire = DeltaStore(root, buckets).deltaCount(upTo) > maxDeltas
-    if (fire) compact(spark, root, buckets, upTo)
-    fire
-  }
-
-  /** The maintained dimension: stitched runs numbered per key in time
-    * order, half-open validity closed by the next run's start —
-    * identical, row for row, to [[Scd2.intervals]] over the union of
-    * all appended batches (under the append-order contract, with
-    * [[backfill]]-superseded fragments dropped first). */
-  def intervals(spark: SparkSession, root: String,
-                buckets: Int = 16): DataFrame = {
-    val runs = stitch(liveRuns(spark, DeltaStore(root, buckets)))
-    val byKey = Window.partitionBy("k")
-    runs
-      .withColumn("island",
-        row_number().over(byKey.orderBy("from_us", "tie")).cast(LongType))
-      .withColumn("valid_to_us",
-        lead("from_us", 1).over(byKey.orderBy("island")))
-      .withColumn("is_current", col("valid_to_us").isNull)
-      .select(col("k"), col("island"), col("attr"),
-        col("from_us").as("valid_from_us"), col("valid_to_us"),
-        col("is_current"), col("n_events"))
   }
 }

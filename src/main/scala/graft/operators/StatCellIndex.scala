@@ -32,130 +32,64 @@ import org.apache.spark.sql.types._
   * from foreachBatch with batch id as the delta id (the q221/q225
   * streaming contract).
   *
-  * The schema names the cell KEY columns plus one LONG count column
-  * `c`; key columns must be non-null (quantized keys are — a nullable
-  * dimension needs an explicit sentinel before indexing, or its rows
-  * silently form a null cell).
+  * The schema names the cell KEY columns plus the value columns
+  * `valueCols`: a single LONG count `c` for cell counts (the default),
+  * or exact additive SUMS — LONG counts or cents, DECIMAL moment sums —
+  * for the moment tables behind revenue concentration's per-customer
+  * cents and the correlation matrix's moment row. Sums of sums equal
+  * the one-shot sums exactly, and each value column's sum is cast back
+  * to its DECLARED schema type, so the fold's width discipline is the
+  * schema's (document the ceiling where the query does). Key columns
+  * must be non-null (quantized keys are — a nullable dimension needs an
+  * explicit sentinel before indexing, or its rows silently form a null
+  * cell).
   */
-object StatCellIndex {
+final case class StatCellIndex(root: String, schema: StructType,
+                               valueCols: Seq[String] = Seq("c"))
+    extends Maintained {
 
-  private def keyCols(schema: StructType): Seq[String] =
-    schema.fieldNames.toSeq.filter(_ != "c")
+  val store: DeltaStore = DeltaStore(root)
 
-  /** Count one batch's rows into cells (key columns of `schema`) and
-    * append as the delta for `batchId` — one grouped aggregate, one
-    * atomic commit, no reads of stored state. */
-  def appendBatch(spark: SparkSession, batch: DataFrame, root: String,
-                  batchId: Int, schema: StructType,
-                  buckets: Int = 16): Unit = {
-    val keys = keyCols(schema)
-    val store = DeltaStore(root, buckets)
+  private val keys = schema.fieldNames.toSeq.filterNot(valueCols.contains)
+
+  /** Per-key sum of each value column, cast to its schema type — the
+    * read-side merge and the [[compact]] fold. */
+  private def fold(df: DataFrame): DataFrame = {
+    val sums = valueCols.map(v => sum(col(v)).cast(schema(v).dataType).as(v))
+    df.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+  }
+
+  private def land(cells: DataFrame, batchId: Int): Unit =
+    store.append(cells.withColumn("gbucket", store.gb(struct(keys.map(col): _*))),
+      batchId, within = keys.map(col))
+
+  /** Count one batch's rows into cells (the key columns) and append as
+    * the delta for `batchId` — one grouped aggregate, one atomic commit,
+    * no reads of stored state. The count variant only. */
+  def appendBatch(spark: SparkSession, batch: DataFrame, batchId: Int): Unit = {
+    require(valueCols == Seq("c"), s"appendBatch counts into c, not $valueCols")
     store.heal()
-    val cells = batch
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).cast(LongType).as("c"))
-      .withColumn("gbucket", store.gb(struct(keys.map(col): _*)))
-    store.append(cells, batchId, within = keys.map(col))
+    land(batch.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).cast(LongType).as("c")), batchId)
   }
 
-  /** The maintained cell table: (keys..., c) summed over live state —
-    * identical to the one-shot grouped count of everything appended. */
-  def cells(spark: SparkSession, root: String, schema: StructType,
-            buckets: Int = 16): DataFrame = {
-    val keys = keyCols(schema)
-    DeltaStore(root, buckets).read(spark, schema, None)
-      .groupBy(keys.map(col): _*)
-      .agg(sum("c").as("c"))
-  }
-
-  /** Fold live deltas into one base with the same sum-by-key. */
-  def compact(spark: SparkSession, root: String, schema: StructType,
-              buckets: Int = 16, upTo: Option[Int] = None): Unit = {
-    val keys = keyCols(schema)
-    DeltaStore(root, buckets).compact(spark, schema,
-      struct(keys.map(col): _*),
-      df => df.groupBy(keys.map(col): _*).agg(sum("c").as("c")),
-      upTo)
-  }
-
-  /** Compaction policy: fold iff more than `maxDeltas` live deltas sit
-    * at or below `upTo`. The cell fold is ADDITIVE — folding a crashed
-    * batch's own uncommitted delta would double-count it on replay —
-    * so streaming deployments call this at the START of batch k with
-    * `upTo = Some(k - 1)`, the durably-committed tail. Returns whether
-    * it fired. */
-  def maybeCompact(spark: SparkSession, root: String, schema: StructType,
-                   maxDeltas: Int, upTo: Option[Int] = None,
-                   buckets: Int = 16): Boolean = {
-    val fire = DeltaStore(root, buckets).deltaCount(upTo) > maxDeltas
-    if (fire) compact(spark, root, schema, buckets, upTo)
-    fire
-  }
-
-  // ------------------------------------------------------------------
-  // ADDITIVE MOMENT variant: the same per-batch one-grouped-aggregate /
-  // one-atomic-delta / no-stored-state-reads protocol, but the state's
-  // non-key columns (`valueCols`) are exact additive SUMS (LONG counts
-  // or cents, DECIMAL moment sums) rather than the single count `c`.
-  // Sums of sums equal the one-shot sums exactly, so the maintained
-  // table feeds the one-shot statistic tails unchanged — the recipe
-  // behind the decision statistics whose sufficient state is sums:
-  // revenue concentration's per-customer cents, the correlation
-  // matrix's moment row, the A/B readout's per-arm tallies. Each value
-  // column's batch sum is cast back to its DECLARED schema type, so
-  // the fold's width discipline is the schema's (document the ceiling
-  // where the query does).
-
-  private def sumTo(schema: StructType, valueCols: Seq[String]) =
-    valueCols.map(v => sum(col(v)).cast(schema(v).dataType).as(v))
-
-  /** Sum one batch's rows into per-key moment sums and append as the
-    * delta for `batchId` — one grouped aggregate, one atomic commit,
-    * no reads of stored state. `batch` carries the key columns plus
-    * row-grain addends for each value column (`lit(1L)` for a count). */
-  def appendAgg(spark: SparkSession, batch: DataFrame, root: String,
-                batchId: Int, schema: StructType, valueCols: Seq[String],
-                buckets: Int = 16): Unit = {
-    val keys = schema.fieldNames.toSeq.filterNot(valueCols.contains)
-    val store = DeltaStore(root, buckets)
+  /** Sum one batch's rows into per-key value sums and append as the
+    * delta for `batchId`. `batch` carries the key columns plus row-grain
+    * addends for each value column (`lit(1L)` for a count). */
+  def appendAgg(spark: SparkSession, batch: DataFrame, batchId: Int): Unit = {
     store.heal()
-    val folded = batch
-      .groupBy(keys.map(col): _*)
-      .agg(sumTo(schema, valueCols).head, sumTo(schema, valueCols).tail: _*)
-      .withColumn("gbucket", store.gb(struct(keys.map(col): _*)))
-    store.append(folded, batchId, within = keys.map(col))
+    land(fold(batch), batchId)
   }
 
-  /** The maintained moment table: keys plus each value column summed
-    * over live state — identical to the one-shot grouped sums. */
-  def table(spark: SparkSession, root: String, schema: StructType,
-            valueCols: Seq[String], buckets: Int = 16): DataFrame = {
-    val keys = schema.fieldNames.toSeq.filterNot(valueCols.contains)
-    DeltaStore(root, buckets).read(spark, schema, None)
-      .groupBy(keys.map(col): _*)
-      .agg(sumTo(schema, valueCols).head, sumTo(schema, valueCols).tail: _*)
-  }
+  /** The maintained table: keys plus each value column summed over live
+    * state — identical to the one-shot grouped count or sums of
+    * everything appended. */
+  def cells(spark: SparkSession): DataFrame =
+    fold(store.read(spark, schema, None))
 
-  /** Fold live deltas into one base with the same per-key sums. */
-  def compactAgg(spark: SparkSession, root: String, schema: StructType,
-                 valueCols: Seq[String], buckets: Int = 16,
-                 upTo: Option[Int] = None): Unit = {
-    val keys = schema.fieldNames.toSeq.filterNot(valueCols.contains)
-    DeltaStore(root, buckets).compact(spark, schema,
-      struct(keys.map(col): _*),
-      df => df.groupBy(keys.map(col): _*)
-        .agg(sumTo(schema, valueCols).head, sumTo(schema, valueCols).tail: _*),
-      upTo)
-  }
-
-  /** [[maybeCompact]] for the moment variant — same durability-horizon
-    * contract (`upTo` = the durably-committed tail). */
-  def maybeCompactAgg(spark: SparkSession, root: String, schema: StructType,
-                      valueCols: Seq[String], maxDeltas: Int,
-                      upTo: Option[Int] = None,
-                      buckets: Int = 16): Boolean = {
-    val fire = DeltaStore(root, buckets).deltaCount(upTo) > maxDeltas
-    if (fire) compactAgg(spark, root, schema, valueCols, buckets, upTo)
-    fire
-  }
+  /** Fold live deltas into one base with the same per-key sums. The
+    * fold is ADDITIVE: a crashed batch's own delta folded into a base
+    * would double-count on replay, hence [[Maintained]]'s horizon. */
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compact(spark, schema, struct(keys.map(col): _*), fold, upTo)
 }

@@ -49,25 +49,16 @@ import org.apache.spark.sql.types._
   * cast to LONG (the report is count-only, so lossless for any
   * integral id).
   */
-object TriIndex {
+final case class TriIndex(root: String) extends Maintained {
+  import TriIndex._
 
-  private val adjSchema = StructType(Seq(
-    StructField("node", LongType), StructField("nbr", LongType)))
-  private val degSchema = StructType(Seq(
-    StructField("node", LongType), StructField("d", LongType)))
-
-  /** Test seam: invoked on every pruned state read with (phase,
-    * buckets-read); specs assert strict-subset reads. No-op in
-    * production. */
-  private[graft] var onPrunedRead: (String, Seq[Int]) => Unit = (_, _) => ()
+  val store: DeltaStore = DeltaStore(root)
 
   /** Fold one wave of new canonical edges (u < v, disjoint from the
     * stored set) into the maintained count: returns the number of
     * triangles with ≥1 edge in this wave and commits the wave's
     * adjacency + degree rows as one atomic grouped delta. */
-  def foldWave(spark: SparkSession, newEdges: DataFrame, root: String,
-               waveId: Int, buckets: Int = 16): Long = {
-    val store = DeltaStore(root, buckets)
+  def foldWave(spark: SparkSession, newEdges: DataFrame, waveId: Int): Long = {
     store.heal()
     val e = newEdges.toDF("u", "v")
       .select(col("u").cast(LongType).as("u"), col("v").cast(LongType).as("v"))
@@ -140,8 +131,6 @@ object TriIndex {
       try Triangles.countDeltaWithDeg(all, deg).head().getLong(0)
       finally scala.concurrent.Await.result(
         commit, scala.concurrent.duration.Duration.Inf)
-    // every consumer of the two pinned frames has run (delta count +
-    // state commit) — release their blocks instead of waiting for GC
     graft.Q.unpin(incident)
     graft.Q.unpin(deg)
     delta
@@ -149,9 +138,8 @@ object TriIndex {
 
   /** (n_nodes, n_edges) from the maintained degree table alone — the
     * report never re-scans the edge list: Σd counts each edge twice. */
-  def stats(spark: SparkSession, root: String, buckets: Int = 16): DataFrame =
-    DeltaStore(root, buckets).read(spark, degSchema, None,
-        table = Some("deg"))
+  def stats(spark: SparkSession): DataFrame =
+    store.read(spark, degSchema, None, table = Some("deg"))
       .groupBy("node").agg(sum("d").as("d"))
       .agg(count(lit(1)).as("n_nodes"),
         coalesce(sum("d"), lit(0L)).as("dsum"))
@@ -161,24 +149,23 @@ object TriIndex {
 
   /** Fold deltas into one base: adjacency rows are immutable (identity
     * fold); degrees sum by node. One atomic grouped commit. */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16,
-              upTo: Option[Int] = None): Unit =
-    DeltaStore(root, buckets).compactTables(spark, Seq(
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compactTables(spark, Seq(
       ("adj", adjSchema, col("node"), (df: DataFrame) => df),
       ("deg", degSchema, col("node"),
         (df: DataFrame) => df.groupBy("node").agg(sum("d").as("d")))),
       upTo)
+}
 
-  /** Compaction policy: fold iff more than `maxDeltas` live deltas sit
-    * at or below `upTo` (streaming calls this at the START of batch k
-    * with `upTo = Some(k - 1)` — the degree fold is ADDITIVE, so
-    * folding a crashed batch's own delta would double-count it on
-    * replay; the horizon keeps it live to be excluded-and-replaced).
-    * Returns whether it fired. */
-  def maybeCompact(spark: SparkSession, root: String, maxDeltas: Int,
-                   upTo: Option[Int] = None, buckets: Int = 16): Boolean = {
-    val fire = DeltaStore(root, buckets).deltaCount(upTo) > maxDeltas
-    if (fire) compact(spark, root, buckets, upTo)
-    fire
-  }
+object TriIndex {
+
+  private val adjSchema = StructType(Seq(
+    StructField("node", LongType), StructField("nbr", LongType)))
+  private val degSchema = StructType(Seq(
+    StructField("node", LongType), StructField("d", LongType)))
+
+  /** Test seam: invoked on every pruned state read with (phase,
+    * buckets-read); specs assert strict-subset reads. No-op in
+    * production. */
+  private[graft] var onPrunedRead: (String, Seq[Int]) => Unit = (_, _) => ()
 }

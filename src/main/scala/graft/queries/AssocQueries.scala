@@ -4,6 +4,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.operators.{BasketIndex, StatCellIndex, TriIndex}
+import graft.streaming.Replay
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Association / decision analytics: market-basket rules, sweep-line
   * peak concurrency, Pareto skyline, leakage-safe target encoding,
@@ -388,36 +392,9 @@ object AssocQueries {
     Q(
       "q203_triangle_count",
       (s, dir) => {
-        val minSupport = 5L
-        val os = Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-          .distinct()
-        val edges = os.select(col("ok"), col("sk").as("u"))
-          .join(os.select(col("ok"), col("sk").as("v")), Seq("ok"))
-          .where(col("u") < col("v"))
-          .groupBy("u", "v").agg(count(lit(1)).as("w"))
-          .where(col("w") >= minSupport)
-          .select("u", "v")
-        graft.operators.Triangles.count(edges)
+        graft.operators.Triangles.count(triEdges(s, dir))
       },
-      Some("""
-        WITH os AS (
-          SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem
-        ), e AS (
-          SELECT a.sk AS u, b.sk AS v
-          FROM os a JOIN os b ON a.ok = b.ok AND a.sk < b.sk
-          GROUP BY 1, 2
-          HAVING COUNT(*) >= 5
-        ), nodes AS (
-          SELECT u AS node FROM e UNION SELECT v FROM e
-        )
-        SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
-               (SELECT COUNT(*) FROM e) AS n_edges,
-               (SELECT COUNT(*)
-                FROM e e1 JOIN e e2 ON e2.u = e1.v
-                          JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v)
-                 AS n_triangles
-      """)),
+      Some(triangleOracleSql)),
 
     // ----------------------------------------------------------------
     // q224: INCREMENTAL TRIANGLE maintenance — q203's count kept up to
@@ -440,59 +417,18 @@ object AssocQueries {
     Q(
       "q224_triangle_count_incremental",
       (s, dir) => {
-        val root = graft.Q.fresh(s, "q224_triidx", dir)
-        val minSupport = 5L
-        val os = Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-          .distinct()
-        // derive the thresholded edge set ONCE (the q221/q245 move —
-        // in production the edge waves ARE the input, so the
-        // pre-threshold counting shuffle is test scaffolding, charged
-        // once): each wave filters this materialized frame; the
-        // parquet landing round-trip this replaces (write partitioned
-        // by wave + schema'd re-read) was one extra write job plus a
-        // scan chain per fold for bytes nothing else read
-        val edges = os.select(col("ok"), col("sk").as("u"))
-          .join(os.select(col("ok"), col("sk").as("v")), Seq("ok"))
-          .where(col("u") < col("v"))
-          .groupBy("u", "v").agg(count(lit(1)).as("w"))
-          .where(col("w") >= minSupport)
-          .withColumn("wave", pmod(hash(col("u"), col("v")), lit(3)))
-          .select("u", "v", "wave")
-          .localCheckpoint()
+        val idx = TriIndex(s"${Q.fresh(s, "q224_triidx", dir)}/store")
         // (no mid-stream compact here: the fold-through-compact path is
         // exercised by q225's policy and TriIndexSpec; an identity
         // rewrite of the whole adjacency would only re-pay state IO)
         var total = 0L
-        (0 until 3).foreach { i =>
-          val w = edges.where(col("wave") === i).select("u", "v")
-          total += graft.operators.TriIndex.foldWave(s, w, s"$root/store", i)
+        Replay.waves(triEdges(s, dir), 3, col("u"), col("v")) { (w, i) =>
+          total += idx.foldWave(s, w, i)
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(edges)
-        graft.operators.TriIndex.stats(s, s"$root/store")
-          .select(col("n_nodes"), col("n_edges"),
-            lit(total).as("n_triangles"))
+        idx.stats(s)
+          .select(col("n_nodes"), col("n_edges"), lit(total).as("n_triangles"))
       },
-      Some("""
-        WITH os AS (
-          SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem
-        ), e AS (
-          SELECT a.sk AS u, b.sk AS v
-          FROM os a JOIN os b ON a.ok = b.ok AND a.sk < b.sk
-          GROUP BY 1, 2
-          HAVING COUNT(*) >= 5
-        ), nodes AS (
-          SELECT u AS node FROM e UNION SELECT v FROM e
-        )
-        SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
-               (SELECT COUNT(*) FROM e) AS n_edges,
-               (SELECT COUNT(*)
-                FROM e e1 JOIN e e2 ON e2.u = e1.v
-                          JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v)
-                 AS n_triangles
-      """)),
+      Some(triangleOracleSql)),
 
     // ----------------------------------------------------------------
     // q225: STREAMING triangle maintenance — q224's TriIndex fold
@@ -512,42 +448,21 @@ object AssocQueries {
     Q(
       "q225_stream_triangles",
       (s, dir) => {
-        val out = graft.Q.fresh(s, "q225_streamtri", dir)
-        val minSupport = 5L
-        val os = Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-          .distinct()
-        // derived ONCE, landed twice (the q221 "derived once" move): both
-        // wave writes filter this frame, and without the cut each write
-        // re-ran the distinct + self-join + threshold aggregate — the
+        val out = Q.fresh(s, "q225_streamtri", dir)
+        val idx = TriIndex(s"$out/store")
+        // derived ONCE, landed twice: without the pin each wave write
+        // re-runs the distinct + self-join + threshold aggregate — the
         // query's single heaviest chain — from scratch
-        val edges = os.select(col("ok"), col("sk").as("u"))
-          .join(os.select(col("ok"), col("sk").as("v")), Seq("ok"))
-          .where(col("u") < col("v"))
-          .groupBy("u", "v").agg(count(lit(1)).as("w"))
-          .where(col("w") >= minSupport)
-          .select("u", "v")
-          .localCheckpoint()
+        val edges = triEdges(s, dir).localCheckpoint()
         def latestTotalBelow(id: Long): Long =
-          graft.streaming.Replay.latestBelow(s"$out/total", id).map { k =>
+          Replay.latestBelow(s"$out/total", id).map { k =>
             s.read.parquet(s"$out/total/state=$k").head().getLong(0)
           }.getOrElse(0L)
-        graft.streaming.Replay.stream(s, out,
-            Seq(edges.where(pmod(hash(col("u"), col("v")), lit(2)) === 0),
-              edges.where(pmod(hash(col("u"), col("v")), lit(2)) === 1)),
+        Replay.stream(s, out, Replay.split(edges, 2, col("u"), col("v")),
             parts = 2) { (b, id) =>
-          // auto-compaction policy at batch start (threshold 0 —
-          // fires under this two-batch gate): only the durably-
-          // committed tail folds; the degree fold is additive, so
-          // the batch's own delta must stay live for replay
-          graft.operators.TriIndex.maybeCompact(s, s"$out/store",
-            maxDeltas = 0, upTo = Some(id - 1))
-          require(graft.operators.DeltaStore(s"$out/store")
-            .deltaCount(Some(id - 1)) == 0,
-            "q225: compaction policy left committed deltas live")
-          val delta = graft.operators.TriIndex
-            .foldWave(s, b, s"$out/store", id)
-          val total = latestTotalBelow(id) + delta
+          // threshold 0 so the policy fires under this two-batch gate
+          idx.compactBefore(s, id, maxDeltas = 0)
+          val total = latestTotalBelow(id) + idx.foldWave(s, b, id)
           s.createDataFrame(
               java.util.List.of(org.apache.spark.sql.Row(total)),
               org.apache.spark.sql.types.StructType(Seq(
@@ -556,31 +471,12 @@ object AssocQueries {
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$out/total/state=$id")
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(edges)
-        graft.operators.TriIndex.stats(s, s"$out/store")
+        Q.unpin(edges)
+        idx.stats(s)
           .select(col("n_nodes"), col("n_edges"),
             lit(latestTotalBelow(Long.MaxValue)).as("n_triangles"))
       },
-      Some("""
-        WITH os AS (
-          SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem
-        ), e AS (
-          SELECT a.sk AS u, b.sk AS v
-          FROM os a JOIN os b ON a.ok = b.ok AND a.sk < b.sk
-          GROUP BY 1, 2
-          HAVING COUNT(*) >= 5
-        ), nodes AS (
-          SELECT u AS node FROM e UNION SELECT v FROM e
-        )
-        SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
-               (SELECT COUNT(*) FROM e) AS n_edges,
-               (SELECT COUNT(*)
-                FROM e e1 JOIN e e2 ON e2.u = e1.v
-                          JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v)
-                 AS n_triangles
-      """)),
+      Some(triangleOracleSql)),
 
     // ----------------------------------------------------------------
     // q220: STREAMING skyline maintenance — q214's fold deployed at
@@ -1081,30 +977,8 @@ object AssocQueries {
     // wave the state IO is O(cells) — 10 rows — however big the batch.
     Q(
       "q226_chi2_incremental",
-      (s, dir) => {
-        val root = graft.Q.fresh(s, "q226_cells", dir)
-        // derived ONCE (the q221 move): all three wave filters consume
-        // this frame instead of re-scanning events per wave
-        val ev = Tables.df(s, dir, "events")
-          .where(col("event_type").isin(chi2Types: _*))
-          .select(col("event_id"), col("event_type"),
-            (col("value") >= 50.0).as("hi"))
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = ev.where(pmod(hash(col("event_id")), lit(3)) === i)
-            .select("event_type", "hi")
-          // policy-driven mid-stream compact: fires once, before wave 2
-          graft.operators.StatCellIndex.maybeCompact(s, root,
-            chi2CellSchema, maxDeltas = 1, upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendBatch(s, w, root, i,
-            chi2CellSchema)
-        }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(ev)
-        chi2FromCells(
-          graft.operators.StatCellIndex.cells(s, root, chi2CellSchema))
-      },
+      (s, dir) => chi2FromCells(cellsInWaves(s, Q.fresh(s, "q226_cells", dir),
+        chi2CellSchema, chi2Events(s, dir), col("event_id"))),
       Some(chi2OracleSql)),
 
     // ----------------------------------------------------------------
@@ -1119,28 +993,9 @@ object AssocQueries {
     // the drains by q211's arithmetic unchanged.
     Q(
       "q227_stream_chi2",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q227_streamchi2", dir)
-        val ev = Tables.df(s, dir, "events")
-          .where(col("event_type").isin(chi2Types: _*))
-          .select(col("event_id"), col("event_type"),
-            (col("value") >= 50.0).as("hi"))
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              ev.where(pmod(hash(col("event_id")), lit(2)) === i)
-                .select("event_type", "hi")),
-            parts = 8) { (b, id) =>
-          // auto-compaction policy at batch start: the cell fold is
-          // additive, so only the durably-committed tail may fold
-          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-            chi2CellSchema, maxDeltas = 0, upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendBatch(s, b,
-            s"$out/store", id, chi2CellSchema)
-        }
-        chi2FromCells(
-          graft.operators.StatCellIndex.cells(s, s"$out/store",
-            chi2CellSchema))
-      },
+      (s, dir) => chi2FromCells(cellsInStream(s,
+        Q.fresh(s, "q227_streamchi2", dir), chi2CellSchema, chi2Events(s, dir),
+        col("event_id"))),
       Some(chi2OracleSql)),
 
     // ----------------------------------------------------------------
@@ -1155,35 +1010,9 @@ object AssocQueries {
     // linenumber) row key; mid-stream compact between waves.
     Q(
       "q228_kendall_incremental",
-      (s, dir) => {
-        val root = graft.Q.fresh(s, "q228_cells", dir)
-        val d18 = org.apache.spark.sql.types.DecimalType(18, 0)
-        val li = Tables.lineitem(s, dir)
-          .select(col("l_orderkey"), col("l_linenumber"),
-            Q.dec2(col("l_quantity")).cast("long").as("x"),
-            (Q.dec2(col("l_extendedprice")) * 100).cast("long").as("cents"))
-          .selectExpr("l_orderkey", "l_linenumber", "x",
-            "cents div 100000 AS y")
-          // derived ONCE (the q221 move): the three wave filters
-          // consume this frame instead of re-scanning lineitem
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = li.where(
-              pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(3)) === i)
-            .select("x", "y")
-          // policy-driven mid-stream compact: fires once, before wave 2
-          graft.operators.StatCellIndex.maybeCompact(s, root,
-            kendallCellSchema, maxDeltas = 1, upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendBatch(s, w, root, i,
-            kendallCellSchema)
-        }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(li)
-        kendallFromCells(
-          graft.operators.StatCellIndex.cells(s, root, kendallCellSchema)
-            .select(col("x"), col("y"), col("c").cast(d18).as("t")))
-      },
+      (s, dir) => kendallReport(cellsInWaves(s, Q.fresh(s, "q228_cells", dir),
+        kendallCellSchema, kendallLines(s, dir),
+        col("l_orderkey"), col("l_linenumber"))),
       Some(kendallOracleSql)),
 
     // ----------------------------------------------------------------
@@ -1196,31 +1025,9 @@ object AssocQueries {
     // delta, independent of corpus size.
     Q(
       "q229_stream_kendall",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q229_streamkendall", dir)
-        val d18 = org.apache.spark.sql.types.DecimalType(18, 0)
-        val li = Tables.lineitem(s, dir)
-          .select(col("l_orderkey"), col("l_linenumber"),
-            Q.dec2(col("l_quantity")).cast("long").as("x"),
-            (Q.dec2(col("l_extendedprice")) * 100).cast("long").as("cents"))
-          .selectExpr("l_orderkey", "l_linenumber", "x",
-            "cents div 100000 AS y")
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === i)
-                .select("x", "y")),
-            parts = 8) { (b, id) =>
-          // auto-compaction policy at batch start (q227 discipline)
-          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-            kendallCellSchema, maxDeltas = 0, upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendBatch(s, b,
-            s"$out/store", id, kendallCellSchema)
-        }
-        kendallFromCells(
-          graft.operators.StatCellIndex.cells(s, s"$out/store",
-            kendallCellSchema)
-            .select(col("x"), col("y"), col("c").cast(d18).as("t")))
-      },
+      (s, dir) => kendallReport(cellsInStream(s,
+        Q.fresh(s, "q229_streamkendall", dir), kendallCellSchema,
+        kendallLines(s, dir), col("l_orderkey"), col("l_linenumber"))),
       Some(kendallOracleSql)),
 
     // ----------------------------------------------------------------
@@ -1233,68 +1040,19 @@ object AssocQueries {
     // unchanged — q215's oracle VERBATIM, three consumers.
     Q(
       "q231_ks_incremental",
-      (s, dir) => {
-        val root = graft.Q.fresh(s, "q231_cells", dir)
-        // derived ONCE (the q221 move): the three wave filters consume
-        // this frame instead of re-scanning orders per wave
-        val o = Tables.orders(s, dir).select(
-          col("o_orderkey"),
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L).as("is_a"),
-          floor(Q.dec2(col("o_totalprice"))).cast("long").as("v"))
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = o.where(pmod(hash(col("o_orderkey")), lit(3)) === i)
-            .select("is_a", "v")
-          // policy-driven mid-stream compact: fires once, before wave 2
-          graft.operators.StatCellIndex.maybeCompact(s, root,
-            ksCellSchema, maxDeltas = 1, upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendBatch(s, w, root, i,
-            ksCellSchema)
-        }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(o)
-        ksFromByV(
-          graft.operators.StatCellIndex.cells(s, root, ksCellSchema)
-            .groupBy("v")
-            .agg(sum(when(col("is_a") === 1L, col("c")).otherwise(0L)).as("a"),
-              sum(when(col("is_a") === 0L, col("c")).otherwise(0L)).as("b")))
-      },
+      (s, dir) => ksReport(cellsInWaves(s, Q.fresh(s, "q231_cells", dir),
+        ksCellSchema, priorityOrders(s, dir), col("o_orderkey"))),
       Some(ksOracleSql)),
 
     // ----------------------------------------------------------------
     // q232: STREAMING KOLMOGOROV-SMIRNOV — q231's cell fold at the
     // ingestion edge (Replay.stream); replay safety is appendBatch's
-    // no-read contract, and the auto-compaction policy folds the
-    // committed tail at each
-    // batch start (the q227/q229 discipline). q215's oracle now gates
-    // the statistic through three consumers.
+    // no-read contract. q215's oracle now gates the statistic through
+    // three consumers.
     Q(
       "q232_stream_ks",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q232_streamks", dir)
-        val o = Tables.orders(s, dir).select(
-          col("o_orderkey"),
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L).as("is_a"),
-          floor(Q.dec2(col("o_totalprice"))).cast("long").as("v"))
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              o.where(pmod(hash(col("o_orderkey")), lit(2)) === i)
-                .select("is_a", "v")),
-            parts = 8) { (b, id) =>
-          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-            ksCellSchema, maxDeltas = 0, upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendBatch(s, b,
-            s"$out/store", id, ksCellSchema)
-        }
-        ksFromByV(
-          graft.operators.StatCellIndex.cells(s, s"$out/store", ksCellSchema)
-            .groupBy("v")
-            .agg(sum(when(col("is_a") === 1L, col("c")).otherwise(0L)).as("a"),
-              sum(when(col("is_a") === 0L, col("c")).otherwise(0L)).as("b")))
-      },
+      (s, dir) => ksReport(cellsInStream(s, Q.fresh(s, "q232_streamks", dir),
+        ksCellSchema, priorityOrders(s, dir), col("o_orderkey"))),
       Some(ksOracleSql)),
 
     // ----------------------------------------------------------------
@@ -1309,59 +1067,14 @@ object AssocQueries {
     // Kendall) three-consumer.
     Q(
       "q233_mwu_incremental",
-      (s, dir) => {
-        val root = graft.Q.fresh(s, "q233_cells", dir)
-        // derived ONCE (the q221 move)
-        val o = Tables.orders(s, dir).select(
-          col("o_orderkey"),
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L).as("is_a"),
-          floor(Q.dec2(col("o_totalprice"))).cast("long").as("v"))
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = o.where(pmod(hash(col("o_orderkey")), lit(3)) === i)
-            .select("is_a", "v")
-          graft.operators.StatCellIndex.maybeCompact(s, root,
-            ksCellSchema, maxDeltas = 1, upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendBatch(s, w, root, i,
-            ksCellSchema)
-        }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(o)
-        mwuFromByV(
-          graft.operators.StatCellIndex.cells(s, root, ksCellSchema)
-            .groupBy("v")
-            .agg(sum(when(col("is_a") === 1L, col("c")).otherwise(0L))
-              .as("cnt_a"), sum("c").as("t")))
-      },
+      (s, dir) => mwuReport(cellsInWaves(s, Q.fresh(s, "q233_cells", dir),
+        ksCellSchema, priorityOrders(s, dir), col("o_orderkey"))),
       Some(mwuOracleSql)),
 
     Q(
       "q234_stream_mwu",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q234_streammwu", dir)
-        val o = Tables.orders(s, dir).select(
-          col("o_orderkey"),
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L).as("is_a"),
-          floor(Q.dec2(col("o_totalprice"))).cast("long").as("v"))
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              o.where(pmod(hash(col("o_orderkey")), lit(2)) === i)
-                .select("is_a", "v")),
-            parts = 8) { (b, id) =>
-          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-            ksCellSchema, maxDeltas = 0, upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendBatch(s, b,
-            s"$out/store", id, ksCellSchema)
-        }
-        mwuFromByV(
-          graft.operators.StatCellIndex.cells(s, s"$out/store", ksCellSchema)
-            .groupBy("v")
-            .agg(sum(when(col("is_a") === 1L, col("c")).otherwise(0L))
-              .as("cnt_a"), sum("c").as("t")))
-      },
+      (s, dir) => mwuReport(cellsInStream(s, Q.fresh(s, "q234_streammwu", dir),
+        ksCellSchema, priorityOrders(s, dir), col("o_orderkey"))),
       Some(mwuOracleSql)),
 
     // ----------------------------------------------------------------
@@ -1376,53 +1089,16 @@ object AssocQueries {
     // and q218's oracle gates all three consumers VERBATIM.
     Q(
       "q235_spearman_incremental",
-      (s, dir) => {
-        val root = graft.Q.fresh(s, "q235_cells", dir)
-        // derived ONCE (the q221 move)
-        val li = Tables.lineitem(s, dir).select(
-          col("l_orderkey"), col("l_linenumber"),
-          Q.dec2(col("l_quantity")).cast("long").as("x"),
-          floor(Q.dec2(col("l_extendedprice"))).cast("long").as("y"))
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = li.where(
-              pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(3)) === i)
-            .select("x", "y")
-          graft.operators.StatCellIndex.maybeCompact(s, root,
-            kendallCellSchema, maxDeltas = 1, upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendBatch(s, w, root, i,
-            kendallCellSchema)
-        }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(li)
-        spearmanFromCells(
-          graft.operators.StatCellIndex.cells(s, root, kendallCellSchema))
-      },
+      (s, dir) => spearmanFromCells(cellsInWaves(s,
+        Q.fresh(s, "q235_cells", dir), kendallCellSchema, spearmanLines(s, dir),
+        col("l_orderkey"), col("l_linenumber"))),
       Some(spearmanOracleSql)),
 
     Q(
       "q236_stream_spearman",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q236_streamsp", dir)
-        val li = Tables.lineitem(s, dir).select(
-          col("l_orderkey"), col("l_linenumber"),
-          Q.dec2(col("l_quantity")).cast("long").as("x"),
-          floor(Q.dec2(col("l_extendedprice"))).cast("long").as("y"))
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              li.where(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(2)) === i)
-                .select("x", "y")),
-            parts = 8) { (b, id) =>
-          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-            kendallCellSchema, maxDeltas = 0, upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendBatch(s, b,
-            s"$out/store", id, kendallCellSchema)
-        }
-        spearmanFromCells(
-          graft.operators.StatCellIndex.cells(s, s"$out/store",
-            kendallCellSchema))
-      },
+      (s, dir) => spearmanFromCells(cellsInStream(s,
+        Q.fresh(s, "q236_streamsp", dir), kendallCellSchema,
+        spearmanLines(s, dir), col("l_orderkey"), col("l_linenumber"))),
       Some(spearmanOracleSql)),
 
     // ----------------------------------------------------------------
@@ -1434,56 +1110,15 @@ object AssocQueries {
     // q207's oracle gates all three consumers VERBATIM.
     Q(
       "q237_benford_incremental",
-      (s, dir) => {
-        val root = graft.Q.fresh(s, "q237_cells", dir)
-        // derived ONCE (the q221 move)
-        val o = Tables.orders(s, dir).select(
-          col("o_orderkey"),
-          substring(
-            (Q.dec2(col("o_totalprice")) * 100).cast("long").cast("string"),
-            1, 1).cast("int").as("digit"))
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = o.where(pmod(hash(col("o_orderkey")), lit(3)) === i)
-            .select("digit")
-          graft.operators.StatCellIndex.maybeCompact(s, root,
-            benfordCellSchema, maxDeltas = 1, upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendBatch(s, w, root, i,
-            benfordCellSchema)
-        }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(o)
-        benfordFromCounts(
-          graft.operators.StatCellIndex.cells(s, root, benfordCellSchema)
-            .select(col("digit"), col("c").as("n")))
-      },
+      (s, dir) => benfordReport(cellsInWaves(s, Q.fresh(s, "q237_cells", dir),
+        benfordCellSchema, benfordOrders(s, dir), col("o_orderkey"))),
       Some(benfordOracleSql)),
 
     Q(
       "q238_stream_benford",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q238_streambenford", dir)
-        val o = Tables.orders(s, dir).select(
-          col("o_orderkey"),
-          substring(
-            (Q.dec2(col("o_totalprice")) * 100).cast("long").cast("string"),
-            1, 1).cast("int").as("digit"))
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              o.where(pmod(hash(col("o_orderkey")), lit(2)) === i)
-                .select("digit")),
-            parts = 8) { (b, id) =>
-          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-            benfordCellSchema, maxDeltas = 0, upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendBatch(s, b,
-            s"$out/store", id, benfordCellSchema)
-        }
-        benfordFromCounts(
-          graft.operators.StatCellIndex.cells(s, s"$out/store",
-            benfordCellSchema)
-            .select(col("digit"), col("c").as("n")))
-      },
+      (s, dir) => benfordReport(cellsInStream(s,
+        Q.fresh(s, "q238_streambenford", dir), benfordCellSchema,
+        benfordOrders(s, dir), col("o_orderkey"))),
       Some(benfordOracleSql)),
 
     // ----------------------------------------------------------------
@@ -1499,55 +1134,14 @@ object AssocQueries {
     // oracle VERBATIM, three consumers.
     Q(
       "q239_ab_incremental",
-      (s, dir) => {
-        val root = graft.Q.fresh(s, "q239_cells", dir)
-        // derived ONCE (the q221 move)
-        val ev = Tables.df(s, dir, "events").select(
-          col("event_id"), col("user_id"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L).as("is_p"))
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = ev.where(pmod(hash(col("event_id")), lit(3)) === i)
-            .select("user_id", "is_p")
-          graft.operators.StatCellIndex.maybeCompact(s, root,
-            abCellSchema, maxDeltas = 1, upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendBatch(s, w, root, i,
-            abCellSchema)
-        }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(ev)
-        abTestFromUsers(
-          graft.operators.StatCellIndex.cells(s, root, abCellSchema)
-            .groupBy("user_id")
-            .agg(sum(when(col("is_p") === 1L, col("c")).otherwise(0L))
-              .as("n_purch")))
-      },
+      (s, dir) => abReport(cellsInWaves(s, Q.fresh(s, "q239_cells", dir),
+        abCellSchema, abEvents(s, dir), col("event_id"))),
       Some(abOracleSql)),
 
     Q(
       "q240_stream_ab",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q240_streamab", dir)
-        val ev = Tables.df(s, dir, "events").select(
-          col("event_id"), col("user_id"),
-          when(col("event_type") === "purchase", 1L).otherwise(0L).as("is_p"))
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              ev.where(pmod(hash(col("event_id")), lit(2)) === i)
-                .select("user_id", "is_p")),
-            parts = 8) { (b, id) =>
-          graft.operators.StatCellIndex.maybeCompact(s, s"$out/store",
-            abCellSchema, maxDeltas = 0, upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendBatch(s, b,
-            s"$out/store", id, abCellSchema)
-        }
-        abTestFromUsers(
-          graft.operators.StatCellIndex.cells(s, s"$out/store", abCellSchema)
-            .groupBy("user_id")
-            .agg(sum(when(col("is_p") === 1L, col("c")).otherwise(0L))
-              .as("n_purch")))
-      },
+      (s, dir) => abReport(cellsInStream(s, Q.fresh(s, "q240_streamab", dir),
+        abCellSchema, abEvents(s, dir), col("event_id"))),
       Some(abOracleSql)),
 
     // ----------------------------------------------------------------
@@ -1563,50 +1157,29 @@ object AssocQueries {
     Q(
       "q241_concentration_incremental",
       (s, dir) => {
-        val root = graft.Q.fresh(s, "q241_moments", dir)
-        // derived ONCE (the q221 move)
-        val o = Tables.orders(s, dir).select(
-          col("o_orderkey"), col("o_custkey").as("ck"),
-          (Q.dec2(col("o_totalprice")) * 100).cast("long").as("rev_c"))
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = o.where(pmod(hash(col("o_orderkey")), lit(3)) === i)
-            .select("ck", "rev_c")
-          graft.operators.StatCellIndex.maybeCompactAgg(s, root,
-            revMomentSchema, Seq("rev_c"), maxDeltas = 1, upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendAgg(s, w, root, i,
-            revMomentSchema, Seq("rev_c"))
+        val idx = StatCellIndex(Q.fresh(s, "q241_moments", dir),
+          revMomentSchema, Seq("rev_c"))
+        Replay.waves(revOrders(s, dir), 3, col("o_orderkey")) { (w, i) =>
+          idx.compactBefore(s, i, maxDeltas = 1)
+          idx.appendAgg(s, w.select("ck", "rev_c"), i)
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(o)
-        concentrationFromRev(
-          graft.operators.StatCellIndex.table(s, root, revMomentSchema,
-            Seq("rev_c")))
+        concentrationFromRev(idx.cells(s))
       },
       Some(concentrationOracleSql)),
 
     Q(
       "q242_stream_concentration",
       (s, dir) => {
-        val out = graft.Q.fresh(s, "q242_streamconc", dir)
-        val o = Tables.orders(s, dir).select(
-          col("o_orderkey"), col("o_custkey").as("ck"),
-          (Q.dec2(col("o_totalprice")) * 100).cast("long").as("rev_c"))
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              o.where(pmod(hash(col("o_orderkey")), lit(2)) === i)
-                .select("ck", "rev_c")),
+        val out = Q.fresh(s, "q242_streamconc", dir)
+        val idx = StatCellIndex(s"$out/store", revMomentSchema, Seq("rev_c"))
+        Replay.stream(s, out,
+            Replay.split(revOrders(s, dir), 2, col("o_orderkey"))
+              .map(_.select("ck", "rev_c")),
             parts = 8) { (b, id) =>
-          graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
-            revMomentSchema, Seq("rev_c"), maxDeltas = 0,
-            upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendAgg(s, b,
-            s"$out/store", id, revMomentSchema, Seq("rev_c"))
+          idx.compactBefore(s, id, maxDeltas = 0)
+          idx.appendAgg(s, b, id)
         }
-        concentrationFromRev(
-          graft.operators.StatCellIndex.table(s, s"$out/store",
-            revMomentSchema, Seq("rev_c")))
+        concentrationFromRev(idx.cells(s))
       },
       Some(concentrationOracleSql)),
 
@@ -1624,66 +1197,33 @@ object AssocQueries {
     Q(
       "q245_basket_incremental",
       (s, dir) => {
-        val root = graft.Q.fresh(s, "q245_basket", dir)
-        // derived ONCE (the q221 move): all three wave filters consume
-        // this frame; without the cut every wave re-ran the lineitem
-        // scan + brand broadcast join
-        val lines = Tables.lineitem(s, dir)
-          .select("l_orderkey", "l_linenumber", "l_partkey")
-          .join(
-            broadcast(Tables.part(s, dir).select("p_partkey", "p_brand")),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
-            col("p_brand").as("brand"))
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = lines.where(pmod(hash(col("ok"), col("ln")), lit(3)) === i)
-            .select("ok", "brand")
-          graft.operators.BasketIndex.maybeCompact(s, root, maxDeltas = 1,
-            upTo = Some(i - 1))
-          graft.operators.BasketIndex.appendWave(s, w, root, i)
+        val idx = BasketIndex(Q.fresh(s, "q245_basket", dir))
+        // pinned by the wave driver: without the cut every wave re-runs
+        // the lineitem scan + brand broadcast join
+        Replay.waves(basketLines(s, dir), 3, col("ok"), col("ln")) { (w, i) =>
+          idx.compactBefore(s, i, maxDeltas = 1)
+          idx.appendWave(s, w.select("ok", "brand"), i)
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(lines)
-        basketReport(
-          graft.operators.BasketIndex.pairs(s, root),
-          graft.operators.BasketIndex.brands(s, root),
-          graft.operators.BasketIndex.orderCount(s, root))
+        basketReport(idx.pairs(s), idx.brands(s), idx.orderCount(s))
       },
       Some(basketOracleSql)),
 
     Q(
       "q246_stream_basket",
       (s, dir) => {
-        val out = graft.Q.fresh(s, "q246_streambasket", dir)
-        // derived ONCE (the q221 move): both wave writes filter this
-        // frame instead of re-running the scan + brand join
-        val lines = Tables.lineitem(s, dir)
-          .select("l_orderkey", "l_linenumber", "l_partkey")
-          .join(
-            broadcast(Tables.part(s, dir).select("p_partkey", "p_brand")),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
-            col("p_brand").as("brand"))
-          .localCheckpoint()
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              lines.where(pmod(hash(col("ok"), col("ln")), lit(2)) === i)
-                .select("ok", "brand")),
+        val out = Q.fresh(s, "q246_streambasket", dir)
+        val idx = BasketIndex(s"$out/store")
+        // derived ONCE: both wave writes filter this frame instead of
+        // re-running the scan + brand join
+        val lines = basketLines(s, dir).localCheckpoint()
+        Replay.stream(s, out,
+            Replay.split(lines, 2, col("ok"), col("ln")).map(_.select("ok", "brand")),
             parts = 8) { (b, id) =>
-          graft.operators.BasketIndex.maybeCompact(s, s"$out/store",
-            maxDeltas = 0, upTo = Some(id - 1))
-          graft.operators.BasketIndex.appendWave(s, b,
-            s"$out/store", id)
+          idx.compactBefore(s, id, maxDeltas = 0)
+          idx.appendWave(s, b, id)
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(lines)
-        basketReport(
-          graft.operators.BasketIndex.pairs(s, s"$out/store"),
-          graft.operators.BasketIndex.brands(s, s"$out/store"),
-          graft.operators.BasketIndex.orderCount(s, s"$out/store"))
+        Q.unpin(lines)
+        basketReport(idx.pairs(s), idx.brands(s), idx.orderCount(s))
       },
       Some(basketOracleSql)),
 
@@ -1740,6 +1280,51 @@ object AssocQueries {
       """))
   )
 
+  /** Supplier pairs sharing at least five orders: q203's edge list, and
+    * the input of its maintained deployments q224/q225. */
+  private def triEdges(s: SparkSession, dir: String): DataFrame = {
+    val minSupport = 5L
+    val os = Tables.lineitem(s, dir)
+      .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
+      .distinct()
+    os.select(col("ok"), col("sk").as("u"))
+      .join(os.select(col("ok"), col("sk").as("v")), Seq("ok"))
+      .where(col("u") < col("v"))
+      .groupBy("u", "v").agg(count(lit(1)).as("w"))
+      .where(col("w") >= minSupport)
+      .select("u", "v")
+  }
+
+  /** q203's naive 3-way-self-join oracle, shared verbatim by q224/q225. */
+  private val triangleOracleSql = """
+        WITH os AS (
+          SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem
+        ), e AS (
+          SELECT a.sk AS u, b.sk AS v
+          FROM os a JOIN os b ON a.ok = b.ok AND a.sk < b.sk
+          GROUP BY 1, 2
+          HAVING COUNT(*) >= 5
+        ), nodes AS (
+          SELECT u AS node FROM e UNION SELECT v FROM e
+        )
+        SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
+               (SELECT COUNT(*) FROM e) AS n_edges,
+               (SELECT COUNT(*)
+                FROM e e1 JOIN e e2 ON e2.u = e1.v
+                          JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v)
+                 AS n_triangles
+      """
+
+  /** Order lines with their brand, keyed by (ok, ln): q245/q246's waves. */
+  private def basketLines(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select("l_orderkey", "l_linenumber", "l_partkey")
+      .join(
+        broadcast(Tables.part(s, dir).select("p_partkey", "p_brand")),
+        col("l_partkey") === col("p_partkey"))
+      .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
+        col("p_brand").as("brand"))
+
   // ------------------------------------------------------------------
   // Shared distribution-statistic machinery: the SAME statistic tail
   // serves the one-shot queries and their StatCellIndex-maintained
@@ -1764,6 +1349,115 @@ object AssocQueries {
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("c",
       org.apache.spark.sql.types.LongType)))
+
+  /** The batch-incremental consumer of a cell statistic: `src` in three
+    * hash waves on `key`, each counted into a StatCellIndex at `root`
+    * over the schema's key columns, the policy firing once, before wave
+    * 2. Returns the maintained cells. */
+  private def cellsInWaves(s: SparkSession, root: String, schema: StructType,
+                           src: DataFrame, key: Column*): DataFrame = {
+    val idx = StatCellIndex(root, schema)
+    Replay.waves(src, 3, key: _*) { (w, i) =>
+      idx.compactBefore(s, i, maxDeltas = 1)
+      idx.appendBatch(s, w.select(cellKeys(schema): _*), i)
+    }
+    idx.cells(s)
+  }
+
+  /** The stream consumer: `src` in two hash waves on `key`, projected to
+    * the cell keys before landing under `out` and counted per
+    * micro-batch; threshold 0, so the policy fires under this two-batch
+    * gate. appendBatch reads no stored state, so a replayed batch
+    * rewrites its delta from the batch alone. */
+  private def cellsInStream(s: SparkSession, out: String, schema: StructType,
+                            src: DataFrame, key: Column*): DataFrame = {
+    val idx = StatCellIndex(s"$out/store", schema)
+    Replay.stream(s, out,
+        Replay.split(src, 2, key: _*).map(_.select(cellKeys(schema): _*)),
+        parts = 8) { (b, id) =>
+      idx.compactBefore(s, id, maxDeltas = 0)
+      idx.appendBatch(s, b, id)
+    }
+    idx.cells(s)
+  }
+
+  private def cellKeys(schema: StructType): Seq[Column] =
+    schema.fieldNames.toSeq.filter(_ != "c").map(col)
+
+  // Wave sources of the maintained twins: the row key the waves split
+  // on plus the cell key columns.
+
+  private def chi2Events(s: SparkSession, dir: String): DataFrame =
+    Tables.df(s, dir, "events")
+      .where(col("event_type").isin(chi2Types: _*))
+      .select(col("event_id"), col("event_type"),
+        (col("value") >= 50.0).as("hi"))
+
+  /** (quantity, price in whole thousands) per line: q228/q229. */
+  private def kendallLines(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_linenumber"),
+        Q.dec2(col("l_quantity")).cast("long").as("x"),
+        (Q.dec2(col("l_extendedprice")) * 100).cast("long").as("cents"))
+      .selectExpr("l_orderkey", "l_linenumber", "x", "cents div 100000 AS y")
+
+  /** (quantity, whole-dollar price) per line: q235/q236. */
+  private def spearmanLines(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir).select(
+      col("l_orderkey"), col("l_linenumber"),
+      Q.dec2(col("l_quantity")).cast("long").as("x"),
+      floor(Q.dec2(col("l_extendedprice"))).cast("long").as("y"))
+
+  /** (urgent?, whole-dollar total) per order: KS and MWU, q231–q234. */
+  private def priorityOrders(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir).select(
+      col("o_orderkey"),
+      when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
+        .otherwise(0L).as("is_a"),
+      floor(Q.dec2(col("o_totalprice"))).cast("long").as("v"))
+
+  /** First digit of each order's total in cents: q237/q238. */
+  private def benfordOrders(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir).select(
+      col("o_orderkey"),
+      substring(
+        (Q.dec2(col("o_totalprice")) * 100).cast("long").cast("string"),
+        1, 1).cast("int").as("digit"))
+
+  /** (user, purchase?) per event: q239/q240. */
+  private def abEvents(s: SparkSession, dir: String): DataFrame =
+    Tables.df(s, dir, "events").select(
+      col("event_id"), col("user_id"),
+      when(col("event_type") === "purchase", 1L).otherwise(0L).as("is_p"))
+
+  /** (customer, revenue cents) per order: q241/q242. */
+  private def revOrders(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir).select(
+      col("o_orderkey"), col("o_custkey").as("ck"),
+      (Q.dec2(col("o_totalprice")) * 100).cast("long").as("rev_c"))
+
+  // Report tails over maintained cells, each shared by a twin pair.
+
+  private def kendallReport(cells: DataFrame): DataFrame =
+    kendallFromCells(cells.select(col("x"), col("y"),
+      col("c").cast(org.apache.spark.sql.types.DecimalType(18, 0)).as("t")))
+
+  private def ksReport(cells: DataFrame): DataFrame =
+    ksFromByV(cells.groupBy("v")
+      .agg(sum(when(col("is_a") === 1L, col("c")).otherwise(0L)).as("a"),
+        sum(when(col("is_a") === 0L, col("c")).otherwise(0L)).as("b")))
+
+  private def mwuReport(cells: DataFrame): DataFrame =
+    mwuFromByV(cells.groupBy("v")
+      .agg(sum(when(col("is_a") === 1L, col("c")).otherwise(0L)).as("cnt_a"),
+        sum("c").as("t")))
+
+  private def benfordReport(cells: DataFrame): DataFrame =
+    benfordFromCounts(cells.select(col("digit"), col("c").as("n")))
+
+  private def abReport(cells: DataFrame): DataFrame =
+    abTestFromUsers(cells.groupBy("user_id")
+      .agg(sum(when(col("is_p") === 1L, col("c")).otherwise(0L)).as("n_purch")))
 
   /** q211's k x 2 chi-square from (event_type, hi, c) CELLS — the same
     * exact-decimal row numerators and fixed left-associated IEEE term

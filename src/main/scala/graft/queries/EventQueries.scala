@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.operators.{DeltaStore, MorTable, Scd2, Scd2Index}
+import graft.streaming.Replay
 
 /** Event-stream analytics: distribution drift, retention cohorts,
   * ordered conversion funnels, and SCD2 validity intervals — the
@@ -261,40 +263,7 @@ object EventQueries {
             "valid_to_us", "is_current", "n_events")
           .orderBy("user_id", "island")
       },
-      Some("""
-        WITH ev AS (
-          SELECT user_id, event_id,
-                 epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-                 CAST(FLOOR(value / 100.0) AS INT) AS tier
-          FROM events
-        ), flagged AS (
-          SELECT user_id, event_id, us, tier,
-                 CASE WHEN lag(tier) OVER w IS NULL
-                        OR lag(tier) OVER w <> tier
-                      THEN 1 ELSE 0 END AS chg
-          FROM ev
-          WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        ), islands AS (
-          SELECT user_id, us, tier,
-                 SUM(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                ROWS UNBOUNDED PRECEDING) AS island
-          FROM flagged
-        ), runs AS (
-          SELECT user_id, CAST(island AS BIGINT) AS island,
-                 MIN(tier) AS tier,
-                 MIN(us) AS valid_from_us,
-                 COUNT(*) AS n_events
-          FROM islands GROUP BY 1, 2
-        )
-        SELECT user_id, island, tier, valid_from_us,
-               lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY island)
-                 AS valid_to_us,
-               lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY island)
-                 IS NULL AS is_current,
-               n_events
-        FROM runs
-        ORDER BY user_id, island
-      """)),
+      Some(scd2OracleSql)),
 
     // ----------------------------------------------------------------
     // q209: INCREMENTAL SCD2 MAINTENANCE — q192's validity intervals
@@ -319,66 +288,22 @@ object EventQueries {
     Q(
       "q209_scd2_incremental",
       (s, dir) => {
-        import graft.operators.Scd2Index
-        val root = graft.Q.fresh(s, "q209_scd2idx", dir)
-        // derived ONCE (the q221 move): the midpoint agg and both wave
-        // filters consume this frame — 3 scans of events become 1
-        val ev = Tables.events(s, dir)
-          .select(col("user_id").as("k"), col("event_id").as("tie"),
-            usCol.as("us"),
-            floor(col("value") / lit(100.0)).cast("int").as("attr"))
-          .localCheckpoint()
+        val idx = Scd2Index(Q.fresh(s, "q209_scd2idx", dir))
+        // derived ONCE: the midpoint agg and both wave filters consume
+        // this frame — 3 scans of events become 1
+        val ev = scd2Events(s, dir).localCheckpoint()
         // per-key time-split waves from the global midpoint (usable
         // because us <= mid / us > mid splits EVERY key in time order)
         val mid = ev.agg(
           ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
           .head().getLong(0)
-        Scd2Index.appendBatch(s, ev.where(col("us") <= mid), root, 1)
-        Scd2Index.compact(s, root)
-        Scd2Index.appendBatch(s, ev.where(col("us") > mid), root, 2)
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(ev)
-        Scd2Index.intervals(s, root)
-          .select(col("k").as("user_id"), col("island"),
-            col("attr").as("tier"), col("valid_from_us"),
-            col("valid_to_us"), col("is_current"), col("n_events"))
-          .orderBy("user_id", "island")
+        idx.appendBatch(s, ev.where(col("us") <= mid), 1)
+        idx.compact(s)
+        idx.appendBatch(s, ev.where(col("us") > mid), 2)
+        Q.unpin(ev)
+        scd2Report(idx.intervals(s))
       },
-      Some("""
-        WITH ev AS (
-          SELECT user_id, event_id,
-                 epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-                 CAST(FLOOR(value / 100.0) AS INT) AS tier
-          FROM events
-        ), flagged AS (
-          SELECT user_id, event_id, us, tier,
-                 CASE WHEN lag(tier) OVER w IS NULL
-                        OR lag(tier) OVER w <> tier
-                      THEN 1 ELSE 0 END AS chg
-          FROM ev
-          WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        ), islands AS (
-          SELECT user_id, us, tier,
-                 SUM(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                ROWS UNBOUNDED PRECEDING) AS island
-          FROM flagged
-        ), runs AS (
-          SELECT user_id, CAST(island AS BIGINT) AS island,
-                 MIN(tier) AS tier,
-                 MIN(us) AS valid_from_us,
-                 COUNT(*) AS n_events
-          FROM islands GROUP BY 1, 2
-        )
-        SELECT user_id, island, tier, valid_from_us,
-               lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY island)
-                 AS valid_to_us,
-               lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY island)
-                 IS NULL AS is_current,
-               n_events
-        FROM runs
-        ORDER BY user_id, island
-      """)),
+      Some(scd2OracleSql)),
 
     // ----------------------------------------------------------------
     // q193: POINT-IN-TIME FEATURE JOIN — the feature-store lookup that
@@ -819,77 +744,26 @@ object EventQueries {
     Q(
       "q216_stream_scd2",
       (s, dir) => {
-        import graft.operators.Scd2Index
-        val out = graft.Q.fresh(s, "q216_streamscd2", dir)
-        // derived ONCE (the q221 move): the midpoint agg and both wave
-        // landing writes consume this frame — 3 scans of events become 1
-        val ev = Tables.events(s, dir)
-          .select(col("user_id").as("k"), col("event_id").as("tie"),
-            usCol.as("us"),
-            floor(col("value") / lit(100.0)).cast("int").as("attr"))
-          .localCheckpoint()
+        val out = Q.fresh(s, "q216_streamscd2", dir)
+        val idx = Scd2Index(s"$out/store")
+        // derived ONCE: the midpoint agg and both wave landing writes
+        // consume this frame — 3 scans of events become 1
+        val ev = scd2Events(s, dir).localCheckpoint()
         val mid = ev.agg(
           ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
           .head().getLong(0)
-        graft.streaming.Replay.stream(s, out,
+        Replay.stream(s, out,
             Seq(ev.where(col("us") <= mid), ev.where(col("us") > mid)),
             parts = 2) { (b, id) =>
-          // auto-compaction POLICY at batch start: fold the
-          // durably-committed delta tail (never the batch's own
-          // delta — a replayed batch must still exclude-and-replace
-          // it), threshold 0 so the policy fires under this gate;
-          // the postcondition is asserted, the firing itself is
-          // pinned in AutoCompactSpec
-          Scd2Index.maybeCompact(s, s"$out/store", maxDeltas = 0,
-            upTo = Some(id - 1))
-          require(graft.operators.DeltaStore(s"$out/store")
-            .deltaCount(Some(id - 1)) == 0,
-            "q216: compaction policy left committed deltas live")
-          Scd2Index.appendBatch(s, b, s"$out/store", id)
+          // threshold 0 so the policy fires under this gate; the firing
+          // itself is pinned in AutoCompactSpec
+          idx.compactBefore(s, id, maxDeltas = 0)
+          idx.appendBatch(s, b, id)
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(ev)
-        Scd2Index.intervals(s, s"$out/store")
-          .select(col("k").as("user_id"), col("island"),
-            col("attr").as("tier"), col("valid_from_us"),
-            col("valid_to_us"), col("is_current"), col("n_events"))
-          .orderBy("user_id", "island")
+        Q.unpin(ev)
+        scd2Report(idx.intervals(s))
       },
-      Some("""
-        WITH ev AS (
-          SELECT user_id, event_id,
-                 epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-                 CAST(FLOOR(value / 100.0) AS INT) AS tier
-          FROM events
-        ), flagged AS (
-          SELECT user_id, event_id, us, tier,
-                 CASE WHEN lag(tier) OVER w IS NULL
-                        OR lag(tier) OVER w <> tier
-                      THEN 1 ELSE 0 END AS chg
-          FROM ev
-          WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        ), islands AS (
-          SELECT user_id, us, tier,
-                 SUM(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                ROWS UNBOUNDED PRECEDING) AS island
-          FROM flagged
-        ), runs AS (
-          SELECT user_id, CAST(island AS BIGINT) AS island,
-                 MIN(tier) AS tier,
-                 MIN(us) AS valid_from_us,
-                 COUNT(*) AS n_events
-          FROM islands GROUP BY 1, 2
-        )
-        SELECT user_id, island, tier, valid_from_us,
-               lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY island)
-                 AS valid_to_us,
-               lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY island)
-                 IS NULL AS is_current,
-               n_events
-        FROM runs
-        ORDER BY user_id, island
-      """)),
+      Some(scd2OracleSql)),
 
     // ----------------------------------------------------------------
     // q222: LATE-DATA SCD2 through the merge-on-read escape hatch —
@@ -914,17 +788,13 @@ object EventQueries {
     Q(
       "q222_scd2_late_data",
       (s, dir) => {
-        import graft.operators.{DeltaStore, MorTable, Scd2, Scd2Index}
-        val root = graft.Q.fresh(s, "q222_scd2late", dir)
+        val root = Q.fresh(s, "q222_scd2late", dir)
+        val silver = Scd2Index(s"$root/silver")
         // derived ONCE (the q221 move): the midpoint agg, the three
         // wave filters, and the repair's affected-key set consume this
         // frame — without the cut each bronze+silver feed re-scanned
         // events
-        val ev = Tables.events(s, dir)
-          .select(col("user_id").as("k"), col("event_id").as("tie"),
-            usCol.as("us"),
-            floor(col("value") / lit(100.0)).cast("int").as("attr"))
-          .localCheckpoint()
+        val ev = scd2Events(s, dir).localCheckpoint()
         val mid = ev.agg(
           ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
           .head().getLong(0)
@@ -936,44 +806,32 @@ object EventQueries {
         val late = ev.where(isLate)
         val bronze = MorTable(DeltaStore(s"$root/bronze"), Seq("tie"))
         bronze.upsert(w1, 1)
-        Scd2Index.appendBatch(s, w1, s"$root/silver", 1)
+        silver.appendBatch(s, w1, 1)
         bronze.upsert(w2, 2)
-        Scd2Index.appendBatch(s, w2, s"$root/silver", 2)
+        silver.appendBatch(s, w2, 2)
         bronze.upsert(late, 3)
         // the horizon guard FIRES on the late batch — that refusal is
         // the escape hatch's trigger and sits under this gate
         val refused =
-          try { Scd2Index.appendBatch(s, late, s"$root/silver", 3); false }
+          try { silver.appendBatch(s, late, 3); false }
           catch { case _: IllegalArgumentException => true }
         require(refused,
           "q222: the horizon guard must refuse the out-of-order batch")
         // repair read: affected keys re-window from bronze, the rest
         // serve from the maintained index
         val affected = late.select("k").distinct()
-        val raw = bronze.snapshot(s, org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("tie",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("us",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("attr",
-            org.apache.spark.sql.types.IntegerType))))
+        val raw = bronze.snapshot(s, ev.schema)
         val repaired = Scd2.intervals(
             raw.join(affected, Seq("k"), "left_semi"),
             "k", "us", "tie", "attr",
             fromName = "valid_from_us", toName = "valid_to_us")
           .select("k", "island", "attr", "valid_from_us", "valid_to_us",
             "is_current", "n_events")
-        val untouched = Scd2Index.intervals(s, s"$root/silver")
+        val untouched = silver.intervals(s)
           .join(affected, Seq("k"), "left_anti")
           .select("k", "island", "attr", "valid_from_us", "valid_to_us",
             "is_current", "n_events")
-        untouched.unionByName(repaired)
-          .select(col("k").as("user_id"), col("island"),
-            col("attr").as("tier"), col("valid_from_us"),
-            col("valid_to_us"), col("is_current"), col("n_events"))
-          .orderBy("user_id", "island")
+        scd2Report(untouched.unionByName(repaired))
       },
       Some(scd2OracleSql)),
 
@@ -998,17 +856,13 @@ object EventQueries {
     Q(
       "q230_scd2_backfill",
       (s, dir) => {
-        import graft.operators.{DeltaStore, MorTable, Scd2Index}
-        val root = graft.Q.fresh(s, "q230_scd2bf", dir)
+        val root = Q.fresh(s, "q230_scd2bf", dir)
+        val silver = Scd2Index(s"$root/silver")
         // derived ONCE (the q221 move): the threshold agg, the four
         // wave filters, and the late key set each consumed this frame —
         // without the cut that was ~9 scans of events per run (every
         // wave feeds BOTH bronze and silver)
-        val ev = Tables.events(s, dir)
-          .select(col("user_id").as("k"), col("event_id").as("tie"),
-            usCol.as("us"),
-            floor(col("value") / lit(100.0)).cast("int").as("attr"))
-          .localCheckpoint()
+        val ev = scd2Events(s, dir).localCheckpoint()
         val b = ev.agg(
             ((min(col("us")) * 2 + max(col("us"))) / lit(3L)).cast("long"),
             ((min(col("us")) + max(col("us")) * 2) / lit(3L)).cast("long"))
@@ -1023,49 +877,52 @@ object EventQueries {
         val late = ev.where(isLate)
         val bronze = MorTable(DeltaStore(s"$root/bronze"), Seq("tie"))
         bronze.upsert(w1, 1)
-        Scd2Index.appendBatch(s, w1, s"$root/silver", 1)
+        silver.appendBatch(s, w1, 1)
         bronze.upsert(w2, 2)
-        Scd2Index.appendBatch(s, w2, s"$root/silver", 2)
+        silver.appendBatch(s, w2, 2)
         bronze.upsert(late, 3)
         val refused =
-          try { Scd2Index.appendBatch(s, late, s"$root/silver", 3); false }
+          try { silver.appendBatch(s, late, 3); false }
           catch { case _: IllegalArgumentException => true }
         require(refused,
           "q230: the horizon guard must refuse the out-of-order batch")
         // repair: the affected keys' full history from bronze...
         val affected = late.select("k").distinct()
-        val raw = bronze.snapshot(s, org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("tie",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("us",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("attr",
-            org.apache.spark.sql.types.IntegerType))))
+        val raw = bronze.snapshot(s, ev.schema)
         val history = raw.join(affected, Seq("k"), "left_semi")
         // ...BACKFILLED into the index as one catch-up delta
-        Scd2Index.backfill(s, history, s"$root/silver", 4)
+        silver.backfill(s, history, 4)
         // the fast path is live again: a later in-order batch appends
         // through the guard, stitching onto rebuilt and untouched keys
         bronze.upsert(w3, 5)
-        Scd2Index.appendBatch(s, w3, s"$root/silver", 5)
+        silver.appendBatch(s, w3, 5)
+        Q.unpin(ev)
         // index-only read — no repair leg, no bronze access
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(ev)
-        Scd2Index.intervals(s, s"$root/silver")
-          .select(col("k").as("user_id"), col("island"),
-            col("attr").as("tier"), col("valid_from_us"),
-            col("valid_to_us"), col("is_current"), col("n_events"))
-          .orderBy("user_id", "island")
+        scd2Report(silver.intervals(s))
       },
       Some(scd2OracleSql))
   )
 
-  /** q192's SCD2 oracle — shared verbatim by the one-shot-equivalent
-    * deployments q222 (merge-on-read repair) and q230 (repair +
-    * backfill), making "held to q192's oracle VERBATIM" literal. */
+  /** (k, tie, us, attr) per event: the Scd2Index input of q209, q216,
+    * q222 and q230. */
+  private def scd2Events(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables.events(s, dir)
+      .select(col("user_id").as("k"), col("event_id").as("tie"),
+        usCol.as("us"),
+        floor(col("value") / lit(100.0)).cast("int").as("attr"))
+
+  /** Maintained intervals in q192's output shape. */
+  private def scd2Report(intervals: org.apache.spark.sql.DataFrame) =
+    intervals
+      .select(col("k").as("user_id"), col("island"),
+        col("attr").as("tier"), col("valid_from_us"),
+        col("valid_to_us"), col("is_current"), col("n_events"))
+      .orderBy("user_id", "island")
+
+  /** q192's SCD2 oracle — shared verbatim by its maintained deployments
+    * q209 (batch waves), q216 (stream), q222 (merge-on-read repair) and
+    * q230 (repair + backfill), making "held to q192's oracle VERBATIM"
+    * literal. */
   private[queries] val scd2OracleSql: String = """
         WITH ev AS (
           SELECT user_id, event_id,

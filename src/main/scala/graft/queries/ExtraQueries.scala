@@ -1469,8 +1469,6 @@ object ExtraQueries {
           SketchIndex.appendBatch(s, ev.where(col("event_id") % 4 === k), out, k)
           if (k == 1) SketchIndex.compact(s, out)
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
         graft.Q.unpin(ev)
         serveSketchReport(s, out)
       },

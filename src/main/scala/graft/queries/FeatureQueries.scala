@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.StatCellIndex
+import graft.streaming.Replay
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1194,6 +1196,16 @@ $selects
       """
   }
 
+  /** An int row hash plus the 4 measure columns: q243/q244's waves
+    * split on the hash (the moment sums do not depend on which wave a
+    * row lands in). Projected before the pin, the checkpoint is 5
+    * narrow columns — narrower than even one of the pruned scans it
+    * replaces. */
+  private def corrSource(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(hash(col("l_orderkey"), col("l_linenumber")).as("h") +:
+        corrCols.map(col): _*)
+
   /** q243/q244: the maintained correlation matrix — see [[corrFromMoments]]. */
   private[queries] def corrMaintained: Seq[Q] = Seq(
     // ----------------------------------------------------------------
@@ -1207,28 +1219,13 @@ $selects
     Q(
       "q243_corr_incremental",
       (s, dir) => {
-        val root = Q.fresh(s, "q243_moments", dir)
-        // project THEN pin (the r18 deferral condition now holds): the
-        // wave filter needs only a 1-int wave key and the addends only
-        // the 4 measure columns, so the checkpoint is 5 narrow columns
-        // — narrower than even one of the 3 pruned scans it replaces
-        val src = Tables.lineitem(s, dir)
-          .select(pmod(hash(col("l_orderkey"), col("l_linenumber")),
-            lit(3)).as("wv") +: corrCols.map(col): _*)
-          .localCheckpoint()
-        (0 until 3).foreach { i =>
-          val w = src.where(col("wv") === i).select(corrRowExprs: _*)
-          graft.operators.StatCellIndex.maybeCompactAgg(s, root,
-            corrMomentSchema, corrValueCols, maxDeltas = 1,
-            upTo = Some(i - 1))
-          graft.operators.StatCellIndex.appendAgg(s, w, root, i,
-            corrMomentSchema, corrValueCols)
+        val idx = StatCellIndex(Q.fresh(s, "q243_moments", dir),
+          corrMomentSchema, corrValueCols)
+        Replay.waves(corrSource(s, dir), 3, col("h")) { (w, i) =>
+          idx.compactBefore(s, i, maxDeltas = 1)
+          idx.appendAgg(s, w.select(corrRowExprs: _*), i)
         }
-        // waves are committed; the report reads the moment store
-        graft.Q.unpin(src)
-        corrFromMoments(
-          graft.operators.StatCellIndex.table(s, root, corrMomentSchema,
-            corrValueCols).drop("k"))
+        corrFromMoments(idx.cells(s).drop("k"))
       },
       Some(corrOracleSql)),
 
@@ -1236,37 +1233,26 @@ $selects
       "q244_stream_corr",
       (s, dir) => {
         val out = Q.fresh(s, "q244_streamcorr", dir)
-        val li = Tables.lineitem(s, dir)
-        // project THEN pin (the q243 move): both landing writes filter
-        // a 5-narrow-column checkpoint instead of re-scanning lineitem
-        val src = li
-          .select(pmod(hash(col("l_orderkey"), col("l_linenumber")),
-            lit(2)).as("wv") +: corrCols.map(col): _*)
-          .localCheckpoint()
+        val idx = StatCellIndex(s"$out/store", corrMomentSchema, corrValueCols)
+        val src = corrSource(s, dir).localCheckpoint()
         // the stream carries RAW measure rows (the production shape —
         // and 4 narrow doubles, not 15 wide decimal addends, so the
         // landing IO is the fact table's own width); the index computes
         // the moment addends inside the micro-batch
-        val waves = (0 until 2).map(i =>
-          src.where(col("wv") === i).select(corrCols.map(col): _*))
-        def fold(b: org.apache.spark.sql.DataFrame, id: Int): Unit = {
-          graft.operators.StatCellIndex.maybeCompactAgg(s, s"$out/store",
-            corrMomentSchema, corrValueCols, maxDeltas = 0,
-            upTo = Some(id - 1))
-          graft.operators.StatCellIndex.appendAgg(s,
-            b.select(corrRowExprs: _*),
-            s"$out/store", id, corrMomentSchema, corrValueCols)
+        val waves = Replay.split(src, 2, col("h"))
+          .map(_.select(corrCols.map(col): _*))
+        def fold(b: DataFrame, id: Int): Unit = {
+          idx.compactBefore(s, id, maxDeltas = 0)
+          idx.appendAgg(s, b.select(corrRowExprs: _*), id)
         }
         waves(0).repartition(32).write.parquet(s"$out/in")
-        graft.streaming.Replay.drain(s, out, waves(0).schema)(fold)
+        Replay.drain(s, out, waves(0).schema)(fold)
         waves(1).repartition(32).write.mode("append").parquet(s"$out/in")
         // both waves are landed; the second drain reads only the
         // landing files, so the pin is released before it runs
-        graft.Q.unpin(src)
-        graft.streaming.Replay.drain(s, out, waves(0).schema)(fold)
-        corrFromMoments(
-          graft.operators.StatCellIndex.table(s, s"$out/store",
-            corrMomentSchema, corrValueCols).drop("k"))
+        Q.unpin(src)
+        Replay.drain(s, out, waves(0).schema)(fold)
+        corrFromMoments(idx.cells(s).drop("k"))
       },
       Some(corrOracleSql))
   )

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.DotProductF
-import graft.operators.ConnectedComponents
+import graft.operators.{CcIndex, ConnectedComponents}
+import graft.streaming.Replay
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -243,6 +244,39 @@ object SimilarityQueries {
           SELECT p_name, SPLIT_PART(p_name, ' ', 2) AS blk FROM n
           QUALIFY ROW_NUMBER() OVER (PARTITION BY SPLIT_PART(p_name, ' ', 2)
                                      ORDER BY p_name) <= $blockCap)"""
+
+  /** Near-dup name pairs: same block, edit distance <= 2. The edge list
+    * of q62/q63 and of q219/q221's maintained components. */
+  private def nearDupPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val names = blockedNames(s, dir)
+    names.as("a").join(names.as("b"),
+        col("a.blk") === col("b.blk") && col("a.p_name") < col("b.p_name") &&
+          levenshtein(col("a.p_name"), col("b.p_name")) <= 2)
+      .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"))
+  }
+
+  /** q62's recursive-closure oracle, shared verbatim by q63 and the
+    * maintained deployments q219/q221. */
+  private val dedupComponentsOracleSql = """
+        WITH RECURSIVE n AS (SELECT DISTINCT p_name FROM part),
+        blk AS (
+          SELECT p_name, SPLIT_PART(p_name, ' ', 2) AS blk FROM n
+          QUALIFY ROW_NUMBER() OVER (PARTITION BY SPLIT_PART(p_name, ' ', 2)
+                                     ORDER BY p_name) <= 64),
+        p AS (
+          SELECT a.p_name AS x, b.p_name AS y
+          FROM blk a JOIN blk b ON a.blk = b.blk AND a.p_name < b.p_name
+                              AND LEVENSHTEIN(a.p_name, b.p_name) <= 2
+        ),
+        e AS (SELECT x AS a, y AS b FROM p UNION SELECT y, x FROM p),
+        reach(id, r) AS (
+          SELECT DISTINCT a, a FROM e
+          UNION
+          SELECT reach.id, e.b FROM reach JOIN e ON e.a = reach.r
+        )
+        SELECT id AS name, MIN(r) AS component
+        FROM reach GROUP BY id ORDER BY name
+      """
 
   /** The q35 pipeline as a reusable stage: MinHash band LSH candidates,
     * then exact capped-shingle Jaccard on candidates only. Returns
@@ -1020,35 +1054,12 @@ object SimilarityQueries {
     Q(
       "q62_dedup_components",
       (s, dir) => {
-        val names = blockedNames(s, dir)
-        val pairs = names.as("a").join(names.as("b"),
-            col("a.blk") === col("b.blk") && col("a.p_name") < col("b.p_name") &&
-              levenshtein(col("a.p_name"), col("b.p_name")) <= 2)
-          .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"))
+        val pairs = nearDupPairs(s, dir)
         ConnectedComponents.components(pairs)
           .select(col("id").as("name"), col("comp").as("component"))
           .orderBy("name")
       },
-      Some("""
-        WITH RECURSIVE n AS (SELECT DISTINCT p_name FROM part),
-        blk AS (
-          SELECT p_name, SPLIT_PART(p_name, ' ', 2) AS blk FROM n
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY SPLIT_PART(p_name, ' ', 2)
-                                     ORDER BY p_name) <= 64),
-        p AS (
-          SELECT a.p_name AS x, b.p_name AS y
-          FROM blk a JOIN blk b ON a.blk = b.blk AND a.p_name < b.p_name
-                              AND LEVENSHTEIN(a.p_name, b.p_name) <= 2
-        ),
-        e AS (SELECT x AS a, y AS b FROM p UNION SELECT y, x FROM p),
-        reach(id, r) AS (
-          SELECT DISTINCT a, a FROM e
-          UNION
-          SELECT reach.id, e.b FROM reach JOIN e ON e.a = reach.r
-        )
-        SELECT id AS name, MIN(r) AS component
-        FROM reach GROUP BY id ORDER BY name
-      """)),
+      Some(dedupComponentsOracleSql)),
 
     // ----------------------------------------------------------------
     // q219: INCREMENTAL connected components — q62's duplicate groups
@@ -1070,63 +1081,29 @@ object SimilarityQueries {
     // brand-new nodes (touched + batch, NEVER all nodes; CcIndexSpec
     // asserts the bound row-for-row); the read side resolves
     // latest-wins per node, and a POLICY-driven mid-stream COMPACT
-    // (CcIndex.maybeCompact, threshold 1 — fires once, before wave 2,
-    // folding only the committed tail) puts the fold path itself under
-    // the gate. Held to q62's
-    // recursive-closure oracle VERBATIM; the fold identity is
+    // (compactBefore, threshold 1 — fires once, before wave 2) puts the
+    // fold path itself under the gate. Held to q62's recursive-closure
+    // oracle VERBATIM; the fold identity is
     // additionally property-pinned across random splits in
     // ConnectedComponentsPropertySpec.
     Q(
       "q219_dedup_components_incremental",
       (s, dir) => {
-        val root = graft.Q.fresh(s, "q219_ccidx", dir)
-        val names = blockedNames(s, dir)
-        // land the pair derivation ONCE: each wave's fold evaluates its
-        // edge frame several times (bucket collects + condense joins),
-        // and without the cut every evaluation re-runs the levenshtein
+        val idx = CcIndex(Q.fresh(s, "q219_ccidx", dir))
+        // pinned by the wave driver: each wave's fold evaluates its edge
+        // frame several times (bucket collects + condense joins), and
+        // without the cut every evaluation re-runs the levenshtein
         // blocking join — in production the edge waves ARE the input
-        val pairs = names.as("a").join(names.as("b"),
-            col("a.blk") === col("b.blk") && col("a.p_name") < col("b.p_name") &&
-              levenshtein(col("a.p_name"), col("b.p_name")) <= 2)
-          .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"))
-          .localCheckpoint()
-        val waves = (0 until 3).map(w =>
-          pairs.where(pmod(hash(col("name_a"), col("name_b")), lit(3)) === w))
-        waves.zipWithIndex.foreach { case (w, i) =>
-          // POLICY-driven compaction (not a hand-placed call): fold the
-          // committed tail when it exceeds one live delta — fires once
-          // here, before wave 2
-          graft.operators.CcIndex.maybeCompact(s, root, maxDeltas = 1,
-            upTo = Some(i - 1))
-          graft.operators.CcIndex.appendWave(s, w, root, i)
+        Replay.waves(nearDupPairs(s, dir), 3,
+            col("name_a"), col("name_b")) { (w, i) =>
+          idx.compactBefore(s, i, maxDeltas = 1)
+          idx.appendWave(s, w, i)
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(pairs)
-        graft.operators.CcIndex.labels(s, root)
+        idx.labels(s)
           .select(col("id").as("name"), col("comp").as("component"))
           .orderBy("name")
       },
-      Some("""
-        WITH RECURSIVE n AS (SELECT DISTINCT p_name FROM part),
-        blk AS (
-          SELECT p_name, SPLIT_PART(p_name, ' ', 2) AS blk FROM n
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY SPLIT_PART(p_name, ' ', 2)
-                                     ORDER BY p_name) <= 64),
-        p AS (
-          SELECT a.p_name AS x, b.p_name AS y
-          FROM blk a JOIN blk b ON a.blk = b.blk AND a.p_name < b.p_name
-                              AND LEVENSHTEIN(a.p_name, b.p_name) <= 2
-        ),
-        e AS (SELECT x AS a, y AS b FROM p UNION SELECT y, x FROM p),
-        reach(id, r) AS (
-          SELECT DISTINCT a, a FROM e
-          UNION
-          SELECT reach.id, e.b FROM reach JOIN e ON e.a = reach.r
-        )
-        SELECT id AS name, MIN(r) AS component
-        FROM reach GROUP BY id ORDER BY name
-      """)),
+      Some(dedupComponentsOracleSql)),
 
     // ----------------------------------------------------------------
     // q221: STREAMING connected components — q219's CcIndex fold driven
@@ -1152,56 +1129,23 @@ object SimilarityQueries {
     Q(
       "q221_stream_dedup_components",
       (s, dir) => {
-        val out = graft.Q.fresh(s, "q221_streamcc", dir)
-        val names = blockedNames(s, dir)
+        val out = Q.fresh(s, "q221_streamcc", dir)
+        val idx = CcIndex(s"$out/store")
         // derived once, landed once (two wave writes filter it)
-        val pairs = names.as("a").join(names.as("b"),
-            col("a.blk") === col("b.blk") && col("a.p_name") < col("b.p_name") &&
-              levenshtein(col("a.p_name"), col("b.p_name")) <= 2)
-          .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"))
-          .localCheckpoint()
-        graft.streaming.Replay.stream(s, out,
-            (0 until 2).map(i =>
-              pairs.where(pmod(hash(col("name_a"), col("name_b")), lit(2)) === i)),
+        val pairs = nearDupPairs(s, dir).localCheckpoint()
+        Replay.stream(s, out,
+            Replay.split(pairs, 2, col("name_a"), col("name_b")),
             parts = 2) { (b, id) =>
-          // auto-compaction policy at batch start (threshold 0 so
-          // it fires under this two-batch gate): folds only the
-          // durably-committed tail — the batch's own delta stays
-          // live for the bit-identical replay contract
-          graft.operators.CcIndex.maybeCompact(s, s"$out/store",
-            maxDeltas = 0, upTo = Some(id - 1))
-          require(graft.operators.DeltaStore(s"$out/store")
-            .deltaCount(Some(id - 1)) == 0,
-            "q221: compaction policy left committed deltas live")
-          graft.operators.CcIndex.appendWave(s, b, s"$out/store", id)
+          // threshold 0 so the policy fires under this two-batch gate
+          idx.compactBefore(s, id, maxDeltas = 0)
+          idx.appendWave(s, b, id)
         }
-        // every consumer of the pinned frame has run (waves landed,
-        // report reads the committed store) - release its blocks
-        graft.Q.unpin(pairs)
-        graft.operators.CcIndex.labels(s, s"$out/store")
+        Q.unpin(pairs)
+        idx.labels(s)
           .select(col("id").as("name"), col("comp").as("component"))
           .orderBy("name")
       },
-      Some("""
-        WITH RECURSIVE n AS (SELECT DISTINCT p_name FROM part),
-        blk AS (
-          SELECT p_name, SPLIT_PART(p_name, ' ', 2) AS blk FROM n
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY SPLIT_PART(p_name, ' ', 2)
-                                     ORDER BY p_name) <= 64),
-        p AS (
-          SELECT a.p_name AS x, b.p_name AS y
-          FROM blk a JOIN blk b ON a.blk = b.blk AND a.p_name < b.p_name
-                              AND LEVENSHTEIN(a.p_name, b.p_name) <= 2
-        ),
-        e AS (SELECT x AS a, y AS b FROM p UNION SELECT y, x FROM p),
-        reach(id, r) AS (
-          SELECT DISTINCT a, a FROM e
-          UNION
-          SELECT reach.id, e.b FROM reach JOIN e ON e.a = reach.r
-        )
-        SELECT id AS name, MIN(r) AS component
-        FROM reach GROUP BY id ORDER BY name
-      """)),
+      Some(dedupComponentsOracleSql)),
 
     // ----------------------------------------------------------------
     // q63: the SAME dedup-component problem solved by alternating
@@ -1213,35 +1157,12 @@ object SimilarityQueries {
     Q(
       "q63_dedup_components_star",
       (s, dir) => {
-        val names = blockedNames(s, dir)
-        val pairs = names.as("a").join(names.as("b"),
-            col("a.blk") === col("b.blk") && col("a.p_name") < col("b.p_name") &&
-              levenshtein(col("a.p_name"), col("b.p_name")) <= 2)
-          .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"))
+        val pairs = nearDupPairs(s, dir)
         ConnectedComponents.componentsStar(pairs)
           .select(col("id").as("name"), col("comp").as("component"))
           .orderBy("name")
       },
-      Some("""
-        WITH RECURSIVE n AS (SELECT DISTINCT p_name FROM part),
-        blk AS (
-          SELECT p_name, SPLIT_PART(p_name, ' ', 2) AS blk FROM n
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY SPLIT_PART(p_name, ' ', 2)
-                                     ORDER BY p_name) <= 64),
-        p AS (
-          SELECT a.p_name AS x, b.p_name AS y
-          FROM blk a JOIN blk b ON a.blk = b.blk AND a.p_name < b.p_name
-                              AND LEVENSHTEIN(a.p_name, b.p_name) <= 2
-        ),
-        e AS (SELECT x AS a, y AS b FROM p UNION SELECT y, x FROM p),
-        reach(id, r) AS (
-          SELECT DISTINCT a, a FROM e
-          UNION
-          SELECT reach.id, e.b FROM reach JOIN e ON e.a = reach.r
-        )
-        SELECT id AS name, MIN(r) AS component
-        FROM reach GROUP BY id ORDER BY name
-      """)),
+      Some(dedupComponentsOracleSql)),
 
     // ----------------------------------------------------------------
     // q73: dedup-cluster centrality — 5 rounds of PageRank over the

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{hash, lit, pmod}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -15,13 +16,16 @@ import org.apache.spark.sql.types.StructType
   * instead of silently replaying stale input, and every later wave with
   * `append`.
   *
+  * The batch-incremental twin is [[waves]]: the same body contract over
+  * hash waves of one pinned frame, without landing or a checkpoint.
+  *
   * Contract for a body: AvailableNow runs a lifecycle's micro-batches
   * serially, and batch `id - 1`'s checkpoint commit precedes batch `id`,
-  * so at batch `id` everything written under ids below it is durably
-  * past replay — `upTo = Some(id - 1)` is the committed tail a fold may
-  * compact — while batch `id` itself may be a replay of a crashed
-  * attempt, so a body whose output must be exactly-once rewrites,
-  * rather than adds to, what it wrote under `id`.
+  * so everything written under ids below `id` is past replay (the
+  * horizon [[graft.operators.Maintained.compactBefore]] folds at),
+  * while batch `id` itself may be a replay of a crashed attempt, so a
+  * body whose output must be exactly-once rewrites, rather than adds
+  * to, what it wrote under `id`.
   *
   * A drain that has not finished within 300 s is stopped and fails with
   * an error naming `root`; an exception in the body fails the drain with
@@ -44,6 +48,23 @@ object Replay {
       .map(_.getName).filter(_.startsWith("state="))
       .map(_.stripPrefix("state=").toLong).filter(_ < id)
       .maxOption
+
+  /** `n` disjoint waves of `src`: wave `i` holds the rows whose `key`
+    * hashes to `i` mod `n`. */
+  def split(src: DataFrame, n: Int, key: Column*): Seq[DataFrame] =
+    (0 until n).map(i => src.where(pmod(hash(key: _*), lit(n)) === i))
+
+  /** The batch-incremental driver: pin `src` with `localCheckpoint`, run
+    * `body(wave, i)` over its [[split]] for `i = 0 until n` in order,
+    * and release the pin in `finally`, on success or failure alike.
+    * The pin lives only as long as the waves: whatever reads the result
+    * afterwards must read the store the body wrote, not `src`. */
+  def waves(src: DataFrame, n: Int, key: Column*)
+           (body: (DataFrame, Int) => Unit): Unit = {
+    val pinned = src.localCheckpoint()
+    try split(pinned, n, key: _*).zipWithIndex.foreach(body.tupled)
+    finally graft.Q.unpin(pinned)
+  }
 
   /** Land each wave under `$root/in` (`repartition(parts)` files) and
     * [[drain]] after each one. The stream schema is `waves.head`'s. */

@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Auto-compaction policy ([[graft.operators.DeltaStore.maybeCompact]]
-  * and the per-index wrappers): fires exactly when the committed delta
-  * tail exceeds the threshold, drops the live delta count to zero
+/** Auto-compaction policy ([[graft.operators.Maintained.compactBefore]],
+  * shared by every maintained family): fires exactly when the committed
+  * delta tail exceeds the threshold, drops the live delta count to zero
   * below the horizon, never folds a batch above the horizon (the
   * crashed-batch double-count hazard for additive folds), and leaves
   * the folded contents identical. The streaming gates (q216/q221/q225/
@@ -31,18 +31,18 @@ class AutoCompactSpec extends AnyFunSuite {
   }
 
   private def cellsOf(r: String) =
-    graft.operators.StatCellIndex.cells(spark, r, schema)
+    graft.operators.StatCellIndex(r, schema).cells(spark)
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
 
   test("policy fires iff the committed tail exceeds the threshold; count drops; contents unchanged") {
     val r = root("fire")
     val store = graft.operators.DeltaStore(r)
     val batch = (i: Int) => Seq.fill(3)(i.toLong).toDF("x")
+    val idx = graft.operators.StatCellIndex(r, schema)
     val fired = (0 until 5).map { k =>
       // batch-start policy check, then the batch's own append
-      val f = graft.operators.StatCellIndex.maybeCompact(spark, r, schema,
-        maxDeltas = 2, upTo = Some(k - 1))
-      graft.operators.StatCellIndex.appendBatch(spark, batch(k), r, k, schema)
+      val f = idx.compactBefore(spark, k, maxDeltas = 2)
+      idx.appendBatch(spark, batch(k), k)
       f
     }
     // deltas below k: 0,1,2 at k=3 -> first firing; k=4 sees only
@@ -54,22 +54,20 @@ class AutoCompactSpec extends AnyFunSuite {
 
   test("the horizon never folds a not-yet-committed batch (additive double-count hazard)") {
     val r = root("horizon")
+    val idx = graft.operators.StatCellIndex(r, schema)
     (0 until 4).foreach { k =>
-      graft.operators.StatCellIndex.appendBatch(spark,
-        Seq.fill(2)(k.toLong).toDF("x"), r, k, schema)
+      idx.appendBatch(spark, Seq.fill(2)(k.toLong).toDF("x"), k)
     }
     val store = graft.operators.DeltaStore(r)
     // batch 3 is on disk but (by scenario) not checkpoint-committed:
     // policy at the start of its replay folds only deltas <= 2
-    val fired = graft.operators.StatCellIndex.maybeCompact(spark, r, schema,
-      maxDeltas = 0, upTo = Some(2))
+    val fired = idx.compactBefore(spark, 3, maxDeltas = 0)
     assert(fired)
     assert(store.deltaCount(Some(2)) == 0)
     assert(store.deltaCount(None) == 1, "batch 3's delta must stay live")
     assert(new java.io.File(r, "delta=3").isDirectory)
     // the replay now replaces its still-live delta — no double count
-    graft.operators.StatCellIndex.appendBatch(spark,
-      Seq.fill(2)(3L).toDF("x"), r, 3, schema)
+    idx.appendBatch(spark, Seq.fill(2)(3L).toDF("x"), 3)
     assert(cellsOf(r) == (0 until 4).map(i => (i.toLong, 2L)))
   }
 
@@ -78,17 +76,76 @@ class AutoCompactSpec extends AnyFunSuite {
     val e0 = Seq(("a1", "a2"), ("b1", "b2")).toDF("a", "b")
     val e1 = Seq(("a2", "a3")).toDF("a", "b")
     val e2 = Seq(("b2", "b3")).toDF("a", "b")
-    graft.operators.CcIndex.appendWave(spark, e0, r, 0)
-    graft.operators.CcIndex.appendWave(spark, e1, r, 1)
-    val fired = graft.operators.CcIndex.maybeCompact(spark, r,
-      maxDeltas = 1, upTo = Some(1))
+    val idx = graft.operators.CcIndex(r)
+    idx.appendWave(spark, e0, 0)
+    idx.appendWave(spark, e1, 1)
+    val fired = idx.compactBefore(spark, 2, maxDeltas = 1)
     assert(fired)
     assert(graft.operators.DeltaStore(r).deltaCount(None) == 0)
-    assert(!graft.operators.CcIndex.maybeCompact(spark, r,
-      maxDeltas = 1, upTo = Some(1)))
-    graft.operators.CcIndex.appendWave(spark, e2, r, 2)
-    val labs = graft.operators.CcIndex.labels(spark, r)
+    assert(!idx.compactBefore(spark, 2, maxDeltas = 1))
+    idx.appendWave(spark, e2, 2)
+    val labs = idx.labels(spark)
       .as[(String, String)].collect().toMap
     assert(labs("a3") == "a1" && labs("b3") == "b1")
+  }
+
+  /** Five batches under `compactBefore(k, maxDeltas = 2)` beside a twin
+    * store that never compacts: the policy fires at k = 3 only, leaves
+    * no live delta below 3, and every append result and the final read
+    * match the twin's. */
+  private def policyAcrossBatches[I <: graft.operators.Maintained](
+      tag: String, mk: String => I)(append: (I, Int) => Any)
+      (read: I => Seq[org.apache.spark.sql.DataFrame]): Unit = {
+    val idx = mk(root(s"${tag}_policy"))
+    val twin = mk(root(s"${tag}_twin"))
+    val runs = (0 until 5).map { k =>
+      val f = idx.compactBefore(spark, k, maxDeltas = 2)
+      (f, append(idx, k), append(twin, k))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(runs.map(_._1) == Seq(false, false, false, true, false), tag)
+    assert(runs.map(_._2) == runs.map(_._3), tag)
+    assert(idx.store.deltaCount(Some(2)) == 0, tag)
+    assert(twin.store.deltaCount(None) == 5, tag)
+    assert(read(idx).map(rows) == read(twin).map(rows), tag)
+  }
+
+  test("compactBefore fires at the same k, empties the committed tail and keeps the read, in all five families") {
+    import graft.operators.{BasketIndex, CcIndex, Scd2Index, StatCellIndex, TriIndex}
+    val momentSchema = StructType(Seq(StructField("k", LongType),
+      StructField("n", LongType), StructField("s", DecimalType(28, 2))))
+    policyAcrossBatches("moments",
+        StatCellIndex(_, momentSchema, Seq("n", "s"))) { (idx, k) =>
+      idx.appendAgg(spark, Seq.tabulate(6)(j =>
+          ((j % 3).toLong, 1L, BigDecimal(k * 10 + j) / 100))
+        .toDF("k", "n", "s")
+        .select(col("k"), col("n"), col("s").cast(DecimalType(18, 2))), k)
+    }(idx => Seq(idx.cells(spark)))
+
+    val edges = (for (a <- 0 until 12; b <- (a + 1) until 12
+                      if (a * 7 + b * 3) % 4 != 0) yield (a.toLong, b.toLong))
+      .toDF("u", "v")
+    policyAcrossBatches("tri", TriIndex(_)) { (idx, k) =>
+      idx.foldWave(spark,
+        edges.where(pmod(hash(col("u"), col("v")), lit(5)) === k), k)
+    }(idx => Seq(idx.stats(spark)))
+
+    policyAcrossBatches("basket", BasketIndex(_)) { (idx, k) =>
+      idx.appendWave(spark, Seq.tabulate(8)(j =>
+        ((j + k) % 6).toLong -> s"B${(j * k + j) % 4}").toDF("ok", "brand"), k)
+    }(idx => Seq(idx.pairs(spark), idx.brands(spark), idx.orderCount(spark)))
+
+    policyAcrossBatches("cc", CcIndex(_)) { (idx, k) =>
+      idx.appendWave(spark, Seq((s"n$k", s"n${k + 1}"),
+        (s"m${2 * k}", s"m${2 * k + 1}")).toDF("a", "b"), k)
+    }(idx => Seq(idx.labels(spark)))
+
+    policyAcrossBatches("scd2", Scd2Index(_)) { (idx, k) =>
+      idx.appendBatch(spark, Seq.tabulate(6)(j =>
+          ((j % 2).toLong, (k * 6 + j).toLong, (k * 1000 + j * 10).toLong,
+            (k + j / 3) % 2))
+        .toDF("k", "tie", "us", "attr"), k)
+    }(idx => Seq(idx.intervals(spark)))
   }
 }

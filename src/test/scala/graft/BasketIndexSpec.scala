@@ -64,18 +64,18 @@ class BasketIndexSpec extends AnyFunSuite {
         def wave(i: Int) = rows
           .where(pmod(hash(col("ok"), col("brand"), lit(seed)), lit(4)) === i)
         (0 until 4).foreach { i =>
-          graft.operators.BasketIndex.appendWave(spark, wave(i), r, i)
-          if (i == 1) graft.operators.BasketIndex.compact(spark, r)
+          graft.operators.BasketIndex(r).appendWave(spark, wave(i), i)
+          if (i == 1) graft.operators.BasketIndex(r).compact(spark)
         }
         // replay of the last wave: the prior read excludes its own
         // delta, so the fresh set and every count delta re-derive
         // identically and replace the wave's rows
-        graft.operators.BasketIndex.appendWave(spark, wave(3), r, 3)
-        assert(sortedPairs(graft.operators.BasketIndex.pairs(spark, r))
+        graft.operators.BasketIndex(r).appendWave(spark, wave(3), 3)
+        assert(sortedPairs(graft.operators.BasketIndex(r).pairs(spark))
           == expPairs, s"pairs seed $seed")
-        assert(sortedBrands(graft.operators.BasketIndex.brands(spark, r))
+        assert(sortedBrands(graft.operators.BasketIndex(r).brands(spark))
           == expBrands, s"brands seed $seed")
-        assert(graft.operators.BasketIndex.orderCount(spark, r)
+        assert(graft.operators.BasketIndex(r).orderCount(spark)
           .as[Long].head() == expOrders, s"orders seed $seed")
       } finally {
         graft.operators.BasketIndex.onPrunedRead = (_, _) => ()
@@ -88,19 +88,19 @@ class BasketIndexSpec extends AnyFunSuite {
     val r = root("prune")
     // wave 0 seeds orders across many buckets; wave 1 touches ONE order
     val seedRows = (0 until 64).map(i => (i.toLong, "B1")).toDF("ok", "brand")
-    graft.operators.BasketIndex.appendWave(spark, seedRows, r, 0)
+    graft.operators.BasketIndex(r).appendWave(spark, seedRows, 0)
     val read = collection.mutable.Set.empty[Int]
     graft.operators.BasketIndex.onPrunedRead = (_, bs) => { read ++= bs; () }
     try {
-      graft.operators.BasketIndex.appendWave(spark,
-        Seq((7L, "B2")).toDF("ok", "brand"), r, 1)
+      graft.operators.BasketIndex(r).appendWave(spark,
+        Seq((7L, "B2")).toDF("ok", "brand"), 1)
     } finally {
       graft.operators.BasketIndex.onPrunedRead = (_, _) => ()
     }
     assert(read.nonEmpty && read.size < 16,
       s"expected a strict bucket subset, read $read")
     // and the single-order wave paired correctly through the store
-    assert(sortedPairs(graft.operators.BasketIndex.pairs(spark, r))
+    assert(sortedPairs(graft.operators.BasketIndex(r).pairs(spark))
       == Seq(("B1", "B2", 1L)))
   }
 }

@@ -51,10 +51,10 @@ class CcIndexSpec extends AnyFunSuite {
       val waves = (0 until nWaves).map(w =>
         e.where(pmod(hash(col("a"), col("b")), lit(nWaves)) === w))
       waves.zipWithIndex.foreach { case (w, i) =>
-        val before = sortedLabels(graft.operators.CcIndex.labels(spark, r))
+        val before = sortedLabels(graft.operators.CcIndex(r).labels(spark))
           .toMap
-        graft.operators.CcIndex.appendWave(spark, w, r, i)
-        val after = sortedLabels(graft.operators.CcIndex.labels(spark, r))
+        graft.operators.CcIndex(r).appendWave(spark, w, i)
+        val after = sortedLabels(graft.operators.CcIndex(r).labels(spark))
         // THE STATE-IO BOUND: the wave's delta holds exactly the moved
         // rows — nodes whose resolved label changed plus brand-new
         // nodes. A full-table rewrite would fail this on every wave
@@ -73,9 +73,9 @@ class CcIndexSpec extends AnyFunSuite {
           assert(deltaRows < after.size,
             s"seed $seed wave $i: delta rewrote the whole label table")
         // mid-stream compact (delta read above, before GC folds it away)
-        if (i == 1) graft.operators.CcIndex.compact(spark, r)
+        if (i == 1) graft.operators.CcIndex(r).compact(spark)
       }
-      assert(sortedLabels(graft.operators.CcIndex.labels(spark, r))
+      assert(sortedLabels(graft.operators.CcIndex(r).labels(spark))
         == oneShot, s"seed $seed")
       e.unpersist()
     }
@@ -86,16 +86,16 @@ class CcIndexSpec extends AnyFunSuite {
     val r = root("replay")
     val w0 = e.where(pmod(hash(col("a"), col("b")), lit(2)) === 0)
     val w1 = e.where(pmod(hash(col("a"), col("b")), lit(2)) === 1)
-    graft.operators.CcIndex.appendWave(spark, w0, r, 0)
-    graft.operators.CcIndex.appendWave(spark, w1, r, 1)
-    val labels1 = sortedLabels(graft.operators.CcIndex.labels(spark, r))
+    graft.operators.CcIndex(r).appendWave(spark, w0, 0)
+    graft.operators.CcIndex(r).appendWave(spark, w1, 1)
+    val labels1 = sortedLabels(graft.operators.CcIndex(r).labels(spark))
     val delta1 = spark.read.parquet(s"$r/delta=1/tbl=lab")
       .select("id", "comp", "wave").as[(String, String, Int)]
       .collect().sortBy(x => (x._1, x._2)).toSeq
     // checkpoint replay of wave 1: prior-state read excludes its own
     // delta, so the recompute is bit-identical and REPLACES the delta
-    graft.operators.CcIndex.appendWave(spark, w1, r, 1)
-    val labels2 = sortedLabels(graft.operators.CcIndex.labels(spark, r))
+    graft.operators.CcIndex(r).appendWave(spark, w1, 1)
+    val labels2 = sortedLabels(graft.operators.CcIndex(r).labels(spark))
     val delta2 = spark.read.parquet(s"$r/delta=1/tbl=lab")
       .select("id", "comp", "wave").as[(String, String, Int)]
       .collect().sortBy(x => (x._1, x._2)).toSeq
@@ -112,13 +112,13 @@ class CcIndexSpec extends AnyFunSuite {
     // nodes — its reads must not scan the full store
     val big = (0 until 400).map(i => (f"n$i%04d", f"m$i%04d")).toDF("a", "b")
     val r = root("prune")
-    graft.operators.CcIndex.appendWave(spark, big, r, 0)
+    graft.operators.CcIndex(r).appendWave(spark, big, 0)
     val events = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Int])]
     graft.operators.CcIndex.onPrunedRead = (phase, bs) =>
       events.synchronized { events += ((phase, bs)) }
     try {
       val tiny = Seq(("n0007", "n0009")).toDF("a", "b")
-      graft.operators.CcIndex.appendWave(spark, tiny, r, 1)
+      graft.operators.CcIndex(r).appendWave(spark, tiny, 1)
     } finally graft.operators.CcIndex.onPrunedRead = (_, _) => ()
     assert(events.map(_._1).toSet == Set("condense", "c2b", "changed", "fresh"))
     events.foreach { case (phase, bs) =>
@@ -126,7 +126,7 @@ class CcIndexSpec extends AnyFunSuite {
       assert(bs.size <= 4, s"$phase read ${bs.size} buckets for a 2-node batch")
     }
     // and the pruned fold still merged the two components correctly
-    val after = sortedLabels(graft.operators.CcIndex.labels(spark, r)).toMap
+    val after = sortedLabels(graft.operators.CcIndex(r).labels(spark)).toMap
     assert(after("n0009") == after("n0007"))
     assert(after("m0009") == after("n0007"))
   }
@@ -137,8 +137,8 @@ class CcIndexSpec extends AnyFunSuite {
     val chain = (0 until 119).map(i => (f"c$i%04d", f"c${i + 1}%04d"))
       .toDF("a", "b")
     val r = root("chain")
-    graft.operators.CcIndex.appendWave(spark, chain, r, 0)
-    val labs = sortedLabels(graft.operators.CcIndex.labels(spark, r))
+    graft.operators.CcIndex(r).appendWave(spark, chain, 0)
+    val labs = sortedLabels(graft.operators.CcIndex(r).labels(spark))
     assert(labs.size == 120)
     assert(labs.forall(_._2 == "c0000"))
   }
@@ -147,7 +147,7 @@ class CcIndexSpec extends AnyFunSuite {
     val e = Seq((1L, 2L)).toDF("a", "b")
     val r = root("typed")
     val ex = intercept[IllegalArgumentException] {
-      graft.operators.CcIndex.appendWave(spark, e, r, 0)
+      graft.operators.CcIndex(r).appendWave(spark, e, 0)
     }
     assert(ex.getMessage.contains("fixed-width"))
   }
@@ -155,10 +155,10 @@ class CcIndexSpec extends AnyFunSuite {
   test("empty wave commits an empty delta and moves nothing") {
     val e = edges(11, nNodes = 60, nEdges = 80).cache()
     val r = root("empty")
-    graft.operators.CcIndex.appendWave(spark, e, r, 0)
-    val before = sortedLabels(graft.operators.CcIndex.labels(spark, r))
-    graft.operators.CcIndex.appendWave(spark, e.limit(0), r, 1)
-    assert(sortedLabels(graft.operators.CcIndex.labels(spark, r)) == before)
+    graft.operators.CcIndex(r).appendWave(spark, e, 0)
+    val before = sortedLabels(graft.operators.CcIndex(r).labels(spark))
+    graft.operators.CcIndex(r).appendWave(spark, e.limit(0), 1)
+    assert(sortedLabels(graft.operators.CcIndex(r).labels(spark)) == before)
     e.unpersist()
   }
 }

@@ -10,7 +10,8 @@ import scala.collection.mutable.ArrayBuffer
 /** The checkpoint-resume driver every stream query runs: resume
   * processes only new files, per-file batching, failure surfacing,
   * the wave-0 error-if-exists landing, the batch-id guard and the
-  * versioned-state lookup. */
+  * versioned-state lookup; and the batch-wave driver: hash split and
+  * the pin released on success and failure. */
 class ReplaySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -92,5 +93,44 @@ class ReplaySpec extends AnyFunSuite {
     assert(Replay.latestBelow(dir, 3).contains(0L))
     assert(Replay.latestBelow(dir, 7).contains(3L))
     assert(Replay.latestBelow(dir, Long.MaxValue).contains(7L))
+  }
+
+  private def pinned() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("split gives n disjoint waves whose rows are the input, as a multiset") {
+    val src = (0 until 200).map(i => (i % 37).toLong).toDF("v")
+    val waves = Replay.split(src, 3, col("v")).map(_.as[Long].collect().toSeq)
+    assert(waves.size == 3)
+    assert(waves.flatten.sorted == src.as[Long].collect().toSeq.sorted)
+    for (a <- 0 until 3; b <- (a + 1) until 3)
+      assert(waves(a).toSet.intersect(waves(b).toSet).isEmpty)
+  }
+
+  test("waves passes i = 0 until n in order and releases its pin") {
+    val before = pinned()
+    val seen = ArrayBuffer.empty[(Int, Long)]
+    var during = Set.empty[Int]
+    Replay.waves(spark.range(0, 60).toDF("v"), 4, col("v")) { (w, i) =>
+      during = pinned() -- before
+      seen += ((i, w.count()))
+    }
+    assert(seen.map(_._1) == Seq(0, 1, 2, 3))
+    assert(seen.map(_._2).sum == 60L)
+    assert(during.nonEmpty, "the source is pinned while the waves run")
+    assert(pinned() == before)
+  }
+
+  test("waves releases its pin when the body throws") {
+    val before = pinned()
+    val seen = ArrayBuffer.empty[Int]
+    val e = intercept[IllegalStateException] {
+      Replay.waves(spark.range(0, 60).toDF("v"), 3, col("v")) { (_, i) =>
+        seen += i
+        if (i == 1) throw new IllegalStateException("wave boom")
+      }
+    }
+    assert(e.getMessage == "wave boom")
+    assert(seen == Seq(0, 1))
+    assert(pinned() == before)
   }
 }

@@ -47,7 +47,7 @@ class Scd2IndexSpec extends AnyFunSuite {
       .collect().sortBy(r => (r._1, r._2)).toSeq
 
   private def maintained(r: String) =
-    graft.operators.Scd2Index.intervals(spark, r)
+    graft.operators.Scd2Index(r).intervals(spark)
       .as[(Long, Long, Int, Long, Option[Long], Boolean, Long)]
       .collect().sortBy(r => (r._1, r._2)).toSeq
 
@@ -64,8 +64,8 @@ class Scd2IndexSpec extends AnyFunSuite {
         ev.where(col("us") > cuts(1) && col("us") <= cuts(2)),
         ev.where(col("us") > cuts(2)))
       waves.zipWithIndex.foreach { case (w, i) =>
-        graft.operators.Scd2Index.appendBatch(spark, w, r, i + 1)
-        if (i == 1) graft.operators.Scd2Index.compact(spark, r)
+        graft.operators.Scd2Index(r).appendBatch(spark, w, i + 1)
+        if (i == 1) graft.operators.Scd2Index(r).compact(spark)
       }
       assert(maintained(r) == oneShot(ev), s"seed $seed")
       ev.unpersist()
@@ -77,12 +77,12 @@ class Scd2IndexSpec extends AnyFunSuite {
     val r = root("replay")
     val w1 = ev.where(col("us") <= 4000L)
     val w2 = ev.where(col("us") > 4000L)
-    graft.operators.Scd2Index.appendBatch(spark, w1, r, 1)
-    graft.operators.Scd2Index.appendBatch(spark, ev.where(lit(false)), r, 2)
-    graft.operators.Scd2Index.appendBatch(spark, w2, r, 3)
+    graft.operators.Scd2Index(r).appendBatch(spark, w1, 1)
+    graft.operators.Scd2Index(r).appendBatch(spark, ev.where(lit(false)), 2)
+    graft.operators.Scd2Index(r).appendBatch(spark, w2, 3)
     // checkpoint replay: batch 3 re-appends identically and must PASS
     // the horizon guard (its own delta is excluded from the check)
-    graft.operators.Scd2Index.appendBatch(spark, w2, r, 3)
+    graft.operators.Scd2Index(r).appendBatch(spark, w2, 3)
     assert(maintained(r) == oneShot(ev))
     ev.unpersist()
   }
@@ -105,11 +105,11 @@ class Scd2IndexSpec extends AnyFunSuite {
     // two in-order waves, cut BETWEEN duplicate groups (us is the guard
     // boundary, so a duplicate group can never straddle batches)
     val r = root("dupus")
-    graft.operators.Scd2Index.appendBatch(spark, ev.where(col("us") <= 4000L), r, 1)
-    graft.operators.Scd2Index.appendBatch(spark, ev.where(col("us") > 4000L), r, 2)
+    graft.operators.Scd2Index(r).appendBatch(spark, ev.where(col("us") <= 4000L), 1)
+    graft.operators.Scd2Index(r).appendBatch(spark, ev.where(col("us") > 4000L), 2)
     assert(maintained(r) == oneShot(ev))
     // same equality through the compact fold (stitch used as compaction)
-    graft.operators.Scd2Index.compact(spark, r)
+    graft.operators.Scd2Index(r).compact(spark)
     assert(maintained(r) == oneShot(ev))
     ev.unpersist()
   }
@@ -117,10 +117,10 @@ class Scd2IndexSpec extends AnyFunSuite {
   test("out-of-order append is refused loudly, not silently corrupted") {
     val ev = corpus(5, nKeys = 3, nPerKey = 10).cache()
     val r = root("ooo")
-    graft.operators.Scd2Index.appendBatch(spark, ev.where(col("us") > 4000L), r, 1)
+    graft.operators.Scd2Index(r).appendBatch(spark, ev.where(col("us") > 4000L), 1)
     val ex = intercept[IllegalArgumentException] {
-      graft.operators.Scd2Index.appendBatch(
-        spark, ev.where(col("us") <= 4000L), r, 2)
+      graft.operators.Scd2Index(r).appendBatch(
+        spark, ev.where(col("us") <= 4000L), 2)
     }
     assert(ex.getMessage.contains("out-of-order"))
     ev.unpersist()
@@ -142,11 +142,11 @@ class Scd2IndexSpec extends AnyFunSuite {
     val w2 = all.where(col("us") > 4000L)
     val r = root("latemor")
     val bronze = MorTable(DeltaStore(s"$r/bronze"), Seq("tie"))
-    bronze.upsert(w1, 1); Scd2Index.appendBatch(spark, w1, s"$r/silver", 1)
-    bronze.upsert(w2, 2); Scd2Index.appendBatch(spark, w2, s"$r/silver", 2)
+    bronze.upsert(w1, 1); Scd2Index(s"$r/silver").appendBatch(spark, w1, 1)
+    bronze.upsert(w2, 2); Scd2Index(s"$r/silver").appendBatch(spark, w2, 2)
     bronze.upsert(late, 3)
     intercept[IllegalArgumentException] {
-      Scd2Index.appendBatch(spark, late, s"$r/silver", 3)
+      Scd2Index(s"$r/silver").appendBatch(spark, late, 3)
     }
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("tie", LongType), StructField("us", LongType),
@@ -158,7 +158,7 @@ class Scd2IndexSpec extends AnyFunSuite {
         fromName = "valid_from_us", toName = "valid_to_us")
       .select("k", "island", "attr", "valid_from_us", "valid_to_us",
         "is_current", "n_events")
-    val untouched = Scd2Index.intervals(spark, s"$r/silver")
+    val untouched = Scd2Index(s"$r/silver").intervals(spark)
       .join(affected, Seq("k"), "left_anti")
       .select("k", "island", "attr", "valid_from_us", "valid_to_us",
         "is_current", "n_events")
@@ -193,31 +193,31 @@ class Scd2IndexSpec extends AnyFunSuite {
     val w3 = all.where(col("us") > 10000L)
     val r = root("backfill")
     val bronze = MorTable(DeltaStore(s"$r/bronze"), Seq("tie"))
-    bronze.upsert(w1, 1); Scd2Index.appendBatch(spark, w1, s"$r/silver", 1)
-    bronze.upsert(w2, 2); Scd2Index.appendBatch(spark, w2, s"$r/silver", 2)
+    bronze.upsert(w1, 1); Scd2Index(s"$r/silver").appendBatch(spark, w1, 1)
+    bronze.upsert(w2, 2); Scd2Index(s"$r/silver").appendBatch(spark, w2, 2)
     bronze.upsert(late, 3)
     intercept[IllegalArgumentException] {
-      Scd2Index.appendBatch(spark, late, s"$r/silver", 3)
+      Scd2Index(s"$r/silver").appendBatch(spark, late, 3)
     }
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("tie", LongType), StructField("us", LongType),
       StructField("attr", IntegerType)))
     val history = bronze.snapshot(spark, schema)
       .join(late.select("k").distinct(), Seq("k"), "left_semi")
-    Scd2Index.backfill(spark, history, s"$r/silver", 4)
+    Scd2Index(s"$r/silver").backfill(spark, history, 4)
     // index-only read now equals one-shot over everything so far
     assert(maintained(s"$r/silver")
       == oneShot(all.where(col("us") <= 10000L)))
     // a replayed backfill is idempotent (no-read contract)
-    Scd2Index.backfill(spark, history, s"$r/silver", 4)
+    Scd2Index(s"$r/silver").backfill(spark, history, 4)
     assert(maintained(s"$r/silver")
       == oneShot(all.where(col("us") <= 10000L)))
     // the fast path is live again: a later in-order batch passes the
     // guard and stitches onto rebuilt (k=0) and untouched (k=1) keys
-    Scd2Index.appendBatch(spark, w3, s"$r/silver", 5)
+    Scd2Index(s"$r/silver").appendBatch(spark, w3, 5)
     assert(maintained(s"$r/silver") == oneShot(all))
     // a compact folds superseded fragments away; reads unchanged
-    Scd2Index.compact(spark, s"$r/silver")
+    Scd2Index(s"$r/silver").compact(spark)
     assert(maintained(s"$r/silver") == oneShot(all))
   }
 }

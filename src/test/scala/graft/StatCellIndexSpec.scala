@@ -47,14 +47,14 @@ class StatCellIndexSpec extends AnyFunSuite {
       def wave(i: Int) =
         rows.where(pmod(hash(col("x"), col("y")), lit(4)) === i)
       (0 until 4).foreach { i =>
-        graft.operators.StatCellIndex.appendBatch(spark, wave(i), r, i, schema)
-        if (i == 1) graft.operators.StatCellIndex.compact(spark, r, schema)
+        graft.operators.StatCellIndex(r, schema).appendBatch(spark, wave(i), i)
+        if (i == 1) graft.operators.StatCellIndex(r, schema).compact(spark)
       }
       // replay of the last batch: appendBatch reads nothing, so the
       // delta is rewritten identically and the fold is unchanged
-      graft.operators.StatCellIndex.appendBatch(spark, wave(3), r, 3, schema)
-      assert(sortedCells(graft.operators.StatCellIndex
-        .cells(spark, r, schema)) == oneShot, s"seed $seed")
+      graft.operators.StatCellIndex(r, schema).appendBatch(spark, wave(3), 3)
+      assert(sortedCells(graft.operators.StatCellIndex(r, schema)
+        .cells(spark)) == oneShot, s"seed $seed")
       rows.unpersist()
     }
   }
@@ -62,13 +62,13 @@ class StatCellIndexSpec extends AnyFunSuite {
   test("empty batch contributes no cells") {
     val r = root("empty")
     val rows = Seq((1L, 2L), (1L, 2L), (3L, 4L)).toDF("x", "y")
-    graft.operators.StatCellIndex.appendBatch(spark, rows, r, 0, schema)
-    graft.operators.StatCellIndex.appendBatch(spark, rows.limit(0), r, 1, schema)
-    assert(sortedCells(graft.operators.StatCellIndex.cells(spark, r, schema))
+    graft.operators.StatCellIndex(r, schema).appendBatch(spark, rows, 0)
+    graft.operators.StatCellIndex(r, schema).appendBatch(spark, rows.limit(0), 1)
+    assert(sortedCells(graft.operators.StatCellIndex(r, schema).cells(spark))
       == Seq((1L, 2L, 2L), (3L, 4L, 1L)))
   }
 
-  // ---- additive MOMENT variant (appendAgg/table/compactAgg) ----
+  // ---- additive MOMENT variant (appendAgg over valueCols) ----
 
   private val momentSchema = StructType(Seq(
     StructField("k", LongType),
@@ -93,16 +93,16 @@ class StatCellIndexSpec extends AnyFunSuite {
       val r = root(s"mom$seed")
       def wave(i: Int) = rows.where(pmod(hash(col("k"), col("s")), lit(4)) === i)
       (0 until 4).foreach { i =>
-        graft.operators.StatCellIndex.appendAgg(spark, wave(i), r, i,
-          momentSchema, Seq("n", "s"))
-        if (i == 1) graft.operators.StatCellIndex.compactAgg(spark, r,
-          momentSchema, Seq("n", "s"))
+        graft.operators.StatCellIndex(r, momentSchema, Seq("n", "s"))
+          .appendAgg(spark, wave(i), i)
+        if (i == 1) graft.operators.StatCellIndex(r, momentSchema,
+          Seq("n", "s")).compact(spark)
       }
       // replay: appendAgg reads nothing — the delta rewrites identically
-      graft.operators.StatCellIndex.appendAgg(spark, wave(3), r, 3,
-        momentSchema, Seq("n", "s"))
-      assert(sortedMoments(graft.operators.StatCellIndex
-        .table(spark, r, momentSchema, Seq("n", "s"))) == oneShot,
+      graft.operators.StatCellIndex(r, momentSchema, Seq("n", "s"))
+        .appendAgg(spark, wave(3), 3)
+      assert(sortedMoments(graft.operators.StatCellIndex(r, momentSchema,
+        Seq("n", "s")).cells(spark)) == oneShot,
         s"seed $seed")
       rows.unpersist()
     }

@@ -46,10 +46,10 @@ class TriIndexSpec extends AnyFunSuite {
       var total = 0L
       (0 until nWaves).foreach { i =>
         val w = e.where(pmod(hash(col("u"), col("v")), lit(nWaves)) === i)
-        total += graft.operators.TriIndex.foldWave(spark, w, r, i)
-        if (i == 1) graft.operators.TriIndex.compact(spark, r)
+        total += graft.operators.TriIndex(r).foldWave(spark, w, i)
+        if (i == 1) graft.operators.TriIndex(r).compact(spark)
       }
-      val st = graft.operators.TriIndex.stats(spark, r)
+      val st = graft.operators.TriIndex(r).stats(spark)
         .as[(Long, Long)].head()
       assert((st._1, st._2, total) == oneShot, s"seed $seed")
       e.unpersist()
@@ -62,13 +62,13 @@ class TriIndexSpec extends AnyFunSuite {
     val big = (0 until 800).map(i => (i.toLong, (i + 800).toLong))
       .toDF("u", "v")
     val r = root("prune")
-    graft.operators.TriIndex.foldWave(spark, big, r, 0)
+    graft.operators.TriIndex(r).foldWave(spark, big, 0)
     val events = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Int])]
     graft.operators.TriIndex.onPrunedRead = (phase, bs) =>
       events.synchronized { events += ((phase, bs)) }
     try {
       val tiny = Seq((3L, 7L)).toDF("u", "v")
-      graft.operators.TriIndex.foldWave(spark, tiny, r, 1)
+      graft.operators.TriIndex(r).foldWave(spark, tiny, 1)
     } finally graft.operators.TriIndex.onPrunedRead = (_, _) => ()
     assert(events.map(_._1).toSet == Set("adj", "deg"))
     events.foreach { case (phase, bs) =>
@@ -82,10 +82,10 @@ class TriIndexSpec extends AnyFunSuite {
     // canonical rows key on nodes 1 and 2, but the batch touches
     // {1, 3} — edge 2-3 is only reachable via its mirror (3, 2).
     val r = root("mirror")
-    graft.operators.TriIndex.foldWave(spark,
-      Seq((1L, 2L), (2L, 3L)).toDF("u", "v"), r, 0)
-    val d = graft.operators.TriIndex.foldWave(spark,
-      Seq((1L, 3L)).toDF("u", "v"), r, 1)
+    graft.operators.TriIndex(r).foldWave(spark,
+      Seq((1L, 2L), (2L, 3L)).toDF("u", "v"), 0)
+    val d = graft.operators.TriIndex(r).foldWave(spark,
+      Seq((1L, 3L)).toDF("u", "v"), 1)
     assert(d == 1L)
   }
 
@@ -94,13 +94,13 @@ class TriIndexSpec extends AnyFunSuite {
     val r = root("replay")
     val w0 = e.where(pmod(hash(col("u"), col("v")), lit(2)) === 0)
     val w1 = e.where(pmod(hash(col("u"), col("v")), lit(2)) === 1)
-    graft.operators.TriIndex.foldWave(spark, w0, r, 0)
-    val d1 = graft.operators.TriIndex.foldWave(spark, w1, r, 1)
-    val st1 = graft.operators.TriIndex.stats(spark, r).as[(Long, Long)].head()
+    graft.operators.TriIndex(r).foldWave(spark, w0, 0)
+    val d1 = graft.operators.TriIndex(r).foldWave(spark, w1, 1)
+    val st1 = graft.operators.TriIndex(r).stats(spark).as[(Long, Long)].head()
     // checkpoint replay of wave 1: reads exclude its own delta, so the
     // recompute matches and the grouped delta is REPLACED, not doubled
-    val d2 = graft.operators.TriIndex.foldWave(spark, w1, r, 1)
-    val st2 = graft.operators.TriIndex.stats(spark, r).as[(Long, Long)].head()
+    val d2 = graft.operators.TriIndex(r).foldWave(spark, w1, 1)
+    val st2 = graft.operators.TriIndex(r).stats(spark).as[(Long, Long)].head()
     assert(d2 == d1)
     assert(st2 == st1)
     val oneShot = graft.operators.Triangles.count(e).as[(Long, Long, Long)].head()
