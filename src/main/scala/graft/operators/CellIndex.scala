@@ -40,21 +40,19 @@ object CellIndex {
     * FROZEN `widthLit` and append as the delta for `batchId` — one
     * write job, one atomic commit, no reads of stored state. */
   def appendBatch(spark: SparkSession, vecs: DataFrame, root: String,
-                  batchId: Int, widthLit: Int, buckets: Int = 16,
-                  manifest: Boolean = false): Unit =
+                  batchId: Int, widthLit: Int): Unit =
     appendAssigned(spark,
       vecs.select(col("vec_id"),
         expr(graft.queries.SimilarityQueries.signKeyLowExpr(widthLit.toString))
           .as("cell")),
-      root, batchId, buckets, manifest)
+      root, batchId)
 
   /** Append pre-assigned cells (`vec_id`, `cell`) — the learned-
     * quantizer path: the caller runs its frozen KMeansModel transform
     * over the batch and hands the assignments in. */
   def appendAssigned(spark: SparkSession, assigned: DataFrame, root: String,
-                     batchId: Int, buckets: Int = 16,
-                     manifest: Boolean = false): Unit = {
-    val store = DeltaStore(root, buckets, manifest)
+                     batchId: Int): Unit = {
+    val store = DeltaStore(root)
     store.heal()
     store.append(
       assigned.select(col("vec_id"), col("cell").cast(LongType).as("cell"))
@@ -63,13 +61,11 @@ object CellIndex {
   }
 
   /** The maintained inverted-file table: (vec_id, cell). */
-  def cells(spark: SparkSession, root: String, buckets: Int = 16,
-            manifest: Boolean = false): DataFrame =
-    DeltaStore(root, buckets, manifest).read(spark, schema, None)
+  def cells(spark: SparkSession, root: String): DataFrame =
+    DeltaStore(root).read(spark, schema, None)
 
   /** Fold deltas into one base (immutable rows — identity fold). */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16,
-              manifest: Boolean = false): Unit =
-    DeltaStore(root, buckets, manifest).compact(
+  def compact(spark: SparkSession, root: String): Unit =
+    DeltaStore(root).compact(
       spark, schema, col("vec_id"), identity)
 }

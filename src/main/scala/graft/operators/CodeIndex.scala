@@ -43,9 +43,8 @@ object CodeIndex {
     * array<float>) and append the codes as the delta for `batchId` —
     * one write job, one atomic commit, no reads of stored state. */
   def appendBatch(spark: SparkSession, vecs: DataFrame, root: String,
-                  batchId: Int, buckets: Int = 16,
-                  manifest: Boolean = false): Unit = {
-    val store = DeltaStore(root, buckets, manifest)
+                  batchId: Int): Unit = {
+    val store = DeltaStore(root)
     store.heal()
     store.append(
       vecs.select(col("vec_id").as("cand_id"),
@@ -57,13 +56,11 @@ object CodeIndex {
   }
 
   /** The maintained code table: (cand_id, sub, code). */
-  def codes(spark: SparkSession, root: String, buckets: Int = 16,
-            manifest: Boolean = false): DataFrame =
-    DeltaStore(root, buckets, manifest).read(spark, schema, None)
+  def codes(spark: SparkSession, root: String): DataFrame =
+    DeltaStore(root).read(spark, schema, None)
 
   /** Fold deltas into one base (immutable rows — identity fold). */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16,
-              manifest: Boolean = false): Unit =
-    DeltaStore(root, buckets, manifest).compact(
+  def compact(spark: SparkSession, root: String): Unit =
+    DeltaStore(root).compact(
       spark, schema, col("cand_id"), identity)
 }

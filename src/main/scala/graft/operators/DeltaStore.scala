@@ -4,12 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** LSM-style append-only bucketed table: per-batch delta dirs holding
-  * hash-bucketed subdirs (`dir/delta=K/gbucket=B/part-*.parquet`),
-  * periodically folded into a `base=K` dir. The state-store seam the
-  * incremental index family ([[LshIndex]], [[EmbIndex]]), the
-  * merge-on-read table ([[MorTable]]), and incremental statistics
-  * ([[IncrementalStats]]) build on.
+/** LSM-style append-only bucketed table: per-batch deltas holding
+  * hash-bucketed subdirs (`dir/data/d<K>_e<E>/gbucket=B/part-*.parquet`),
+  * periodically folded into a base (`dir/data/b<K>_e<E>`). The
+  * state-store seam the incremental index family ([[LshIndex]],
+  * [[EmbIndex]]), the merge-on-read table ([[MorTable]]), and
+  * incremental statistics ([[IncrementalStats]]) build on.
   *
   * Design point (vs [[graft.streaming.BucketedSnapshot]]'s
   * read-merge-rewrite buckets): when a batch's keys hash into every
@@ -20,57 +20,36 @@ import org.apache.spark.sql.types.StructType
   * probe's keys hash into. Listing cost grows with the delta count,
   * so long-lived stores call [[compact]] periodically.
   *
-  * TWO commit protocols behind the same API, selected by `manifest`:
+  * Commit protocol (object-store-safe, NO renames anywhere): data
+  * prefixes are written DIRECTLY to their final, unique paths —
+  * invisible until a manifest object (`manifest=<E>`) listing the live
+  * (kind, id, prefix) entries is COMMITTED: an atomic create-if-absent
+  * of the complete object (a hard link of a privately-written tmp —
+  * POSIX's stand-in for an object store's if-none-match conditional
+  * PUT). The newest manifest is authoritative; the `_current` pointer
+  * is a lagging hint. Replay rewrites the same batch id under a NEW
+  * unique prefix and the manifest entry is replaced, so in-place
+  * overwrites never happen. The winning commit deletes the committed
+  * prefixes its manifest drops (the replaced delta, folded history);
+  * a crash mid-write leaves an unreferenced prefix that readers never
+  * see and [[heal]] garbage-collects.
   *
-  *   - `manifest = false` (default, local FS): each delta is staged,
-  *     then ONE rename promotes `delta=K` (atomic on POSIX). A
-  *     replayed batch replaces its own delta — idempotent under the
-  *     replay-from-checkpoint contract. [[compact]] promotes `base=K`
-  *     with the same single rename; readers ignore covered dirs from
-  *     that instant, so cleanup is lazy and a crash anywhere leaves a
-  *     readable, non-double-counting state. [[heal]] drops dead
-  *     staging dirs.
-  *   - `manifest = true` (object-store-safe, NO renames anywhere):
-  *     data prefixes are written DIRECTLY to their final, unique
-  *     paths (`data/d<K>_e<E>/gbucket=B/...`) — invisible until a
-  *     manifest object (`manifest=<E>`) listing the live (kind, id,
-  *     prefix) entries is COMMITTED: an atomic create-if-absent of
-  *     the complete object (a hard link of a privately-written tmp —
-  *     POSIX's stand-in for an object store's if-none-match
-  *     conditional PUT). The newest manifest is authoritative; the
-  *     `_current` pointer is a lagging hint. The create-if-absent IS
-  *     the optimistic-concurrency control: epoch E+1 has exactly one
-  *     winner, a loser re-reads the newest manifest, REBASES its
-  *     entries (append keeps everything and replaces its own batch;
-  *     compact keeps concurrent deltas above its fold horizon), and
-  *     retries at the next epoch — so concurrent ingest and
-  *     compaction interleave without dropping each other's committed
-  *     entries. Replay rewrites the same batch id under a NEW unique
-  *     prefix and the manifest entry is replaced, so in-place
-  *     overwrites never happen; a crash mid-write leaves an
-  *     unreferenced prefix that readers never see and [[heal]]
-  *     garbage-collects — but GC is maintenance-only (never
-  *     concurrent with in-flight appends; see [[healManifest]]).
-  *     The rename protocol remains single-writer.
+  * Covering rule: with a base at K, only deltas with id > K are live —
+  * a REPLAYED delta j <= K (appended on top of a base that already
+  * folded it) must not double-count.
   *
-  * CHOOSING a protocol (deployment guidance, not just mechanics):
-  * `manifest = false` is the SINGLE-WRITER protocol by documented
-  * contract — correct for one checkpointed ingester per store (the
-  * streaming replay shape), cheapest on a local/POSIX FS. ANY
-  * deployment where two writers can touch the same store — concurrent
-  * ingest + compaction, multi-pipeline ingest, crash-recovery
-  * double-fire across hosts — MUST provision `manifest = true`: the
-  * epoch CAS is what makes the loser rebase instead of clobbering
-  * (DeltaStoreConcurrencySpec exercises append/append, append/compact,
-  * grouped multi-table commits, and 4-thread stress). The same applies
-  * on object stores even single-writer, where directory rename is not
-  * atomic. The default stays `false` only because a default cannot
-  * know your writer topology and the rename protocol is the one with
-  * no extra read-path cost; it is NOT a recommendation for concurrent
-  * use.
+  * Writers: [[append]], [[appendTables]], [[compact]] and
+  * [[compactTables]] are safe beside other writers. The create-if-absent
+  * is the optimistic-concurrency control: epoch E+1 has exactly one
+  * winner, and a loser re-reads the newest manifest, REBASES its
+  * entries (append keeps everything and replaces its own batch;
+  * compact keeps concurrent deltas above its fold horizon) and retries
+  * at the next epoch (DeltaStoreConcurrencySpec). [[heal]] is not: it
+  * collects every unreferenced prefix at once, a concurrent writer's
+  * written-but-uncommitted one included, so it must never run beside
+  * another writer.
   */
-final case class DeltaStore(dir: String, buckets: Int = 16,
-                            manifest: Boolean = false) {
+final case class DeltaStore(dir: String, buckets: Int = 16) {
 
   /** The deterministic bucket id of a key column. */
   def gb(c: Column): Column = pmod(hash(c), lit(buckets)).cast("int")
@@ -80,22 +59,6 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
   def touched(df: DataFrame, key: Column): Seq[Int] =
     df.select(gb(key).as("g")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-
-  /** A store dir is permanently owned by the protocol that first wrote
-    * it. Opening it under the OTHER protocol would find none of that
-    * protocol's artifacts and silently read an EMPTY table — data
-    * appearing lost with no error — so every read/write path refuses
-    * a dir carrying the other protocol's markers instead. */
-  private def checkProtocol(): Unit = {
-    val names = Option(new java.io.File(dir).listFiles())
-      .map(_.map(_.getName).toSet).getOrElse(Set.empty[String])
-    if (manifest)
-      require(!names.exists(n => n.startsWith("delta=") || n.startsWith("base=")),
-        s"$dir holds rename-protocol dirs but was opened with manifest = true")
-    else
-      require(!names.contains("_current"),
-        s"$dir holds a manifest-protocol pointer but was opened with manifest = false")
-  }
 
   /** Live delta count (base excluded) — the read-amplification metric
     * a compaction policy watches: listing cost, fold width, and bloom-
@@ -107,24 +70,21 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
     liveEntries(None).count { case (isBase, id, _) =>
       !isBase && upTo.forall(id <= _) }
 
-  def heal(): Unit =
-    if (manifest) healManifest()
-    else {
-      val d = new java.io.File(dir)
-      Option(d.listFiles()).foreach(_.foreach { f =>
-        if (f.getName.startsWith(".staging")) DeltaStore.delete(f)
-      })
-    }
+  /** GC with zero grace: delete every data prefix and manifest object
+    * the newest manifest does not reference (crash orphans, prefixes a
+    * crash kept a commit from deleting, superseded manifests,
+    * commit-attempt tmps). Never beside another writer (class doc). */
+  def heal(): Unit = gc(graceMs = 0L)
 
   /** The live (isBase, id, dataDir) entries, newest-covering rule
     * applied. With `asOf`, deltas above that batch are excluded — the
     * time-travel read. History BELOW the newest base is folded away
     * (compaction is the retention boundary, as in any LSM/table-format
     * log), so an `asOf` older than the base is refused rather than
-    * answered wrongly. Exposed to same-package consumers that prune
-    * ENTRIES before reading (e.g. [[MorTable]]'s bloom-sidecar delta
-    * skipping); combine with [[readEntries]]. */
-  private[operators] def live(asOf: Option[Int] = None): Seq[(Boolean, Int, java.io.File)] =
+    * answered wrongly. Exposed to consumers that prune ENTRIES before
+    * reading (e.g. [[MorTable]]'s bloom-sidecar delta skipping; combine
+    * with [[readEntries]]) and to specs that locate a data dir. */
+  private[graft] def live(asOf: Option[Int] = None): Seq[(Boolean, Int, java.io.File)] =
     liveEntries(asOf)
 
   /** [[read]] restricted to an explicit entry subset (callers prune
@@ -146,8 +106,8 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
 
   /** Write a small advisory sidecar file into the CURRENT live dir of
     * `batchId`'s delta (no-op if that delta is not live — e.g. already
-    * covered by a base). Sidecars ride the data dir: a rename-replay
-    * replaces the dir (and the sidecar with it), manifest GC collects
+    * covered by a base). Sidecars ride the data prefix: a replay
+    * commits a new prefix without the old sidecar, and GC collects
     * them with their prefix. They are ADVISORY by contract: written
     * AFTER the commit, so a crash can leave a delta without one —
     * readers must treat a missing sidecar as "no information". */
@@ -165,33 +125,13 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
   }
 
   private def liveEntries(asOf: Option[Int]): Seq[(Boolean, Int, java.io.File)] = {
-    checkProtocol()
-    val raw: Seq[(Boolean, Int, java.io.File)] =
-      if (manifest) {
-        readManifest() match {
-          case None => Nil
-          case Some((_, entries)) => entries.map { case (isBase, id, rel) =>
-            (isBase, id, new java.io.File(dir, rel))
-          }
-        }
-      } else {
-        val d = new java.io.File(dir)
-        val all = Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
-          .filter(_.isDirectory)
-        val bases = all.filter(_.getName.startsWith("base="))
-        bases.map(f => f.getName.stripPrefix("base=").toInt).sorted.lastOption match {
-          case None => all.filter(_.getName.startsWith("delta="))
-            .map(f => (false, f.getName.stripPrefix("delta=").toInt, f))
-          case Some(k) =>
-            bases.filter(_.getName == s"base=$k").map(f => (true, k, f)) ++
-              all.filter(f => f.getName.startsWith("delta=") &&
-                f.getName.stripPrefix("delta=").toInt > k)
-                .map(f => (false, f.getName.stripPrefix("delta=").toInt, f))
-        }
-      }
-    // Covering rule, uniform across protocols: with a base at K, only
-    // deltas with id > K count — a REPLAYED delta j <= K (appended on
-    // top of a base that already folded it) must not double-count.
+    // a store written in the retired per-delta rename layout has no
+    // manifest and would otherwise read as EMPTY — refuse it instead
+    require(!Option(new java.io.File(dir).list()).exists(_.exists(n =>
+        n.startsWith("delta=") || n.startsWith("base="))),
+      s"$dir holds delta=/base= dirs of the retired rename layout")
+    val raw = readManifest().map(_._2).getOrElse(Nil).map {
+      case (isBase, id, rel) => (isBase, id, new java.io.File(dir, rel)) }
     val live = raw.collectFirst { case (true, k, _) => k } match {
       case None => raw
       case Some(k) => raw.filter { case (isBase, id, _) => isBase || id > k }
@@ -243,10 +183,9 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
       touched)
 
   /** Append `df` (carrying a `gbucket` column) as the delta for
-    * `batchId`: rename protocol — staged write, one atomic rename,
-    * replacing an existing same-batch delta (replay idempotence);
-    * manifest protocol — direct write to a fresh epoch prefix, then
-    * manifest + pointer commit replacing the batch's entry.
+    * `batchId`: a direct write to a fresh epoch prefix, then the
+    * manifest + pointer commit replacing the batch's entry (replay
+    * idempotence).
     *
     * The write shuffle is keyed on the bucket alone, so every bucket
     * lands in exactly ONE reducer and each commit (delta or base)
@@ -264,7 +203,7 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
   /** Grouped-commit append: `union` carries a `tbl` discriminator
     * column (plus `gbucket`), holding several logical tables' delta
     * rows in ONE frame — written as ONE Spark job and promoted by ONE
-    * atomic commit (`delta=K/tbl=<name>/gbucket=B/...`). This is the
+    * atomic commit (`data/d<K>_e<E>/tbl=<name>/gbucket=B/...`). This is the
     * multi-table transaction the incremental indexes need: [[LshIndex]]
     * maintains three state tables per ingest batch, and three separate
     * append cycles cost three shuffles + three commits per batch
@@ -279,35 +218,18 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
 
   private def appendWith(df: DataFrame, batchId: Int, within: Seq[Column],
                          partCols: Seq[String]): Unit = {
-    if (sys.env.contains("GRAFT_STORE_DEBUG"))
-      println(s"[store] appendWith batch=$batchId dir=$dir thread=${Thread.currentThread().getName}")
-    checkProtocol()
-    def write(target: java.io.File): Unit =
-      df.repartition(col("gbucket"))
-        .sortWithinPartitions((partCols.map(col) ++ within): _*)
-        .write.partitionBy(partCols: _*).mode("overwrite")
-        .parquet(target.getPath)
-    if (manifest) {
-      // the prefix name only needs uniqueness (it is data-invisible
-      // until referenced); the basing epoch serves, even if the commit
-      // later lands at a higher one after conflict retries
-      val (epoch0, _) = readManifest().getOrElse((0L, Nil))
-      val rel = s"data/d${batchId}_e${epoch0 + 1}"
-      write(new java.io.File(dir, rel))
-      commitManifest(entries =>
-        entries.filterNot { case (isBase, id, _) => !isBase && id == batchId } :+
-          ((false, batchId, rel)))
-    } else {
-      val d = new java.io.File(dir)
-      d.mkdirs()
-      val staging = new java.io.File(d, s".staging_$batchId")
-      if (staging.exists()) DeltaStore.delete(staging)
-      write(staging)
-      val target = new java.io.File(d, s"delta=$batchId")
-      if (target.exists()) DeltaStore.delete(target)
-      if (!staging.renameTo(target))
-        throw new java.io.IOException(s"cannot promote $staging to $target")
-    }
+    // the prefix name only needs uniqueness (it is data-invisible until
+    // referenced); the basing epoch serves, even if the commit later
+    // lands at a higher one after conflict retries
+    val (epoch0, _) = readManifest().getOrElse((0L, Nil))
+    val rel = s"data/d${batchId}_e${epoch0 + 1}"
+    df.repartition(col("gbucket"))
+      .sortWithinPartitions((partCols.map(col) ++ within): _*)
+      .write.partitionBy(partCols: _*).mode("overwrite")
+      .parquet(new java.io.File(dir, rel).getPath)
+    commitManifest(entries =>
+      entries.filterNot { case (isBase, id, _) => !isBase && id == batchId } :+
+        ((false, batchId, rel)))
   }
 
   /** Fold the live dirs into one base (id = highest batch on disk) so
@@ -315,12 +237,12 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
     * the unioned rows (identity for immutable-row tables; a sum-by-key
     * for additive ones). Only compact batches whose downstream effects
     * are durably committed: a checkpoint REPLAY of batch j <= K would
-    * append `delta=j` on top of a base that already contains it (the
-    * replayed bytes are ignored by the covering rule / replaced entry,
-    * but they are dead weight until the next compact) — and for
-    * non-idempotent folds (additive counts, run stitching) a replay
-    * whose prior-state read can no longer EXCLUDE its folded delta
-    * would double-count outright. `upTo` enforces that rule
+    * append delta j on top of a base that already contains it (the
+    * replayed bytes are ignored by the covering rule, but they are
+    * dead weight until the next compact) — and for non-idempotent
+    * folds (additive counts, run stitching) a replay whose prior-state
+    * read can no longer EXCLUDE its folded delta would double-count
+    * outright. `upTo` enforces that rule
     * mechanically: only deltas at or below that batch id fold; later
     * deltas stay live above the new base (the covering rule keeps
     * them). */
@@ -356,58 +278,34 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
   private def compactWith(partCols: Seq[String], within: Seq[Column],
                           upTo: Option[Int] = None)
                          (mkFolded: Unit => DataFrame): Unit = {
-    heal()
     val live = liveEntries(upTo)
     if (live.nonEmpty) {
       val k = live.map(_._2).max
-      val folded = mkFolded(())
+      val (epoch0, _) = readManifest().getOrElse((0L, Nil))
+      val rel = s"data/b${k}_e${epoch0 + 1}"
+      mkFolded(())
         .repartition(col("gbucket"))
         .sortWithinPartitions((partCols.map(col) ++ within): _*)
-      if (manifest) {
-        val (epoch0, _) = readManifest().getOrElse((0L, Nil))
-        val rel = s"data/b${k}_e${epoch0 + 1}"
-        folded.write.partitionBy(partCols: _*).mode("overwrite")
-          .parquet(new java.io.File(dir, rel).getPath)
-        // rebase on conflict: keep every delta a concurrent ingest
-        // committed ABOVE the fold horizon k; a concurrently-replayed
-        // delta <= k is covered by the new base (the covering rule
-        // would ignore it anyway) and is dropped
-        commitManifest(entries =>
-          ((true, k, rel)) +: entries.filter {
-            case (isBase, id, _) => !isBase && id > k })
-        // GC with a grace window: a CONCURRENT ingest may be between
-        // its data write and its commit, and its prefix is
-        // indistinguishable from an orphan until it commits — the
-        // same reason every table format's orphan cleanup only
-        // removes files older than a threshold. Freshly-replaced
-        // prefixes wait for the next compact (or an explicit
-        // maintenance heal(), which uses grace 0 under the rule that
-        // it never runs concurrently with writers).
-        healManifest(graceMs = 600000L)
-      } else {
-        val d = new java.io.File(dir)
-        val staging = new java.io.File(d, s".staging_compact_$k")
-        if (staging.exists()) DeltaStore.delete(staging)
-        folded.write.partitionBy(partCols: _*).mode("overwrite")
-          .parquet(staging.getPath)
-        val target = new java.io.File(d, s"base=$k")
-        if (target.exists()) DeltaStore.delete(target)
-        if (!staging.renameTo(target))
-          throw new java.io.IOException(s"cannot promote $staging to $target")
-        // GC every dir the new base covers — including previously-dead
-        // replayed deltas (id <= an OLDER base) that were never in the
-        // live set and would otherwise accrue forever.
-        Option(d.listFiles()).foreach(_.foreach { f =>
-          val n = f.getName
-          if ((n.startsWith("delta=") && n.stripPrefix("delta=").toInt <= k) ||
-              (n.startsWith("base=") && n.stripPrefix("base=").toInt < k))
-            DeltaStore.delete(f)
-        })
-      }
+        .write.partitionBy(partCols: _*).mode("overwrite")
+        .parquet(new java.io.File(dir, rel).getPath)
+      // rebase on conflict: keep every delta a concurrent ingest
+      // committed ABOVE the fold horizon k; a concurrently-replayed
+      // delta <= k is covered by the new base (the covering rule would
+      // ignore it anyway) and is dropped
+      commitManifest(entries =>
+        ((true, k, rel)) +: entries.filter {
+          case (isBase, id, _) => !isBase && id > k })
+      // the commit deleted the prefixes it dropped; uncommitted orphans
+      // (crashed writes) are GC'd with a grace window: a CONCURRENT
+      // ingest may be between its data write and its commit, and its
+      // prefix is indistinguishable from an orphan until it commits —
+      // the same reason every table format's orphan cleanup only
+      // removes files older than a threshold
+      gc(graceMs = 600000L)
     }
   }
 
-  // ---- manifest protocol internals -------------------------------
+  // ---- manifest internals ----------------------------------------
 
   /** Test seam: invoked between a commit attempt's epoch read and its
     * CAS — the window where a concurrent writer can slip in. Specs use
@@ -489,38 +387,37 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
   }
 
   /** Commit with rebase-and-retry: `rebase` maps the newest committed
-    * entry list to the desired one; retried until a CAS wins. */
+    * entry list to the desired one; retried until a CAS wins. The
+    * winner then deletes every prefix the manifest it rebased on
+    * referenced and its own drops (a replay's replaced delta, folded
+    * deltas, an older base): those were committed, never another
+    * writer's in-flight prefix, so this is safe beside other writers,
+    * and it is the point where deleted rows leave storage. */
   private def commitManifest(
       rebase: Seq[(Boolean, Int, String)] => Seq[(Boolean, Int, String)]): Unit = {
     var attempts = 0
-    var done = false
-    while (!done) {
+    var dropped = Option.empty[Set[String]]
+    while (dropped.isEmpty) {
       attempts += 1
       require(attempts <= 1000, s"manifest commit on $dir live-locked")
       val (epoch, entries) = readManifest().getOrElse((0L, Nil))
-      done = tryCommitManifest(epoch + 1, rebase(entries))
+      val next = rebase(entries)
+      if (tryCommitManifest(epoch + 1, next))
+        dropped = Some(entries.map(_._3).toSet -- next.map(_._3))
     }
+    dropped.get.foreach(rel => graft.Q.rmrf(new java.io.File(dir, rel)))
   }
 
-  /** GC: delete data prefixes and manifest objects the NEWEST manifest
-    * does not reference (crash orphans, replaced replay prefixes,
-    * pre-compact history, superseded manifests, commit-attempt tmps),
-    * skipping anything younger than `graceMs`. Committed entries are
-    * never lost to concurrent writers (the CAS protocol); the grace
-    * window protects a concurrent ingest's written-but-not-yet-
-    * committed prefix, which is indistinguishable from an orphan until
-    * its manifest lands — compact GCs with a 10-minute grace so it can
-    * run alongside ingest; the explicit maintenance [[heal]] uses
-    * grace 0 under the rule that it never runs concurrently with
-    * writers (every table format's orphan-cleanup contract). */
-  private def healManifest(graceMs: Long = 0L): Unit = {
+  /** Delete data prefixes and manifest objects the NEWEST manifest does
+    * not reference, skipping anything younger than `graceMs`. */
+  private def gc(graceMs: Long): Unit = {
     readManifest().foreach { case (epoch, entries) =>
       val cutoff = System.currentTimeMillis() - graceMs
       val liveRel = entries.map(_._3).toSet
       val dataDir = new java.io.File(dir, "data")
       Option(dataDir.listFiles()).foreach(_.foreach { f =>
         if (!liveRel.contains(s"data/${f.getName}") &&
-            f.lastModified() < cutoff) DeltaStore.delete(f)
+            f.lastModified() < cutoff) graft.Q.rmrf(f)
       })
       Option(new java.io.File(dir).listFiles()).foreach(_.foreach { f =>
         if (((f.getName.startsWith("manifest=") &&
@@ -531,18 +428,4 @@ final case class DeltaStore(dir: String, buckets: Int = 16,
       })
     }
   }
-}
-
-object DeltaStore {
-  /** Open an EXISTING store, detecting its commit protocol from the
-    * artifacts on disk (`_current` pointer → manifest; otherwise
-    * rename) — the reader-side complement of [[DeltaStore.checkProtocol]]:
-    * a consumer that only reads should not have to know which protocol
-    * the writer chose. An empty/missing dir opens as rename (reads
-    * empty). */
-  def open(dir: String, buckets: Int = 16): DeltaStore =
-    DeltaStore(dir, buckets,
-      manifest = new java.io.File(dir, "_current").exists())
-
-  private[operators] def delete(f: java.io.File): Unit = { graft.Q.rmrf(f) }
 }

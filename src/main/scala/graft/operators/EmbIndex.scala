@@ -53,8 +53,8 @@ object EmbIndex {
     StructField("band", IntegerType), StructField("bkey", LongType),
     StructField("rk", IntegerType)))
 
-  def heal(root: String, buckets: Int = 16, manifest: Boolean = false): Unit =
-    DeltaStore(root, buckets, manifest).heal()
+  def heal(root: String): Unit =
+    DeltaStore(root).heal()
 
   // The sign-key expressions inline a 64-weight literal dot product per
   // plane (~3,600 leaf nodes per band) — parsing those strings costs
@@ -73,9 +73,8 @@ object EmbIndex {
     * batch; materialized before return, and emission precedes the
     * state commit (crash-replay re-derives identical pairs). */
   def upsertBatch(spark: SparkSession, vecs: DataFrame, root: String,
-                  batchId: Int, width: Int, bucketCap: Int,
-                  buckets: Int = 16, manifest: Boolean = false): DataFrame = {
-    val store = DeltaStore(root, buckets, manifest)
+                  batchId: Int, width: Int, bucketCap: Int): DataFrame = {
+    val store = DeltaStore(root)
     store.heal()
     val w = width.toString
     val emb = vecs
@@ -176,8 +175,8 @@ object EmbIndex {
   /** Fold the grouped store's deltas into one base (one write job, one
     * atomic promote covering both tables) — rows are immutable in both
     * tables, so the fold is the identity union. */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16, manifest: Boolean = false): Unit =
-    DeltaStore(root, buckets, manifest).compactTables(spark, Seq(
+  def compact(spark: SparkSession, root: String): Unit =
+    DeltaStore(root).compactTables(spark, Seq(
       ("vecs", vecsSchema, col("vec_id"), identity[DataFrame] _),
       ("keys", keysSchema, col("bkey"), identity[DataFrame] _)))
 }

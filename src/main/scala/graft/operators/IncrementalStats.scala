@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * profiled, bytes independent of batch size beyond the one scan that
   * computes it) appended to a [[DeltaStore]], and the current profile
   * is the fold of the live deltas. Compaction folds history into a
-  * base exactly as the data tables do; both commit protocols apply.
+  * base exactly as the data tables do.
   *
   * Batches must PARTITION the table (each row counted once) — the
   * same contract as any additive accumulator; upsert-style overlap
@@ -22,10 +22,9 @@ import org.apache.spark.sql.types._
   *
   * Load-bearing consumer: a profile stored at the `<dir>/_stats`
   * convention location of an embeddings dir is read by
-  * `SimilarityQueries.embCount` (protocol auto-detected via
-  * [[DeltaStore.open]]) to resolve the adaptive sign-key width without
-  * a footer-count job — the first planner decision in this engine
-  * driven by maintained statistics rather than a scan.
+  * `SimilarityQueries.embCount` to resolve the adaptive sign-key
+  * width without a footer-count job — the first planner decision in
+  * this engine driven by maintained statistics rather than a scan.
   */
 object IncrementalStats {
 

@@ -16,7 +16,7 @@ import graft.queries.SimilarityQueries
   * increment, which at 100 TB must not be a corpus recompute).
   *
   * State is ONE grouped [[DeltaStore]] at `root` holding three logical
-  * tables as `tbl=` slices of each delta (`delta=K/tbl=<t>/gbucket=B`),
+  * tables as `tbl=` slices of each delta (`d<K>_e<E>/tbl=<t>/gbucket=B`),
   * so a batch's whole state advance is ONE write job and ONE atomic
   * commit — all three tables move to batch K together or not at all
   * (three separate stores could crash between commits and leave the
@@ -78,9 +78,9 @@ object LshIndex {
     StructField("band", IntegerType), StructField("bkey", StringType),
     StructField("rk", IntegerType)))
 
-  /** Drop dead staging dirs of the grouped state store. */
-  def heal(root: String, buckets: Int = 16, manifest: Boolean = false): Unit =
-    DeltaStore(root, buckets, manifest).heal()
+  /** GC the grouped state store ([[DeltaStore.heal]]). */
+  def heal(root: String): Unit =
+    DeltaStore(root).heal()
 
   /** A batch's STATE-INDEPENDENT precompute — the shingle explode +
     * per-shingle counts, the dominant per-batch compute — persisted and
@@ -132,10 +132,9 @@ object LshIndex {
     */
   def upsertBatch(spark: SparkSession, docs: DataFrame, root: String,
                   batchId: Int, dfCap: Int, bucketCap: Int,
-                  buckets: Int = 16, manifest: Boolean = false,
                   prepared: Option[PreparedBatch] = None): DataFrame = {
     val (verified, state, commit) = upsertBatchPipelined(
-      spark, docs, root, batchId, dfCap, bucketCap, buckets, manifest,
+      spark, docs, root, batchId, dfCap, bucketCap,
       prepared, history = None, prevCommit = scala.concurrent.Future.unit)
     val pairs = scala.concurrent.Await.result(
       verified, scala.concurrent.duration.Duration.Inf)
@@ -183,12 +182,11 @@ object LshIndex {
     * so a replay from the store ([[upsertBatch]], `history = None`)
     * recomputes bit-identical state and pairs. Callers heal() once
     * before a pipelined loop (healing inside it would race the
-    * previous batch's in-flight staging dirs) and [[release]] the
+    * previous batch's written-but-uncommitted prefix) and [[release]] the
     * history after the last future resolves. */
   def upsertBatchPipelined(
       spark: SparkSession, docs: DataFrame, root: String,
       batchId: Int, dfCap: Int, bucketCap: Int,
-      buckets: Int = 16, manifest: Boolean = false,
       prepared: Option[PreparedBatch] = None,
       history: Option[Seq[BatchState]] = None,
       prevCommit: scala.concurrent.Future[Unit] = scala.concurrent.Future.unit)
@@ -197,7 +195,7 @@ object LshIndex {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val store = DeltaStore(root, buckets, manifest)
+    val store = DeltaStore(root)
     if (history.isEmpty) store.heal()
 
     /** Prior state of one logical table: carried cache pieces when
@@ -402,8 +400,8 @@ object LshIndex {
     * shingle key; sets/bands rows are immutable and union as-is. Only
     * compact batches whose emissions are durably committed (see the
     * store's replay contract). */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16, manifest: Boolean = false): Unit =
-    DeltaStore(root, buckets, manifest).compactTables(spark, Seq(
+  def compact(spark: SparkSession, root: String): Unit =
+    DeltaStore(root).compactTables(spark, Seq(
       ("df", dfSchema, col("tri"),
         (all: DataFrame) => all.groupBy("tri").agg(sum("cnt").as("cnt"))),
       ("sets", setsSchema, col("doc_id"), identity[DataFrame] _),

@@ -6,23 +6,24 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, IntegerType, StructType}
 
 /** Last-write-wins keyed table as an LSM merge-on-read store — the
-  * third commit protocol in the upsert family, after the rename-pair
-  * snapshot swap ([[graft.streaming.BucketedSnapshot]]) and the
-  * manifest-pointer commit ([[graft.streaming.ManifestTable]]).
+  * third member of the upsert family, after the rename-pair snapshot
+  * swap ([[graft.streaming.BucketedSnapshot]]) and the manifest-pointer
+  * commit ([[graft.streaming.ManifestTable]]); it commits through
+  * [[DeltaStore]]'s manifest protocol.
   *
   * Those two scale their write volume to the touched BUCKETS: a batch
   * that touches a bucket rewrites that whole bucket (read-merge-
   * rewrite). This one scales writes to the BATCH unconditionally — an
   * upsert appends one [[DeltaStore]] delta (O(batch) bytes, one atomic
-  * rename) and never rereads or rewrites stored data, so a hot bucket
-  * costs the same as a cold one. The merge moves to the READ side:
-  * [[snapshot]] unions the live dirs and keeps each key's row from the
-  * highest batch (the LSM/ReplacingMergeTree trade — cheap writes,
-  * fold-on-read), and [[compact]] folds the fold into a new base so
-  * read cost stops growing with replay depth. Readers see only
-  * promoted dirs at every instant, so a crash mid-upsert leaves the
-  * previous snapshot intact and a checkpoint REPLAY of the same batch
-  * id replaces its own delta (idempotent).
+  * manifest commit) and never rereads or rewrites stored data, so a
+  * hot bucket costs the same as a cold one. The merge moves to the
+  * READ side: [[snapshot]] unions the live dirs and keeps each key's
+  * row from the highest batch (the LSM/ReplacingMergeTree trade —
+  * cheap writes, fold-on-read), and [[compact]] folds the fold into a
+  * new base so read cost stops growing with replay depth. Readers see
+  * only committed prefixes at every instant, so a crash mid-upsert
+  * leaves the previous snapshot intact and a checkpoint REPLAY of the
+  * same batch id replaces its own delta (idempotent).
   *
   * Rows within one batch must be unique per key (dedup the batch
   * first, as every upsert path here does): the LWW fold orders by the
@@ -57,7 +58,7 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
       .add("_deleted", BooleanType, nullable = false)
 
   /** Append `batch` (unique per key) as the delta for `batchId` —
-    * O(batch) write bytes, one rename, no stored-data reads. */
+    * O(batch) write bytes, one manifest commit, no stored-data reads. */
   def upsert(batch: DataFrame, batchId: Int): Unit =
     write(batch.withColumn("_deleted", lit(false)), batchId)
 
@@ -137,7 +138,7 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * Crash-safe even though the batch's commit-log entry lands after
     * foreachBatch returns: if the stream dies between this compact and
     * that commit, the batch REPLAYS under the same id and re-appends
-    * `delta=id` — which the covering rule ignores (id <= base K), so
+    * delta `id` — which the covering rule ignores (id <= base K), so
     * the replayed bytes are dead weight, never a double-count. The
     * trade: compaction truncates time travel to the compact point. */
   def sink(input: DataFrame, checkpointDir: String,
@@ -289,7 +290,7 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * folds ALL surviving history, so no older version can resurface,
     * and this is where deleted bytes physically leave storage. Compact
     * only batches whose upstream checkpoint is durable — a replayed
-    * batch j <= base K would stack `delta=j` on a base that already
+    * batch j <= base K would stack delta j on a base that already
     * folded it, and the LWW order would then prefer the base's row
     * from a HIGHER-numbered original batch, which is correct, but the
     * replayed delta's bytes are dead weight until the next compact. */

@@ -1229,12 +1229,8 @@ object PipelineQueries {
     // over-deletes history each flips the hash. Both views come off
     // the SAME store instance the replay wrote — this is the
     // GDPR-delete + reproducible-snapshot read path, end-to-end.
-    // The store runs the MANIFEST protocol (manifest = true): data
-    // prefixes written directly to epoch-unique final paths, commits
-    // = one manifest object + one pointer move, zero renames of data
-    // — so q105 (rename protocol) and q106 (manifest protocol)
-    // together put BOTH DeltaStore commit paths under the driver's
-    // hash gate against the same arithmetic.
+    // q105 gates the replay itself (LWW order, covering, mid-replay
+    // compaction); q106 gates deletes and time travel on top of it.
     Q(
       "q106_mor_delete_time_travel",
       (s, dir) => {
@@ -1257,7 +1253,7 @@ object PipelineQueries {
             (col("p") + lit(0.01) * lit(b)).as("price_usd"))
         val schema = mkBatch(1995, 1996, 0).schema
         val mor = graft.operators.MorTable(
-          graft.operators.DeltaStore(s"$out/table", 16, manifest = true),
+          graft.operators.DeltaStore(s"$out/table", 16),
           Seq("coin_id", "fetch_date"))
         windows.zipWithIndex.foreach { case ((y0, y1), b) =>
           mor.upsert(mkBatch(y0, y1, b), b)

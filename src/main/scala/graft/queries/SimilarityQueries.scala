@@ -74,57 +74,15 @@ object SimilarityQueries {
     * vocabulary is unbounded at scale, so no broadcast) — the same key the
     * downstream self-join shuffles on, so the exchange is reusable. */
   private def cappedShingles(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    def build = {
-      val ex = docsParallel(s, dir)
-        .select(col("doc_id"), explode(expr(trisExpr)).as("tri"))
-      // tris is array_distinct per doc, so count(*) per shingle == document frequency
-      val keep = ex.groupBy("tri").agg(count(lit(1)).as("df"))
-        .where(col("df") <= dfCap)
-        .select("tri")
-      ex.join(keep, Seq("tri"))
-    }
-    // Opt-in materialization (GRAFT_SHINGLE_CACHE=1): persist the capped
-    // shingle table once per (session, dir) — q35's plan alone holds 16
-    // documents scans because column pruning defeats ReuseExchange (see
-    // PLANS.md "scan reuse"). Cache substitution is plan-based, so every
-    // later q33/q34/q35 subplan picks the InMemoryRelation up without
-    // code changes. Off by default: the r2 and r5 RunSome experiments on
-    // this VM could not show a min-time win past the scheduling noise.
-    if (!sys.env.get("GRAFT_SHINGLE_CACHE").contains("1")) build
-    else {
-      // Keyed on a stable per-session id (identity hash codes can collide
-      // between a stopped and a new session, handing back a plan bound to
-      // a dead session — the ids below are never reused). Eviction keeps
-      // the cache from pinning sessions: entries of stopped sessions go
-      // first, and a same-dir entry owned by a DIFFERENT session on the
-      // SAME live context (an abandoned `newSession` clone — its
-      // persisted plan would otherwise stay pinned until the shared
-      // context stops, because the cached DataFrame strongly references
-      // its session) is unpersisted and replaced by the caller's. Two
-      // live sessions alternating over one dir would thrash; fine for an
-      // off-by-default dev cache.
-      val key = sessionId(s) + "|" + dir
-      shingleCache.entrySet().removeIf(
-        (e: java.util.Map.Entry[String, (org.apache.spark.sql.SparkSession, org.apache.spark.sql.DataFrame)]) => {
-          val (sess, df) = e.getValue
-          val stopped = sess.sparkContext.isStopped
-          // exact dir equality (key layout is "<sessionId>|<dir>", and
-          // session ids contain no '|'): endsWith would also match a
-          // DIFFERENT dir whose path merely ends with this one's suffix
-          // ("/a/x/tbl" vs "/x/tbl") and evict a live session's entry
-          val abandonedClone = !stopped && e.getKey != key &&
-            e.getKey.substring(e.getKey.indexOf('|') + 1) == dir &&
-            (sess.sparkContext eq s.sparkContext)
-          if (abandonedClone) df.unpersist(false)
-          stopped || abandonedClone
-        })
-      shingleCache.computeIfAbsent(
-        key,
-        _ => { val df = build; df.persist(); df.count(); (s, df) })._2
-    }
+    val ex = docsParallel(s, dir)
+      .select(col("doc_id"), explode(expr(trisExpr)).as("tri"))
+    // tris is array_distinct per doc, so count(*) per shingle == document frequency
+    val keep = ex.groupBy("tri").agg(count(lit(1)).as("df"))
+      .where(col("df") <= dfCap)
+      .select("tri")
+    ex.join(keep, Seq("tri"))
   }
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (org.apache.spark.sql.SparkSession, org.apache.spark.sql.DataFrame)]()
+
   // Monotonic per-session ids: unlike System.identityHashCode these are
   // never reused after a session is GC'd, and the weak keys don't pin
   // stopped sessions in memory.
@@ -144,12 +102,12 @@ object SimilarityQueries {
     * per-query scratch dirs; the testdata and ScaleGen corpora are
     * written once, before any query runs). If a future query ever
     * rewrites an embeddings dir it must evict that dir's entries here —
-    * this map is the enforcement point. Same key layout and hygiene as
-    * [[shingleCache]]: stopped-session entries go on access, and a
-    * same-dir entry owned by a different live session on the SAME
-    * context (an abandoned `newSession` clone — its strong session
-    * reference would otherwise pin the clone until the shared context
-    * stops) is dropped and replaced by the caller's. The count runs
+    * this map is the enforcement point. Keyed on [[sessionId]] plus
+    * the dir: stopped-session entries go on access, and a same-dir
+    * entry owned by a different live session on the SAME context (an
+    * abandoned `newSession` clone — its strong session reference would
+    * otherwise pin the clone until the shared context stops) is
+    * dropped and replaced by the caller's. The count runs
     * OUTSIDE any map lock (get-then-putIfAbsent): a rare duplicate
     * footer count is cheaper than holding a ConcurrentHashMap bin lock
     * through a Spark job. */
@@ -163,7 +121,8 @@ object SimilarityQueries {
         val sess = e.getValue._1
         val stopped = sess.sparkContext.isStopped
         // exact dir equality after the first '|' (session ids contain no
-        // '|'), as in shingleCache's eviction
+        // '|'): endsWith would also match a DIFFERENT dir whose path
+        // merely ends with this one's suffix ("/a/x/tbl" vs "/x/tbl")
         val abandonedClone = !stopped && e.getKey != key &&
           e.getKey.substring(e.getKey.indexOf('|') + 1) == dir &&
           (sess.sparkContext eq s.sparkContext)
@@ -185,14 +144,13 @@ object SimilarityQueries {
   }
 
   /** `vec_id`'s maintained count from `<dir>/_stats`, if that profile
-    * store exists (protocol auto-detected — [[graft.operators.DeltaStore.open]]).
-    * Same dir-immutability assumption as [[countCache]]. */
+    * store exists. Same dir-immutability assumption as [[countCache]]. */
   private[graft] def statsCount(
       s: org.apache.spark.sql.SparkSession, dir: String): Option[Long] = {
     val sd = new java.io.File(dir, "_stats")
     if (!sd.isDirectory) None
     else graft.operators.IncrementalStats
-      .profile(s, graft.operators.DeltaStore.open(sd.getPath))
+      .profile(s, graft.operators.DeltaStore(sd.getPath))
       .where(col("col_name") === "vec_id")
       .select("cnt").collect().headOption.map(_.getLong(0))
   }

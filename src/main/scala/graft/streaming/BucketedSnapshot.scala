@@ -39,12 +39,12 @@ object BucketedSnapshot {
         if (!target.exists()) {
           if (!f.renameTo(target))
             throw new java.io.IOException(s"cannot restore $target from $f")
-        } else delete(f)
+        } else graft.Q.rmrf(f)
       }
     })
     // an unpromoted staging dir is a dead partial write — drop it
     val staging = new java.io.File(dir + ".staging")
-    if (staging.exists()) delete(staging)
+    if (staging.exists()) graft.Q.rmrf(staging)
   }
 
   /** Partition-pruned read of the named buckets (all if None); empty
@@ -89,7 +89,7 @@ object BucketedSnapshot {
                      within: Seq[org.apache.spark.sql.Column] = Nil): Unit = {
     heal(dir)
     val staging = new java.io.File(dir + ".staging")
-    if (staging.exists()) delete(staging)
+    if (staging.exists()) graft.Q.rmrf(staging)
     df.repartition((col("gbucket") +: within): _*)
       .write.partitionBy("gbucket").mode("overwrite")
       .parquet(staging.getPath)
@@ -98,15 +98,13 @@ object BucketedSnapshot {
       val src = new java.io.File(staging, s"gbucket=$k")
       val tgt = bucketDir(dir, k)
       val old = new java.io.File(dir, s"gbucket=$k.old")
-      if (old.exists()) delete(old)
+      if (old.exists()) graft.Q.rmrf(old)
       if (tgt.exists() && !tgt.renameTo(old))
         throw new java.io.IOException(s"cannot stage out $tgt")
       if (src.exists() && !src.renameTo(tgt))
         throw new java.io.IOException(s"cannot promote $src")
-      delete(old)
+      graft.Q.rmrf(old)
     }
-    delete(staging)
+    graft.Q.rmrf(staging)
   }
-
-  private def delete(f: java.io.File): Unit = { graft.Q.rmrf(f) }
 }

@@ -262,16 +262,11 @@ object IncrementalRollup {
     df.write.mode("overwrite").parquet(staged)
     val target = new java.io.File(dir)
     val old = new java.io.File(dir + ".old")
-    if (old.exists()) delete(old)
+    if (old.exists()) graft.Q.rmrf(old)
     if (target.exists() && !target.renameTo(old))
       throw new java.io.IOException(s"cannot stage out $dir")
     if (!new java.io.File(staged).renameTo(target))
       throw new java.io.IOException(s"cannot promote $staged")
-    delete(old)
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(delete)
-    f.delete()
+    graft.Q.rmrf(old)
   }
 }

@@ -67,7 +67,7 @@ object ManifestTable {
     Option(new java.io.File(dir).listFiles()).foreach(_.foreach { f =>
       if (f.getName.startsWith("epoch=") &&
           f.getName.stripPrefix("epoch=").toLong < next - 1)
-        delete(f)
+        graft.Q.rmrf(f)
     })
     next
   }
@@ -143,9 +143,9 @@ object ManifestTable {
       .map(_.split("/")(0)).toSet
     Option(new java.io.File(dir).listFiles()).foreach(_.foreach { f =>
       val n = f.getName
-      if (n.startsWith("epoch=") && !referenced.contains(n)) delete(f)
+      if (n.startsWith("epoch=") && !referenced.contains(n)) graft.Q.rmrf(f)
       if (n.startsWith("_manifest_") &&
-          n.stripPrefix("_manifest_").toLong < next - 1) delete(f)
+          n.stripPrefix("_manifest_").toLong < next - 1) graft.Q.rmrf(f)
     })
     next
   }
@@ -175,6 +175,4 @@ object ManifestTable {
     else
       spark.read.parquet(chosen.sorted.map(p => s"$dir/$p"): _*)
   }
-
-  private def delete(f: java.io.File): Unit = { graft.Q.rmrf(f) }
 }

@@ -28,6 +28,11 @@ class CcIndexSpec extends AnyFunSuite {
     rm(new java.io.File(p)); p
   }
 
+  /** The `lab` slice of wave `i`'s live delta. */
+  private def labDelta(r: String, i: Int): String =
+    graft.operators.CcIndex(r).store.live()
+      .collectFirst { case (false, `i`, d) => s"$d/tbl=lab" }.get
+
   // random sparse graph over string ids — chains + cliques so waves
   // merge previously-separate components
   private def edges(seed: Int, nNodes: Int, nEdges: Int) = {
@@ -65,8 +70,7 @@ class CcIndexSpec extends AnyFunSuite {
             case Some(old) => old != comp // touched component remapped
           }
         }
-        val deltaRows = spark.read
-          .parquet(s"$r/delta=$i/tbl=lab").count()
+        val deltaRows = spark.read.parquet(labDelta(r, i)).count()
         assert(deltaRows == moved,
           s"seed $seed wave $i: delta has $deltaRows rows, moved $moved")
         if (i > 0)
@@ -89,14 +93,14 @@ class CcIndexSpec extends AnyFunSuite {
     graft.operators.CcIndex(r).appendWave(spark, w0, 0)
     graft.operators.CcIndex(r).appendWave(spark, w1, 1)
     val labels1 = sortedLabels(graft.operators.CcIndex(r).labels(spark))
-    val delta1 = spark.read.parquet(s"$r/delta=1/tbl=lab")
+    val delta1 = spark.read.parquet(labDelta(r, 1))
       .select("id", "comp", "wave").as[(String, String, Int)]
       .collect().sortBy(x => (x._1, x._2)).toSeq
     // checkpoint replay of wave 1: prior-state read excludes its own
     // delta, so the recompute is bit-identical and REPLACES the delta
     graft.operators.CcIndex(r).appendWave(spark, w1, 1)
     val labels2 = sortedLabels(graft.operators.CcIndex(r).labels(spark))
-    val delta2 = spark.read.parquet(s"$r/delta=1/tbl=lab")
+    val delta2 = spark.read.parquet(labDelta(r, 1))
       .select("id", "comp", "wave").as[(String, String, Int)]
       .collect().sortBy(x => (x._1, x._2)).toSeq
     assert(labels2 == labels1)

@@ -29,8 +29,8 @@ class DeltaStoreConcurrencySpec extends AnyFunSuite {
 
   test("append vs append: the loser retries and both batches land") {
     val dir = tmp()
-    val a = DeltaStore(dir, 4, manifest = true)
-    val b = DeltaStore(dir, 4, manifest = true)
+    val a = DeltaStore(dir, 4)
+    val b = DeltaStore(dir, 4)
     put(a, 0, ("seed", 0))
     // writer b commits inside a's read→CAS window: a's first attempt
     // must lose the epoch, rebase on b's manifest, and retry
@@ -45,8 +45,8 @@ class DeltaStoreConcurrencySpec extends AnyFunSuite {
 
   test("append vs compact: a delta committed during the fold survives the compact's rebase") {
     val dir = tmp()
-    val a = DeltaStore(dir, 4, manifest = true)
-    val b = DeltaStore(dir, 4, manifest = true)
+    val a = DeltaStore(dir, 4)
+    val b = DeltaStore(dir, 4)
     put(a, 0, ("x", 1))
     put(a, 1, ("y", 1))
     // b's ingest of batch 2 lands while a's compact (fold horizon
@@ -65,7 +65,7 @@ class DeltaStoreConcurrencySpec extends AnyFunSuite {
 
   test("4 unsynchronized writer threads, 20 batches: every commit survives real contention") {
     val dir = tmp()
-    val stores = (0 until 4).map(_ => DeltaStore(dir, 4, manifest = true))
+    val stores = (0 until 4).map(_ => DeltaStore(dir, 4))
     put(stores(0), 100, ("seed", -1))
     // distinct batch ids per writer (the id-ordering contract: ids come
     // from a monotonic sequence; only compaction treats low ids as
@@ -111,8 +111,8 @@ class DeltaStoreConcurrencySpec extends AnyFunSuite {
 
   test("grouped append vs grouped append: loser rebases; all slices move together") {
     val dir = tmp()
-    val a = DeltaStore(dir, 4, manifest = true)
-    val b = DeltaStore(dir, 4, manifest = true)
+    val a = DeltaStore(dir, 4)
+    val b = DeltaStore(dir, 4)
     putT(a, 0)
     var fired = false
     a.onBeforeCommit = () => if (!fired) { fired = true; putT(b, 2) }
@@ -125,8 +125,8 @@ class DeltaStoreConcurrencySpec extends AnyFunSuite {
 
   test("grouped append vs compactTables: the mid-fold delta survives with every slice") {
     val dir = tmp()
-    val a = DeltaStore(dir, 4, manifest = true)
-    val b = DeltaStore(dir, 4, manifest = true)
+    val a = DeltaStore(dir, 4)
+    val b = DeltaStore(dir, 4)
     putT(a, 0); putT(a, 1)
     var fired = false
     a.onBeforeCommit = () => if (!fired) { fired = true; putT(b, 2) }
@@ -141,7 +141,7 @@ class DeltaStoreConcurrencySpec extends AnyFunSuite {
 
   test("4 writer threads x 5 grouped commits: no slice ever at a different horizon") {
     val dir = tmp()
-    val stores = (0 until 4).map(_ => DeltaStore(dir, 4, manifest = true))
+    val stores = (0 until 4).map(_ => DeltaStore(dir, 4))
     putT(stores(0), 100)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 4).map { w =>
@@ -167,8 +167,8 @@ class DeltaStoreConcurrencySpec extends AnyFunSuite {
 
   test("interleaved replay of the same batch id converges to one entry") {
     val dir = tmp()
-    val a = DeltaStore(dir, 4, manifest = true)
-    val b = DeltaStore(dir, 4, manifest = true)
+    val a = DeltaStore(dir, 4)
+    val b = DeltaStore(dir, 4)
     put(a, 0, ("k", 1))
     // a replays batch 0 while b also replays batch 0 (crash-recovery
     // double-fire): the loser's rebase replaces the winner's entry —

@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** DeltaStore's write layout: the write shuffle is keyed on the bucket
   * alone (its task count comes from the session and AQE), so every
-  * commit, delta or base, holds exactly one part file per bucket dir
-  * under both commit protocols. */
+  * commit, delta or base, holds exactly one part file per bucket dir. */
 class DeltaStoreLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -47,13 +46,12 @@ class DeltaStoreLayoutSpec extends AnyFunSuite {
     }
   }
 
-  for (manifest <- Seq(false, true); coalesce <- Seq(true, false)) {
-    val protocol = (if (manifest) "manifest" else "rename") +
-      (if (coalesce) "" else ", every shuffle partition written")
+  for (coalesce <- Seq(true, false)) {
+    val label = if (coalesce) "manifest" else "manifest, every shuffle partition written"
 
-    test(s"one part file per bucket dir, delta and base ($protocol)") { withCoalescing(coalesce) {
+    test(s"one part file per bucket dir, delta and base ($label)") { withCoalescing(coalesce) {
       val root = Files.createTempDirectory("graft_dslayout_").toFile
-      val s = DeltaStore(root.getPath, buckets = 16, manifest = manifest)
+      val s = DeltaStore(root.getPath, buckets = 16)
       s.append(frame(s, 0), 0, Seq(col("k")))
       s.append(frame(s, 4000), 1, Seq(col("k")))
       val deltas = bucketDirs(root)
@@ -61,20 +59,17 @@ class DeltaStoreLayoutSpec extends AnyFunSuite {
       assert(deltas.forall(_._2 == 1), deltas.filter(_._2 != 1))
 
       s.compact(spark, schema, col("k"), identity)
-      // base=1 (rename) or data/b1_e<E> (manifest)
-      val bases = (Option(new File(root, "data").listFiles()).toSeq.flatten ++
-        root.listFiles()).filter(d => d.getName.startsWith("base=") ||
-          d.getName.matches("b\\d+_e\\d+"))
+      val bases = s.live().filter(_._1)
       assert(bases.size == 1, bases)
-      val base = bucketDirs(bases.head)
+      val base = bucketDirs(bases.head._3)
       assert(base.size == 16 && base.forall(_._2 == 1), base)
       assert(bucketDirs(root).forall(_._2 == 1))
       assert(s.read(spark, schema, None).count() == 8000)
     }}
 
-    test(s"grouped commit: one part file per table and bucket dir ($protocol)") { withCoalescing(coalesce) {
+    test(s"grouped commit: one part file per table and bucket dir ($label)") { withCoalescing(coalesce) {
       val root = Files.createTempDirectory("graft_dslayout_").toFile
-      val s = DeltaStore(root.getPath, buckets = 16, manifest = manifest)
+      val s = DeltaStore(root.getPath, buckets = 16)
       val union = frame(s, 0).withColumn("tbl", lit("a"))
         .unionByName(frame(s, 0).withColumn("tbl", lit("b")))
       s.appendTables(union, 0, Seq(col("k")))
@@ -83,9 +78,12 @@ class DeltaStoreLayoutSpec extends AnyFunSuite {
       s.compactTables(spark,
         Seq("a", "b").map(t => (t, schema, col("k"), identity[org.apache.spark.sql.DataFrame] _)))
       val dirs = bucketDirs(root)
-      // the rename protocol drops the folded delta, the manifest one keeps it
-      assert(dirs.size == (if (manifest) 2 else 1) * 2 * 16, dirs.map(_._1))
+      // the compact's commit drops the folded delta from disk
+      assert(dirs.size == 2 * 16, dirs.map(_._1))
       assert(dirs.forall(_._2 == 1), dirs.filter(_._2 != 1))
+      val live = s.live()
+      assert(live.size == 1 && live.head._1, live)
+      assert(new File(root, "data").list().toSeq == Seq(live.head._3.getName))
     }}
   }
 }

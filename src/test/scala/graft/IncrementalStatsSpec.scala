@@ -5,8 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** IncrementalStats: mergeable per-batch column profiles on DeltaStore
-  * — maintenance ≡ one-shot recompute, across compaction and on both
-  * commit protocols. */
+  * — maintenance ≡ one-shot recompute, across compaction. */
 class IncrementalStatsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -28,16 +27,13 @@ class IncrementalStatsSpec extends AnyFunSuite {
         st
       }))
     assert(oneShot == Seq(("a", 1.0, 9.0, 0L, 6L), ("b", -3.5, 7.0, 2L, 6L)))
-    for (manifest <- Seq(false, true)) {
-      val st = DeltaStore(
-        Files.createTempDirectory("graft_st_").toString, 4, manifest)
-      data.grouped(2).zipWithIndex.foreach { case (chunk, b) =>
-        IncrementalStats.appendBatch(st, chunk.toDF("a", "b"), Seq("a", "b"), b)
-        if (b == 1) IncrementalStats.compact(spark, st)
-      }
-      assert(rows(IncrementalStats.profile(spark, st)) == oneShot,
-        s"manifest=$manifest maintenance must equal recompute")
+    val st = DeltaStore(Files.createTempDirectory("graft_st_").toString, 4)
+    data.grouped(2).zipWithIndex.foreach { case (chunk, b) =>
+      IncrementalStats.appendBatch(st, chunk.toDF("a", "b"), Seq("a", "b"), b)
+      if (b == 1) IncrementalStats.compact(spark, st)
     }
+    assert(rows(IncrementalStats.profile(spark, st)) == oneShot,
+      "maintenance must equal recompute")
   }
 
   test("non-numeric and missing profiled columns are refused up front") {

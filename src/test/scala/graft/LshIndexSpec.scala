@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.LshIndex
+import graft.operators.{DeltaStore, LshIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,14 +23,13 @@ class LshIndexSpec extends AnyFunSuite {
       s"tail one two $salt")
 
   private def replay(docs: Seq[(Long, String)], root: String,
-                     batchOf: Long => Int, nBatches: Int,
-                     manifest: Boolean = false): Seq[DataFrame] = {
+                     batchOf: Long => Int, nBatches: Int): Seq[DataFrame] = {
     val df = docs.toDF("doc_id", "text")
     (0 until nBatches).map { k =>
       val ids = docs.collect { case (id, _) if batchOf(id) == k => id }
       val out = LshIndex.upsertBatch(
         spark, df.where(col("doc_id").isin(ids: _*)), root,
-        batchId = k, dfCap = 20, bucketCap = 20, manifest = manifest)
+        batchId = k, dfCap = 20, bucketCap = 20)
       out
     }
   }
@@ -72,21 +71,21 @@ class LshIndexSpec extends AnyFunSuite {
   test("manifest protocol replays emit bit-identical pairs (with mid-replay compact)") {
     val docs = Seq(doc(1, "aa"), doc(2, "ab"), doc(3, "ac"), doc(4, "ad"),
                    doc(5, "ae"), doc(6, "af"))
-    def run(manifest: Boolean): Seq[Seq[String]] = {
+    def run(compact: Boolean): Seq[Seq[String]] = {
       val root = tmp()
       val df = docs.toDF("doc_id", "text")
       (0 until 3).map { k =>
         val ids = docs.collect { case (id, _) if (id % 3).toInt == k => id }
         val out = LshIndex.upsertBatch(
           spark, df.where(col("doc_id").isin(ids: _*)), root,
-          batchId = k, dfCap = 20, bucketCap = 20, manifest = manifest)
+          batchId = k, dfCap = 20, bucketCap = 20)
           .orderBy("doc_a", "doc_b").collect().map(_.toString).toSeq
-        if (k == 1) LshIndex.compact(spark, root, manifest = manifest)
+        if (compact && k == 1) LshIndex.compact(spark, root)
         out
       }
     }
-    assert(run(manifest = true) == run(manifest = false),
-      "commit protocol must not change emitted pairs")
+    assert(run(compact = true) == run(compact = false),
+      "a mid-replay compact must not change emitted pairs")
   }
 
   test("capped sets freeze at insert: a shingle heated past the cap by a later batch still counts for earlier docs") {
@@ -138,11 +137,11 @@ class LshIndexSpec extends AnyFunSuite {
     ingest(plain, 0); ingest(plain, 1)
     ingest(compacted, 0); ingest(compacted, 1)
     LshIndex.compact(spark, compacted)
-    // covered deltas are gone: ONE base dir holding all three state
+    // covered deltas are gone: ONE live base holding all three state
     // tables as tbl= slices (the grouped commit's atomicity unit)
-    val names = new java.io.File(compacted).listFiles().map(_.getName).toSeq
-    assert(names.sorted == Seq("base=1"), names.toString)
-    val slices = new java.io.File(compacted, "base=1").listFiles()
+    val live = DeltaStore(compacted).live()
+    assert(live.map(e => (e._1, e._2)) == Seq((true, 1)), live.toString)
+    val slices = live.head._3.listFiles()
       .filter(_.isDirectory).map(_.getName).toSeq
     assert(slices.sorted == Seq("tbl=bands", "tbl=df", "tbl=sets"), slices.toString)
     // the NEXT batch sees identical state through the base
@@ -189,7 +188,8 @@ class LshIndexSpec extends AnyFunSuite {
     // table (sets arrays sorted: list order is an execution detail)
     for (k <- 0 until 3; t <- Seq("df", "sets", "bands")) {
       def rows(root: String): Seq[String] = {
-        val raw = spark.read.parquet(s"$root/delta=$k/tbl=$t")
+        val delta = DeltaStore(root).live().collectFirst { case (false, `k`, d) => d }
+        val raw = spark.read.parquet(s"${delta.get}/tbl=$t")
         val norm = if (t == "sets") raw.withColumn("ts", sort_array(col("ts"))) else raw
         norm.collect().map(_.toString).sorted.toSeq
       }

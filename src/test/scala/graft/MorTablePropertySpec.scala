@@ -7,11 +7,9 @@ import java.nio.file.Files
 /** Randomized cross-check of MorTable against a single-machine
   * last-write-wins map, over seeded random operation sequences
   * (upserts, deletes, compactions — deterministic seeds, reruns test
-  * identical sequences) on BOTH commit protocols. Catches the class
-  * of bugs fixed-shape tests can't: a delete immediately re-upserted,
-  * compaction landing between a delete and its key's resurrection,
-  * keys that churn every batch, protocols diverging on an odd
-  * interleaving. */
+  * identical sequences). Catches the class of bugs fixed-shape tests
+  * can't: a delete immediately re-upserted, compaction landing between
+  * a delete and its key's resurrection, keys that churn every batch. */
 class MorTablePropertySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -39,9 +37,9 @@ class MorTablePropertySpec extends AnyFunSuite {
 
   test("random op sequences match an in-memory LWW model, both protocols") {
     val schema = Seq(("x", 0)).toDF("k", "v").schema
-    for (seed <- Seq(3, 17, 58, 271); manifest <- Seq(false, true)) {
+    for (seed <- Seq(3, 17, 58, 271)) {
       val t = MorTable(DeltaStore(
-        Files.createTempDirectory("graft_morprop_").toString, 4, manifest),
+        Files.createTempDirectory("graft_morprop_").toString, 4),
         Seq("k"))
       val model = scala.collection.mutable.Map.empty[String, Int]
       var batch = 0
@@ -58,7 +56,7 @@ class MorTablePropertySpec extends AnyFunSuite {
       val got = t.snapshot(spark, schema)
         .as[(String, Int)].collect().toMap
       assert(got == model.toMap,
-        s"seed=$seed manifest=$manifest: got $got expected $model")
+        s"seed=$seed: got $got expected $model")
     }
   }
 }

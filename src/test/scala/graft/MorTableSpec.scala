@@ -14,8 +14,8 @@ class MorTableSpec extends AnyFunSuite {
 
   private def tmp(): String = Files.createTempDirectory("graft_mor_").toString
 
-  private def mor(root: String, manifest: Boolean = false) =
-    MorTable(DeltaStore(root, buckets = 8, manifest = manifest), Seq("k"))
+  private def mor(root: String) =
+    MorTable(DeltaStore(root, buckets = 8), Seq("k"))
 
   private def rows(df: DataFrame): Seq[(String, Int)] =
     df.select("k", "v").as[(String, Int)].collect().sorted.toSeq
@@ -48,10 +48,10 @@ class MorTableSpec extends AnyFunSuite {
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
     val before = rows(t.snapshot(spark, schema))
     t.compact(spark, schema)
-    // deltas folded away: exactly one live base dir remains
-    val names = new java.io.File(root).listFiles().map(_.getName).toSeq
-    assert(names.count(_.startsWith("base=")) == 1)
-    assert(!names.exists(_.startsWith("delta=")))
+    // deltas folded away: exactly one live base and no live delta remain
+    val live = t.store.live()
+    assert(live.count(_._1) == 1, live)
+    assert(!live.exists(!_._1), live)
     assert(rows(t.snapshot(spark, schema)) == before)
     t.upsert(Seq(("a", 9)).toDF("k", "v"), 2)
     assert(rows(t.snapshot(spark, schema)) == Seq(("a", 9), ("b", 1)))
@@ -94,8 +94,16 @@ class MorTableSpec extends AnyFunSuite {
     t.delete(Seq("a").toDF("k"), 3, schema)
     t.compact(spark, schema)
     assert(rows(t.snapshot(spark, schema)) == Seq(("b", 1)))
-    assert(spark.read.parquet(root + "/base=3")
+    val base = t.store.live().collectFirst { case (true, 3, d) => d.getPath }
+    assert(base.isDefined, t.store.live())
+    assert(spark.read.parquet(base.get)
       .where($"k" === "a").count() == 0, "no tombstone or version of 'a' survives compaction")
+    // ...and no file left anywhere under the store holds it, without a heal()
+    val parts = Files.walk(java.nio.file.Paths.get(root)).toArray.toSeq
+      .map(_.toString).filter(_.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    assert(parts.forall(p => spark.read.parquet(p).where($"k" === "a").count() == 0),
+      s"deleted key 'a' still on disk in one of $parts")
   }
 
   test("streaming sink drains, resumes with new data, and late batches win") {
@@ -129,16 +137,16 @@ class MorTableSpec extends AnyFunSuite {
     Seq(("a", 3)).toDF("k", "v").write.mode("append").parquet(in)
     t.sink(stream(), root + "/ckpt", compactEvery = Some(2))
       .awaitTermination(120000)
-    // batches 0,1,2 ran; compact fired after batch 1 → base=1 + delta=2
-    val names = new java.io.File(tbl).listFiles().map(_.getName).toSet
-    assert(names.contains("base=1"), s"expected base=1 in $names")
-    assert(!names.contains("delta=0") && !names.contains("delta=1"), names.toString)
+    // batches 0,1,2 ran; compact fired after batch 1 → base 1 + delta 2
+    val live = t.store.live().map { case (isBase, id, _) => (isBase, id) }
+    assert(live.contains((true, 1)), s"expected base 1 in $live")
+    assert(!live.contains((false, 0)) && !live.contains((false, 1)), live.toString)
     assert(rows(t.snapshot(spark, schema)) == Seq(("a", 3), ("b", 2)))
   }
 
   test("manifest protocol: same LWW/compact/as-of/replay semantics, zero renames of data") {
     val root = tmp()
-    val t = mor(root, manifest = true)
+    val t = mor(root)
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
     assert(rows(t.snapshot(spark, schema)) == Seq(("a", 2), ("b", 1)))
@@ -160,7 +168,7 @@ class MorTableSpec extends AnyFunSuite {
 
   test("manifest protocol: unreferenced prefixes are invisible and GC'd by heal") {
     val root = tmp()
-    val t = mor(root, manifest = true)
+    val t = mor(root)
     t.upsert(Seq(("a", 1)).toDF("k", "v"), 0)
     // simulate a crash mid-append: a data prefix written but never committed
     val orphan = new java.io.File(root, "data/d9_e99/gbucket=0")
@@ -275,24 +283,12 @@ class MorTableSpec extends AnyFunSuite {
   }
 
   test("opening a store under the wrong commit protocol fails loudly instead of reading empty") {
+    // a store in the retired per-delta rename layout holds no manifest
     val root = tmp()
-    val t = mor(root) // rename protocol
-    t.upsert(Seq(("a", 1)).toDF("k", "v"), 0)
+    Seq(("a", 1)).toDF("k", "v").write.parquet(root + "/delta=0/gbucket=0")
     intercept[IllegalArgumentException] {
-      mor(root, manifest = true).snapshot(spark, schema).collect()
+      mor(root).snapshot(spark, schema).collect()
     }
-    val root2 = tmp()
-    val t2 = mor(root2, manifest = true)
-    t2.upsert(Seq(("a", 1)).toDF("k", "v"), 0)
-    intercept[IllegalArgumentException] {
-      mor(root2).snapshot(spark, schema).collect()
-    }
-    // DeltaStore.open detects the protocol either way
-    assert(!DeltaStore.open(root).manifest && DeltaStore.open(root2).manifest)
-    assert(MorTable(DeltaStore.open(root), Seq("k"))
-      .snapshot(spark, schema).count() == 1)
-    assert(MorTable(DeltaStore.open(root2), Seq("k"))
-      .snapshot(spark, schema).count() == 1)
   }
 
   test("bloom sidecars skip deltas that cannot contain a probe key, without changing any result") {
@@ -383,14 +379,14 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(root)
     t.upsert(Seq(("a", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("b", 2)).toDF("k", "v"), 1)
-    t.compact(spark, schema) // base=1
+    t.compact(spark, schema) // base 1
     // checkpoint replay of batch 0 after the compact: covered, dead bytes
     t.upsert(Seq(("a", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("c", 3)).toDF("k", "v"), 2)
-    t.compact(spark, schema) // base=2 — must also GC the dead delta=0
-    val names = new java.io.File(root).listFiles()
-      .map(_.getName).filter(n => n.startsWith("delta=") || n.startsWith("base=")).toSeq
-    assert(names.sorted == Seq("base=2"), names.toString)
+    t.compact(spark, schema) // base 2 — must also GC the dead delta 0
+    val base = t.store.live().collectFirst { case (true, 2, d) => d.getName }
+    val left = new java.io.File(root, "data").list().toSeq
+    assert(base.isDefined && left == base.toSeq, left.toString)
     assert(rows(t.snapshot(spark, schema)) ==
       Seq(("a", 1), ("b", 2), ("c", 3)))
   }
