@@ -58,6 +58,17 @@ object Sessions {
       // HDFS/S3 deployment never resolves it, and unlike the checkpoint
       // manager below it needs no master guard.
       .config("spark.hadoop.fs.file.impl", "graft.io.LocalFileSystem")
+      // Generated code is cached per (thread context classloader,
+      // source). With artifact isolation on, an executor builds one
+      // classloader per session UUID, and StreamExecution runs every
+      // started query on a session clone with a fresh UUID, so each
+      // stream lifecycle runs under a new loader and recompiles
+      // byte-identical code (28 classes per warm q227 execution). A
+      // cluster executor pays the same. No code here adds session
+      // artifacts (addArtifact, addJar) and the engine is no Spark
+      // Connect server, so isolation guards nothing; per-session
+      // artifacts, as under Spark Connect, would need it back on.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // Local masters checkpoint streams to the local FS, where the default
     // FileContext-based manager FORKS a process per permission-carrying
     // call (no native Hadoop IO → Shell.runCommand `chmod`/`ls -ld`) on

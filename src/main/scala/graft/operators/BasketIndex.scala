@@ -81,11 +81,6 @@ final case class BasketIndex(root: String) extends Maintained {
       .cache()
     val fresh = b.join(prior, Seq("ok", "brand"), "left_anti")
       .cache()
-    if (debug) {
-      timed(s"w$waveId b")(b.count())
-      timed(s"w$waveId prior")(prior.count())
-      timed(s"w$waveId fresh")(fresh.count())
-    }
     // pair instances completed by this wave: exactly-one-fresh ∪
     // both-fresh — disjoint (and both-stored was counted by the wave
     // that completed it), expressed as ONE join of fresh against
@@ -109,7 +104,7 @@ final case class BasketIndex(root: String) extends Maintained {
     val ordDelta = fresh.select("ok").distinct()
       .join(prior.select("ok").distinct(), Seq("ok"), "left_anti")
       .agg(count(lit(1)).as("c")).select(lit(1).as("k"), col("c"))
-    timed(s"w$waveId commit")(store.appendTables(
+    store.appendTables(
       fresh.withColumn("tbl", lit("mem"))
         .withColumn("gbucket", store.gb(col("ok")))
         .unionByName(pairDelta.withColumn("tbl", lit("pairs"))
@@ -122,7 +117,7 @@ final case class BasketIndex(root: String) extends Maintained {
         .unionByName(ordDelta.withColumn("tbl", lit("ords"))
           .withColumn("gbucket", store.gb(col("k"))),
           allowMissingColumns = true),
-      waveId, within = Seq(col("ok"), col("brand"), col("brand_a"))))
+      waveId, within = Seq(col("ok"), col("brand"), col("brand_a")))
     fresh.unpersist()
     prior.unpersist()
   }
@@ -174,12 +169,4 @@ object BasketIndex {
     * buckets-read); specs assert strict-subset reads. No-op in
     * production. */
   private[graft] var onPrunedRead: (String, Seq[Int]) => Unit = (_, _) => ()
-
-  private val debug = sys.env.contains("GRAFT_BASKET_DEBUG")
-  private def timed[T](tag: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (debug) println(f"[basket] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    r
-  }
 }

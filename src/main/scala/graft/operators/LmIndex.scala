@@ -37,8 +37,8 @@ object LmIndex {
     * row per bigram OCCURRENCE) and append both count tables as the
     * delta for `batchId` in one grouped atomic commit. */
   def appendBatch(spark: SparkSession, docBi: DataFrame, root: String,
-                  batchId: Int, buckets: Int = 16): Unit = {
-    val store = DeltaStore(root, buckets)
+                  batchId: Int): Unit = {
+    val store = DeltaStore(root)
     store.heal()
     val biC = docBi.groupBy(col("bi").as("k"))
       .agg(count(lit(1)).cast(LongType).as("c"))
@@ -54,15 +54,14 @@ object LmIndex {
   /** The maintained count table (`k`, `c`): live deltas carry PARTIAL
     * per-batch counts, so the read folds them with a sum-by-key — the
     * same fold [[compact]] bakes into the base. */
-  def counts(spark: SparkSession, root: String, table: String,
-             buckets: Int = 16): DataFrame =
-    sumByKey(DeltaStore(root, buckets)
+  def counts(spark: SparkSession, root: String, table: String): DataFrame =
+    sumByKey(DeltaStore(root)
       .read(spark, kcSchema, None, table = Some(table)))
 
   /** Fold both tables' deltas into one base in one atomic grouped
     * commit (sum-by-key — the additive fold). */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16): Unit =
-    DeltaStore(root, buckets).compactTables(spark, Seq(
+  def compact(spark: SparkSession, root: String): Unit =
+    DeltaStore(root).compactTables(spark, Seq(
       ("bi", kcSchema, col("k"), sumByKey _),
       ("uni", kcSchema, col("k"), sumByKey _)))
 }

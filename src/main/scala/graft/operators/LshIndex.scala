@@ -58,14 +58,6 @@ import graft.queries.SimilarityQueries
   */
 object LshIndex {
 
-  private val debug = sys.env.contains("GRAFT_LSH_DEBUG")
-  private def timed[T](tag: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (debug) println(f"[lsh] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    r
-  }
-
   /** State-table schemas (data columns only — the `gbucket` dir key is
     * a deterministic row function, recomputed when writing). */
   private val dfSchema = StructType(Seq(
@@ -92,24 +84,23 @@ object LshIndex {
     * upsertBatch owns the unpersist. */
   final case class PreparedBatch(shingles: DataFrame, batchCnt: DataFrame)
 
-  def prepareBatch(spark: SparkSession, docs: DataFrame): PreparedBatch =
-    timed("prep") {
-      val shingles = docs
-        .withColumn("toks", expr(SimilarityQueries.toksExpr))
-        .repartition(col("doc_id"))
-        .select(col("doc_id"),
-          explode(expr(SimilarityQueries.trisExpr)).as("tri"))
-        // the md5 shingle hash is the batch's heaviest per-row compute
-        // and depends on nothing but the tri — hash HERE, off the
-        // state-dependent chain (the minhash stage then only runs the
-        // cheap affine transforms over the cached h)
-        .withColumn("h", expr(SimilarityQueries.shingleHashExpr))
-        .persist()
-      val batchCnt = shingles.groupBy("tri").agg(count(lit(1)).as("bcnt"))
-        .persist()
-      batchCnt.count() // one action fills BOTH caches (shingles feeds it)
-      PreparedBatch(shingles, batchCnt)
-    }
+  def prepareBatch(spark: SparkSession, docs: DataFrame): PreparedBatch = {
+    val shingles = docs
+      .withColumn("toks", expr(SimilarityQueries.toksExpr))
+      .repartition(col("doc_id"))
+      .select(col("doc_id"),
+        explode(expr(SimilarityQueries.trisExpr)).as("tri"))
+      // the md5 shingle hash is the batch's heaviest per-row compute
+      // and depends on nothing but the tri — hash HERE, off the
+      // state-dependent chain (the minhash stage then only runs the
+      // cheap affine transforms over the cached h)
+      .withColumn("h", expr(SimilarityQueries.shingleHashExpr))
+      .persist()
+    val batchCnt = shingles.groupBy("tri").agg(count(lit(1)).as("bcnt"))
+      .persist()
+    batchCnt.count() // one action fills BOTH caches (shingles feeds it)
+    PreparedBatch(shingles, batchCnt)
+  }
 
   /** Ingest one batch of documents (`doc_id` long, `text` string) into
     * the index at `root`, returning the batch's emitted near-dup
@@ -347,7 +338,7 @@ object LshIndex {
     //    tip), so the concurrent actions below reuse cached
     //    blocks instead of racing to compute them. This is the ONLY
     //    work on the pipeline's serial path.
-    timed("chain")(kept.count())
+    kept.count()
 
     // -- ONE grouped commit advances all three state tables to
     //    this batch atomically: one shuffle, one write job, one
@@ -363,7 +354,7 @@ object LshIndex {
     //    and the replay recommits.
     val commit = Future {
       Await.result(prevCommit, Duration.Inf)
-      timed("state commit")(store.appendTables(
+      store.appendTables(
         merged.where(col("bcnt").isNotNull)
           .select(col("tri"), col("bcnt").as("cnt"))
           .withColumn("tbl", lit("df"))
@@ -380,9 +371,9 @@ object LshIndex {
         within = Seq(
           when(col("tbl") === "df", col("tri")),
           when(col("tbl") === "sets", col("doc_id")),
-          when(col("tbl") === "bands", col("bkey")))))
+          when(col("tbl") === "bands", col("bkey"))))
     }
-    val verified = Future { timed("verify+ckpt")(verifyPlan.localCheckpoint()) }
+    val verified = Future { verifyPlan.localCheckpoint() }
     // batch-internal caches die once BOTH consumers are done; the
     // carried pieces (batchCnt, setsB, kept) outlive the call — the
     // caller releases them ([[release]]) after the loop's last future.

@@ -60,8 +60,8 @@ object SketchIndex {
   /** Sketch one batch of events and append all three slices as ONE
     * grouped atomic delta — O(sketch) rows, no reads of stored state. */
   def appendBatch(spark: SparkSession, events: DataFrame, root: String,
-                  batchId: Int, buckets: Int = 16): Unit = {
-    val store = DeltaStore(root, buckets)
+                  batchId: Int): Unit = {
+    val store = DeltaStore(root)
     store.heal()
     val base = events.select(col("event_type"), etkCol.as("etk"),
       col("user_id"), col("value"))
@@ -98,8 +98,8 @@ object SketchIndex {
 
   /** Fold all three slices into one base in one atomic grouped commit —
     * additive sums for cms/grid, distinct-keep-k-min for kmv. */
-  def compact(spark: SparkSession, root: String, buckets: Int = 16): Unit =
-    DeltaStore(root, buckets).compactTables(spark, Seq(
+  def compact(spark: SparkSession, root: String): Unit =
+    DeltaStore(root).compactTables(spark, Seq(
       ("cms", cmsSchema, col("b"),
         (df: DataFrame) => df.groupBy("d", "b").agg(sum(col("c")).as("c"))),
       ("grid", gridSchema, col("event_type"),
@@ -114,19 +114,19 @@ object SketchIndex {
 
   /** The maintained CMS cells (d, b, c) — live deltas carry partial
     * counts, folded with the same sum [[compact]] bakes in. */
-  def cms(spark: SparkSession, root: String, buckets: Int = 16): DataFrame =
-    DeltaStore(root, buckets).read(spark, cmsSchema, None, table = Some("cms"))
+  def cms(spark: SparkSession, root: String): DataFrame =
+    DeltaStore(root).read(spark, cmsSchema, None, table = Some("cms"))
       .groupBy("d", "b").agg(sum(col("c")).as("c"))
 
   /** The maintained ε-grid cells (event_type, g, c). */
-  def grid(spark: SparkSession, root: String, buckets: Int = 16): DataFrame =
-    DeltaStore(root, buckets).read(spark, gridSchema, None, table = Some("grid"))
+  def grid(spark: SparkSession, root: String): DataFrame =
+    DeltaStore(root).read(spark, gridSchema, None, table = Some("grid"))
       .groupBy("event_type", "g").agg(sum(col("c")).as("c"))
 
   /** The maintained distinct KMV hash pool (event_type, h) — per-batch
     * k-smallest sets, duplicates collapsed; the serve side takes the
     * k-th order statistic. */
-  def kmv(spark: SparkSession, root: String, buckets: Int = 16): DataFrame =
-    DeltaStore(root, buckets).read(spark, kmvSchema, None, table = Some("kmv"))
+  def kmv(spark: SparkSession, root: String): DataFrame =
+    DeltaStore(root).read(spark, kmvSchema, None, table = Some("kmv"))
       .distinct()
 }

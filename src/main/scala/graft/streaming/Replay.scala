@@ -27,6 +27,10 @@ import org.apache.spark.sql.types.StructType
   * body whose output must be exactly-once rewrites, rather than adds
   * to, what it wrote under `id`.
   *
+  * Each lifecycle runs on a clone of the session, so a per-session
+  * executor classloader would recompile every batch's generated code;
+  * [[graft.Sessions.builder]] turns artifact isolation off for that.
+  *
   * A drain that has not finished within 300 s is stopped and fails with
   * an error naming `root`; an exception in the body fails the drain with
   * the query already terminated. */
