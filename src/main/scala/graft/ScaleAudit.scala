@@ -25,7 +25,7 @@ object ScaleAudit {
     "q32", "q33", "q34", "q35", "q36", // shingle/minhash dedup family
     "q37", "q38", "q49", "q55", "q98", // embedding ANN family
     "q62", "q84", "q88", "q95",        // components + curation composites
-    "q85", "q92", "q105",              // upsert-protocol family (rename-pair / manifest / LSM MOR)
+    "q85", "q92", "q105",              // rollup replay: waves / stream / deferred view
     "q106", "q107", "q111",            // MOR deletes/time-travel + pruned/bloom point lookups
     "q100",                            // index-intersection scan
     "q103", "q104", "q108", "q109",    // incremental index/stats maintenance

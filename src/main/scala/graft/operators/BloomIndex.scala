@@ -37,20 +37,18 @@ import org.apache.spark.util.sketch.BloomFilter
   *    carried over byte-identically (one row per file — no data
   *    rescan); zero-row files get an empty-sketch entry so they are
   *    carried over too instead of being rescanned forever;
-  *  - [[upsertBucketed]] is the partition-preserving write path: a
-  *    bucket-partitioned layout lets an upsert rewrite only the
-  *    buckets the batch touches, so refresh then rebuilds only those
-  *    buckets' sketches — O(batch), not O(table), index maintenance;
-  *  - both mutation entry points first HEAL crash orphans (`.old` /
-  *    `.staging` leftovers from a rename-pair swap interrupted between
-  *    its two renames) — restore when the promote never happened,
-  *    drop when it did — so a crashed mutation never leaves partition
-  *    inference seeing a `gbucket=K.old` dir or a half-built sidecar;
+  *  - refresh first HEALS crash orphans of its own sidecar swap
+  *    (`_bloom_index.old` / `.staging` left by a crash between its
+  *    renames) — restore when the promote never happened, drop when it
+  *    did — so a crashed refresh never leaves a half-built sidecar;
   *  - all filesystem mutation goes through the Hadoop [[FileSystem]]
   *    of the table's own path (never `java.io.File`), so the API works
-  *    unchanged for `file:` URIs and non-local filesystems;
-  *  - [[graft.streaming.IncrementalRollup.mergeBatch]]'s `onCommit`
-  *    hook wires refresh into the streaming merge loop.
+  *    unchanged for `file:` URIs and non-local filesystems.
+  *
+  * The sidecar serves a plain parquet table that no store owns, so its
+  * refresh is the one rename-pair swap left; a table kept in a
+  * [[DeltaStore]] gets its per-delta key blooms from [[MorTable]]
+  * instead, committed with the delta.
   */
 object BloomIndex {
 
@@ -115,8 +113,8 @@ object BloomIndex {
     * filtering is on path components BELOW the table root — a table
     * that itself lives under an underscore-prefixed path (e.g.
     * `/data/_staging/tbl`) still lists all its files; only sidecar
-    * (`_bloom_index`, `_zorder_manifest`), dot-hidden, and
-    * crash-orphaned `*.old` components inside the table are skipped.
+    * (`_bloom_index`, `_zorder_manifest`) and dot-hidden components
+    * inside the table are skipped.
     * Driver-side METADATA listing — one tuple per file, the same cost
     * class as any planner's file enumeration. */
   private def listDataFiles(spark: SparkSession,
@@ -131,7 +129,7 @@ object BloomIndex {
       val st = it.next()
       val rel = st.getPath.toUri.getPath.stripPrefix(root).stripPrefix("/")
       val hidden = rel.split('/').exists(c =>
-        c.startsWith("_") || c.startsWith(".") || c.endsWith(".old"))
+        c.startsWith("_") || c.startsWith("."))
       if (st.isFile && !hidden)
         out += ((st.getPath.toString, st.getLen, st.getModificationTime))
     }
@@ -159,13 +157,12 @@ object BloomIndex {
     h
   }
 
-  /** Heal crash orphans from an interrupted rename-pair swap, at every
-    * mutation entry point. Invariant of the swap protocol: `X.old`
-    * with `X` present means the promote completed (drop the old);
-    * `X.old` WITHOUT `X` means the crash hit between the two renames
-    * (restore the old — the data was never lost, only staged out). A
-    * leftover sidecar `.staging` is an unpromoted partial build —
-    * dropped; refresh rebuilds it. */
+  /** Heal crash orphans of an interrupted sidecar swap. Invariant of
+    * the swap: `_bloom_index.old` with `_bloom_index` present means the
+    * promote completed (drop the old); `.old` WITHOUT the sidecar means
+    * the crash hit between the two renames (restore the old — it was
+    * never lost, only staged out). A leftover `.staging` is an
+    * unpromoted partial build — dropped; refresh rebuilds it. */
   private def healOrphans(fs: FileSystem, dirPath: Path): Unit = {
     if (!fs.exists(dirPath)) return
     val idx = new Path(dirPath, "_bloom_index")
@@ -176,14 +173,6 @@ object BloomIndex {
       else fs.rename(idxOld, idx)
     }
     if (fs.exists(idxStaging)) fs.delete(idxStaging, true)
-    fs.listStatus(dirPath).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.endsWith(".old") && !name.startsWith("_")) {
-        val tgt = new Path(dirPath, name.stripSuffix(".old"))
-        if (fs.exists(tgt)) fs.delete(st.getPath, true)
-        else fs.rename(st.getPath, tgt)
-      }
-    }
   }
 
   /** Write `df` into `nFiles` files clustered on `layoutCol` (the scan-
@@ -292,65 +281,6 @@ object BloomIndex {
     if (!fs.rename(staging, target))
       throw new java.io.IOException(s"cannot promote $staging")
     fs.delete(old, true)
-  }
-
-  /** Bucket-partitioned layout (`dir/gbucket=K/`): bucket =
-    * pmod(hash(layoutCol), nBuckets). The layout that makes upserts
-    * index-friendly — [[upsertBucketed]] rewrites only touched
-    * buckets, and partition pruning serves scans on `layoutCol`. */
-  def writeBucketed(df: DataFrame, layoutCol: String, keyCol: String,
-                    dir: String, nBuckets: Int,
-                    expectedPerFile: Long = 100000L,
-                    fpp: Double = 0.01): Unit = {
-    df.withColumn("gbucket", pmod(hash(col(layoutCol)), lit(nBuckets)))
-      .repartition(nBuckets, col("gbucket"))
-      .write.partitionBy("gbucket").mode("overwrite").parquet(dir)
-    refresh(df.sparkSession, dir, keyCol, expectedPerFile, fpp)
-  }
-
-  /** Partition-preserving upsert: replace-by-`keyCols` semantics
-    * ([[Upsert.replaceByKey]]), but only the buckets the batch touches
-    * are read (partition-pruned scan), rewritten (staged rename-pair
-    * per bucket), and re-sketched (refresh sees every other file
-    * byte-unchanged). Index maintenance cost is O(touched buckets) =
-    * O(batch), not O(table) — the lakehouse contract the write-once
-    * sidecar lacked. Re-running after a mid-swap crash is safe: orphan
-    * healing restores un-promoted buckets, and replace-by-key is
-    * idempotent for already-promoted ones. */
-  def upsertBucketed(spark: SparkSession, dir: String, batch: DataFrame,
-                     layoutCol: String, keyCol: String,
-                     keyCols: Seq[String], nBuckets: Int,
-                     expectedPerFile: Long = 100000L,
-                     fpp: Double = 0.01): Unit = {
-    val fs = fileSystem(spark, dir)
-    healOrphans(fs, new Path(dir))
-    val staging = new Path(dir + ".upsert_staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    val bucket = pmod(hash(col(layoutCol)), lit(nBuckets)).cast("int")
-    val touched = batch.select(bucket.as("gbucket")).distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by nBuckets
-    if (touched.isEmpty) return
-    val cur = spark.read.parquet(dir)
-      .where(col("gbucket").isin(touched.map(Integer.valueOf): _*)) // partition-pruned
-      .drop("gbucket")
-    val merged = Upsert.replaceByKey(cur, batch, keyCols)
-    merged.withColumn("gbucket", bucket)
-      .repartition(touched.length, col("gbucket"))
-      .write.partitionBy("gbucket").mode("overwrite")
-      .parquet(staging.toString)
-    touched.foreach { k =>
-      val tgt = new Path(dir, s"gbucket=$k")
-      val src = new Path(staging, s"gbucket=$k")
-      val old = new Path(dir, s"gbucket=$k.old")
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(tgt) && !fs.rename(tgt, old))
-        throw new java.io.IOException(s"cannot stage out $tgt")
-      if (fs.exists(src) && !fs.rename(src, tgt))
-        throw new java.io.IOException(s"cannot promote $src")
-      fs.delete(old, true)
-    }
-    fs.delete(staging, true)
-    refresh(spark, dir, keyCol, expectedPerFile, fpp)
   }
 
   /** Sidecar contents: (file_path, bloom, n_rows, file_size,

@@ -11,14 +11,13 @@ import org.apache.spark.sql.types.StructType
   * [[EmbIndex]]), the merge-on-read table ([[MorTable]]), and
   * incremental statistics ([[IncrementalStats]]) build on.
   *
-  * Design point (vs [[graft.streaming.BucketedSnapshot]]'s
-  * read-merge-rewrite buckets): when a batch's keys hash into every
-  * bucket — the normal case for shingle vocabularies and band keys —
-  * a replace-bucket merge rewrites O(table) bytes per batch. Appending
-  * a delta dir writes O(batch) bytes regardless of table size; the
-  * read side unions live dirs on the fly, pruned to the gbuckets a
-  * probe's keys hash into. Listing cost grows with the delta count,
-  * so long-lived stores call [[compact]] periodically.
+  * Design point (vs read-merge-rewrite buckets): when a batch's keys
+  * hash into every bucket — the normal case for shingle vocabularies
+  * and band keys — a replace-bucket merge rewrites O(table) bytes per
+  * batch. Appending a delta dir writes O(batch) bytes regardless of
+  * table size; the read side unions live dirs on the fly, pruned to
+  * the gbuckets a probe's keys hash into. Listing cost grows with the
+  * delta count, so long-lived stores call [[compact]] periodically.
   *
   * Commit protocol (object-store-safe, NO renames anywhere): data
   * prefixes are written DIRECTLY to their final, unique paths —

@@ -5,15 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, IntegerType, StructType}
 
-/** Last-write-wins keyed table as an LSM merge-on-read store — the
-  * third member of the upsert family, after the rename-pair snapshot
-  * swap ([[graft.streaming.BucketedSnapshot]]) and the manifest-pointer
-  * commit ([[graft.streaming.ManifestTable]]); it commits through
-  * [[DeltaStore]]'s manifest protocol.
+/** Last-write-wins keyed table as an LSM merge-on-read store, the
+  * library's one stored upsert table (the coin_history table and its
+  * rollup in [[graft.streaming.IncrementalRollup]] are two of them); it
+  * commits through [[DeltaStore]]'s manifest protocol.
   *
-  * Those two scale their write volume to the touched BUCKETS: a batch
-  * that touches a bucket rewrites that whole bucket (read-merge-
-  * rewrite). This one scales writes to the BATCH unconditionally — an
+  * Writes scale to the BATCH, not to the buckets it touches: an
   * upsert appends one [[DeltaStore]] delta (O(batch) bytes, one atomic
   * manifest commit) and never rereads or rewrites stored data, so a
   * hot bucket costs the same as a cold one. The merge moves to the
@@ -99,9 +96,18 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
   }
 
   /** The current table: every key's latest-batch row, folded from the
-    * live base + deltas. `schema` is the DATA schema (no `_batch`). */
-  def snapshot(spark: SparkSession, schema: StructType): DataFrame =
-    lww(store.read(spark, stored(schema), None))
+    * live base + deltas. `schema` is the DATA schema (no `_batch`).
+    *
+    * `keep` narrows the stored rows BEFORE the fold, so the fold runs
+    * over the kept slice only. It must decide on the key columns (or
+    * functions of them) alone, so that every version of a key, its
+    * tombstones included, is kept or dropped together; the result then
+    * equals the snapshot narrowed afterwards. Columns it adds are
+    * dropped. The caller has to place it: Catalyst does not move a
+    * semi join below the fold's `_rn = 1` filter. */
+  def snapshot(spark: SparkSession, schema: StructType,
+               keep: DataFrame => DataFrame = identity): DataFrame =
+    lww(keep(store.read(spark, stored(schema), None)))
       .where(!col("_deleted"))
       .select(schema.fieldNames.map(col).toSeq: _*)
 

@@ -33,13 +33,4 @@ object Upsert {
       .where(col("__rn") === 1)
       .drop("__rn", "__src")
   }
-
-  /** Unversioned upsert: update rows always replace base rows with the
-    * same key — the reference's unconditional UPDATE (db.py:118-125,
-    * "late data always wins"). One anti-join (broadcast when the update
-    * set is small) + union; no window needed. */
-  def replaceByKey(base: DataFrame, updates: DataFrame,
-                   keys: Seq[String]): DataFrame =
-    base.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .unionByName(updates)
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -26,6 +27,56 @@ object PipelineQueries {
   private val trisSql =
     "LIST_DISTINCT(LIST_TRANSFORM(GENERATE_SERIES(1, LEN(toks) - 2), " +
       "i -> CONCAT(toks[i], ' ', toks[i + 1], ' ', toks[i + 2])))"
+
+  /** The late-data-wins replay's four batches: overlapping year windows
+    * [1995-96], [1996-98], [1998-2000], [2000-01] of each customer's
+    * daily max order price, batch `b` adding a +0.01*b correction, so a
+    * boundary year (1996, 1998, 2000) written twice keeps the value of
+    * the LAST batch covering it. Built from ONE grouped pass over
+    * `orders`, cached: the year filter is a function of the group key
+    * (fetch_date), so filtering the grouped frame IS the per-window
+    * groupBy. Returns the grouped frame (coin_id, fetch_date, p), which
+    * the caller unpersists, and the batches (coin_id, fetch_date,
+    * price_usd). */
+  private def replayBatches(orders: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val base = orders
+      .groupBy(
+        col("o_custkey").cast("string").as("coin_id"),
+        col("o_orderdate").as("fetch_date"))
+      .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
+      .cache()
+    val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
+    (base, windows.zipWithIndex.map { case ((y0, y1), b) =>
+      base
+        .where(year(col("fetch_date")).between(y0, y1))
+        .select(col("coin_id"), col("fetch_date"),
+          (col("p") + lit(0.01) * lit(b)).as("price_usd"))
+    })
+  }
+
+  /** The monthly min/max rollup of [[replayBatches]]' end state, the
+    * oracle of q85, q92 and q105: the CASE picks each year's LAST
+    * covering batch. */
+  private val rollupReplayOracleSql = """
+        WITH g AS (
+          SELECT CAST(o_custkey AS VARCHAR) AS coin_id,
+                 o_orderdate AS fetch_date,
+                 CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                   + CAST(0.01 AS DOUBLE) *
+                     (CASE CAST(EXTRACT(YEAR FROM o_orderdate) AS INT)
+                        WHEN 1995 THEN 0 WHEN 1996 THEN 1 WHEN 1997 THEN 1
+                        WHEN 1998 THEN 2 WHEN 1999 THEN 2 ELSE 3 END) AS price
+          FROM orders
+          GROUP BY 1, 2)
+        SELECT coin_id,
+               CAST(EXTRACT(YEAR FROM fetch_date) AS INT) AS year,
+               CAST(EXTRACT(MONTH FROM fetch_date) AS INT) AS month,
+               MIN(price) AS min_price_usd,
+               MAX(price) AS max_price_usd
+        FROM g
+        GROUP BY 1, 2, 3
+        ORDER BY 1, 2, 3
+      """
 
   def defs: Vector[Q] = Vector(
     // ----------------------------------------------------------------
@@ -117,7 +168,6 @@ object PipelineQueries {
     Q(
       "q67_robust_stats",
       (s, dir) => {
-        import org.apache.spark.sql.DataFrame
         import org.apache.spark.sql.types.DoubleType
         val li = Tables.lineitem(s, dir)
           .select(col("l_suppkey").as("k"), col("l_orderkey"),
@@ -526,79 +576,29 @@ object PipelineQueries {
 
     // ----------------------------------------------------------------
     // q85: incremental rollup maintenance ≡ full recompute — the
-    // classic view-maintenance theorem, proven on the REAL machinery,
-    // now through the BUCKETED merge path (round-8 verdict item 4: the
-    // full-snapshot rewrite was the weakest 100 TB write path). The
-    // replay models how late data actually arrives — in overlapping
-    // TIME windows: 4 batches over year windows [1995-96], [1996-98],
-    // [1998-2000], [2000-01]; boundary years (1996/1998/2000) are
-    // written twice with batch-dependent values (a +0.01*batch
-    // correction), so later batches genuinely overwrite earlier ones
-    // and the oracle must model the replay order (the CASE picks each
-    // year's LAST covering batch). Table and rollup are bucketed by
-    // YEAR and each mergeBatchBucketed rewrites only its window's 2-3
-    // year buckets — O(batch) write volume; at 100 TB the replay
-    // rewrites the touched slice, not 4x the whole table. Numeric
+    // classic view-maintenance theorem, proven on the REAL machinery:
+    // the four batches of [[replayBatches]] run as batch waves through
+    // IncrementalRollup.mergeBatch, each upserting its rows into the
+    // history MorTable and recomputing only the (coin, year, month)
+    // groups it touched into the rollup MorTable. The replay models how
+    // late data actually arrives — in overlapping TIME windows whose
+    // boundary years are written twice with batch-dependent values, so
+    // later batches genuinely overwrite earlier ones (and can lower a
+    // month's max) and the oracle must model the replay order. Numeric
     // determinism: max is exact in DECIMAL(18,2); the correction is one
     // IEEE multiply + add on identical operands in both engines.
     Q(
       "q85_incremental_rollup_replay",
       (s, dir) => {
         val out = Q.fresh(s, "q85_rollup", dir)
-        val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // ONE grouped pass over orders, cached (the q112 move): the year
-        // filter is a function of the group key (fetch_date), so
-        // filtering the grouped frame is exactly the per-window groupBy
-        // — 4 full scans + aggregate shuffles become 1
-        val base = orders
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        // pipelined replay: batch K's rollup recompute + commit runs
-        // concurrently with batch K+1's table upsert (rollup commits
-        // stay in batch order) — the serial path is the table chain
-        var roll: scala.concurrent.Future[Unit] = scala.concurrent.Future.unit
-        windows.zipWithIndex.foreach { case ((y0, y1), b) =>
-          val batch = base
-            .where(year(col("fetch_date")).between(y0, y1))
-            .select(col("coin_id"), col("fetch_date"),
-              (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-          roll = graft.streaming.IncrementalRollup.mergeBatchBucketedPipelined(
-            s, batch, s"$out/table", s"$out/rollup",
-            tableBucket = year(col("fetch_date")),
-            rollupBucket = col("year"), prevRollup = roll)
-        }
-        scala.concurrent.Await.result(roll,
-          scala.concurrent.duration.Duration.Inf)
+        val (base, batches) = replayBatches(Tables.orders(s, dir))
+        val r = graft.streaming.IncrementalRollup(s"$out/table", s"$out/rollup")
+        batches.zipWithIndex.foreach { case (batch, b) => r.mergeBatch(s, batch, b) }
         base.unpersist(false)
-        s.read.parquet(s"$out/rollup")
-          .select(col("coin_id"), col("year"), col("month"),
-            col("min_price_usd"), col("max_price_usd"))
+        r.monthly(s, batches.head.schema)
           .orderBy("coin_id", "year", "month")
       },
-      Some("""
-        WITH g AS (
-          SELECT CAST(o_custkey AS VARCHAR) AS coin_id,
-                 o_orderdate AS fetch_date,
-                 CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                   + CAST(0.01 AS DOUBLE) *
-                     (CASE CAST(EXTRACT(YEAR FROM o_orderdate) AS INT)
-                        WHEN 1995 THEN 0 WHEN 1996 THEN 1 WHEN 1997 THEN 1
-                        WHEN 1998 THEN 2 WHEN 1999 THEN 2 ELSE 3 END) AS price
-          FROM orders
-          GROUP BY 1, 2)
-        SELECT coin_id,
-               CAST(EXTRACT(YEAR FROM fetch_date) AS INT) AS year,
-               CAST(EXTRACT(MONTH FROM fetch_date) AS INT) AS month,
-               MIN(price) AS min_price_usd,
-               MAX(price) AS max_price_usd
-        FROM g
-        GROUP BY 1, 2, 3
-        ORDER BY 1, 2, 3
-      """)),
+      Some(rollupReplayOracleSql)),
 
     // ----------------------------------------------------------------
     // q86: Bloom-prefiltered decontamination — same exact semantics as
@@ -1017,75 +1017,28 @@ object PipelineQueries {
       """)),
 
     // ----------------------------------------------------------------
-    // q92: q85's windowed late-data-wins replay through the BUCKET-
-    // MANIFEST pointer commit protocol (ManifestTable.commitBuckets)
-    // instead of the rename-pair swap — the storage path that deploys
-    // unchanged on an object store, where directories cannot be
-    // renamed. Each commit writes ONLY the touched year buckets under a
-    // new epoch prefix, carries the other buckets' manifest entries
-    // forward, and moves ONE pointer — O(batch) write volume while
-    // keeping whole-table snapshot atomicity (the property per-bucket
-    // pointers would lose). Identical oracle to q85: the maintenance
-    // result must not depend on the commit protocol, so one green row
-    // here certifies the protocol swap end-to-end through the driver
-    // gate (bucket epoch prefixes + atomic pointer moves, 8 commits,
-    // 2 tables).
+    // q92: the reference's cron -> foreachBatch loop itself under the
+    // hash gate. q85's four batches are landed as files one at a time
+    // and each is drained by a resumed AvailableNow stream lifecycle
+    // (Replay.stream) whose foreachBatch body is
+    // IncrementalRollup.mergeBatch under the stream's batch id — the
+    // loop IncrementalRollup.start deploys. Identical oracle to q85:
+    // landing, checkpoint resume and batch-id keyed replace must not
+    // change the maintained rollup.
     Q(
       "q92_manifest_rollup_replay",
       (s, dir) => {
         val out = Q.fresh(s, "q92_manifest", dir)
-        val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // ONE grouped pass over orders, cached (the q112/q85 move) —
-        // the per-window groupBy is the grouped frame filtered by year
-        val base = orders
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        // same rollup-off-the-serial-path pipelining as q85 — the
-        // protocol swap must not change the overlap structure either
-        var roll: scala.concurrent.Future[Unit] = scala.concurrent.Future.unit
-        windows.zipWithIndex.foreach { case ((y0, y1), b) =>
-          val batch = base
-            .where(year(col("fetch_date")).between(y0, y1))
-            .select(col("coin_id"), col("fetch_date"),
-              (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-          roll = graft.streaming.IncrementalRollup.mergeBatchBucketedPipelined(
-            s, batch, s"$out/table", s"$out/rollup",
-            tableBucket = year(col("fetch_date")),
-            rollupBucket = col("year"),
-            manifest = true, prevRollup = roll)
+        val (base, batches) = replayBatches(Tables.orders(s, dir))
+        val r = graft.streaming.IncrementalRollup(s"$out/table", s"$out/rollup")
+        graft.streaming.Replay.stream(s, out, batches, 2) { (b, id) =>
+          r.mergeBatch(s, b, id)
         }
-        scala.concurrent.Await.result(roll,
-          scala.concurrent.duration.Duration.Inf)
         base.unpersist(false)
-        graft.streaming.ManifestTable.readBucketed(s, s"$out/rollup", null)
-          .select(col("coin_id"), col("year"), col("month"),
-            col("min_price_usd"), col("max_price_usd"))
+        r.monthly(s, batches.head.schema)
           .orderBy("coin_id", "year", "month")
       },
-      Some("""
-        WITH g AS (
-          SELECT CAST(o_custkey AS VARCHAR) AS coin_id,
-                 o_orderdate AS fetch_date,
-                 CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                   + CAST(0.01 AS DOUBLE) *
-                     (CASE CAST(EXTRACT(YEAR FROM o_orderdate) AS INT)
-                        WHEN 1995 THEN 0 WHEN 1996 THEN 1 WHEN 1997 THEN 1
-                        WHEN 1998 THEN 2 WHEN 1999 THEN 2 ELSE 3 END) AS price
-          FROM orders
-          GROUP BY 1, 2)
-        SELECT coin_id,
-               CAST(EXTRACT(YEAR FROM fetch_date) AS INT) AS year,
-               CAST(EXTRACT(MONTH FROM fetch_date) AS INT) AS month,
-               MIN(price) AS min_price_usd,
-               MAX(price) AS max_price_usd
-        FROM g
-        GROUP BY 1, 2, 3
-        ORDER BY 1, 2, 3
-      """)),
+      Some(rollupReplayOracleSql)),
 
     // ----------------------------------------------------------------
     // q100: INDEX-INTERSECTION scan — the planning seam that stacks
@@ -1138,49 +1091,26 @@ object PipelineQueries {
       """)),
 
     // ----------------------------------------------------------------
-    // q105: q85's late-data-wins replay through the LSM MERGE-ON-READ
-    // protocol (MorTable on DeltaStore) — the third member of the
-    // upsert-protocol family. The bucketed protocols (q85 rename-pair,
-    // q92 manifest-pointer) rewrite every TOUCHED bucket per merge;
-    // here an upsert appends one O(batch) delta and never rereads or
-    // rewrites stored data — the write path whose cost is independent
-    // of both table size AND key spread (a batch hitting every bucket,
-    // the worst case for read-merge-rewrite, costs the same as one
-    // hitting a single bucket). The merge moves to the read side: the
-    // final snapshot folds base + live deltas last-write-wins, and the
-    // mid-replay compact (after batch 1) proves later deltas still
-    // outrank a folded base. The monthly rollup becomes a VIEW over
-    // the snapshot — merge-on-read defers derived state instead of
-    // maintaining it per batch. Identical oracle to q85/q92: the
-    // maintenance result must not depend on the commit protocol, so
-    // one green row certifies LWW fold order, delta/base covering
-    // rules, and compaction end-to-end through the driver gate.
+    // q105: q85's late-data-wins replay on ONE MorTable with the rollup
+    // deferred to a VIEW over the final snapshot: an upsert appends one
+    // O(batch) delta and never rereads or rewrites stored data, and the
+    // merge moves to the read side — the final snapshot folds base +
+    // live deltas last-write-wins, and the mid-replay compact (after
+    // batch 1) proves later deltas still outrank a folded base. q85
+    // maintains the rollup per batch instead; identical oracle, so one
+    // green row certifies LWW fold order, delta/base covering rules,
+    // and compaction end-to-end under the oracle hash gate.
     Q(
       "q105_mor_rollup_replay",
       (s, dir) => {
         val out = Q.fresh(s, "q105_mor", dir)
-        val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // ONE grouped pass over orders, cached (the q85/q92 move): the
-        // year filter is a function of the group key, so filtering the
-        // grouped frame IS the per-window groupBy — 4 scan+aggregate
-        // shuffles become 1 per replay
-        val base = orders
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        def mkBatch(y0: Int, y1: Int, b: Int) = base
-          .where(year(col("fetch_date")).between(y0, y1))
-          .select(col("coin_id"), col("fetch_date"),
-            (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-        val schema = mkBatch(1995, 1996, 0).schema
+        val (base, batches) = replayBatches(Tables.orders(s, dir))
+        val schema = batches.head.schema
         val mor = graft.operators.MorTable(
           graft.operators.DeltaStore(s"$out/table", 16),
           Seq("coin_id", "fetch_date"))
-        windows.zipWithIndex.foreach { case ((y0, y1), b) =>
-          mor.upsert(mkBatch(y0, y1, b), b)
+        batches.zipWithIndex.foreach { case (batch, b) =>
+          mor.upsert(batch, b)
           if (b == 1) mor.compact(s, schema)
         }
         base.unpersist(false)
@@ -1194,26 +1124,7 @@ object PipelineQueries {
             max(col("price_usd")).as("max_price_usd"))
           .orderBy("coin_id", "year", "month")
       },
-      Some("""
-        WITH g AS (
-          SELECT CAST(o_custkey AS VARCHAR) AS coin_id,
-                 o_orderdate AS fetch_date,
-                 CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                   + CAST(0.01 AS DOUBLE) *
-                     (CASE CAST(EXTRACT(YEAR FROM o_orderdate) AS INT)
-                        WHEN 1995 THEN 0 WHEN 1996 THEN 1 WHEN 1997 THEN 1
-                        WHEN 1998 THEN 2 WHEN 1999 THEN 2 ELSE 3 END) AS price
-          FROM orders
-          GROUP BY 1, 2)
-        SELECT coin_id,
-               CAST(EXTRACT(YEAR FROM fetch_date) AS INT) AS year,
-               CAST(EXTRACT(MONTH FROM fetch_date) AS INT) AS month,
-               MIN(price) AS min_price_usd,
-               MAX(price) AS max_price_usd
-        FROM g
-        GROUP BY 1, 2, 3
-        ORDER BY 1, 2, 3
-      """)),
+      Some(rollupReplayOracleSql)),
 
     // ----------------------------------------------------------------
     // q106: MorTable's tombstone deletes + time travel under the hash
@@ -1235,29 +1146,14 @@ object PipelineQueries {
       "q106_mor_delete_time_travel",
       (s, dir) => {
         val out = Q.fresh(s, "q106_mor", dir)
-        val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // ONE grouped pass over orders, cached (the q85/q92 move); the
-        // 1997 delete key set below is ALSO a slice of the grouped
-        // frame — its keys are exactly the group keys, so the
-        // scan+distinct it ran is the same frame filtered
-        val base = orders
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        def mkBatch(y0: Int, y1: Int, b: Int) = base
-          .where(year(col("fetch_date")).between(y0, y1))
-          .select(col("coin_id"), col("fetch_date"),
-            (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-        val schema = mkBatch(1995, 1996, 0).schema
+        // the 1997 delete keys below are the grouped frame filtered:
+        // its keys ARE the group keys
+        val (base, batches) = replayBatches(Tables.orders(s, dir))
+        val schema = batches.head.schema
         val mor = graft.operators.MorTable(
           graft.operators.DeltaStore(s"$out/table", 16),
           Seq("coin_id", "fetch_date"))
-        windows.zipWithIndex.foreach { case ((y0, y1), b) =>
-          mor.upsert(mkBatch(y0, y1, b), b)
-        }
+        batches.zipWithIndex.foreach { case (batch, b) => mor.upsert(batch, b) }
         def rollup(snap: org.apache.spark.sql.DataFrame, view: String) = snap
           .groupBy(
             col("coin_id"),
@@ -1336,25 +1232,12 @@ object PipelineQueries {
       (s, dir) => {
         val out = Q.fresh(s, "q107_mor", dir)
         val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // ONE grouped pass over orders, cached (the q85/q92 move)
-        val base = orders
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        def mkBatch(y0: Int, y1: Int, b: Int) = base
-          .where(year(col("fetch_date")).between(y0, y1))
-          .select(col("coin_id"), col("fetch_date"),
-            (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-        val schema = mkBatch(1995, 1996, 0).schema
+        val (base, batches) = replayBatches(orders)
+        val schema = batches.head.schema
         val mor = graft.operators.MorTable(
           graft.operators.DeltaStore(s"$out/table", 16),
           Seq("coin_id", "fetch_date"))
-        windows.zipWithIndex.foreach { case ((y0, y1), b) =>
-          mor.upsert(mkBatch(y0, y1, b), b)
-        }
+        batches.zipWithIndex.foreach { case (batch, b) => mor.upsert(batch, b) }
         base.unpersist(false)
         val probe = orders
           .where(col("o_custkey") % 997 === 3)
@@ -1450,28 +1333,14 @@ object PipelineQueries {
       "q110_mor_change_feed",
       (s, dir) => {
         val out = Q.fresh(s, "q110_mor", dir)
-        val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // ONE grouped pass over orders, cached (the q85/q92 move); the
-        // 1997 delete key set is the grouped frame filtered — its keys
-        // ARE the group keys, so the extra scan+distinct collapses too
-        val base = orders
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        def mkBatch(y0: Int, y1: Int, b: Int) = base
-          .where(year(col("fetch_date")).between(y0, y1))
-          .select(col("coin_id"), col("fetch_date"),
-            (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-        val schema = mkBatch(1995, 1996, 0).schema
+        // the 1997 delete keys below are the grouped frame filtered:
+        // its keys ARE the group keys
+        val (base, batches) = replayBatches(Tables.orders(s, dir))
+        val schema = batches.head.schema
         val mor = graft.operators.MorTable(
           graft.operators.DeltaStore(s"$out/table", 16),
           Seq("coin_id", "fetch_date"))
-        windows.zipWithIndex.foreach { case ((y0, y1), b) =>
-          mor.upsert(mkBatch(y0, y1, b), b)
-        }
+        batches.zipWithIndex.foreach { case (batch, b) => mor.upsert(batch, b) }
         mor.delete(
           base.where(year(col("fetch_date")) === 1997)
             .select("coin_id", "fetch_date"),
@@ -1515,26 +1384,13 @@ object PipelineQueries {
       (s, dir) => {
         val out = Q.fresh(s, "q111_mor", dir)
         val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // ONE grouped pass over orders, cached (the q85/q92 move)
-        val base = orders
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        def mkBatch(y0: Int, y1: Int, b: Int) = base
-          .where(year(col("fetch_date")).between(y0, y1))
-          .select(col("coin_id"), col("fetch_date"),
-            (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-        val schema = mkBatch(1995, 1996, 0).schema
+        val (base, batches) = replayBatches(orders)
+        val schema = batches.head.schema
         val mor = graft.operators.MorTable(
           graft.operators.DeltaStore(s"$out/table", 16),
           Seq("coin_id", "fetch_date"),
           bloomItems = Some(200000L))
-        windows.zipWithIndex.foreach { case ((y0, y1), b) =>
-          mor.upsert(mkBatch(y0, y1, b), b)
-        }
+        batches.zipWithIndex.foreach { case (batch, b) => mor.upsert(batch, b) }
         base.unpersist(false)
         val present = orders.where(col("o_custkey") % 997 === 3)
         val probe = present
@@ -1581,22 +1437,8 @@ object PipelineQueries {
       "q112_incremental_view_from_feed",
       (s, dir) => {
         val out = Q.fresh(s, "q112_ivm", dir)
-        val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // ONE grouped pass over orders, cached — the year filter is a
-        // function of the group key, so filtering the grouped frame is
-        // exactly the per-window groupBy (5 scans+shuffles become 1)
-        val base = orders
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        def mkBatch(y0: Int, y1: Int, b: Int) = base
-          .where(year(col("fetch_date")).between(y0, y1))
-          .select(col("coin_id"), col("fetch_date"),
-            (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-        val schema = mkBatch(1995, 1996, 0).schema
+        val (base, batches) = replayBatches(Tables.orders(s, dir))
+        val schema = batches.head.schema
         val mor = graft.operators.MorTable(
           graft.operators.DeltaStore(s"$out/table", 16),
           Seq("coin_id", "fetch_date"))
@@ -1617,8 +1459,8 @@ object PipelineQueries {
             graft.operators.IncrementalView.applyFeed(
               vstore, feed, Seq("coin_id", "yr", "mon"), "price_usd", b)
           }(scala.concurrent.ExecutionContext.global)
-        val applies = windows.zipWithIndex.map { case ((y0, y1), b) =>
-          mor.upsert(mkBatch(y0, y1, b), b); applyBatch(b)
+        val applies = batches.zipWithIndex.map { case (batch, b) =>
+          mor.upsert(batch, b); applyBatch(b)
         }
         mor.delete(
           base.where(year(col("fetch_date")) === 1997)
@@ -1683,22 +1525,8 @@ object PipelineQueries {
       "q115_stream_cdc_view",
       (s, dir) => {
         val out = Q.fresh(s, "q115_scdc", dir)
-        val orders = Tables.orders(s, dir)
-        val windows = Seq((1995, 1996), (1996, 1998), (1998, 2000), (2000, 2001))
-        // one grouped pass, cached (the q112 move): the year filter is
-        // a function of the group key, so 4 window scans become 1
-        val base = orders
-          .where(col("o_custkey") % 5 === 0)
-          .groupBy(
-            col("o_custkey").cast("string").as("coin_id"),
-            col("o_orderdate").as("fetch_date"))
-          .agg(max(Q.dec2(col("o_totalprice"))).cast("double").as("p"))
-          .cache()
-        def mkBatch(y0: Int, y1: Int, b: Int) = base
-          .where(year(col("fetch_date")).between(y0, y1))
-          .select(col("coin_id"), col("fetch_date"),
-            (col("p") + lit(0.01) * lit(b)).as("price_usd"))
-        val schema = mkBatch(1995, 1996, 0).schema
+        val (base, batches) = replayBatches(Tables.orders(s, dir).where(col("o_custkey") % 5 === 0))
+        val schema = batches.head.schema
         val mor = graft.operators.MorTable(
           graft.operators.DeltaStore(s"$out/table", 16),
           Seq("coin_id", "fetch_date"))
@@ -1728,8 +1556,8 @@ object PipelineQueries {
         // source orders ties by (timestamp, path) and part-file names
         // are random uuids, so explicit stamps make the drop -> batch-id
         // mapping deterministic rather than clock-granularity-lucky
-        def drop(y0: Int, y1: Int, b: Int): Unit = {
-          mkBatch(y0, y1, b).coalesce(1)
+        def drop(b: Int): Unit = {
+          batches(b).coalesce(1)
             .write.mode("append").parquet(s"$out/in")
           Option(new java.io.File(s"$out/in").listFiles()).toSeq.flatten
             .filter(f => f.getName.endsWith(".parquet") &&
@@ -1748,9 +1576,9 @@ object PipelineQueries {
         // paid twice, not per drop; per-drop micro-batches: each landed
         // file is one complete ingest unit and must keep its OWN batch
         // id (prices and the LWW winner depend on it)
-        drop(windows(0)._1, windows(0)._2, 0)
+        drop(0)
         graft.streaming.Replay.drain(s, out, schema, perFile = true)(fold)
-        (1 to 3).foreach(b => drop(windows(b)._1, windows(b)._2, b))
+        (1 to 3).foreach(drop)
         graft.streaming.Replay.drain(s, out, schema, perFile = true)(fold)
         applies.foreach(Await.result(_,
           scala.concurrent.duration.Duration.Inf))

@@ -1,13 +1,13 @@
 package graft
 
-import graft.operators.{BloomIndex, Upsert}
+import graft.operators.BloomIndex
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** BloomIndex: exactness of sketch-planned point lookups, actual file
   * skipping on a non-clustered key, empty-result behavior — and the
-  * MUTATION path (refresh / upsertBucketed): incremental carry-over,
+  * MUTATION path (refresh): incremental carry-over,
   * crash-orphan healing, deleted-file reconciliation, zero-row files,
   * fingerprint-based staleness detection, and tables living under
   * underscore-prefixed parent paths. */
@@ -93,98 +93,36 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(got == Seq("p_123"))
   }
 
-  test("upsertBucketed: exact replace-by-key, untouched entries carried " +
-      "over byte-identical, lookup still skips") {
-    val dir = Files.createTempDirectory("graft_bloomidx_").toString + "/t"
-    val df = (0L until 4000L).map(i => (i, s"g${i % 8}", s"payload_$i"))
-      .toDF("id", "grp", "payload")
-    BloomIndex.writeBucketed(df, "grp", "id", dir, nBuckets = 8,
-      expectedPerFile = 1000L, fpp = 0.01)
-    val before = sidecarRows(dir)
-
-    // batch touches only grp g5's bucket: one update + one insert
-    val batch = Seq((5L, "g5", "UPDATED"), (4100L, "g5", "NEW"))
-      .toDF("id", "grp", "payload")
-    BloomIndex.upsertBucketed(spark, dir, batch, "grp", "id",
-      keyCols = Seq("id"), nBuckets = 8, expectedPerFile = 1000L, fpp = 0.01)
-
-    val got = spark.read.parquet(dir).select("id", "grp", "payload")
-      .collect().toSet
-    val want = Upsert.replaceByKey(df, batch, Seq("id"))
-      .select("id", "grp", "payload").collect().toSet
-    assert(got == want, "upsert must be exact replace-by-key")
-
-    // untouched files' sidecar entries are carried over byte-identically
-    val after = sidecarRows(dir)
-    val touched = batch
-      .select(pmod(hash(col("grp")), lit(8)).cast("int")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val untouchedBefore = before.filterNot { case (p, _) =>
-      touched.exists(k => p.contains(s"gbucket=$k/")) }
-    assert(untouchedBefore.nonEmpty)
-    untouchedBefore.foreach { case (p, row) =>
-      assert(after.get(p).contains(row),
-        s"untouched entry for $p must carry over unchanged")
-    }
-    // the new key is findable and lookups still skip
-    val hit = BloomIndex.lookup(spark, dir, "id", Seq("4100"))
-      .select("payload").collect().map(_.getString(0)).toSeq
-    assert(hit == Seq("NEW"))
-    val upd = BloomIndex.lookup(spark, dir, "id", Seq("5"))
-      .select("payload").collect().map(_.getString(0)).toSeq
-    assert(upd == Seq("UPDATED"))
-    val planned = BloomIndex.selectFiles(spark, dir, Seq("4100"))
-    assert(planned.size < after.size,
-      s"planned ${planned.size}/${after.size} — lookup must still skip")
-  }
-
   test("crash-orphan healing: .old and .staging leftovers are restored " +
       "or dropped, never surfaced") {
-    val dir = Files.createTempDirectory("graft_bloomidx_").toString + "/t"
-    val df = (0L until 800L).map(i => (i, s"g${i % 8}", s"p_$i"))
-      .toDF("id", "grp", "payload")
-    BloomIndex.writeBucketed(df, "grp", "id", dir, nBuckets = 8,
-      expectedPerFile = 200L, fpp = 0.01)
-    val full = spark.read.parquet(dir).select("id", "grp", "payload")
-      .collect().toSet
-
-    // pick two buckets that actually exist for this hash layout
-    val buckets = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("gbucket="))
-      .map(_.getName).sorted
-    assert(buckets.length >= 2)
-    val victim = new java.io.File(dir, buckets.head)
-    // a key known to live in the victim bucket (partition col gbucket is
-    // not in the files, so a direct dir read gives the data columns)
-    val sampleId = spark.read.parquet(victim.getPath)
-      .select("id").orderBy("id").limit(1)
-      .collect()(0).getLong(0)
-
-    // simulate a crash between the two renames of the victim's swap:
-    // target missing, only the .old remains
-    assert(victim.renameTo(new java.io.File(dir, buckets.head + ".old")))
-    // simulate a crash AFTER another bucket's promote: stale .old remains
-    val staleOld = new java.io.File(dir, buckets(1) + ".old")
-    assert(staleOld.mkdirs())
-    Files.write(Paths.get(staleOld.getPath, "junk.bin"), Array[Byte](1, 2, 3))
-    // and a half-written sidecar staging dir
+    val (dir, df) = layout()
+    val before = sidecarRows(dir)
+    val idx = new java.io.File(dir, "_bloom_index")
+    val idxOld = new java.io.File(dir, "_bloom_index.old")
     val staging = new java.io.File(dir, "_bloom_index.staging")
-    assert(staging.mkdirs())
-    Files.write(Paths.get(staging.getPath, "junk.bin"), Array[Byte](9))
+    def junk(d: java.io.File): Unit = {
+      assert(d.mkdirs())
+      Files.write(Paths.get(d.getPath, "junk.bin"), Array[Byte](9))
+    }
 
-    BloomIndex.refresh(spark, dir, "id", expectedPerFile = 200L, fpp = 0.01)
-
-    assert(!new java.io.File(dir, buckets.head + ".old").exists(), "restored")
-    assert(victim.exists())
-    assert(!staleOld.exists(), "stale .old dropped")
+    // a crash between the swap's two renames: the live sidecar was
+    // staged out to .old and the half-written staging never promoted
+    assert(idx.renameTo(idxOld))
+    junk(staging)
+    BloomIndex.refresh(spark, dir, "id", expectedPerFile = 1000L, fpp = 0.01)
+    assert(!idxOld.exists(), "the staged-out sidecar is restored")
     assert(!staging.exists(), "orphan staging dropped")
-    val healed = spark.read.parquet(dir).select("id", "grp", "payload")
-      .collect().toSet
-    assert(healed == full, "healing must restore the full table")
-    val got = BloomIndex.lookup(spark, dir, "id", Seq(sampleId.toString))
-      .select("payload").collect().map(_.getString(0)).toSeq
-    assert(got == Seq(s"p_$sampleId"),
-      "the restored bucket's keys must be findable again")
+    assert(sidecarRows(dir) == before,
+      "the restored sidecar's entries carry over unchanged")
+
+    // a crash after the promote: a stale .old beside the live sidecar
+    junk(idxOld)
+    BloomIndex.refresh(spark, dir, "id", expectedPerFile = 1000L, fpp = 0.01)
+    assert(!idxOld.exists(), "stale .old dropped")
+    assert(sidecarRows(dir) == before)
+    val got = BloomIndex.lookup(spark, dir, "id", Seq("1234"))
+      .select("id", "grp", "payload").collect().toSet
+    assert(got == df.where(col("id") === 1234L).collect().toSet)
   }
 
   test("refresh drops entries for deleted files") {

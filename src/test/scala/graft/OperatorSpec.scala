@@ -28,13 +28,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(got.toSeq == Seq((1, "new", 5)))
   }
 
-  test("replaceByKey: updates always replace, regardless of version") {
-    val base = Seq((1, "old", 9), (2, "keep", 1)).toDF("k", "v", "ver")
-    val upd = Seq((1, "new", 1)).toDF("k", "v", "ver")
-    val got = Upsert.replaceByKey(base, upd, Seq("k")).as[(Int, String, Int)].collect().toSet
-    assert(got == Set((1, "new", 1), (2, "keep", 1)))
-  }
-
   // ---------------------------------------------------------------- Streaks
   test("dropStreaks finds runs of >= minLen consecutive drops") {
     // key A: 10, 9, 8, 7 (3-drop streak), 8, 6 (1-drop) -> one streak of 3

@@ -1,9 +1,9 @@
 package graft
 
-import graft.operators.BloomIndex
-import graft.streaming.{IncrementalRollup, ManifestTable, Sessionize, StreamDedup}
+import graft.streaming.{IncrementalRollup, Replay, Sessionize, StreamDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, DecimalType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.sql.Timestamp
@@ -12,19 +12,19 @@ import java.sql.Timestamp
   * reference's daily loop (daily_fetch.py:17-54 → db.py:113-133 →
   * db.py:150-197) as ONE running pipeline built from the already-spec'd
   * parts — file source → StreamDedup → Sessionize →
-  * `foreachBatch mergeBatch` through the ManifestTable commit protocol
-  * with the `onCommit` hook refreshing a Bloom sidecar on every commit.
+  * `foreachBatch mergeBatch` into IncrementalRollup's two MorTables.
   *
   * The drained results are pinned to the BATCH oracles' semantics: the
   * sessions that reach the sink must equal Sessionize.replayBatchMicros
   * over the deduplicated input (the q81-green code path), and the rollup
   * must equal a one-shot recompute over the final table (the q85
   * contract: incremental touched-group maintenance ≡ full recompute).
-  * A second case kills the loop mid-merge (after the table commit,
-  * before the rollup commit) and restarts from the checkpoint: the
-  * manifest must stay readable throughout and the re-delivered batch
-  * must converge to the same state (merge idempotence + manifest
-  * atomicity + sidecar refresh, composed).
+  * Point lookups of probe keys must equal the filtered snapshot. A
+  * second case kills the loop mid-merge (after the table commit, before
+  * the rollup commit) and restarts from the checkpoint: the table must
+  * stay readable throughout and the re-delivered batch must converge to
+  * the same state (replace-by-batch-id deltas + manifest atomicity,
+  * composed).
   */
 class StreamComposeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -73,11 +73,47 @@ class StreamComposeSpec extends AnyFunSuite {
       to_date(col("session_start")).as("fetch_date"),
       col("total_value").cast("decimal(24,8)").as("price_usd"))
 
-  private def epochDir(dir: String): String =
-    s"$dir/epoch=${ManifestTable.currentEpoch(dir)}"
+  private val histSchema = new StructType()
+    .add("coin_id", StringType)
+    .add("fetch_date", DateType)
+    .add("price_usd", DecimalType(24, 8))
 
-  test("file source → StreamDedup → Sessionize → mergeBatch(manifest, " +
-      "onCommit = Bloom refresh) drains to the batch oracles' results") {
+  /** The rollup as a one-shot recompute over `hist`. */
+  private def recompute(hist: DataFrame) =
+    hist
+      .groupBy(col("coin_id"), year(col("fetch_date")).as("year"),
+        month(col("fetch_date")).as("month"))
+      .agg(min(col("price_usd")).as("min_price_usd"),
+        max(col("price_usd")).as("max_price_usd"))
+      .collect().map(_.toSeq).toSet
+
+  private def rollupRows(r: IncrementalRollup) =
+    r.monthly(spark, histSchema)
+      .select("coin_id", "year", "month", "min_price_usd", "max_price_usd")
+      .collect().map(_.toSeq).toSet
+
+  /** `MorTable.lookup` of every expected (key, session day) of the
+    * `probe` coins plus one absent day must equal the snapshot filtered
+    * to those coins. */
+  private def assertLookups(r: IncrementalRollup,
+                            want: Set[(Long, Long, Long, Double)],
+                            probe: Seq[Long]): Unit = {
+    val keys = (want.toSeq.collect { case (k, startMs, _, _)
+        if probe.contains(k) => (k.toString, startMs) } :+
+        ((probe.head.toString, baseMs + 20 * dayMs)))
+      .toDF("coin_id", "start_ms")
+      .select(col("coin_id"),
+        to_date(timestamp_millis(col("start_ms"))).as("fetch_date"))
+    val viaLookup = r.table.lookup(spark, histSchema, keys).collect().toSet
+    val plain = r.table.snapshot(spark, histSchema)
+      .where(col("coin_id").isin(probe.map(_.toString): _*))
+      .collect().toSet
+    assert(viaLookup.nonEmpty)
+    assert(viaLookup == plain, "lookup must match the filtered snapshot")
+  }
+
+  test("file source → StreamDedup → Sessionize → mergeBatch drains to " +
+      "the batch oracles' results, lookups exact") {
     val base = tmp()
     val (inDir, table, rollup, ckpt) =
       (s"$base/landing", s"$base/hist", s"$base/roll", s"$base/ckpt")
@@ -87,6 +123,7 @@ class StreamComposeSpec extends AnyFunSuite {
       .repartition(2).write.parquet(inDir)
 
     val sch = spark.read.parquet(inDir).schema
+    val r = IncrementalRollup(table, rollup)
     val src = spark.readStream.schema(sch).parquet(inDir)
     val deduped = StreamDedup.withinWatermark(src, "ts", "2 hours",
       Seq("key", "ts"))
@@ -95,13 +132,8 @@ class StreamComposeSpec extends AnyFunSuite {
     val q = toHistory(sessions.toDF()).writeStream
       .outputMode("append")
       .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        IncrementalRollup.mergeBatch(spark, b, table, rollup,
-          ManifestTable.read,
-          (df, d) => { ManifestTable.commit(df, d); () },
-          onCommit = d =>
-            BloomIndex.refresh(spark, epochDir(d), "coin_id",
-              expectedPerFile = 64L, fpp = 0.01))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        r.mergeBatch(spark, b, Replay.batchId(id))
       }
       .start()
     q.processAllAvailable()
@@ -116,7 +148,7 @@ class StreamComposeSpec extends AnyFunSuite {
 
     // 1. the drained history table == the q81-green batch replay
     val want = expectedSessions(evs)
-    val got = ManifestTable.read(spark, table, null)
+    val got = r.table.snapshot(spark, histSchema)
       .where(col("coin_id") =!= "999")
       .select(col("coin_id").cast("long"),
         (col("fetch_date").cast("timestamp").cast("long") * 1000).as("day_ms"),
@@ -135,27 +167,10 @@ class StreamComposeSpec extends AnyFunSuite {
 
     // 2. the rollup == a one-shot recompute over the final table (q85's
     // incremental ≡ full-recompute contract)
-    val hist = ManifestTable.read(spark, table, null)
-    val wantRoll = hist
-      .groupBy(col("coin_id"), year(col("fetch_date")).as("year"),
-        month(col("fetch_date")).as("month"))
-      .agg(min(col("price_usd")).as("min_price_usd"),
-        max(col("price_usd")).as("max_price_usd"))
-      .collect().map(_.toSeq).toSet
-    val gotRoll = ManifestTable.read(spark, rollup, null)
-      .select("coin_id", "year", "month", "min_price_usd", "max_price_usd")
-      .collect().map(_.toSeq).toSet
-    assert(gotRoll == wantRoll)
+    assert(rollupRows(r) == recompute(r.table.snapshot(spark, histSchema)))
 
-    // 3. the onCommit seam kept the sidecar consistent with the LATEST
-    // epoch: exact indexed lookups against a plain filter
-    val probe = Seq("0", "3", "5")
-    val viaIndex = BloomIndex.lookup(spark, epochDir(table), "coin_id", probe)
-      .select("coin_id", "fetch_date", "price_usd").collect().toSet
-    val plain = ManifestTable.read(spark, table, null)
-      .where(col("coin_id").isin(probe: _*))
-      .select("coin_id", "fetch_date", "price_usd").collect().toSet
-    assert(viaIndex == plain, "sidecar lookup must match the manifest read")
+    // 3. bucket-pruned point lookups agree with the snapshot
+    assertLookups(r, want, Seq(0L, 3L, 5L))
   }
 
   test("kill mid-merge and resume from the checkpoint: manifest stays " +
@@ -167,9 +182,17 @@ class StreamComposeSpec extends AnyFunSuite {
     (evs ++ evs).toDF("key", "ts", "value")
       .repartition(2).write.parquet(inDir)
     val sch = spark.read.parquet(inDir).schema
+    val r = IncrementalRollup(table, rollup)
 
+    // die between the two commits of the first non-empty merge: the
+    // table delta is committed, the rollup delta never is
     @volatile var killed = false
-    def run(killOnce: Boolean): Unit = {
+    r.rollup.store.onBeforeCommit = () =>
+      if (!killed) {
+        killed = true
+        throw new RuntimeException("injected crash before the rollup commit")
+      }
+    def run(): Unit = {
       val src = spark.readStream.schema(sch).parquet(inDir)
       val deduped = StreamDedup.withinWatermark(src, "ts", "2 hours",
         Seq("key", "ts"))
@@ -178,21 +201,8 @@ class StreamComposeSpec extends AnyFunSuite {
       val q = toHistory(sessions.toDF()).writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          IncrementalRollup.mergeBatch(spark, b, table, rollup,
-            ManifestTable.read,
-            (df, d) => { ManifestTable.commit(df, d); () },
-            onCommit = d => {
-              BloomIndex.refresh(spark, epochDir(d), "coin_id",
-                expectedPerFile = 64L, fpp = 0.01)
-              // die AFTER the history commit of the first non-empty
-              // merge: table committed + indexed, rollup never written
-              if (killOnce && !killed && d == table &&
-                  ManifestTable.read(spark, table, null).count() > 0) {
-                killed = true
-                throw new RuntimeException("injected crash after table commit")
-              }
-            })
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          r.mergeBatch(spark, b, Replay.batchId(id))
         }
         .start()
       try {
@@ -208,37 +218,21 @@ class StreamComposeSpec extends AnyFunSuite {
       }
     }
 
-    run(killOnce = true)
+    run()
     assert(killed, "the injected crash must have fired")
-    // mid-crash invariants: whatever the manifest points at is readable,
-    // and the rollup is behind the table (the crash window)
-    val midEpoch = ManifestTable.currentEpoch(table)
-    if (midEpoch >= 0)
-      ManifestTable.read(spark, table, null).count() // must not throw
+    // mid-crash invariants: the table is readable and holds the crashed
+    // batch's delta, and the rollup is behind it (the crash window)
+    val crashed = r.table.store.live().collect { case (false, id, _) => id }.max
+    assert(!r.rollup.store.live().exists(_._2 == crashed))
+    r.table.snapshot(spark, histSchema).count() // must not throw
 
-    run(killOnce = false) // resume: checkpoint re-delivers the batch
+    run() // resume: checkpoint re-delivers the batch
     val want = expectedSessions(evs)
-    val got = ManifestTable.read(spark, table, null)
-      .where(col("coin_id") =!= "999")
-    assert(got.count() == want.size,
+    val hist = r.table.snapshot(spark, histSchema)
+    assert(hist.where(col("coin_id") =!= "999").count() == want.size,
       "after resume the history must hold exactly the replayed sessions")
-    val wantRoll = got.unionByName(
-        ManifestTable.read(spark, table, null).where(col("coin_id") === "999"))
-      .groupBy(col("coin_id"), year(col("fetch_date")).as("year"),
-        month(col("fetch_date")).as("month"))
-      .agg(min(col("price_usd")).as("min_price_usd"),
-        max(col("price_usd")).as("max_price_usd"))
-      .collect().map(_.toSeq).toSet
-    val gotRoll = ManifestTable.read(spark, rollup, null)
-      .select("coin_id", "year", "month", "min_price_usd", "max_price_usd")
-      .collect().map(_.toSeq).toSet
-    assert(gotRoll == wantRoll, "rollup must converge after the resume")
-    val probe = Seq("1", "4")
-    val viaIndex = BloomIndex.lookup(spark, epochDir(table), "coin_id", probe)
-      .select("coin_id", "fetch_date", "price_usd").collect().toSet
-    val plain = ManifestTable.read(spark, table, null)
-      .where(col("coin_id").isin(probe: _*))
-      .select("coin_id", "fetch_date", "price_usd").collect().toSet
-    assert(viaIndex == plain, "sidecar consistent after the resume")
+    assert(rollupRows(r) == recompute(hist),
+      "rollup must converge after the resume")
+    assertLookups(r, want, Seq(1L, 4L))
   }
 }

@@ -21,40 +21,46 @@ class StreamingSpec extends AnyFunSuite {
 
   private def dec(s: String) = new java.math.BigDecimal(s)
 
-  test("mergeBatch upserts history and maintains only touched rollup groups") {
-    val (table, rollup) = (tmp() + "/hist", tmp() + "/roll")
-    IncrementalRollup.mergeBatch(spark,
-      hist(("btc", "2024-01-01", dec("10")), ("btc", "2024-01-02", dec("12")),
-        ("eth", "2024-01-01", dec("5"))), table, rollup)
-    // batch 2: late re-delivery overwrites btc@01-01; new month for eth
-    IncrementalRollup.mergeBatch(spark,
-      hist(("btc", "2024-01-01", dec("11")), ("eth", "2024-02-01", dec("7"))),
-      table, rollup)
+  private lazy val schema = hist().schema
 
-    val t = spark.read.parquet(table)
+  test("mergeBatch upserts history and maintains only touched rollup groups") {
+    val r = IncrementalRollup(tmp() + "/hist", tmp() + "/roll")
+    r.mergeBatch(spark,
+      hist(("btc", "2024-01-01", dec("10")), ("btc", "2024-01-02", dec("12")),
+        ("eth", "2024-01-01", dec("5"))), 0)
+    // batch 2: late re-delivery overwrites btc@01-01; new month for eth
+    r.mergeBatch(spark,
+      hist(("btc", "2024-01-01", dec("11")), ("eth", "2024-02-01", dec("7"))), 1)
+
+    val t = r.table.snapshot(spark, schema)
       .select(col("coin_id"), col("fetch_date").cast("string"), col("price_usd").cast("double"))
       .as[(String, String, Double)].collect().toSet
     assert(t == Set(
       ("btc", "2024-01-01", 11.0), ("btc", "2024-01-02", 12.0),
       ("eth", "2024-01-01", 5.0), ("eth", "2024-02-01", 7.0)))
 
-    val r = spark.read.parquet(rollup)
+    val roll = r.monthly(spark, schema)
       .select(col("coin_id"), col("year"), col("month"),
         col("min_price_usd").cast("double"), col("max_price_usd").cast("double"))
       .as[(String, Int, Int, Double, Double)].collect().toSet
-    assert(r == Set(
+    assert(roll == Set(
       ("btc", 2024, 1, 11.0, 12.0),
       ("eth", 2024, 1, 5.0, 5.0),
       ("eth", 2024, 2, 7.0, 7.0)))
+    // batch 2's rollup delta holds its two touched groups and nothing else
+    val delta1 = r.rollup.store.live().collect { case (false, 1, d) => d.getPath }
+    assert(delta1.size == 1 && spark.read.parquet(delta1.head).count() == 2)
   }
 
   test("mergeBatch is idempotent (re-delivered batch changes nothing)") {
-    val (table, rollup) = (tmp() + "/hist", tmp() + "/roll")
+    val r = IncrementalRollup(tmp() + "/hist", tmp() + "/roll")
     val b = hist(("btc", "2024-03-01", dec("42")))
-    IncrementalRollup.mergeBatch(spark, b, table, rollup)
-    IncrementalRollup.mergeBatch(spark, b, table, rollup)
-    assert(spark.read.parquet(table).count() == 1)
-    assert(spark.read.parquet(rollup).count() == 1)
+    r.mergeBatch(spark, b, 0)
+    r.mergeBatch(spark, b, 0)
+    assert(r.table.snapshot(spark, schema).count() == 1)
+    assert(r.monthly(spark, schema).count() == 1)
+    // the replay replaced its own deltas instead of adding new ones
+    assert(r.table.store.deltaCount() == 1 && r.rollup.store.deltaCount() == 1)
   }
 
   test("watermarked tumbling-window aggregation drops too-late rows") {
@@ -101,8 +107,9 @@ class StreamingSpec extends AnyFunSuite {
       .parquet(in)
     val q = IncrementalRollup.start(spark, stream, table, rollup, ckpt)
     q.awaitTermination(120000)
-    assert(spark.read.parquet(table).count() == 2)
-    val r = spark.read.parquet(rollup)
+    val ir = IncrementalRollup(table, rollup)
+    assert(ir.table.snapshot(spark, schema).count() == 2)
+    val r = ir.monthly(spark, schema)
       .select(col("min_price_usd").cast("double"), col("max_price_usd").cast("double"))
       .as[(Double, Double)].collect().toSeq
     assert(r == Seq((9.0, 10.0)))

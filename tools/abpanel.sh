@@ -8,13 +8,15 @@
 # first on odd pairs, CHANGE on even ones. `--seconds` is the
 # `run_seconds` of CHANGE's BENCHMARK.json. The panel's records are
 # copied to a fresh temporary dir (printed first), so older records in
-# either checkout do not enter the comparison. Prints
+# either checkout do not enter the comparison; the dir is removed at
+# exit when every run succeeded, and kept, with its path printed again,
+# for the failed runs' logs otherwise. Prints
 # `perfbench/compare.py` over the two sets (medians and PARENT's
 # quartiles), then per end-to-end metric of BENCHMARK.json the pairs
 # CHANGE won, and each side's failed share of operations. Exits with
 # compare.py's status.
 set -euo pipefail
-if [ "$#" -ne 4 ]; then sed -n '2,16p' "$0" >&2; exit 2; fi
+if [ "$#" -ne 4 ]; then sed -n '2,18p' "$0" >&2; exit 2; fi
 parent=$(cd "$1" && pwd)
 change=$(cd "$2" && pwd)
 workload=$3
@@ -24,6 +26,12 @@ secs=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1])).get("run
 out=$(mktemp -d -t abpanel.XXXXXX)
 mkdir -p "$out/parent" "$out/change"
 echo "abpanel: records and logs in $out"
+failed=0
+cleanup() {
+  if [ "$failed" -eq 0 ]; then rm -rf "$out"
+  else echo "abpanel: a run failed; kept $out" >&2; fi
+}
+trap cleanup EXIT
 
 run() { # side checkout seed
   local rec="$2/.bench_build/results/$workload-seed$3-trace0.json"
@@ -32,6 +40,7 @@ run() { # side checkout seed
     cp "$rec" "$out/$1/"
   else
     echo "abpanel: $1 seed $3 failed, see $out/$1-seed$3.log" >&2
+    failed=1
   fi
 }
 
