@@ -30,29 +30,28 @@ import org.apache.spark.sql.types._
   * nprobe x occupancy bounded as the corpus grows, and maintenance is
   * O(batch).
   */
-object CellIndex {
+final case class CellIndex(root: String) extends Maintained {
+  import CellIndex._
 
-  private val schema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("cell", LongType)))
+  val store: DeltaStore = DeltaStore(root)
 
   /** Assign one batch of vectors (`vec_id` long, `embedding`
     * array<float>) with the deterministic sign-plane quantizer at the
     * FROZEN `widthLit` and append as the delta for `batchId` — one
     * write job, one atomic commit, no reads of stored state. */
-  def appendBatch(spark: SparkSession, vecs: DataFrame, root: String,
-                  batchId: Int, widthLit: Int): Unit =
+  def appendBatch(spark: SparkSession, vecs: DataFrame, batchId: Int,
+                  widthLit: Int): Unit =
     appendAssigned(spark,
       vecs.select(col("vec_id"),
         expr(graft.queries.SimilarityQueries.signKeyLowExpr(widthLit.toString))
           .as("cell")),
-      root, batchId)
+      batchId)
 
   /** Append pre-assigned cells (`vec_id`, `cell`) — the learned-
     * quantizer path: the caller runs its frozen KMeansModel transform
     * over the batch and hands the assignments in. */
-  def appendAssigned(spark: SparkSession, assigned: DataFrame, root: String,
+  def appendAssigned(spark: SparkSession, assigned: DataFrame,
                      batchId: Int): Unit = {
-    val store = DeltaStore(root)
     store.heal()
     store.append(
       assigned.select(col("vec_id"), col("cell").cast(LongType).as("cell"))
@@ -61,11 +60,16 @@ object CellIndex {
   }
 
   /** The maintained inverted-file table: (vec_id, cell). */
-  def cells(spark: SparkSession, root: String): DataFrame =
-    DeltaStore(root).read(spark, schema, None)
+  def cells(spark: SparkSession): DataFrame =
+    store.read(spark, schema, None)
 
   /** Fold deltas into one base (immutable rows — identity fold). */
-  def compact(spark: SparkSession, root: String): Unit =
-    DeltaStore(root).compact(
-      spark, schema, col("vec_id"), identity)
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compact(spark, schema, col("vec_id"), identity, upTo)
+}
+
+object CellIndex {
+
+  private val schema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("cell", LongType)))
 }

@@ -26,6 +26,34 @@ import org.apache.spark.sql.types._
   * candidate, the memory-bandwidth contract that makes billion-vector
   * scans feasible, now O(batch) to maintain as the corpus grows.
   */
+final case class CodeIndex(root: String) extends Maintained {
+  import CodeIndex._
+
+  val store: DeltaStore = DeltaStore(root)
+
+  /** Encode one batch of vectors (`vec_id` long, `embedding`
+    * array<float>) and append the codes as the delta for `batchId` —
+    * one write job, one atomic commit, no reads of stored state. */
+  def appendBatch(spark: SparkSession, vecs: DataFrame, batchId: Int): Unit = {
+    store.heal()
+    store.append(
+      vecs.select(col("vec_id").as("cand_id"),
+          explode(expr("sequence(0, 7)")).as("sub"), col("embedding"))
+        .withColumn("code", expr(codeExpr))
+        .select(col("cand_id"), col("sub"), col("code"))
+        .withColumn("gbucket", store.gb(col("cand_id"))),
+      batchId, within = Seq(col("cand_id"), col("sub")))
+  }
+
+  /** The maintained code table: (cand_id, sub, code). */
+  def codes(spark: SparkSession): DataFrame =
+    store.read(spark, schema, None)
+
+  /** Fold deltas into one base (immutable rows — identity fold). */
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compact(spark, schema, col("cand_id"), identity, upTo)
+}
+
 object CodeIndex {
 
   private val schema = StructType(Seq(
@@ -38,29 +66,4 @@ object CodeIndex {
   private[graft] val codeExpr: String = (0 to 7).map { j =>
     s"(case when element_at(embedding, sub * 8 + ${j + 1}) > 0 then ${1 << j} else 0 end)"
   }.mkString(" + ")
-
-  /** Encode one batch of vectors (`vec_id` long, `embedding`
-    * array<float>) and append the codes as the delta for `batchId` —
-    * one write job, one atomic commit, no reads of stored state. */
-  def appendBatch(spark: SparkSession, vecs: DataFrame, root: String,
-                  batchId: Int): Unit = {
-    val store = DeltaStore(root)
-    store.heal()
-    store.append(
-      vecs.select(col("vec_id").as("cand_id"),
-          explode(expr("sequence(0, 7)")).as("sub"), col("embedding"))
-        .withColumn("code", expr(codeExpr))
-        .select(col("cand_id"), col("sub"), col("code"))
-        .withColumn("gbucket", store.gb(col("cand_id"))),
-      batchId, within = Seq(col("cand_id"), col("sub")))
-  }
-
-  /** The maintained code table: (cand_id, sub, code). */
-  def codes(spark: SparkSession, root: String): DataFrame =
-    DeltaStore(root).read(spark, schema, None)
-
-  /** Fold deltas into one base (immutable rows — identity fold). */
-  def compact(spark: SparkSession, root: String): Unit =
-    DeltaStore(root).compact(
-      spark, schema, col("cand_id"), identity)
 }

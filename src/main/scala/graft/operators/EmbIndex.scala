@@ -42,39 +42,21 @@ import graft.queries.SimilarityQueries
   * determinism) and are unpruned — an ingest batch's keys and
   * candidate ids touch essentially every gbucket (see [[LshIndex]]).
   */
-object EmbIndex {
+final case class EmbIndex(root: String) extends Maintained {
+  import EmbIndex._
 
-  private val vecsSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("n2", DoubleType)))
-  private val keysSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("batch", IntegerType),
-    StructField("band", IntegerType), StructField("bkey", LongType),
-    StructField("rk", IntegerType)))
-
-  def heal(root: String): Unit =
-    DeltaStore(root).heal()
-
-  // The sign-key expressions inline a 64-weight literal dot product per
-  // plane (~3,600 leaf nodes per band) — parsing those strings costs
-  // tens of ms per call and every ingest batch re-parsed both. The
-  // parsed (unresolved, immutable) Columns are pure functions of the
-  // width, so memoize them. This caches a PLAN fragment, never data.
-  private val keyCols =
-    new scala.collection.concurrent.TrieMap[String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column)]
+  val store: DeltaStore = DeltaStore(root)
 
   /** Ingest one batch of vectors (`vec_id` long, `embedding`
-    * array<float>) into the index at `root`, returning the batch's
+    * array<float>) into the index, returning the batch's
     * near-dup pairs against everything indexed so far:
     * (vec_a, vec_b, emit_batch, cosine_sim), vec_a < vec_b, cosine
     * quantized to 1e-6 (cross-engine exactness, as q55) and
     * thresholded at 0.35. Emitted exactly once, at the later member's
     * batch; materialized before return, and emission precedes the
     * state commit (crash-replay re-derives identical pairs). */
-  def upsertBatch(spark: SparkSession, vecs: DataFrame, root: String,
+  def upsertBatch(spark: SparkSession, vecs: DataFrame,
                   batchId: Int, width: Int, bucketCap: Int): DataFrame = {
-    val store = DeltaStore(root)
     store.heal()
     val w = width.toString
     val emb = vecs
@@ -175,8 +157,28 @@ object EmbIndex {
   /** Fold the grouped store's deltas into one base (one write job, one
     * atomic promote covering both tables) — rows are immutable in both
     * tables, so the fold is the identity union. */
-  def compact(spark: SparkSession, root: String): Unit =
-    DeltaStore(root).compactTables(spark, Seq(
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compactTables(spark, Seq(
       ("vecs", vecsSchema, col("vec_id"), identity[DataFrame] _),
-      ("keys", keysSchema, col("bkey"), identity[DataFrame] _)))
+      ("keys", keysSchema, col("bkey"), identity[DataFrame] _)), upTo)
+}
+
+object EmbIndex {
+
+  private val vecsSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("n2", DoubleType)))
+  private val keysSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("batch", IntegerType),
+    StructField("band", IntegerType), StructField("bkey", LongType),
+    StructField("rk", IntegerType)))
+
+  // The sign-key expressions inline a 64-weight literal dot product per
+  // plane (~3,600 leaf nodes per band) — parsing those strings costs
+  // tens of ms per call and every ingest batch re-parsed both. The
+  // parsed (unresolved, immutable) Columns are pure functions of the
+  // width, so memoize them. This caches a PLAN fragment, never data.
+  private val keyCols =
+    new scala.collection.concurrent.TrieMap[String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column)]
 }

@@ -26,21 +26,13 @@ import org.apache.spark.sql.types._
   * width without a footer-count job — the first planner decision in
   * this engine driven by maintained statistics rather than a scan.
   */
-object IncrementalStats {
-
-  /** One partial-profile row per (column, batch). */
-  val schema: StructType = StructType(Seq(
-    StructField("col_name", StringType),
-    StructField("mn", DoubleType),
-    StructField("mx", DoubleType),
-    StructField("nulls", LongType),
-    StructField("cnt", LongType)))
+final case class IncrementalStats(store: DeltaStore) extends Maintained {
+  import IncrementalStats._
 
   /** Scan `batch` once (stack unpivots the profiled columns into
     * (col_name, value) pairs inside the same codegen stage) and
     * append the per-column partials as the delta for `batchId`. */
-  def appendBatch(store: DeltaStore, batch: DataFrame, cols: Seq[String],
-                  batchId: Int): Unit = {
+  def appendBatch(batch: DataFrame, cols: Seq[String], batchId: Int): Unit = {
     // column names are spliced into a SQL expression — refuse anything
     // that is not a plain identifier rather than mis-parse it
     require(cols.nonEmpty && cols.forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")),
@@ -72,12 +64,23 @@ object IncrementalStats {
   }
 
   /** The current profile: fold of all live partials. */
-  def profile(spark: SparkSession, store: DeltaStore): DataFrame =
+  def profile(spark: SparkSession): DataFrame =
     fold(store.read(spark, schema, None))
 
   /** Fold history into one base row per column. */
-  def compact(spark: SparkSession, store: DeltaStore): Unit =
-    store.compact(spark, schema, col("col_name"), fold)
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compact(spark, schema, col("col_name"), fold, upTo)
+}
+
+object IncrementalStats {
+
+  /** One partial-profile row per (column, batch). */
+  val schema: StructType = StructType(Seq(
+    StructField("col_name", StringType),
+    StructField("mn", DoubleType),
+    StructField("mx", DoubleType),
+    StructField("nulls", LongType),
+    StructField("cnt", LongType)))
 
   private def fold(partials: DataFrame): DataFrame =
     partials.groupBy("col_name").agg(

@@ -28,22 +28,15 @@ import graft.Q
   * O(changed slice) per batch ([[MorTable.changes]]'s contract)
   * instead of O(table) per refresh.
   */
-object IncrementalView {
-
-  /** Stored partial: the caller's group columns + (vsum, cnt). */
-  def schema(groupSchema: StructType): StructType =
-    StructType(groupSchema.fields.toSeq :+
-      StructField("vsum", DecimalType(28, 2)) :+
-      StructField("cnt", LongType))
-
-  private def groupStruct(groupCols: Seq[String]) =
-    struct(groupCols.map(col): _*)
+final case class IncrementalView(store: DeltaStore, groupSchema: StructType)
+    extends Maintained {
+  import IncrementalView._
 
   /** Apply one change-feed batch: `feed` carries the group columns, an
     * `op` column (insert / delete / update_pre / update_post — the
     * preimage variant of [[MorTable.changes]]), and `valueCol`. An
     * unknown op fails the job (raise_error), not silently mis-signs. */
-  def applyFeed(store: DeltaStore, feed: DataFrame, groupCols: Seq[String],
+  def applyFeed(feed: DataFrame, groupCols: Seq[String],
                 valueCol: String, batchId: Int): Unit = {
     val sgn = when(col("op").isin("insert", "update_post"), lit(1))
       .when(col("op").isin("delete", "update_pre"), lit(-1))
@@ -61,21 +54,29 @@ object IncrementalView {
       batchId, within = groupCols.map(col))
   }
 
+  private def keys: Seq[String] = groupSchema.fieldNames.toSeq
+
   /** The current view: fold of the live additive deltas; groups whose
     * membership netted to zero are gone. */
-  def view(spark: SparkSession, store: DeltaStore,
-           groupSchema: StructType): DataFrame = {
-    val groupCols = groupSchema.fieldNames.toSeq
-    fold(store.read(spark, schema(groupSchema), None), groupCols)
-  }
+  def view(spark: SparkSession): DataFrame =
+    fold(store.read(spark, schema(groupSchema), None), keys)
 
   /** Fold history into one base row per surviving group. */
-  def compact(spark: SparkSession, store: DeltaStore,
-              groupSchema: StructType): Unit = {
-    val groupCols = groupSchema.fieldNames.toSeq
-    store.compact(spark, schema(groupSchema), groupStruct(groupCols),
-      all => fold(all, groupCols))
-  }
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compact(spark, schema(groupSchema), groupStruct(keys),
+      all => fold(all, keys), upTo)
+}
+
+object IncrementalView {
+
+  /** Stored partial: the caller's group columns + (vsum, cnt). */
+  def schema(groupSchema: StructType): StructType =
+    StructType(groupSchema.fields.toSeq :+
+      StructField("vsum", DecimalType(28, 2)) :+
+      StructField("cnt", LongType))
+
+  private def groupStruct(groupCols: Seq[String]) =
+    struct(groupCols.map(col): _*)
 
   private def fold(partials: DataFrame, groupCols: Seq[String]): DataFrame =
     partials.groupBy(groupCols.map(col): _*)

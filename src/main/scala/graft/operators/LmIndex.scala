@@ -25,20 +25,15 @@ import org.apache.spark.sql.types._
   * and "uni committed" cannot exist, and P(w2|w1) ratios always read
   * numerator and denominator from the same batch horizon.
   */
-object LmIndex {
+final case class LmIndex(root: String) extends Maintained {
+  import LmIndex._
 
-  private val kcSchema = StructType(Seq(
-    StructField("k", StringType), StructField("c", LongType)))
-
-  private def sumByKey(df: DataFrame): DataFrame =
-    df.groupBy("k").agg(sum(col("c")).as("c"))
+  val store: DeltaStore = DeltaStore(root)
 
   /** Count one batch's bigram stream (`bi` string, `w1` string — one
     * row per bigram OCCURRENCE) and append both count tables as the
     * delta for `batchId` in one grouped atomic commit. */
-  def appendBatch(spark: SparkSession, docBi: DataFrame, root: String,
-                  batchId: Int): Unit = {
-    val store = DeltaStore(root)
+  def appendBatch(spark: SparkSession, docBi: DataFrame, batchId: Int): Unit = {
     store.heal()
     val biC = docBi.groupBy(col("bi").as("k"))
       .agg(count(lit(1)).cast(LongType).as("c"))
@@ -54,14 +49,22 @@ object LmIndex {
   /** The maintained count table (`k`, `c`): live deltas carry PARTIAL
     * per-batch counts, so the read folds them with a sum-by-key — the
     * same fold [[compact]] bakes into the base. */
-  def counts(spark: SparkSession, root: String, table: String): DataFrame =
-    sumByKey(DeltaStore(root)
-      .read(spark, kcSchema, None, table = Some(table)))
+  def counts(spark: SparkSession, table: String): DataFrame =
+    sumByKey(store.read(spark, kcSchema, None, table = Some(table)))
 
   /** Fold both tables' deltas into one base in one atomic grouped
     * commit (sum-by-key — the additive fold). */
-  def compact(spark: SparkSession, root: String): Unit =
-    DeltaStore(root).compactTables(spark, Seq(
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compactTables(spark, Seq(
       ("bi", kcSchema, col("k"), sumByKey _),
-      ("uni", kcSchema, col("k"), sumByKey _)))
+      ("uni", kcSchema, col("k"), sumByKey _)), upTo)
+}
+
+object LmIndex {
+
+  private val kcSchema = StructType(Seq(
+    StructField("k", StringType), StructField("c", LongType)))
+
+  private def sumByKey(df: DataFrame): DataFrame =
+    df.groupBy("k").agg(sum(col("c")).as("c"))
 }

@@ -56,54 +56,13 @@ import graft.queries.SimilarityQueries
   * keyed equi-join of the batch's kept bands against the stored bands
   * — never an all-pairs scan of the corpus.
   */
-object LshIndex {
+final case class LshIndex(root: String) extends Maintained {
+  import LshIndex._
 
-  /** State-table schemas (data columns only — the `gbucket` dir key is
-    * a deterministic row function, recomputed when writing). */
-  private val dfSchema = StructType(Seq(
-    StructField("tri", StringType), StructField("cnt", LongType)))
-  private val setsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("ts", ArrayType(StringType))))
-  private val bandsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("batch", IntegerType),
-    StructField("band", IntegerType), StructField("bkey", StringType),
-    StructField("rk", IntegerType)))
-
-  /** GC the grouped state store ([[DeltaStore.heal]]). */
-  def heal(root: String): Unit =
-    DeltaStore(root).heal()
-
-  /** A batch's STATE-INDEPENDENT precompute — the shingle explode +
-    * per-shingle counts, the dominant per-batch compute — persisted and
-    * materialized. Depends only on the batch's own docs, never on the
-    * index state, so a pipeline can compute batch K+1's prep WHILE
-    * batch K's state-dependent chain / verify / commit runs ([[q103]]'s
-    * replay does exactly that; the q112 feed-pipelining pattern applied
-    * to ingest). Hand the result to [[upsertBatch]]'s `prepared`;
-    * upsertBatch owns the unpersist. */
-  final case class PreparedBatch(shingles: DataFrame, batchCnt: DataFrame)
-
-  def prepareBatch(spark: SparkSession, docs: DataFrame): PreparedBatch = {
-    val shingles = docs
-      .withColumn("toks", expr(SimilarityQueries.toksExpr))
-      .repartition(col("doc_id"))
-      .select(col("doc_id"),
-        explode(expr(SimilarityQueries.trisExpr)).as("tri"))
-      // the md5 shingle hash is the batch's heaviest per-row compute
-      // and depends on nothing but the tri — hash HERE, off the
-      // state-dependent chain (the minhash stage then only runs the
-      // cheap affine transforms over the cached h)
-      .withColumn("h", expr(SimilarityQueries.shingleHashExpr))
-      .persist()
-    val batchCnt = shingles.groupBy("tri").agg(count(lit(1)).as("bcnt"))
-      .persist()
-    batchCnt.count() // one action fills BOTH caches (shingles feeds it)
-    PreparedBatch(shingles, batchCnt)
-  }
+  val store: DeltaStore = DeltaStore(root)
 
   /** Ingest one batch of documents (`doc_id` long, `text` string) into
-    * the index at `root`, returning the batch's emitted near-dup
+    * the index, returning the batch's emitted near-dup
     * candidate pairs verified with exact capped-set Jaccard:
     * (doc_a, doc_b, emit_batch, shingle_jaccard), doc_a < doc_b.
     * A pair is emitted exactly once, at the LATER member's batch.
@@ -121,11 +80,11 @@ object LshIndex {
     * or gate on a manifest), exactly as with any replace-by-batch-id
     * sink.
     */
-  def upsertBatch(spark: SparkSession, docs: DataFrame, root: String,
+  def upsertBatch(spark: SparkSession, docs: DataFrame,
                   batchId: Int, dfCap: Int, bucketCap: Int,
                   prepared: Option[PreparedBatch] = None): DataFrame = {
     val (verified, state, commit) = upsertBatchPipelined(
-      spark, docs, root, batchId, dfCap, bucketCap,
+      spark, docs, batchId, dfCap, bucketCap,
       prepared, history = None, prevCommit = scala.concurrent.Future.unit)
     val pairs = scala.concurrent.Await.result(
       verified, scala.concurrent.duration.Duration.Inf)
@@ -133,24 +92,6 @@ object LshIndex {
       commit, scala.concurrent.duration.Duration.Inf)
     release(Seq(state)) // one-shot call: nobody carries the state forward
     pairs
-  }
-
-  /** Cached in-memory mirror of ONE committed batch's delta slices —
-    * row-identical to what [[upsertBatch]] wrote for that batch (df
-    * count delta, frozen sets, kept bands; the persisted frames
-    * themselves, so unpersist handles stay valid). A replay/ingest
-    * LOOP threads the history of these into the next batch
-    * ([[upsertBatchPipelined]]'s `history`) so prior-state reads hit
-    * executor caches instead of re-scanning the store — which decouples
-    * batch K+1's compute from batch K's commit I/O entirely. Valid only
-    * when the SAME session performed all prior upserts into the store
-    * (history and store are then row-identical by construction, and
-    * both paths run the same aggregates over the same rows). */
-  final case class BatchState(cnts: DataFrame, sets: DataFrame, bands: DataFrame)
-
-  /** Unpersist a carried history once its last consumer is done. */
-  def release(history: Seq[BatchState]): Unit = history.foreach { st =>
-    st.cnts.unpersist(); st.sets.unpersist(); st.bands.unpersist()
   }
 
   /** [[upsertBatch]] with the three serial barriers removed for replay/
@@ -176,7 +117,7 @@ object LshIndex {
     * previous batch's written-but-uncommitted prefix) and [[release]] the
     * history after the last future resolves. */
   def upsertBatchPipelined(
-      spark: SparkSession, docs: DataFrame, root: String,
+      spark: SparkSession, docs: DataFrame,
       batchId: Int, dfCap: Int, bucketCap: Int,
       prepared: Option[PreparedBatch] = None,
       history: Option[Seq[BatchState]] = None,
@@ -186,7 +127,6 @@ object LshIndex {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val store = DeltaStore(root)
     if (history.isEmpty) store.heal()
 
     /** Prior state of one logical table: carried cache pieces when
@@ -391,10 +331,71 @@ object LshIndex {
     * shingle key; sets/bands rows are immutable and union as-is. Only
     * compact batches whose emissions are durably committed (see the
     * store's replay contract). */
-  def compact(spark: SparkSession, root: String): Unit =
-    DeltaStore(root).compactTables(spark, Seq(
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compactTables(spark, Seq(
       ("df", dfSchema, col("tri"),
         (all: DataFrame) => all.groupBy("tri").agg(sum("cnt").as("cnt"))),
       ("sets", setsSchema, col("doc_id"), identity[DataFrame] _),
-      ("bands", bandsSchema, col("bkey"), identity[DataFrame] _)))
+      ("bands", bandsSchema, col("bkey"), identity[DataFrame] _)), upTo)
+}
+
+object LshIndex {
+
+  /** State-table schemas (data columns only — the `gbucket` dir key is
+    * a deterministic row function, recomputed when writing). */
+  private val dfSchema = StructType(Seq(
+    StructField("tri", StringType), StructField("cnt", LongType)))
+  private val setsSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("ts", ArrayType(StringType))))
+  private val bandsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("batch", IntegerType),
+    StructField("band", IntegerType), StructField("bkey", StringType),
+    StructField("rk", IntegerType)))
+
+  /** A batch's STATE-INDEPENDENT precompute — the shingle explode +
+    * per-shingle counts, the dominant per-batch compute — persisted and
+    * materialized. Depends only on the batch's own docs, never on the
+    * index state, so a pipeline can compute batch K+1's prep WHILE
+    * batch K's state-dependent chain / verify / commit runs ([[q103]]'s
+    * replay does exactly that; the q112 feed-pipelining pattern applied
+    * to ingest). Hand the result to [[upsertBatch]]'s `prepared`;
+    * upsertBatch owns the unpersist. */
+  final case class PreparedBatch(shingles: DataFrame, batchCnt: DataFrame)
+
+  def prepareBatch(spark: SparkSession, docs: DataFrame): PreparedBatch = {
+    val shingles = docs
+      .withColumn("toks", expr(SimilarityQueries.toksExpr))
+      .repartition(col("doc_id"))
+      .select(col("doc_id"),
+        explode(expr(SimilarityQueries.trisExpr)).as("tri"))
+      // the md5 shingle hash is the batch's heaviest per-row compute
+      // and depends on nothing but the tri — hash HERE, off the
+      // state-dependent chain (the minhash stage then only runs the
+      // cheap affine transforms over the cached h)
+      .withColumn("h", expr(SimilarityQueries.shingleHashExpr))
+      .persist()
+    val batchCnt = shingles.groupBy("tri").agg(count(lit(1)).as("bcnt"))
+      .persist()
+    batchCnt.count() // one action fills BOTH caches (shingles feeds it)
+    PreparedBatch(shingles, batchCnt)
+  }
+
+  /** Cached in-memory mirror of ONE committed batch's delta slices —
+    * row-identical to what [[upsertBatch]] wrote for that batch (df
+    * count delta, frozen sets, kept bands; the persisted frames
+    * themselves, so unpersist handles stay valid). A replay/ingest
+    * LOOP threads the history of these into the next batch
+    * ([[upsertBatchPipelined]]'s `history`) so prior-state reads hit
+    * executor caches instead of re-scanning the store — which decouples
+    * batch K+1's compute from batch K's commit I/O entirely. Valid only
+    * when the SAME session performed all prior upserts into the store
+    * (history and store are then row-identical by construction, and
+    * both paths run the same aggregates over the same rows). */
+  final case class BatchState(cnts: DataFrame, sets: DataFrame, bands: DataFrame)
+
+  /** Unpersist a carried history once its last consumer is done. */
+  def release(history: Seq[BatchState]): Unit = history.foreach { st =>
+    st.cnts.unpersist(); st.sets.unpersist(); st.bands.unpersist()
+  }
 }

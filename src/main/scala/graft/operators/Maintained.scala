@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** A family of incrementally maintained state kept in one [[DeltaStore]]
-  * (StatCell, Tri, Basket, Cc and Scd2 indexes), and its one batch-start
+  * (every DeltaStore family: the indexes, [[IncrementalStats]],
+  * [[IncrementalView]] and [[MorTable]]), and its one batch-start
   * compaction policy.
   *
   * The horizon argument, stated once for every family: batch `id`'s

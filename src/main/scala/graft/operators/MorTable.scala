@@ -26,9 +26,14 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, StructType}
   * first, as every upsert path here does): the LWW fold orders by the
   * batch id alone, so (key, batch) uniqueness is what makes the
   * snapshot deterministic.
+  *
+  * `schema` is the DATA schema every read returns (no `_batch`). A
+  * table evolves by `copy(schema = wider)`: the same store read at the
+  * wider schema ([[DeltaStore.read]]'s evolution contract).
   */
 final case class MorTable(store: DeltaStore, keyCols: Seq[String],
-                          bloomItems: Option[Long] = None) {
+                          schema: StructType,
+                          bloomItems: Option[Long] = None) extends Maintained {
 
   /** SSTable-style per-delta key bloom. With `bloomItems = Some(n)`
     * (the expected keys per batch — a capacity number the operator
@@ -50,7 +55,7 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
 
   /** `schema` + the `_batch` lineage column the fold orders by and the
     * `_deleted` tombstone marker. */
-  private def stored(schema: StructType): StructType =
+  private val stored: StructType =
     schema.add("_batch", IntegerType, nullable = false)
       .add("_deleted", BooleanType, nullable = false)
 
@@ -69,7 +74,7 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * upsert or a delete (a delta is replaced whole by its batch id);
     * union key-disjoint changes into one frame first if both are
     * needed in one batch. */
-  def delete(keys: DataFrame, batchId: Int, schema: StructType): Unit = {
+  def delete(keys: DataFrame, batchId: Int): Unit = {
     val tomb = schema.fields.foldLeft(
       keys.select(keyCols.map(col): _*).distinct()) { (df, f) =>
         if (keyCols.contains(f.name)) df
@@ -96,7 +101,7 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
   }
 
   /** The current table: every key's latest-batch row, folded from the
-    * live base + deltas. `schema` is the DATA schema (no `_batch`).
+    * live base + deltas.
     *
     * `keep` narrows the stored rows BEFORE the fold, so the fold runs
     * over the kept slice only. It must decide on the key columns (or
@@ -105,9 +110,9 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * equals the snapshot narrowed afterwards. Columns it adds are
     * dropped. The caller has to place it: Catalyst does not move a
     * semi join below the fold's `_rn = 1` filter. */
-  def snapshot(spark: SparkSession, schema: StructType,
+  def snapshot(spark: SparkSession,
                keep: DataFrame => DataFrame = identity): DataFrame =
-    lww(keep(store.read(spark, stored(schema), None)))
+    lww(keep(store.read(spark, stored, None)))
       .where(!col("_deleted"))
       .select(schema.fieldNames.map(col).toSeq: _*)
 
@@ -116,65 +121,10 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * [[compact]] (an older `batch` is refused, not answered wrongly):
     * the reproducible-training-snapshot read, pinned by batch id
     * instead of copying the corpus. */
-  def snapshotAsOf(spark: SparkSession, schema: StructType,
-                   batch: Int): DataFrame =
-    lww(store.read(spark, stored(schema), None, asOf = Some(batch)))
+  def snapshotAsOf(spark: SparkSession, batch: Int): DataFrame =
+    lww(store.read(spark, stored, None, asOf = Some(batch)))
       .where(!col("_deleted"))
       .select(schema.fieldNames.map(col).toSeq: _*)
-
-  /** Continuous ingestion: upsert each micro-batch under its stream
-    * batch id. Checkpoint replay of a batch re-appends the SAME delta
-    * (replace-by-batch-id in [[DeltaStore.append]]), so the sink is
-    * idempotent end-to-end — the exactly-once story without any sink-
-    * side transaction log beyond the delta dirs themselves. The batch
-    * is deduped on the key (LWW needs (key, batch) uniqueness):
-    * with `orderCol = Some(c)` the row with the HIGHEST c per key
-    * survives (the Hudi-style precombine field — what makes
-    * last-write-wins hold for a CDC stream whose micro-batch can
-    * carry several versions of one key; ties on c resolve
-    * arbitrarily, so c should be a monotonic version/event time).
-    * Without it, dropDuplicates keeps an ARBITRARY row per key —
-    * acceptable only when the source emits at most one version per
-    * key per micro-batch; a caller with in-batch versions and no
-    * orderCol must pre-resolve them upstream.
-    *
-    * `compactEvery = Some(n)` folds the store after every n-th batch
-    * (ids n-1, 2n-1, ...) — the retention policy that keeps read-side
-    * fold cost and delta-listing cost bounded on an endless stream.
-    * Crash-safe even though the batch's commit-log entry lands after
-    * foreachBatch returns: if the stream dies between this compact and
-    * that commit, the batch REPLAYS under the same id and re-appends
-    * delta `id` — which the covering rule ignores (id <= base K), so
-    * the replayed bytes are dead weight, never a double-count. The
-    * trade: compaction truncates time travel to the compact point. */
-  def sink(input: DataFrame, checkpointDir: String,
-           availableNow: Boolean = true,
-           compactEvery: Option[Int] = None,
-           orderCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = input.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val bid = graft.streaming.Replay.batchId(id)
-        val b = orderCol match {
-          case Some(c) => batch
-            .withColumn("_vrn", row_number().over(
-              Window.partitionBy(keyCols.map(col): _*)
-                .orderBy(col(c).desc_nulls_last)))
-            .where(col("_vrn") === 1).drop("_vrn")
-          case None => batch.dropDuplicates(keyCols)
-        }
-        if (!b.isEmpty) upsert(b, bid)
-        compactEvery.foreach { n =>
-          if (id % n == n - 1) compact(batch.sparkSession,
-            StructType(batch.schema.fields.toSeq))
-        }
-      }
-    (if (availableNow) writer.trigger(
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
 
   /** Bucket-pruned snapshot restricted to `keys`' buckets — the point-
     * lookup path: whole deltas whose key bloom excludes every probe
@@ -182,10 +132,9 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * dirs the probe keys hash into are read, the LWW fold runs over
     * that slice, and an inner join restricts to the probe. `keys`
     * must carry `keyCols`. */
-  def lookup(spark: SparkSession, schema: StructType,
-             keys: DataFrame): DataFrame = {
+  def lookup(spark: SparkSession, keys: DataFrame): DataFrame = {
     val touched = store.touched(keys, struct(keyCols.map(col): _*))
-    lww(store.readEntries(spark, stored(schema),
+    lww(store.readEntries(spark, stored,
         bloomLiveEntries(keys), Some(touched)))
       .where(!col("_deleted"))
       .join(keys.select(keyCols.map(col): _*).distinct(), keyCols)
@@ -235,9 +184,8 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * read that lets a downstream consumer (a derived table, a cache,
     * a reverse index) follow the table incrementally instead of
     * diffing snapshots. */
-  def changes(spark: SparkSession, schema: StructType,
-              from: Int, to: Int): DataFrame =
-    changes(spark, schema, from, to, preimage = false)
+  def changes(spark: SparkSession, from: Int, to: Int): DataFrame =
+    changes(spark, from, to, preimage = false)
 
   /** [[changes]] with `preimage = true` emits an update as TWO rows —
     * `update_pre` (old values) and `update_post` (new values) — the
@@ -245,10 +193,10 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * additive state subtracts the preimage and adds the postimage
     * ([[IncrementalView]]), which plain postimage-only updates cannot
     * express. */
-  def changes(spark: SparkSession, schema: StructType,
-              from: Int, to: Int, preimage: Boolean): DataFrame = {
+  def changes(spark: SparkSession, from: Int, to: Int,
+              preimage: Boolean): DataFrame = {
     require(from <= to, s"change feed bounds out of order: $from > $to")
-    val st = stored(schema)
+    val st = stored
     val touched = store.read(spark, st, None, asOf = Some(to))
       .where(col("_batch") > from)
       .select(keyCols.map(col): _*).distinct()
@@ -299,11 +247,12 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * batch j <= base K would stack delta j on a base that already
     * folded it, and the LWW order would then prefer the base's row
     * from a HIGHER-numbered original batch, which is correct, but the
-    * replayed delta's bytes are dead weight until the next compact. */
-  def compact(spark: SparkSession, schema: StructType): Unit =
-    store.compact(spark, stored(schema),
+    * replayed delta's bytes are dead weight until the next compact.
+    * [[Maintained.compactBefore]] folds at exactly that horizon. */
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compact(spark, stored,
       struct(keyCols.map(col): _*),
-      df => lww(df).where(!col("_deleted")))
+      df => lww(df).where(!col("_deleted")), upTo)
 
   /** Export a reproducible training snapshot: the table as of `asOf`
     * (or current) materialized as PLAIN partitioned parquet any
@@ -313,12 +262,12 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
     * horizon that produced it (the lineage a training run pins
     * instead of copying "whatever the table said that day"). The fold
     * happens once at export; readers pay zero merge cost. */
-  def exportSnapshot(spark: SparkSession, schema: StructType, path: String,
+  def exportSnapshot(spark: SparkSession, path: String,
                      asOf: Option[Int] = None,
                      partitionCols: Seq[String] = Nil): Unit = {
     val snap = asOf match {
-      case Some(b) => snapshotAsOf(spark, schema, b)
-      case None => snapshot(spark, schema)
+      case Some(b) => snapshotAsOf(spark, b)
+      case None => snapshot(spark)
     }
     val w = snap.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
@@ -329,19 +278,6 @@ final case class MorTable(store: DeltaStore, keyCols: Seq[String],
       (s"store=${store.dir}\nkeys=${keyCols.mkString(",")}\n" +
         s"asOfBatch=${horizon.getOrElse(-1)}\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  /** Count-based compaction policy: fold when the live delta tail
-    * exceeds `maxDeltas`. Preferable to scheduling by batch id
-    * ([[sink]]'s `compactEvery`): replays, crashes, and manual
-    * compactions all shift id-based schedules, while the delta TAIL is
-    * what read cost (listing, fold width, bloom probes) actually
-    * follows. Returns whether a compact ran. */
-  def compactIfNeeded(spark: SparkSession, schema: StructType,
-                      maxDeltas: Int): Boolean = {
-    val run = store.deltaCount() > maxDeltas
-    if (run) compact(spark, schema)
-    run
   }
 
   /** Keep each key's highest-`_batch` row. */

@@ -31,37 +31,14 @@ import org.apache.spark.sql.types._
   * Hash/seed constants mirror q44 (ExtraQueries.scala) exactly — the
   * sketches are the SAME sketches, maintained instead of rebuilt.
   */
-object SketchIndex {
+final case class SketchIndex(root: String) extends Maintained {
+  import SketchIndex._
 
-  val P = 2147483647L // 2^31 - 1
-  val W = 64L         // CMS width
-  val K = 16          // KMV k
-  val seeds: Seq[(Long, Long)] =
-    Seq((1000003L, 12345L), (999983L, 54321L), (1000033L, 98765L))
-
-  private val cmsSchema = StructType(Seq(
-    StructField("d", IntegerType), StructField("b", LongType),
-    StructField("c", LongType)))
-  private val gridSchema = StructType(Seq(
-    StructField("event_type", StringType), StructField("g", LongType),
-    StructField("c", LongType)))
-  private val kmvSchema = StructType(Seq(
-    StructField("event_type", StringType), StructField("h", LongType)))
-
-  /** q44's integer type key — a pure function of the type string, so
-    * batch-local bucket assignment equals one-shot assignment. */
-  def etkCol: org.apache.spark.sql.Column =
-    (ascii(substring(col("event_type"), 1, 1)) * 961 +
-      ascii(substring(col("event_type"), 2, 1)) * 31 +
-      length(col("event_type"))).cast(LongType)
-
-  private def gkey = coalesce(col("event_type"), col("b").cast(StringType))
+  val store: DeltaStore = DeltaStore(root)
 
   /** Sketch one batch of events and append all three slices as ONE
     * grouped atomic delta — O(sketch) rows, no reads of stored state. */
-  def appendBatch(spark: SparkSession, events: DataFrame, root: String,
-                  batchId: Int): Unit = {
-    val store = DeltaStore(root)
+  def appendBatch(spark: SparkSession, events: DataFrame, batchId: Int): Unit = {
     store.heal()
     val base = events.select(col("event_type"), etkCol.as("etk"),
       col("user_id"), col("value"))
@@ -98,8 +75,8 @@ object SketchIndex {
 
   /** Fold all three slices into one base in one atomic grouped commit —
     * additive sums for cms/grid, distinct-keep-k-min for kmv. */
-  def compact(spark: SparkSession, root: String): Unit =
-    DeltaStore(root).compactTables(spark, Seq(
+  def compact(spark: SparkSession, upTo: Option[Int] = None): Unit =
+    store.compactTables(spark, Seq(
       ("cms", cmsSchema, col("b"),
         (df: DataFrame) => df.groupBy("d", "b").agg(sum(col("c")).as("c"))),
       ("grid", gridSchema, col("event_type"),
@@ -110,23 +87,50 @@ object SketchIndex {
           val w = Window.partitionBy("event_type").orderBy("h")
           df.distinct().withColumn("rn", row_number().over(w))
             .where(col("rn") <= K).drop("rn")
-        })))
+        })), upTo)
 
   /** The maintained CMS cells (d, b, c) — live deltas carry partial
     * counts, folded with the same sum [[compact]] bakes in. */
-  def cms(spark: SparkSession, root: String): DataFrame =
-    DeltaStore(root).read(spark, cmsSchema, None, table = Some("cms"))
+  def cms(spark: SparkSession): DataFrame =
+    store.read(spark, cmsSchema, None, table = Some("cms"))
       .groupBy("d", "b").agg(sum(col("c")).as("c"))
 
   /** The maintained ε-grid cells (event_type, g, c). */
-  def grid(spark: SparkSession, root: String): DataFrame =
-    DeltaStore(root).read(spark, gridSchema, None, table = Some("grid"))
+  def grid(spark: SparkSession): DataFrame =
+    store.read(spark, gridSchema, None, table = Some("grid"))
       .groupBy("event_type", "g").agg(sum(col("c")).as("c"))
 
   /** The maintained distinct KMV hash pool (event_type, h) — per-batch
     * k-smallest sets, duplicates collapsed; the serve side takes the
     * k-th order statistic. */
-  def kmv(spark: SparkSession, root: String): DataFrame =
-    DeltaStore(root).read(spark, kmvSchema, None, table = Some("kmv"))
+  def kmv(spark: SparkSession): DataFrame =
+    store.read(spark, kmvSchema, None, table = Some("kmv"))
       .distinct()
+}
+
+object SketchIndex {
+
+  val P = 2147483647L // 2^31 - 1
+  val W = 64L         // CMS width
+  val K = 16          // KMV k
+  val seeds: Seq[(Long, Long)] =
+    Seq((1000003L, 12345L), (999983L, 54321L), (1000033L, 98765L))
+
+  private val cmsSchema = StructType(Seq(
+    StructField("d", IntegerType), StructField("b", LongType),
+    StructField("c", LongType)))
+  private val gridSchema = StructType(Seq(
+    StructField("event_type", StringType), StructField("g", LongType),
+    StructField("c", LongType)))
+  private val kmvSchema = StructType(Seq(
+    StructField("event_type", StringType), StructField("h", LongType)))
+
+  /** q44's integer type key — a pure function of the type string, so
+    * batch-local bucket assignment equals one-shot assignment. */
+  def etkCol: org.apache.spark.sql.Column =
+    (ascii(substring(col("event_type"), 1, 1)) * 961 +
+      ascii(substring(col("event_type"), 2, 1)) * 31 +
+      length(col("event_type"))).cast(LongType)
+
+  private def gkey = coalesce(col("event_type"), col("b").cast(StringType))
 }

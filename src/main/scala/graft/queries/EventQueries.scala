@@ -804,7 +804,7 @@ object EventQueries {
         val w1 = ev.where(col("us") <= mid && !isLate)
         val w2 = ev.where(col("us") > mid)
         val late = ev.where(isLate)
-        val bronze = MorTable(DeltaStore(s"$root/bronze"), Seq("tie"))
+        val bronze = MorTable(DeltaStore(s"$root/bronze"), Seq("tie"), ev.schema)
         bronze.upsert(w1, 1)
         silver.appendBatch(s, w1, 1)
         bronze.upsert(w2, 2)
@@ -820,7 +820,7 @@ object EventQueries {
         // repair read: affected keys re-window from bronze, the rest
         // serve from the maintained index
         val affected = late.select("k").distinct()
-        val raw = bronze.snapshot(s, ev.schema)
+        val raw = bronze.snapshot(s)
         val repaired = Scd2.intervals(
             raw.join(affected, Seq("k"), "left_semi"),
             "k", "us", "tie", "attr",
@@ -875,7 +875,7 @@ object EventQueries {
         val w2 = ev.where(col("us") > mid && col("us") <= hi)
         val w3 = ev.where(col("us") > hi)
         val late = ev.where(isLate)
-        val bronze = MorTable(DeltaStore(s"$root/bronze"), Seq("tie"))
+        val bronze = MorTable(DeltaStore(s"$root/bronze"), Seq("tie"), ev.schema)
         bronze.upsert(w1, 1)
         silver.appendBatch(s, w1, 1)
         bronze.upsert(w2, 2)
@@ -888,7 +888,7 @@ object EventQueries {
           "q230: the horizon guard must refuse the out-of-order batch")
         // repair: the affected keys' full history from bronze...
         val affected = late.select("k").distinct()
-        val raw = bronze.snapshot(s, ev.schema)
+        val raw = bronze.snapshot(s)
         val history = raw.join(affected, Seq("k"), "left_semi")
         // ...BACKFILLED into the index as one catch-up delta
         silver.backfill(s, history, 4)

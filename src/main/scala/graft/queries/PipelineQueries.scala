@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.{Q, Tables}
 
@@ -77,6 +77,43 @@ object PipelineQueries {
         GROUP BY 1, 2, 3
         ORDER BY 1, 2, 3
       """
+
+  /** The last-write-wins table the replay queries upsert
+    * [[replayBatches]] into, under `$out/table`. */
+  private def replayTable(out: String, schema: StructType,
+                          bloomItems: Option[Long] = None) =
+    graft.operators.MorTable(graft.operators.DeltaStore(s"$out/table"),
+      Seq("coin_id", "fetch_date"), schema, bloomItems)
+
+  /** q112/q115's view: per (coin, year, month) price SUM and COUNT kept
+    * from the table's change feed in a store under `$out/view`. */
+  private def monthView(out: String) =
+    graft.operators.IncrementalView(graft.operators.DeltaStore(s"$out/view"),
+      StructType(Seq(StructField("coin_id", StringType),
+        StructField("yr", IntegerType), StructField("mon", IntegerType))))
+
+  /** Apply batch `b`'s preimage change feed of `mor` to `view`. */
+  private def applyMonthFeed(s: org.apache.spark.sql.SparkSession,
+                             mor: graft.operators.MorTable,
+                             view: graft.operators.IncrementalView, b: Int): Unit =
+    view.applyFeed(
+      mor.changes(s, b - 1, b, preimage = true)
+        .select(col("coin_id"),
+          year(col("fetch_date")).as("yr"),
+          month(col("fetch_date")).as("mon"),
+          col("op"), col("price_usd")),
+      Seq("coin_id", "yr", "mon"), "price_usd", b)
+
+  /** q112/q115's report: fold the view's history, then read it as
+    * (coin_id, yr, mon, sum_price, cnt). */
+  private def monthViewReport(s: org.apache.spark.sql.SparkSession,
+                              view: graft.operators.IncrementalView): DataFrame = {
+    view.compact(s)
+    view.view(s)
+      .select(col("coin_id"), col("yr"), col("mon"),
+        col("vsum").cast("double").as("sum_price"), col("cnt"))
+      .orderBy("coin_id", "yr", "mon")
+  }
 
   def defs: Vector[Q] = Vector(
     // ----------------------------------------------------------------
@@ -580,7 +617,8 @@ object PipelineQueries {
     // the four batches of [[replayBatches]] run as batch waves through
     // IncrementalRollup.mergeBatch, each upserting its rows into the
     // history MorTable and recomputing only the (coin, year, month)
-    // groups it touched into the rollup MorTable. The replay models how
+    // groups it touched into the rollup MorTable; both tables' compaction
+    // policy folds batches 0-1 before batch 2. The replay models how
     // late data actually arrives — in overlapping TIME windows whose
     // boundary years are written twice with batch-dependent values, so
     // later batches genuinely overwrite earlier ones (and can lower a
@@ -592,11 +630,11 @@ object PipelineQueries {
       (s, dir) => {
         val out = Q.fresh(s, "q85_rollup", dir)
         val (base, batches) = replayBatches(Tables.orders(s, dir))
-        val r = graft.streaming.IncrementalRollup(s"$out/table", s"$out/rollup")
+        val r = graft.streaming.IncrementalRollup(
+          s"$out/table", s"$out/rollup", batches.head.schema)
         batches.zipWithIndex.foreach { case (batch, b) => r.mergeBatch(s, batch, b) }
         base.unpersist(false)
-        r.monthly(s, batches.head.schema)
-          .orderBy("coin_id", "year", "month")
+        r.monthly(s).orderBy("coin_id", "year", "month")
       },
       Some(rollupReplayOracleSql)),
 
@@ -1030,13 +1068,13 @@ object PipelineQueries {
       (s, dir) => {
         val out = Q.fresh(s, "q92_manifest", dir)
         val (base, batches) = replayBatches(Tables.orders(s, dir))
-        val r = graft.streaming.IncrementalRollup(s"$out/table", s"$out/rollup")
+        val r = graft.streaming.IncrementalRollup(
+          s"$out/table", s"$out/rollup", batches.head.schema)
         graft.streaming.Replay.stream(s, out, batches, 2) { (b, id) =>
           r.mergeBatch(s, b, id)
         }
         base.unpersist(false)
-        r.monthly(s, batches.head.schema)
-          .orderBy("coin_id", "year", "month")
+        r.monthly(s).orderBy("coin_id", "year", "month")
       },
       Some(rollupReplayOracleSql)),
 
@@ -1095,26 +1133,24 @@ object PipelineQueries {
     // deferred to a VIEW over the final snapshot: an upsert appends one
     // O(batch) delta and never rereads or rewrites stored data, and the
     // merge moves to the read side — the final snapshot folds base +
-    // live deltas last-write-wins, and the mid-replay compact (after
-    // batch 1) proves later deltas still outrank a folded base. q85
-    // maintains the rollup per batch instead; identical oracle, so one
-    // green row certifies LWW fold order, delta/base covering rules,
-    // and compaction end-to-end under the oracle hash gate.
+    // live deltas last-write-wins, and the compaction policy's fold of
+    // batches 0-1 before batch 2 proves later deltas still outrank a
+    // folded base. q85 maintains the rollup per batch instead;
+    // identical oracle, so one green row certifies LWW fold order,
+    // delta/base covering rules, and compaction end-to-end under the
+    // oracle hash gate.
     Q(
       "q105_mor_rollup_replay",
       (s, dir) => {
         val out = Q.fresh(s, "q105_mor", dir)
         val (base, batches) = replayBatches(Tables.orders(s, dir))
-        val schema = batches.head.schema
-        val mor = graft.operators.MorTable(
-          graft.operators.DeltaStore(s"$out/table", 16),
-          Seq("coin_id", "fetch_date"))
+        val mor = replayTable(out, batches.head.schema)
         batches.zipWithIndex.foreach { case (batch, b) =>
+          mor.compactBefore(s, b, maxDeltas = 1)
           mor.upsert(batch, b)
-          if (b == 1) mor.compact(s, schema)
         }
         base.unpersist(false)
-        mor.snapshot(s, schema)
+        mor.snapshot(s)
           .groupBy(
             col("coin_id"),
             year(col("fetch_date")).as("year"),
@@ -1149,10 +1185,7 @@ object PipelineQueries {
         // the 1997 delete keys below are the grouped frame filtered:
         // its keys ARE the group keys
         val (base, batches) = replayBatches(Tables.orders(s, dir))
-        val schema = batches.head.schema
-        val mor = graft.operators.MorTable(
-          graft.operators.DeltaStore(s"$out/table", 16),
-          Seq("coin_id", "fetch_date"))
+        val mor = replayTable(out, batches.head.schema)
         batches.zipWithIndex.foreach { case (batch, b) => mor.upsert(batch, b) }
         def rollup(snap: org.apache.spark.sql.DataFrame, view: String) = snap
           .groupBy(
@@ -1164,15 +1197,15 @@ object PipelineQueries {
             max(col("price_usd")).as("max_price_usd"))
           .withColumn("vw", lit(view))
         // time travel BEFORE compaction truncates the history
-        val asof = rollup(mor.snapshotAsOf(s, schema, 2), "asof2")
+        val asof = rollup(mor.snapshotAsOf(s, 2), "asof2")
           .localCheckpoint()
         mor.delete(
           base.where(year(col("fetch_date")) === 1997)
             .select("coin_id", "fetch_date"),
-          4, schema)
+          4)
         base.unpersist(false)
-        mor.compact(s, schema)
-        rollup(mor.snapshot(s, schema), "current")
+        mor.compact(s)
+        rollup(mor.snapshot(s), "current")
           .unionByName(asof)
           .orderBy("vw", "coin_id", "year", "month")
       },
@@ -1233,10 +1266,7 @@ object PipelineQueries {
         val out = Q.fresh(s, "q107_mor", dir)
         val orders = Tables.orders(s, dir)
         val (base, batches) = replayBatches(orders)
-        val schema = batches.head.schema
-        val mor = graft.operators.MorTable(
-          graft.operators.DeltaStore(s"$out/table", 16),
-          Seq("coin_id", "fetch_date"))
+        val mor = replayTable(out, batches.head.schema)
         batches.zipWithIndex.foreach { case (batch, b) => mor.upsert(batch, b) }
         base.unpersist(false)
         val probe = orders
@@ -1244,7 +1274,7 @@ object PipelineQueries {
           .select(
             col("o_custkey").cast("string").as("coin_id"),
             col("o_orderdate").as("fetch_date"))
-        mor.lookup(s, schema, probe)
+        mor.lookup(s, probe)
           .orderBy("coin_id", "fetch_date")
       },
       Some("""
@@ -1270,8 +1300,8 @@ object PipelineQueries {
     // the three profiled columns with ONE stack inside the scan's
     // codegen stage, and append a 3-row partial-profile delta; the
     // current profile is the fold (min of mins / max of maxes / summed
-    // counts — all mergeable exactly, no sketches needed). A compact
-    // after batch 2 folds history into a base mid-replay. Oracle =
+    // counts — all mergeable exactly, no sketches needed). The
+    // compaction policy folds batches 0-2 into a base before batch 3. Oracle =
     // the ONE-SHOT profile over the whole table: maintenance ≡
     // recompute, the view-maintenance theorem for statistics.
     Q(
@@ -1280,17 +1310,16 @@ object PipelineQueries {
         val out = Q.fresh(s, "q108_stats", dir)
         val orders = Tables.orders(s, dir)
         val cols = Seq("o_orderkey", "o_custkey", "o_totalprice")
-        val store = graft.operators.DeltaStore(out + "/stats", 4)
+        val stats = graft.operators.IncrementalStats(
+          graft.operators.DeltaStore(out + "/stats", 4))
         val windows = Seq((1995, 1996), (1997, 1998), (1999, 1999), (2000, 2001))
         windows.zipWithIndex.foreach { case ((y0, y1), b) =>
-          graft.operators.IncrementalStats.appendBatch(
-            store,
+          stats.compactBefore(s, b, maxDeltas = 2)
+          stats.appendBatch(
             orders.where(year(col("o_orderdate")).between(y0, y1)),
             cols, b)
-          if (b == 2) graft.operators.IncrementalStats.compact(s, store)
         }
-        graft.operators.IncrementalStats.profile(s, store)
-          .orderBy("col_name")
+        stats.profile(s).orderBy("col_name")
       },
       Some("""
         SELECT 'o_custkey' AS col_name,
@@ -1336,17 +1365,14 @@ object PipelineQueries {
         // the 1997 delete keys below are the grouped frame filtered:
         // its keys ARE the group keys
         val (base, batches) = replayBatches(Tables.orders(s, dir))
-        val schema = batches.head.schema
-        val mor = graft.operators.MorTable(
-          graft.operators.DeltaStore(s"$out/table", 16),
-          Seq("coin_id", "fetch_date"))
+        val mor = replayTable(out, batches.head.schema)
         batches.zipWithIndex.foreach { case (batch, b) => mor.upsert(batch, b) }
         mor.delete(
           base.where(year(col("fetch_date")) === 1997)
             .select("coin_id", "fetch_date"),
-          4, schema)
+          4)
         base.unpersist(false)
-        mor.changes(s, schema, from = 1, to = 4)
+        mor.changes(s, from = 1, to = 4)
           .orderBy("coin_id", "fetch_date")
       },
       Some("""
@@ -1385,10 +1411,7 @@ object PipelineQueries {
         val out = Q.fresh(s, "q111_mor", dir)
         val orders = Tables.orders(s, dir)
         val (base, batches) = replayBatches(orders)
-        val schema = batches.head.schema
-        val mor = graft.operators.MorTable(
-          graft.operators.DeltaStore(s"$out/table", 16),
-          Seq("coin_id", "fetch_date"),
+        val mor = replayTable(out, batches.head.schema,
           bloomItems = Some(200000L))
         batches.zipWithIndex.foreach { case (batch, b) => mor.upsert(batch, b) }
         base.unpersist(false)
@@ -1401,7 +1424,7 @@ object PipelineQueries {
             // shifted out of the key space: absent by construction
             concat(lit("zz"), col("o_custkey")).as("coin_id"),
             col("o_orderdate").as("fetch_date")))
-        mor.lookup(s, schema, probe)
+        mor.lookup(s, probe)
           .orderBy("coin_id", "fetch_date")
       },
       Some("""
@@ -1438,11 +1461,8 @@ object PipelineQueries {
       (s, dir) => {
         val out = Q.fresh(s, "q112_ivm", dir)
         val (base, batches) = replayBatches(Tables.orders(s, dir))
-        val schema = batches.head.schema
-        val mor = graft.operators.MorTable(
-          graft.operators.DeltaStore(s"$out/table", 16),
-          Seq("coin_id", "fetch_date"))
-        val vstore = graft.operators.DeltaStore(s"$out/view", 16)
+        val mor = replayTable(out, batches.head.schema)
+        val view = monthView(out)
         // feed derivation is PIPELINED with later table commits: the
         // feed for batch b reads fixed as-of bounds (b-1, b), so a
         // later delta's presence is filtered out of both folds — batch
@@ -1450,38 +1470,20 @@ object PipelineQueries {
         // the view deltas land under their own batch ids (idempotent
         // replace). Await all applies before reading the view.
         def applyBatch(b: Int): scala.concurrent.Future[Unit] =
-          scala.concurrent.Future {
-            val feed = mor.changes(s, schema, b - 1, b, preimage = true)
-              .select(col("coin_id"),
-                year(col("fetch_date")).as("yr"),
-                month(col("fetch_date")).as("mon"),
-                col("op"), col("price_usd"))
-            graft.operators.IncrementalView.applyFeed(
-              vstore, feed, Seq("coin_id", "yr", "mon"), "price_usd", b)
-          }(scala.concurrent.ExecutionContext.global)
+          scala.concurrent.Future(applyMonthFeed(s, mor, view, b))(
+            scala.concurrent.ExecutionContext.global)
         val applies = batches.zipWithIndex.map { case (batch, b) =>
           mor.upsert(batch, b); applyBatch(b)
         }
         mor.delete(
           base.where(year(col("fetch_date")) === 1997)
             .select("coin_id", "fetch_date"),
-          4, schema)
+          4)
         (applies :+ applyBatch(4)).foreach(f =>
           scala.concurrent.Await.result(f,
             scala.concurrent.duration.Duration.Inf))
         base.unpersist(false)
-        val gschema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("coin_id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("yr",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("mon",
-            org.apache.spark.sql.types.IntegerType)))
-        graft.operators.IncrementalView.compact(s, vstore, gschema)
-        graft.operators.IncrementalView.view(s, vstore, gschema)
-          .select(col("coin_id"), col("yr"), col("mon"),
-            col("vsum").cast("double").as("sum_price"), col("cnt"))
-          .orderBy("coin_id", "yr", "mon")
+        monthViewReport(s, view)
       },
       Some("""
         WITH g AS (
@@ -1527,10 +1529,8 @@ object PipelineQueries {
         val out = Q.fresh(s, "q115_scdc", dir)
         val (base, batches) = replayBatches(Tables.orders(s, dir).where(col("o_custkey") % 5 === 0))
         val schema = batches.head.schema
-        val mor = graft.operators.MorTable(
-          graft.operators.DeltaStore(s"$out/table", 16),
-          Seq("coin_id", "fetch_date"))
-        val vstore = graft.operators.DeltaStore(s"$out/view", 16)
+        val mor = replayTable(out, schema)
+        val view = monthView(out)
         // the view apply is PIPELINED off the upsert chain (the q112 /
         // q103 replay-pipelining move): the feed for batch b reads the
         // FIXED as-of bounds (b-1, b), so batch b+1's upsert can commit
@@ -1542,15 +1542,7 @@ object PipelineQueries {
         val applies = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
         def fold(b: org.apache.spark.sql.DataFrame, bid: Int): Unit = {
           mor.upsert(b.dropDuplicates("coin_id", "fetch_date"), bid)
-          applies += Future {
-            graft.operators.IncrementalView.applyFeed(vstore,
-              mor.changes(s, schema, bid - 1, bid, preimage = true)
-                .select(col("coin_id"),
-                  year(col("fetch_date")).as("yr"),
-                  month(col("fetch_date")).as("mon"),
-                  col("op"), col("price_usd")),
-              Seq("coin_id", "yr", "mon"), "price_usd", bid)
-          }
+          applies += Future(applyMonthFeed(s, mor, view, bid))
         }
         // drop with a PINNED, strictly-increasing mtime: the file
         // source orders ties by (timestamp, path) and part-file names
@@ -1583,18 +1575,7 @@ object PipelineQueries {
         applies.foreach(Await.result(_,
           scala.concurrent.duration.Duration.Inf))
         base.unpersist(false)
-        val gschema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("coin_id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("yr",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("mon",
-            org.apache.spark.sql.types.IntegerType)))
-        graft.operators.IncrementalView.compact(s, vstore, gschema)
-        graft.operators.IncrementalView.view(s, vstore, gschema)
-          .select(col("coin_id"), col("yr"), col("mon"),
-            col("vsum").cast("double").as("sum_price"), col("cnt"))
-          .orderBy("coin_id", "yr", "mon")
+        monthViewReport(s, view)
       },
       Some("""
         WITH g AS (

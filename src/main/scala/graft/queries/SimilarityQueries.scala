@@ -149,8 +149,8 @@ object SimilarityQueries {
       s: org.apache.spark.sql.SparkSession, dir: String): Option[Long] = {
     val sd = new java.io.File(dir, "_stats")
     if (!sd.isDirectory) None
-    else graft.operators.IncrementalStats
-      .profile(s, graft.operators.DeltaStore(sd.getPath))
+    else graft.operators.IncrementalStats(graft.operators.DeltaStore(sd.getPath))
+      .profile(s)
       .where(col("col_name") === "vec_id")
       .select("cnt").collect().headOption.map(_.getLong(0))
   }
@@ -1443,6 +1443,7 @@ object SimilarityQueries {
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
         val batches = (0 to 3).map(k => docs.where(col("doc_id") % 4 === k))
+        val idx = graft.operators.LshIndex(s"$out/index")
         var hist = Vector.empty[graft.operators.LshIndex.BatchState]
         var commit: Future[Unit] = Future.unit
         var prep = graft.operators.LshIndex.prepareBatch(s, batches(0))
@@ -1450,8 +1451,8 @@ object SimilarityQueries {
           val next =
             if (k < 3) Some(Future(graft.operators.LshIndex.prepareBatch(s, batches(k + 1))))
             else None
-          val (pairsF, st, cf) = graft.operators.LshIndex.upsertBatchPipelined(
-            s, batches(k), s"$out/index",
+          val (pairsF, st, cf) = idx.upsertBatchPipelined(
+            s, batches(k),
             batchId = k, dfCap = dfCap, bucketCap = bucketCap,
             prepared = Some(prep), history = Some(hist), prevCommit = commit)
           hist = hist :+ st; commit = cf
@@ -1530,9 +1531,10 @@ object SimilarityQueries {
         // derived ONCE (the q221 move): four batch filters consume the
         // embeddings scan
         val vecs = Tables.embeddings(s, dir).localCheckpoint()
+        val idx = graft.operators.EmbIndex(s"$out/index")
         val perBatch = (0 to 3).map { k =>
-          graft.operators.EmbIndex.upsertBatch(
-            s, vecs.where(col("vec_id") % 4 === k), s"$out/index",
+          idx.upsertBatch(
+            s, vecs.where(col("vec_id") % 4 === k),
             batchId = k, width = r, bucketCap = 128)
         }
         // every batch is committed and its pairs checkpoint-materialized;
@@ -1578,8 +1580,8 @@ object SimilarityQueries {
     // embedding sign keys, and now the ADC code table). Four vec_id % 4
     // ingest batches each encode ONLY their own vectors and append the
     // codes to operators/CodeIndex's DeltaStore (O(batch) writes, one
-    // commit per batch; compact after batch 1 proves codes survive the
-    // fold); the ADC search then serves the fixed query workload from
+    // commit per batch; the policy's fold before batch 2 proves codes
+    // survive it); the ADC search then serves the fixed query workload from
     // the MAINTAINED store — the corpus is never re-encoded. Sign-
     // pattern codes are per-row deterministic, so the maintained table
     // is bit-identical to q98's inline one and the SAME oracle hashes
@@ -1592,12 +1594,12 @@ object SimilarityQueries {
         // derived ONCE (the q221 move): four batch filters + the ADC
         // search consume the embeddings scan
         val emb = Tables.embeddings(s, dir).localCheckpoint()
+        val idx = graft.operators.CodeIndex(out)
         (0 to 3).foreach { k =>
-          graft.operators.CodeIndex.appendBatch(
-            s, emb.where(col("vec_id") % 4 === k), out, batchId = k)
-          if (k == 1) graft.operators.CodeIndex.compact(s, out)
+          idx.compactBefore(s, k, maxDeltas = 1)
+          idx.appendBatch(s, emb.where(col("vec_id") % 4 === k), batchId = k)
         }
-        pqAdcSearch(s, emb, graft.operators.CodeIndex.codes(s, out))
+        pqAdcSearch(s, emb, idx.codes(s))
       },
       Some(pqAdcOracleSql)),
 

@@ -654,8 +654,8 @@ object TextQueries {
     // (a batch-local aggregate, O(batch) — the write path never reads
     // stored state), committed as ONE grouped atomic delta holding
     // BOTH tables (numerator and denominator can never be at
-    // different batch horizons); compact after batch 1 proves counts
-    // survive the additive sum-by-key fold. Scoring then serves from
+    // different batch horizons); the policy's fold before batch 2
+    // proves counts survive the additive sum-by-key fold. Scoring then serves from
     // the MAINTAINED model — the corpus is never re-counted. Counts
     // are additive, so maintained ≡ one-shot recompute EXACTLY and
     // q169's oracle gates this entry VERBATIM (the q109/q114 move).
@@ -668,14 +668,15 @@ object TextQueries {
         // ran FIVE times per run (4 batch filters + the scoring probe)
         // — materialize it once and filter blocks
         val docBi = docBigrams(s, dir).localCheckpoint()
+        val idx = LmIndex(out)
         (0 to 3).foreach { k =>
-          LmIndex.appendBatch(s, docBi.where(col("doc_id") % 4 === k), out, k)
-          if (k == 1) LmIndex.compact(s, out)
+          idx.compactBefore(s, k, maxDeltas = 1)
+          idx.appendBatch(s, docBi.where(col("doc_id") % 4 === k), k)
         }
         scoreFluency(docBi,
-          LmIndex.counts(s, out, "bi")
+          idx.counts(s, "bi")
             .select(col("k").as("bi"), col("c").as("c_bi")),
-          LmIndex.counts(s, out, "uni")
+          idx.counts(s, "uni")
             .select(col("k").as("w1"), col("c").as("c_uni")))
       },
       Some(fluencyOracleSql)),

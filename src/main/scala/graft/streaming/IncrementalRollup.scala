@@ -38,18 +38,33 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * fold and aggregate run over the touched slice only; the scan under
   * it still lists and reads every bucket, because the store buckets by
   * the hash of (coin_id, fetch_date), which no (coin, month) group
-  * prunes. The tables get no compaction policy here: every batch adds
-  * one delta to each, so read cost grows with the number of batches
-  * until [[MorTable.compact]] folds them.
+  * prunes. Both tables run [[graft.operators.Maintained]]'s policy at
+  * the start of every non-empty batch with `maxDeltas` 1: more than one
+  * committed delta below the batch folds them into the base, so a long
+  * stream lists and folds at most a base and two deltas per table.
+  *
+  * `schema` is the batches' coin_history shape; the rollup's schema is
+  * derived from it.
   */
-final case class IncrementalRollup(tableDir: String, rollupDir: String) {
-  val table = MorTable(DeltaStore(tableDir), Seq("coin_id", "fetch_date"))
-  val rollup = MorTable(DeltaStore(rollupDir), Seq("coin_id", "year", "month"))
+final case class IncrementalRollup(tableDir: String, rollupDir: String,
+                                   schema: StructType) {
+  import IncrementalRollup.maxDeltas
+
+  val table = MorTable(DeltaStore(tableDir), Seq("coin_id", "fetch_date"), schema)
+  val rollup = MorTable(DeltaStore(rollupDir), Seq("coin_id", "year", "month"),
+    new StructType()
+      .add(schema("coin_id"))
+      .add("year", IntegerType)
+      .add("month", IntegerType)
+      .add("min_price_usd", schema("price_usd").dataType)
+      .add("max_price_usd", schema("price_usd").dataType))
 
   /** One micro-batch merge under `batchId`; also usable directly for
     * batch backfills, one call per batch in id order. */
   def mergeBatch(spark: SparkSession, batch0: DataFrame, batchId: Int): Unit = {
     if (batch0.isEmpty) return
+    table.compactBefore(spark, batchId, maxDeltas)
+    rollup.compactBefore(spark, batchId, maxDeltas)
     val batch = batch0.dropDuplicates("coin_id", "fetch_date")
     table.upsert(batch, batchId)
 
@@ -59,7 +74,7 @@ final case class IncrementalRollup(tableDir: String, rollupDir: String) {
       month(col("fetch_date")).as("month")).distinct()
     // year and month are functions of fetch_date, so every version of a
     // key passes this filter or fails it together
-    val fresh = table.snapshot(spark, batch.schema, _
+    val fresh = table.snapshot(spark, _
         .withColumn("year", year(col("fetch_date")))
         .withColumn("month", month(col("fetch_date")))
         .join(broadcast(touched), Seq("coin_id", "year", "month"), "left_semi"))
@@ -75,17 +90,15 @@ final case class IncrementalRollup(tableDir: String, rollupDir: String) {
   }
 
   /** The rollup as of the last merge: (coin_id, year, month,
-    * min_price_usd, max_price_usd), for batches of `schema`. */
-  def monthly(spark: SparkSession, schema: StructType): DataFrame =
-    rollup.snapshot(spark, new StructType()
-      .add(schema("coin_id"))
-      .add("year", IntegerType)
-      .add("month", IntegerType)
-      .add("min_price_usd", schema("price_usd").dataType)
-      .add("max_price_usd", schema("price_usd").dataType))
+    * min_price_usd, max_price_usd). */
+  def monthly(spark: SparkSession): DataFrame = rollup.snapshot(spark)
 }
 
 object IncrementalRollup {
+
+  /** The live committed deltas either table keeps before a batch folds
+    * them, the threshold the batch-wave queries use. */
+  private val maxDeltas = 1
 
   /** Start the stream. `input` is a streaming DataFrame in coin_history
     * shape (coin_id, fetch_date, price_usd, ...). Trigger.AvailableNow
@@ -94,7 +107,7 @@ object IncrementalRollup {
   def start(spark: SparkSession, input: DataFrame, tableDir: String,
             rollupDir: String, checkpointDir: String,
             availableNow: Boolean = true): StreamingQuery = {
-    val r = IncrementalRollup(tableDir, rollupDir)
+    val r = IncrementalRollup(tableDir, rollupDir, input.schema)
     val writer = input.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

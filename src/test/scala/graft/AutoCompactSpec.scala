@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Auto-compaction policy ([[graft.operators.Maintained.compactBefore]],
-  * shared by every maintained family): fires exactly when the committed
+  * shared by every DeltaStore family): fires exactly when the committed
   * delta tail exceeds the threshold, drops the live delta count to zero
   * below the horizon, never folds a batch above the horizon (the
   * crashed-batch double-count hazard for additive folds), and leaves
@@ -111,8 +111,10 @@ class AutoCompactSpec extends AnyFunSuite {
     assert(read(idx).map(rows) == read(twin).map(rows), tag)
   }
 
-  test("compactBefore fires at the same k, empties the committed tail and keeps the read, in all five families") {
-    import graft.operators.{BasketIndex, CcIndex, Scd2Index, StatCellIndex, TriIndex}
+  test("compactBefore fires at the same k, empties the committed tail and keeps the read, in every Maintained family") {
+    import graft.operators.{BasketIndex, CcIndex, CellIndex, CodeIndex, DeltaStore,
+      EmbIndex, IncrementalStats, IncrementalView, LmIndex, LshIndex, MorTable,
+      Scd2Index, SketchIndex, StatCellIndex, TriIndex}
     val momentSchema = StructType(Seq(StructField("k", LongType),
       StructField("n", LongType), StructField("s", DecimalType(28, 2))))
     policyAcrossBatches("moments",
@@ -147,5 +149,70 @@ class AutoCompactSpec extends AnyFunSuite {
             (k + j / 3) % 2))
         .toDF("k", "tie", "us", "attr"), k)
     }(idx => Seq(idx.intervals(spark)))
+
+    policyAcrossBatches("sketch", SketchIndex(_)) { (idx, k) =>
+      idx.appendBatch(spark, Seq.tabulate(8)(j =>
+          (s"t${(j + k) % 3}", (k * 8 + j).toLong, (j * k % 5) * 0.75))
+        .toDF("event_type", "user_id", "value"), k)
+    }(idx => Seq(idx.cms(spark), idx.grid(spark), idx.kmv(spark)))
+
+    policyAcrossBatches("lm", LmIndex(_)) { (idx, k) =>
+      idx.appendBatch(spark, Seq.tabulate(6)(j =>
+          (s"w${j % 3} w${(j + k) % 4}", s"w${j % 3}"))
+        .toDF("bi", "w1"), k)
+    }(idx => Seq(idx.counts(spark, "bi"), idx.counts(spark, "uni")))
+
+    // 64-dim vectors near one shared direction: sign codes, cells and
+    // near-dup pairs all vary with the id
+    def vecs(k: Int) = Seq.tabulate(3)(j => (k * 3 + j).toLong)
+      .map(id => (id, Array.tabulate(64)(d => (math.sin(d * 0.37 + 1.0) +
+        (if (d % 7 == id % 7) 0.3 else 0.0) - (if (d == id % 64) 2.0 else 0.0))
+        .toFloat)))
+      .toDF("vec_id", "embedding")
+    policyAcrossBatches("code", CodeIndex(_)) { (idx, k) =>
+      idx.appendBatch(spark, vecs(k), k)
+    }(idx => Seq(idx.codes(spark)))
+
+    policyAcrossBatches("cell", CellIndex(_)) { (idx, k) =>
+      idx.appendBatch(spark, vecs(k), k, widthLit = 4)
+    }(idx => Seq(idx.cells(spark)))
+
+    // the per-batch results are the emitted pairs: batches 3 and 4 probe
+    // prior state through the folded base
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    policyAcrossBatches("emb", EmbIndex(_)) { (idx, k) =>
+      pairs(idx.upsertBatch(spark, vecs(k), k, width = 6, bucketCap = 128))
+    }(_ => Nil)
+
+    policyAcrossBatches("lsh", LshIndex(_)) { (idx, k) =>
+      pairs(idx.upsertBatch(spark, Seq.tabulate(2)(j => (k * 2 + j).toLong)
+          .map(id => (id, ("alpha beta gamma delta epsilon zeta eta theta " * 2) +
+            s"tail $id ${id % 3}"))
+          .toDF("doc_id", "text"),
+        k, dfCap = 20, bucketCap = 20))
+    }(_ => Nil)
+
+    policyAcrossBatches("stats", r => IncrementalStats(DeltaStore(r))) { (idx, k) =>
+      idx.appendBatch(Seq.tabulate(4)(j => (k * 4 + j, if (j == k % 4) None
+          else Some(k - j * 1.5))).toDF("a", "b"), Seq("a", "b"), k)
+    }(idx => Seq(idx.profile(spark)))
+
+    policyAcrossBatches("view", r => IncrementalView(DeltaStore(r),
+        StructType(Seq(StructField("g", StringType))))) { (idx, k) =>
+      idx.applyFeed(Seq.tabulate(4)(j =>
+          (s"g${(j + k) % 3}", if (j == 3 && k > 0) "delete" else "insert",
+            k * 10 + j)).toDF("g", "op", "v"),
+        Seq("g"), "v", k)
+    }(idx => Seq(idx.view(spark)))
+
+    val morSchema = StructType(Seq(
+      StructField("k", StringType), StructField("v", IntegerType)))
+    policyAcrossBatches("mor", r => MorTable(DeltaStore(r), Seq("k"), morSchema)) {
+      (idx, k) =>
+        if (k == 2) idx.delete(Seq("k1", "k3").toDF("k"), k)
+        else idx.upsert(Seq.tabulate(3)(j => (s"k${j + k}", k * 10 + j))
+          .toDF("k", "v"), k)
+    }(idx => Seq(idx.snapshot(spark), idx.changes(spark, 3, 4)))
   }
 }

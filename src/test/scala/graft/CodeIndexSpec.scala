@@ -13,15 +13,14 @@ class CodeIndexSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("batch-appended codes equal the whole-corpus encoding; replay and compact change nothing") {
-    val root = Files.createTempDirectory("graft_codeidx_").toString + "/idx"
+    val idx = CodeIndex(Files.createTempDirectory("graft_codeidx_").toString + "/idx")
     val emb = Tables.embeddings(spark, sfDir)
     (0 to 3).foreach { k =>
-      CodeIndex.appendBatch(spark, emb.where(col("vec_id") % 4 === k),
-        root, batchId = k)
+      idx.appendBatch(spark, emb.where(col("vec_id") % 4 === k), batchId = k)
     }
-    def snap() = CodeIndex.codes(spark, root)
+    def codes(i: CodeIndex) = i.codes(spark)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val got = snap()
+    val got = codes(idx)
     val oneShot = emb
       .select(col("vec_id").as("cand_id"),
         explode(expr("sequence(0, 7)")).as("sub"), col("embedding"))
@@ -31,21 +30,20 @@ class CodeIndexSpec extends AnyFunSuite {
     assert(got == oneShot, "maintained codes must equal the one-shot encoding")
     assert(got.size == emb.count() * 8)
     // replay of a batch replaces its own delta — no duplicates
-    CodeIndex.appendBatch(spark, emb.where(col("vec_id") % 4 === 2),
-      root, batchId = 2)
-    assert(snap() == oneShot)
-    CodeIndex.compact(spark, root)
-    assert(snap() == oneShot, "compaction folds without loss")
-    // a compact in the middle of the replay leaves the maintained codes
-    // equal to the uncompacted run's
-    val croot = Files.createTempDirectory("graft_codeidx_c_").toString + "/idx"
-    (0 to 3).foreach { k =>
-      CodeIndex.appendBatch(spark, emb.where(col("vec_id") % 4 === k),
-        croot, batchId = k)
-      if (k == 1) CodeIndex.compact(spark, croot)
+    idx.appendBatch(spark, emb.where(col("vec_id") % 4 === 2), batchId = 2)
+    assert(codes(idx) == oneShot)
+    idx.compact(spark)
+    assert(codes(idx) == oneShot, "compaction folds without loss")
+    // the compaction policy firing in the middle of the replay leaves
+    // the maintained codes equal to the uncompacted run's
+    val cidx = CodeIndex(Files.createTempDirectory("graft_codeidx_c_").toString + "/idx")
+    val fired = (0 to 3).map { k =>
+      val f = cidx.compactBefore(spark, k, maxDeltas = 1)
+      cidx.appendBatch(spark, emb.where(col("vec_id") % 4 === k), batchId = k)
+      f
     }
-    assert(CodeIndex.codes(spark, croot)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet ==
-      got, "a mid-replay compact must not change the maintained codes")
+    assert(fired == Seq(false, false, true, false))
+    assert(codes(cidx) == got,
+      "a mid-replay compact must not change the maintained codes")
   }
 }

@@ -23,7 +23,7 @@ class EmbIndexSpec extends AnyFunSuite {
 
   private def ingest(root: String, vs: Seq[(Long, Array[Float])],
                      k: Int, cap: Int = 128): Seq[org.apache.spark.sql.Row] =
-    EmbIndex.upsertBatch(spark, vs.toDF("vec_id", "embedding"), root,
+    EmbIndex(root).upsertBatch(spark, vs.toDF("vec_id", "embedding"),
         batchId = k, width = 6, bucketCap = cap)
       .orderBy("vec_a", "vec_b").collect().toSeq
 

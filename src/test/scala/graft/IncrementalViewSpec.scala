@@ -16,26 +16,28 @@ class IncrementalViewSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val gschema = StructType(Seq(StructField("grp", StringType)))
+  private lazy val schema = Seq(("x", "g", 0)).toDF("k", "grp", "v").schema
+
+  private def rows(view: IncrementalView): Seq[(String, Double, Long)] =
+    view.view(spark)
+      .select(col("grp"), col("vsum").cast("double"), col("cnt"))
+      .as[(String, Double, Long)].collect().sortBy(_._1).toSeq
 
   test("feed-maintained view tracks the snapshot recompute across updates, deletes, and group rebirth") {
     val root = Files.createTempDirectory("graft_ivm_").toString
-    val t = MorTable(DeltaStore(s"$root/t", 8), Seq("k"))
-    val vstore = DeltaStore(s"$root/v", 8)
-    val schema = Seq(("x", "g", 0)).toDF("k", "grp", "v").schema
+    val t = MorTable(DeltaStore(s"$root/t", 8), Seq("k"), schema)
+    val view = IncrementalView(DeltaStore(s"$root/v", 8), gschema)
 
     def applyBatch(b: Int): Unit =
-      IncrementalView.applyFeed(vstore,
-        t.changes(spark, schema, b - 1, b, preimage = true)
+      view.applyFeed(
+        t.changes(spark, b - 1, b, preimage = true)
           .select(col("grp"), col("op"), col("v")),
         Seq("grp"), "v", b)
 
-    def viewRows: Seq[(String, Double, Long)] =
-      IncrementalView.view(spark, vstore, gschema)
-        .select(col("grp"), col("vsum").cast("double"), col("cnt"))
-        .as[(String, Double, Long)].collect().sortBy(_._1).toSeq
+    def viewRows: Seq[(String, Double, Long)] = rows(view)
 
     def recompute: Seq[(String, Double, Long)] =
-      t.snapshot(spark, schema)
+      t.snapshot(spark)
         .groupBy("grp")
         .agg(sum(Q.dec2(col("v"))).cast("double"), count(lit(1)))
         .as[(String, Double, Long)].collect().sortBy(_._1).toSeq
@@ -50,7 +52,7 @@ class IncrementalViewSpec extends AnyFunSuite {
     assert(viewRows == Seq(("x", 5.0, 1L), ("y", 2.0, 1L)))
     assert(viewRows == recompute)
 
-    t.delete(Seq("b").toDF("k"), 2, schema) // y nets to zero -> vanishes
+    t.delete(Seq("b").toDF("k"), 2) // y nets to zero -> vanishes
     applyBatch(2)
     assert(viewRows == Seq(("x", 5.0, 1L)))
     assert(viewRows == recompute)
@@ -61,16 +63,15 @@ class IncrementalViewSpec extends AnyFunSuite {
     assert(viewRows == recompute)
 
     // compaction folds partials without changing the view
-    IncrementalView.compact(spark, vstore, gschema)
+    view.compact(spark)
     assert(viewRows == recompute)
   }
 
   test("streaming CDC: the view follows the table through a foreachBatch pipeline, across checkpoint resume") {
     val root = Files.createTempDirectory("graft_ivm_stream_").toString
     val in = s"$root/in"
-    val t = MorTable(DeltaStore(s"$root/t", 8), Seq("k"))
-    val vstore = DeltaStore(s"$root/v", 8)
-    val schema = Seq(("x", "g", 0)).toDF("k", "grp", "v").schema
+    val t = MorTable(DeltaStore(s"$root/t", 8), Seq("k"), schema)
+    val view = IncrementalView(DeltaStore(s"$root/v", 8), gschema)
 
     // the end-to-end exactly-once composition: upsert, derive the
     // batch's change feed from the just-committed horizon, apply it to
@@ -83,18 +84,15 @@ class IncrementalViewSpec extends AnyFunSuite {
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         val bid = id.toInt
         t.upsert(b.dropDuplicates("k"), bid)
-        IncrementalView.applyFeed(vstore,
-          t.changes(spark, schema, bid - 1, bid, preimage = true)
+        view.applyFeed(
+          t.changes(spark, bid - 1, bid, preimage = true)
             .select(col("grp"), col("op"), col("v")),
           Seq("grp"), "v", bid)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start().awaitTermination(120000)
 
-    def viewRows: Seq[(String, Double, Long)] =
-      IncrementalView.view(spark, vstore, gschema)
-        .select(col("grp"), col("vsum").cast("double"), col("cnt"))
-        .as[(String, Double, Long)].collect().sortBy(_._1).toSeq
+    def viewRows: Seq[(String, Double, Long)] = rows(view)
 
     Seq(("a", "x", 1), ("b", "y", 2)).toDF("k", "grp", "v").write.parquet(in)
     drain()
@@ -104,31 +102,18 @@ class IncrementalViewSpec extends AnyFunSuite {
       .write.mode("append").parquet(in)
     drain()
     assert(viewRows == Seq(("x", 7.0, 1L), ("y", 6.0, 2L)))
-    val recompute = t.snapshot(spark, schema)
+    val recompute = t.snapshot(spark)
       .groupBy("grp").agg(sum(Q.dec2(col("v"))).cast("double"), count(lit(1)))
       .as[(String, Double, Long)].collect().sortBy(_._1).toSeq
     assert(viewRows == recompute)
   }
 
-  test("count-based compaction policy folds only past the delta-tail threshold") {
-    val root = Files.createTempDirectory("graft_policy_").toString
-    val t = MorTable(DeltaStore(root, 8), Seq("k"))
-    val schema = Seq(("x", 0)).toDF("k", "v").schema
-    (0 to 3).foreach(b => t.upsert(Seq((s"k$b", b)).toDF("k", "v"), b))
-    assert(t.store.deltaCount() == 4)
-    assert(!t.compactIfNeeded(spark, schema, maxDeltas = 4), "4 <= 4: no fold")
-    assert(t.store.deltaCount() == 4)
-    assert(t.compactIfNeeded(spark, schema, maxDeltas = 3), "4 > 3: fold")
-    assert(t.store.deltaCount() == 0)
-    assert(t.snapshot(spark, schema).count() == 4)
-  }
-
   test("an unknown feed op fails the job instead of silently mis-signing") {
-    val vstore = DeltaStore(
-      Files.createTempDirectory("graft_ivm_bad_").toString, 4)
+    val view = IncrementalView(DeltaStore(
+      Files.createTempDirectory("graft_ivm_bad_").toString, 4), gschema)
     val bad = Seq(("g", "bogus", 1)).toDF("grp", "op", "v")
     val e = intercept[Exception] {
-      IncrementalView.applyFeed(vstore, bad, Seq("grp"), "v", 0)
+      view.applyFeed(bad, Seq("grp"), "v", 0)
     }
     assert(e.getMessage != null)
   }

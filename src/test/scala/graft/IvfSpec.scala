@@ -87,16 +87,17 @@ class IvfSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val base = java.nio.file.Files.createTempDirectory("graft_cellidx_").toString
     val (oneShot, _) = IvfIndex.buildOrLoad(spark, emb, nlist = 8, s"$base/km")
+    val idx = graft.operators.CellIndex(s"$base/index")
     (0 to 3).foreach { k =>
+      idx.compactBefore(spark, k, maxDeltas = 2)
       val (batchCells, _) =
         IvfIndex.buildOrLoad(spark, emb.where(pmod(col("vec_id"), lit(4)) === k),
           nlist = 8, s"$base/km") // loads the frozen model, pure map
-      graft.operators.CellIndex.appendAssigned(spark,
+      idx.appendAssigned(spark,
         batchCells.select(col("vec_id"), col("cell_id").as("cell")),
-        s"$base/index", batchId = k)
-      if (k == 2) graft.operators.CellIndex.compact(spark, s"$base/index")
+        batchId = k)
     }
-    val maintained = graft.operators.CellIndex.cells(spark, s"$base/index")
+    val maintained = idx.cells(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val inline = oneShot.select("vec_id", "cell_id")
       .collect().map(r => (r.getLong(0), r.getInt(1).toLong)).sortBy(_._1).toSeq

@@ -27,10 +27,9 @@ class LshIndexSpec extends AnyFunSuite {
     val df = docs.toDF("doc_id", "text")
     (0 until nBatches).map { k =>
       val ids = docs.collect { case (id, _) if batchOf(id) == k => id }
-      val out = LshIndex.upsertBatch(
-        spark, df.where(col("doc_id").isin(ids: _*)), root,
+      LshIndex(root).upsertBatch(
+        spark, df.where(col("doc_id").isin(ids: _*)),
         batchId = k, dfCap = 20, bucketCap = 20)
-      out
     }
   }
 
@@ -72,16 +71,15 @@ class LshIndexSpec extends AnyFunSuite {
     val docs = Seq(doc(1, "aa"), doc(2, "ab"), doc(3, "ac"), doc(4, "ad"),
                    doc(5, "ae"), doc(6, "af"))
     def run(compact: Boolean): Seq[Seq[String]] = {
-      val root = tmp()
+      val idx = LshIndex(tmp())
       val df = docs.toDF("doc_id", "text")
       (0 until 3).map { k =>
+        if (compact) assert(idx.compactBefore(spark, k, maxDeltas = 1) == (k == 2))
         val ids = docs.collect { case (id, _) if (id % 3).toInt == k => id }
-        val out = LshIndex.upsertBatch(
-          spark, df.where(col("doc_id").isin(ids: _*)), root,
+        idx.upsertBatch(
+          spark, df.where(col("doc_id").isin(ids: _*)),
           batchId = k, dfCap = 20, bucketCap = 20)
           .orderBy("doc_a", "doc_b").collect().map(_.toString).toSeq
-        if (compact && k == 1) LshIndex.compact(spark, root)
-        out
       }
     }
     assert(run(compact = true) == run(compact = false),
@@ -97,9 +95,9 @@ class LshIndexSpec extends AnyFunSuite {
     val same = "p q r s t u v w x y z p2 q2 r2 s2 t2 u2 v2 w2"
     val df = Seq((1L, same), (2L, same), (3L, same), (4L, same), (5L, same))
       .toDF("doc_id", "text")
-    val e0 = LshIndex.upsertBatch(spark, df.where(col("doc_id") <= 3), root,
+    val e0 = LshIndex(root).upsertBatch(spark, df.where(col("doc_id") <= 3),
       batchId = 0, dfCap = 3, bucketCap = 20)
-    val e1 = LshIndex.upsertBatch(spark, df.where(col("doc_id") > 3), root,
+    val e1 = LshIndex(root).upsertBatch(spark, df.where(col("doc_id") > 3),
       batchId = 1, dfCap = 3, bucketCap = 20)
     val p0 = e0.select("doc_a", "doc_b", "shingle_jaccard").collect()
     assert(p0.map(r => (r.getLong(0), r.getLong(1))).toSet ==
@@ -116,9 +114,9 @@ class LshIndexSpec extends AnyFunSuite {
     // batch 1's doc 3 finds every bucket full → no pairs, no state row.
     val same = "m n o p q r s t u v w m2 n2 o2 p2"
     val df = Seq((1L, same), (2L, same), (3L, same)).toDF("doc_id", "text")
-    val e0 = LshIndex.upsertBatch(spark, df.where(col("doc_id") <= 2), root,
+    val e0 = LshIndex(root).upsertBatch(spark, df.where(col("doc_id") <= 2),
       batchId = 0, dfCap = 20, bucketCap = 2)
-    val e1 = LshIndex.upsertBatch(spark, df.where(col("doc_id") === 3), root,
+    val e1 = LshIndex(root).upsertBatch(spark, df.where(col("doc_id") === 3),
       batchId = 1, dfCap = 20, bucketCap = 2)
     assert(e0.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
@@ -130,13 +128,13 @@ class LshIndexSpec extends AnyFunSuite {
                    doc(5, "ae"), doc(6, "af"))
     val df = docs.toDF("doc_id", "text")
     def ingest(root: String, k: Int): Seq[String] =
-      LshIndex.upsertBatch(spark, df.where(col("doc_id") % 3 === k), root,
+      LshIndex(root).upsertBatch(spark, df.where(col("doc_id") % 3 === k),
           batchId = k, dfCap = 20, bucketCap = 20)
         .orderBy("doc_a", "doc_b").collect().map(_.toString).toSeq
     val plain = tmp(); val compacted = tmp()
     ingest(plain, 0); ingest(plain, 1)
     ingest(compacted, 0); ingest(compacted, 1)
-    LshIndex.compact(spark, compacted)
+    LshIndex(compacted).compact(spark)
     // covered deltas are gone: ONE live base holding all three state
     // tables as tbl= slices (the grouped commit's atomicity unit)
     val live = DeltaStore(compacted).live()
@@ -159,7 +157,7 @@ class LshIndexSpec extends AnyFunSuite {
 
     val rootA = tmp()
     val serial = (0 until 3).map(k =>
-        LshIndex.upsertBatch(spark, batchDf(k), rootA,
+        LshIndex(rootA).upsertBatch(spark, batchDf(k),
           batchId = k, dfCap = 20, bucketCap = 20))
       .map(_.orderBy("doc_a", "doc_b").collect().map(_.toString).toSeq)
 
@@ -171,7 +169,7 @@ class LshIndexSpec extends AnyFunSuite {
       val next =
         if (k < 2) Some(Future(LshIndex.prepareBatch(spark, batchDf(k + 1))))
         else None
-      val (pf, st, cf) = LshIndex.upsertBatchPipelined(spark, batchDf(k), rootB,
+      val (pf, st, cf) = LshIndex(rootB).upsertBatchPipelined(spark, batchDf(k),
         batchId = k, dfCap = 20, bucketCap = 20,
         prepared = Some(prep), history = Some(hist), prevCommit = commit)
       hist = hist :+ st; commit = cf
@@ -230,8 +228,8 @@ class LshIndexSpec extends AnyFunSuite {
         val ks = b.select((col("doc_id") % 3).cast("int").as("k"))
           .distinct().collect().map(_.getInt(0)).sorted
         ks.foreach { k =>
-          graft.operators.LshIndex.upsertBatch(
-              spark, b.where(col("doc_id") % 3 === k), s"$base/stream", k,
+          LshIndex(s"$base/stream").upsertBatch(
+              spark, b.where(col("doc_id") % 3 === k), k,
               dfCap = 20, bucketCap = 20)
             .write.mode("overwrite").parquet(s"$base/emit/bt=$k")
         }

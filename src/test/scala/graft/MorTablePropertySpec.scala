@@ -40,7 +40,7 @@ class MorTablePropertySpec extends AnyFunSuite {
     for (seed <- Seq(3, 17, 58, 271)) {
       val t = MorTable(DeltaStore(
         Files.createTempDirectory("graft_morprop_").toString, 4),
-        Seq("k"))
+        Seq("k"), schema)
       val model = scala.collection.mutable.Map.empty[String, Int]
       var batch = 0
       randomOps(seed).foreach {
@@ -48,12 +48,12 @@ class MorTablePropertySpec extends AnyFunSuite {
           t.upsert(rows.toSeq.toDF("k", "v"), batch); batch += 1
           model ++= rows
         case Delete(ks) =>
-          t.delete(ks.toSeq.toDF("k"), batch, schema); batch += 1
+          t.delete(ks.toSeq.toDF("k"), batch); batch += 1
           model --= ks
         case Compact =>
-          t.compact(spark, schema)
+          t.compact(spark)
       }
-      val got = t.snapshot(spark, schema)
+      val got = t.snapshot(spark)
         .as[(String, Int)].collect().toMap
       assert(got == model.toMap,
         s"seed=$seed: got $got expected $model")

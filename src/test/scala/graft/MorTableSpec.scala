@@ -15,7 +15,7 @@ class MorTableSpec extends AnyFunSuite {
   private def tmp(): String = Files.createTempDirectory("graft_mor_").toString
 
   private def mor(root: String) =
-    MorTable(DeltaStore(root, buckets = 8), Seq("k"))
+    MorTable(DeltaStore(root, buckets = 8), Seq("k"), schema)
 
   private def rows(df: DataFrame): Seq[(String, Int)] =
     df.select("k", "v").as[(String, Int)].collect().sorted.toSeq
@@ -27,7 +27,7 @@ class MorTableSpec extends AnyFunSuite {
     t.upsert(Seq(("a", 1), ("b", 1), ("c", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("b", 2)).toDF("k", "v"), 1)
     t.upsert(Seq(("a", 3), ("d", 3)).toDF("k", "v"), 2)
-    assert(rows(t.snapshot(spark, schema)) ==
+    assert(rows(t.snapshot(spark)) ==
       Seq(("a", 3), ("b", 2), ("c", 1), ("d", 3)))
   }
 
@@ -35,9 +35,9 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(tmp())
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
-    val before = rows(t.snapshot(spark, schema))
+    val before = rows(t.snapshot(spark))
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1) // checkpoint replay of batch 1
-    assert(rows(t.snapshot(spark, schema)) == before)
+    assert(rows(t.snapshot(spark)) == before)
     assert(before == Seq(("a", 2), ("b", 1)))
   }
 
@@ -46,15 +46,15 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(root)
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
-    val before = rows(t.snapshot(spark, schema))
-    t.compact(spark, schema)
+    val before = rows(t.snapshot(spark))
+    t.compact(spark)
     // deltas folded away: exactly one live base and no live delta remain
     val live = t.store.live()
     assert(live.count(_._1) == 1, live)
     assert(!live.exists(!_._1), live)
-    assert(rows(t.snapshot(spark, schema)) == before)
+    assert(rows(t.snapshot(spark)) == before)
     t.upsert(Seq(("a", 9)).toDF("k", "v"), 2)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 9), ("b", 1)))
+    assert(rows(t.snapshot(spark)) == Seq(("a", 9), ("b", 1)))
   }
 
   test("lookup equals the snapshot restricted to the probe keys") {
@@ -62,7 +62,7 @@ class MorTableSpec extends AnyFunSuite {
     t.upsert((1 to 100).map(i => (s"k$i", i)).toDF("k", "v"), 0)
     t.upsert(Seq(("k7", 700)).toDF("k", "v"), 1)
     val probe = Seq("k7", "k42", "nope").toDF("k")
-    assert(rows(t.lookup(spark, schema, probe)) ==
+    assert(rows(t.lookup(spark, probe)) ==
       Seq(("k42", 42), ("k7", 700)))
   }
 
@@ -70,8 +70,8 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(tmp())
     t.upsert((1 to 30).map(i => (s"k$i", 0)).toDF("k", "v"), 0)
     t.upsert((10 to 40).map(i => (s"k$i", 1)).toDF("k", "v"), 1)
-    t.compact(spark, schema)
-    t.delete(Seq("k5", "k12", "k33", "k34").toDF("k"), 2, schema)
+    t.compact(spark)
+    t.delete(Seq("k5", "k12", "k33", "k34").toDF("k"), 2)
     t.upsert(((20 to 25).map(i => (s"k$i", 3)) :+ (("k5", 3))).toDF("k", "v"), 3)
     // a key-derived group semi-joined against the kept groups: the
     // rollup's shape of restriction
@@ -79,8 +79,8 @@ class MorTableSpec extends AnyFunSuite {
     def keep(df: DataFrame) =
       df.withColumn("g", $"k".substr(2, 9).cast("int") % 3)
         .join(org.apache.spark.sql.functions.broadcast(groups), Seq("g"), "left_semi")
-    val narrowed = t.snapshot(spark, schema, keep)
-    val want = rows(keep(t.snapshot(spark, schema)))
+    val narrowed = t.snapshot(spark, keep)
+    val want = rows(keep(t.snapshot(spark)))
     assert(want.map(_._1).toSet == (1 to 40).filter(_ % 3 != 1)
       .filterNot(Set(12, 33)).map(i => s"k$i").toSet)
     assert(rows(narrowed) == want)
@@ -104,12 +104,12 @@ class MorTableSpec extends AnyFunSuite {
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
     t.upsert(Seq(("b", 3)).toDF("k", "v"), 2)
-    assert(rows(t.snapshotAsOf(spark, schema, 1)) == Seq(("a", 2), ("b", 1)))
-    assert(rows(t.snapshotAsOf(spark, schema, 0)) == Seq(("a", 1), ("b", 1)))
-    t.compact(spark, schema) // folds through batch 2: history below is gone
-    assert(rows(t.snapshotAsOf(spark, schema, 2)) == Seq(("a", 2), ("b", 3)))
+    assert(rows(t.snapshotAsOf(spark, 1)) == Seq(("a", 2), ("b", 1)))
+    assert(rows(t.snapshotAsOf(spark, 0)) == Seq(("a", 1), ("b", 1)))
+    t.compact(spark) // folds through batch 2: history below is gone
+    assert(rows(t.snapshotAsOf(spark, 2)) == Seq(("a", 2), ("b", 3)))
     intercept[IllegalArgumentException] {
-      t.snapshotAsOf(spark, schema, 1).collect()
+      t.snapshotAsOf(spark, 1).collect()
     }
   }
 
@@ -117,16 +117,16 @@ class MorTableSpec extends AnyFunSuite {
     val root = tmp()
     val t = mor(root)
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
-    t.delete(Seq("a").toDF("k"), 1, schema)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("b", 1)))
-    assert(rows(t.snapshotAsOf(spark, schema, 0)) == Seq(("a", 1), ("b", 1)))
+    t.delete(Seq("a").toDF("k"), 1)
+    assert(rows(t.snapshot(spark)) == Seq(("b", 1)))
+    assert(rows(t.snapshotAsOf(spark, 0)) == Seq(("a", 1), ("b", 1)))
     // a later upsert resurrects the key
     t.upsert(Seq(("a", 5)).toDF("k", "v"), 2)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 5), ("b", 1)))
+    assert(rows(t.snapshot(spark)) == Seq(("a", 5), ("b", 1)))
     // delete again, then compact: the key's bytes physically leave storage
-    t.delete(Seq("a").toDF("k"), 3, schema)
-    t.compact(spark, schema)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("b", 1)))
+    t.delete(Seq("a").toDF("k"), 3)
+    t.compact(spark)
+    assert(rows(t.snapshot(spark)) == Seq(("b", 1)))
     val base = t.store.live().collectFirst { case (true, 3, d) => d.getPath }
     assert(base.isDefined, t.store.live())
     assert(spark.read.parquet(base.get)
@@ -139,42 +139,47 @@ class MorTableSpec extends AnyFunSuite {
       s"deleted key 'a' still on disk in one of $parts")
   }
 
+  /** The stream upsert body: each micro-batch, deduped on the key,
+    * becomes the delta of its stream batch id. */
+  private def upsertBody(t: MorTable)(b: DataFrame, id: Int): Unit =
+    t.upsert(b.dropDuplicates("k"), id)
+
   test("streaming sink drains, resumes with new data, and late batches win") {
     val root = tmp()
     val in = root + "/in"
     val t = mor(root + "/tbl")
     Seq(("a", 1), ("b", 1)).toDF("k", "v").write.parquet(in)
-    val stream = () => spark.readStream.schema(schema).parquet(in)
-    val q1 = t.sink(stream(), root + "/ckpt")
-    q1.awaitTermination(120000)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 1), ("b", 1)))
+    graft.streaming.Replay.drain(spark, root, schema)(upsertBody(t))
+    assert(rows(t.snapshot(spark)) == Seq(("a", 1), ("b", 1)))
     // second drain from the SAME checkpoint: only the new file, next batch id
     Seq(("a", 9), ("c", 9)).toDF("k", "v").write.mode("append").parquet(in)
-    val q2 = t.sink(stream(), root + "/ckpt")
-    q2.awaitTermination(120000)
-    assert(rows(t.snapshot(spark, schema)) ==
+    graft.streaming.Replay.drain(spark, root, schema)(upsertBody(t))
+    assert(rows(t.snapshot(spark)) ==
       Seq(("a", 9), ("b", 1), ("c", 9)))
   }
 
-  test("sink auto-compacts every n batches and the folded state stays right") {
+  test("compactBefore in a drain folds the committed tail; folded state stays right") {
     val root = tmp()
     val in = root + "/in"
     val tbl = root + "/tbl"
     val t = mor(tbl)
+    val fired = scala.collection.mutable.ArrayBuffer.empty[(Int, Boolean)]
+    def body(b: DataFrame, id: Int): Unit = {
+      fired += id -> t.compactBefore(spark, id, maxDeltas = 1)
+      upsertBody(t)(b, id)
+    }
     Seq(("a", 1)).toDF("k", "v").write.parquet(in)
-    val stream = () => spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    t.sink(stream(), root + "/ckpt", compactEvery = Some(2))
-      .awaitTermination(120000)
+    graft.streaming.Replay.drain(spark, root, schema, perFile = true)(body)
     Seq(("b", 2)).toDF("k", "v").write.mode("append").parquet(in)
     Seq(("a", 3)).toDF("k", "v").write.mode("append").parquet(in)
-    t.sink(stream(), root + "/ckpt", compactEvery = Some(2))
-      .awaitTermination(120000)
-    // batches 0,1,2 ran; compact fired after batch 1 → base 1 + delta 2
+    graft.streaming.Replay.drain(spark, root, schema, perFile = true)(body)
+    // batches 0,1,2 ran; the policy fired at the start of batch 2 →
+    // base 1 + delta 2
+    assert(fired == Seq(0 -> false, 1 -> false, 2 -> true))
     val live = t.store.live().map { case (isBase, id, _) => (isBase, id) }
     assert(live.contains((true, 1)), s"expected base 1 in $live")
     assert(!live.contains((false, 0)) && !live.contains((false, 1)), live.toString)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 3), ("b", 2)))
+    assert(rows(t.snapshot(spark)) == Seq(("a", 3), ("b", 2)))
   }
 
   test("manifest protocol: same LWW/compact/as-of/replay semantics, zero renames of data") {
@@ -182,17 +187,17 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(root)
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 2), ("b", 1)))
-    assert(rows(t.snapshotAsOf(spark, schema, 0)) == Seq(("a", 1), ("b", 1)))
+    assert(rows(t.snapshot(spark)) == Seq(("a", 2), ("b", 1)))
+    assert(rows(t.snapshotAsOf(spark, 0)) == Seq(("a", 1), ("b", 1)))
     // replay of batch 1 replaces its manifest entry (new epoch prefix)
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 2), ("b", 1)))
-    t.compact(spark, schema)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 2), ("b", 1)))
+    assert(rows(t.snapshot(spark)) == Seq(("a", 2), ("b", 1)))
+    t.compact(spark)
+    assert(rows(t.snapshot(spark)) == Seq(("a", 2), ("b", 1)))
     // a replayed delta at/below the base id is ignored by the covering rule
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
     t.upsert(Seq(("b", 9)).toDF("k", "v"), 2)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 2), ("b", 9)))
+    assert(rows(t.snapshot(spark)) == Seq(("a", 2), ("b", 9)))
     // layout is pointer + manifests + data prefixes — no delta=/base= dirs
     val names = new java.io.File(root).listFiles().map(_.getName).toSet
     assert(names.contains("_current") && names.contains("data"), names.toString)
@@ -208,10 +213,10 @@ class MorTableSpec extends AnyFunSuite {
     orphan.mkdirs()
     Seq(("zz", 666)).toDF("k", "v").write.mode("overwrite")
       .parquet(orphan.getPath)
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 1)), "orphan invisible")
+    assert(rows(t.snapshot(spark)) == Seq(("a", 1)), "orphan invisible")
     t.store.heal()
     assert(!new java.io.File(root, "data/d9_e99").exists(), "orphan GC'd")
-    assert(rows(t.snapshot(spark, schema)) == Seq(("a", 1)))
+    assert(rows(t.snapshot(spark)) == Seq(("a", 1)))
   }
 
   test("schema evolution: a column added in later deltas null-fills older ones") {
@@ -220,20 +225,21 @@ class MorTableSpec extends AnyFunSuite {
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
     val wide = Seq(("b", 2, "x")).toDF("k", "v", "w")
     t.upsert(wide, 1)
-    val got = t.snapshot(spark, wide.schema)
+    val tw = t.copy(schema = wide.schema)
+    val got = tw.snapshot(spark)
       .select("k", "v", "w").as[(String, Int, Option[String])]
       .collect().sortBy(_._1).toSeq
     assert(got == Seq(("a", 1, None), ("b", 2, Some("x"))))
     // as-of reads stay correct across the schema boundary, in both
     // directions: the wide schema over pre-widening history null-fills,
     // and the fold still orders by batch
-    val asOf0 = t.snapshotAsOf(spark, wide.schema, 0)
+    val asOf0 = tw.snapshotAsOf(spark, 0)
       .select("k", "v", "w").as[(String, Int, Option[String])]
       .collect().sortBy(_._1).toSeq
     assert(asOf0 == Seq(("a", 1, None), ("b", 1, None)))
     // compaction folds across the boundary under the wide schema
-    t.compact(spark, wide.schema)
-    val folded = t.snapshot(spark, wide.schema)
+    tw.compact(spark)
+    val folded = tw.snapshot(spark)
       .select("k", "v", "w").as[(String, Int, Option[String])]
       .collect().sortBy(_._1).toSeq
     assert(folded == got)
@@ -249,16 +255,17 @@ class MorTableSpec extends AnyFunSuite {
     // batch 1 writes under the widened schema, with a value only the
     // wide type can hold
     t.upsert(Seq(("b", 3L), ("c", 9000000000L)).toDF("k", "v"), 1)
-    def snap() = t.snapshot(spark, wide)
+    val tw = t.copy(schema = wide)
+    def snap() = tw.snapshot(spark)
       .as[(String, Long)].collect().sortBy(_._1).toSeq
     assert(snap() == Seq(("a", 1L), ("b", 3L), ("c", 9000000000L)),
       "int history must read exactly under the widened long schema")
     // as-of back across the widening boundary
-    val asOf0 = t.snapshotAsOf(spark, wide, 0)
+    val asOf0 = tw.snapshotAsOf(spark, 0)
       .as[(String, Long)].collect().sortBy(_._1).toSeq
     assert(asOf0 == Seq(("a", 1L), ("b", 2L)))
     // compaction folds mixed-width history under the wide schema
-    t.compact(spark, wide)
+    tw.compact(spark)
     assert(snap() == Seq(("a", 1L), ("b", 3L), ("c", 9000000000L)))
 
     // decimal precision growth: decimal(5,2) history under decimal(9,2)
@@ -272,7 +279,7 @@ class MorTableSpec extends AnyFunSuite {
     val d92 = Seq(("b", BigDecimal("1234567.89"))).toDF("k", "v")
       .select($"k", $"v".cast(DecimalType(9, 2)).as("v"))
     t2.upsert(d92, 1)
-    val got2 = t2.snapshot(spark, wideDec)
+    val got2 = t2.copy(schema = wideDec).snapshot(spark)
       .as[(String, BigDecimal)].collect().sortBy(_._1).toSeq
     assert(got2 == Seq(("a", BigDecimal("123.45")), ("b", BigDecimal("1234567.89"))),
       "decimal(5,2) history must read exactly under decimal(9,2)")
@@ -283,7 +290,7 @@ class MorTableSpec extends AnyFunSuite {
     t.upsert(Seq(("a", 9000000000L)).toDF("k", "v"), 0) // v: long
     val narrow = Seq(("x", 0)).toDF("k", "v").schema    // v: int
     intercept[Exception] {
-      t.snapshot(spark, narrow).collect()
+      t.copy(schema = narrow).snapshot(spark).collect()
     }
   }
 
@@ -294,25 +301,8 @@ class MorTableSpec extends AnyFunSuite {
     // rows are actually materialized — never silently coerce
     val retyped = Seq(("x", "s")).toDF("k", "v").schema
     intercept[Exception] {
-      t.snapshot(spark, retyped).collect()
+      t.copy(schema = retyped).snapshot(spark).collect()
     }
-  }
-
-  test("sink with orderCol keeps the highest-version row when a micro-batch carries several versions of a key") {
-    val root = tmp()
-    val in = root + "/in"
-    val t = MorTable(DeltaStore(root + "/tbl", buckets = 8), Seq("k"))
-    // one file → one micro-batch holding THREE versions of key "a"
-    val vschema = Seq(("x", 0, 0L)).toDF("k", "v", "ver").schema
-    Seq(("a", 10, 1L), ("a", 30, 3L), ("a", 20, 2L), ("b", 1, 1L))
-      .toDF("k", "v", "ver").write.parquet(in)
-    t.sink(spark.readStream.schema(vschema).parquet(in), root + "/ckpt",
-        orderCol = Some("ver"))
-      .awaitTermination(120000)
-    val got = t.snapshot(spark, vschema)
-      .select("k", "v").as[(String, Int)].collect().sorted.toSeq
-    assert(got == Seq(("a", 30), ("b", 1)),
-      "the highest-ver row must win within the micro-batch")
   }
 
   test("opening a store under the wrong commit protocol fails loudly instead of reading empty") {
@@ -320,18 +310,18 @@ class MorTableSpec extends AnyFunSuite {
     val root = tmp()
     Seq(("a", 1)).toDF("k", "v").write.parquet(root + "/delta=0/gbucket=0")
     intercept[IllegalArgumentException] {
-      mor(root).snapshot(spark, schema).collect()
+      mor(root).snapshot(spark).collect()
     }
   }
 
   test("bloom sidecars skip deltas that cannot contain a probe key, without changing any result") {
     val root = tmp()
-    val t = MorTable(DeltaStore(root, buckets = 8), Seq("k"),
+    val t = MorTable(DeltaStore(root, buckets = 8), Seq("k"), schema,
       bloomItems = Some(1000L))
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("c", 2)).toDF("k", "v"), 1)
     t.upsert(Seq(("d", 3)).toDF("k", "v"), 2)
-    t.delete(Seq("a").toDF("k"), 3, schema)
+    t.delete(Seq("a").toDF("k"), 3)
     // probing d keeps its own delta and drops the c-only delta
     // (xxhash64 and the bloom are deterministic, so this is a fixed
     // outcome, not a flaky 1%-fpp draw)
@@ -343,16 +333,16 @@ class MorTableSpec extends AnyFunSuite {
     // skipped tombstone would resurrect the old version
     val keptA = t.bloomLiveEntries(Seq("a").toDF("k"))
     assert(keptA.exists(e => !e._1 && e._2 == 3))
-    assert(t.lookup(spark, schema, Seq("a").toDF("k")).count() == 0,
+    assert(t.lookup(spark, Seq("a").toDF("k")).count() == 0,
       "delta skipping must not hide the delete")
     // identical results to the same store read without blooms
-    val plain = MorTable(DeltaStore(root, buckets = 8), Seq("k"))
+    val plain = mor(root)
     val probe = Seq("a", "b", "c", "d", "nope").toDF("k")
-    assert(rows(t.lookup(spark, schema, probe)) ==
-      rows(plain.lookup(spark, schema, probe)))
+    assert(rows(t.lookup(spark, probe)) ==
+      rows(plain.lookup(spark, probe)))
     // after compaction the base (no bloom) is always read
-    t.compact(spark, schema)
-    assert(rows(t.lookup(spark, schema, probe)) ==
+    t.compact(spark)
+    assert(rows(t.lookup(spark, probe)) ==
       Seq(("b", 1), ("c", 2), ("d", 3)))
   }
 
@@ -360,11 +350,11 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(tmp())
     t.upsert(Seq(("a", 1), ("b", 1), ("c", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("b", 2)).toDF("k", "v"), 1)
-    t.delete(Seq("c").toDF("k"), 2, schema)
+    t.delete(Seq("c").toDF("k"), 2)
     // batch 3 re-upserts "a" with the SAME value — touched but unchanged
     t.upsert(Seq(("a", 1), ("d", 4)).toDF("k", "v"), 3)
     def feed(from: Int, to: Int): Seq[(String, String, Option[Int])] =
-      t.changes(spark, schema, from, to)
+      t.changes(spark, from, to)
         .select("k", "op", "v").as[(String, String, Option[Int])]
         .collect().sortBy(_._1).toSeq
     assert(feed(0, 3) == Seq(
@@ -378,7 +368,7 @@ class MorTableSpec extends AnyFunSuite {
     assert(feed(3, 3).isEmpty, "an empty range is an empty feed")
     // a key inserted AND deleted inside the range nets to nothing
     t.upsert(Seq(("e", 9)).toDF("k", "v"), 4)
-    t.delete(Seq("e").toDF("k"), 5, schema)
+    t.delete(Seq("e").toDF("k"), 5)
     assert(feed(3, 5).isEmpty)
   }
 
@@ -387,9 +377,9 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(root)
     t.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("a", 2)).toDF("k", "v"), 1)
-    t.delete(Seq("b").toDF("k"), 2, schema)
+    t.delete(Seq("b").toDF("k"), 2)
     // current export: readable WITHOUT the library, fold already paid
-    t.exportSnapshot(spark, schema, root + "/exp")
+    t.exportSnapshot(spark, root + "/exp")
     val plain = spark.read.parquet(root + "/exp")
       .select("k", "v").as[(String, Int)].collect().sorted.toSeq
     assert(plain == Seq(("a", 2)))
@@ -397,12 +387,12 @@ class MorTableSpec extends AnyFunSuite {
       new java.io.File(root + "/exp", "_PROVENANCE").toPath))
     assert(prov.contains("asOfBatch=2") && prov.contains("keys=k"), prov)
     // as-of export pins the pre-delete horizon
-    t.exportSnapshot(spark, schema, root + "/exp1", asOf = Some(1))
+    t.exportSnapshot(spark, root + "/exp1", asOf = Some(1))
     assert(spark.read.parquet(root + "/exp1")
       .select("k", "v").as[(String, Int)].collect().sorted.toSeq ==
       Seq(("a", 2), ("b", 1)))
     // partitioned layout for downstream pruning
-    t.exportSnapshot(spark, schema, root + "/expp", partitionCols = Seq("k"))
+    t.exportSnapshot(spark, root + "/expp", partitionCols = Seq("k"))
     assert(new java.io.File(root + "/expp").listFiles()
       .exists(_.getName == "k=a"))
   }
@@ -412,15 +402,15 @@ class MorTableSpec extends AnyFunSuite {
     val t = mor(root)
     t.upsert(Seq(("a", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("b", 2)).toDF("k", "v"), 1)
-    t.compact(spark, schema) // base 1
+    t.compact(spark) // base 1
     // checkpoint replay of batch 0 after the compact: covered, dead bytes
     t.upsert(Seq(("a", 1)).toDF("k", "v"), 0)
     t.upsert(Seq(("c", 3)).toDF("k", "v"), 2)
-    t.compact(spark, schema) // base 2 — must also GC the dead delta 0
+    t.compact(spark) // base 2 — must also GC the dead delta 0
     val base = t.store.live().collectFirst { case (true, 2, d) => d.getName }
     val left = new java.io.File(root, "data").list().toSeq
     assert(base.isDefined && left == base.toSeq, left.toString)
-    assert(rows(t.snapshot(spark, schema)) ==
+    assert(rows(t.snapshot(spark)) ==
       Seq(("a", 1), ("b", 2), ("c", 3)))
   }
 }

@@ -141,19 +141,19 @@ class Scd2IndexSpec extends AnyFunSuite {
     val w1 = all.where(col("us") <= 4000L && col("tie") =!= 2L)
     val w2 = all.where(col("us") > 4000L)
     val r = root("latemor")
-    val bronze = MorTable(DeltaStore(s"$r/bronze"), Seq("tie"))
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("tie", LongType), StructField("us", LongType),
+      StructField("attr", IntegerType)))
+    val bronze = MorTable(DeltaStore(s"$r/bronze"), Seq("tie"), schema)
     bronze.upsert(w1, 1); Scd2Index(s"$r/silver").appendBatch(spark, w1, 1)
     bronze.upsert(w2, 2); Scd2Index(s"$r/silver").appendBatch(spark, w2, 2)
     bronze.upsert(late, 3)
     intercept[IllegalArgumentException] {
       Scd2Index(s"$r/silver").appendBatch(spark, late, 3)
     }
-    val schema = StructType(Seq(StructField("k", LongType),
-      StructField("tie", LongType), StructField("us", LongType),
-      StructField("attr", IntegerType)))
     val affected = late.select("k").distinct()
     val repaired = graft.operators.Scd2.intervals(
-        bronze.snapshot(spark, schema).join(affected, Seq("k"), "left_semi"),
+        bronze.snapshot(spark).join(affected, Seq("k"), "left_semi"),
         "k", "us", "tie", "attr",
         fromName = "valid_from_us", toName = "valid_to_us")
       .select("k", "island", "attr", "valid_from_us", "valid_to_us",
@@ -192,17 +192,17 @@ class Scd2IndexSpec extends AnyFunSuite {
     val w2 = all.where(col("us") > 4000L && col("us") <= 10000L)
     val w3 = all.where(col("us") > 10000L)
     val r = root("backfill")
-    val bronze = MorTable(DeltaStore(s"$r/bronze"), Seq("tie"))
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("tie", LongType), StructField("us", LongType),
+      StructField("attr", IntegerType)))
+    val bronze = MorTable(DeltaStore(s"$r/bronze"), Seq("tie"), schema)
     bronze.upsert(w1, 1); Scd2Index(s"$r/silver").appendBatch(spark, w1, 1)
     bronze.upsert(w2, 2); Scd2Index(s"$r/silver").appendBatch(spark, w2, 2)
     bronze.upsert(late, 3)
     intercept[IllegalArgumentException] {
       Scd2Index(s"$r/silver").appendBatch(spark, late, 3)
     }
-    val schema = StructType(Seq(StructField("k", LongType),
-      StructField("tie", LongType), StructField("us", LongType),
-      StructField("attr", IntegerType)))
-    val history = bronze.snapshot(spark, schema)
+    val history = bronze.snapshot(spark)
       .join(late.select("k").distinct(), Seq("k"), "left_semi")
     Scd2Index(s"$r/silver").backfill(spark, history, 4)
     // index-only read now equals one-shot over everything so far

@@ -88,7 +88,7 @@ class StreamComposeSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
 
   private def rollupRows(r: IncrementalRollup) =
-    r.monthly(spark, histSchema)
+    r.monthly(spark)
       .select("coin_id", "year", "month", "min_price_usd", "max_price_usd")
       .collect().map(_.toSeq).toSet
 
@@ -104,8 +104,8 @@ class StreamComposeSpec extends AnyFunSuite {
       .toDF("coin_id", "start_ms")
       .select(col("coin_id"),
         to_date(timestamp_millis(col("start_ms"))).as("fetch_date"))
-    val viaLookup = r.table.lookup(spark, histSchema, keys).collect().toSet
-    val plain = r.table.snapshot(spark, histSchema)
+    val viaLookup = r.table.lookup(spark, keys).collect().toSet
+    val plain = r.table.snapshot(spark)
       .where(col("coin_id").isin(probe.map(_.toString): _*))
       .collect().toSet
     assert(viaLookup.nonEmpty)
@@ -123,7 +123,7 @@ class StreamComposeSpec extends AnyFunSuite {
       .repartition(2).write.parquet(inDir)
 
     val sch = spark.read.parquet(inDir).schema
-    val r = IncrementalRollup(table, rollup)
+    val r = IncrementalRollup(table, rollup, histSchema)
     val src = spark.readStream.schema(sch).parquet(inDir)
     val deduped = StreamDedup.withinWatermark(src, "ts", "2 hours",
       Seq("key", "ts"))
@@ -148,7 +148,7 @@ class StreamComposeSpec extends AnyFunSuite {
 
     // 1. the drained history table == the q81-green batch replay
     val want = expectedSessions(evs)
-    val got = r.table.snapshot(spark, histSchema)
+    val got = r.table.snapshot(spark)
       .where(col("coin_id") =!= "999")
       .select(col("coin_id").cast("long"),
         (col("fetch_date").cast("timestamp").cast("long") * 1000).as("day_ms"),
@@ -167,7 +167,7 @@ class StreamComposeSpec extends AnyFunSuite {
 
     // 2. the rollup == a one-shot recompute over the final table (q85's
     // incremental ≡ full-recompute contract)
-    assert(rollupRows(r) == recompute(r.table.snapshot(spark, histSchema)))
+    assert(rollupRows(r) == recompute(r.table.snapshot(spark)))
 
     // 3. bucket-pruned point lookups agree with the snapshot
     assertLookups(r, want, Seq(0L, 3L, 5L))
@@ -182,7 +182,7 @@ class StreamComposeSpec extends AnyFunSuite {
     (evs ++ evs).toDF("key", "ts", "value")
       .repartition(2).write.parquet(inDir)
     val sch = spark.read.parquet(inDir).schema
-    val r = IncrementalRollup(table, rollup)
+    val r = IncrementalRollup(table, rollup, histSchema)
 
     // die between the two commits of the first non-empty merge: the
     // table delta is committed, the rollup delta never is
@@ -224,11 +224,11 @@ class StreamComposeSpec extends AnyFunSuite {
     // batch's delta, and the rollup is behind it (the crash window)
     val crashed = r.table.store.live().collect { case (false, id, _) => id }.max
     assert(!r.rollup.store.live().exists(_._2 == crashed))
-    r.table.snapshot(spark, histSchema).count() // must not throw
+    r.table.snapshot(spark).count() // must not throw
 
     run() // resume: checkpoint re-delivers the batch
     val want = expectedSessions(evs)
-    val hist = r.table.snapshot(spark, histSchema)
+    val hist = r.table.snapshot(spark)
     assert(hist.where(col("coin_id") =!= "999").count() == want.size,
       "after resume the history must hold exactly the replayed sessions")
     assert(rollupRows(r) == recompute(hist),

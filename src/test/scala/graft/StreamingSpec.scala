@@ -24,7 +24,7 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val schema = hist().schema
 
   test("mergeBatch upserts history and maintains only touched rollup groups") {
-    val r = IncrementalRollup(tmp() + "/hist", tmp() + "/roll")
+    val r = IncrementalRollup(tmp() + "/hist", tmp() + "/roll", schema)
     r.mergeBatch(spark,
       hist(("btc", "2024-01-01", dec("10")), ("btc", "2024-01-02", dec("12")),
         ("eth", "2024-01-01", dec("5"))), 0)
@@ -32,14 +32,14 @@ class StreamingSpec extends AnyFunSuite {
     r.mergeBatch(spark,
       hist(("btc", "2024-01-01", dec("11")), ("eth", "2024-02-01", dec("7"))), 1)
 
-    val t = r.table.snapshot(spark, schema)
+    val t = r.table.snapshot(spark)
       .select(col("coin_id"), col("fetch_date").cast("string"), col("price_usd").cast("double"))
       .as[(String, String, Double)].collect().toSet
     assert(t == Set(
       ("btc", "2024-01-01", 11.0), ("btc", "2024-01-02", 12.0),
       ("eth", "2024-01-01", 5.0), ("eth", "2024-02-01", 7.0)))
 
-    val roll = r.monthly(spark, schema)
+    val roll = r.monthly(spark)
       .select(col("coin_id"), col("year"), col("month"),
         col("min_price_usd").cast("double"), col("max_price_usd").cast("double"))
       .as[(String, Int, Int, Double, Double)].collect().toSet
@@ -53,12 +53,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("mergeBatch is idempotent (re-delivered batch changes nothing)") {
-    val r = IncrementalRollup(tmp() + "/hist", tmp() + "/roll")
+    val r = IncrementalRollup(tmp() + "/hist", tmp() + "/roll", schema)
     val b = hist(("btc", "2024-03-01", dec("42")))
     r.mergeBatch(spark, b, 0)
     r.mergeBatch(spark, b, 0)
-    assert(r.table.snapshot(spark, schema).count() == 1)
-    assert(r.monthly(spark, schema).count() == 1)
+    assert(r.table.snapshot(spark).count() == 1)
+    assert(r.monthly(spark).count() == 1)
     // the replay replaced its own deltas instead of adding new ones
     assert(r.table.store.deltaCount() == 1 && r.rollup.store.deltaCount() == 1)
   }
@@ -107,9 +107,9 @@ class StreamingSpec extends AnyFunSuite {
       .parquet(in)
     val q = IncrementalRollup.start(spark, stream, table, rollup, ckpt)
     q.awaitTermination(120000)
-    val ir = IncrementalRollup(table, rollup)
-    assert(ir.table.snapshot(spark, schema).count() == 2)
-    val r = ir.monthly(spark, schema)
+    val ir = IncrementalRollup(table, rollup, schema)
+    assert(ir.table.snapshot(spark).count() == 2)
+    val r = ir.monthly(spark)
       .select(col("min_price_usd").cast("double"), col("max_price_usd").cast("double"))
       .as[(Double, Double)].collect().toSeq
     assert(r == Seq((9.0, 10.0)))

@@ -158,18 +158,17 @@ class TrainingOpsSpec extends AnyFunSuite {
       .select(col("doc_id"), explode(expr("transform(sequence(1, size(toks) - 1), " +
         "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))")).as("bi"))
       .withColumn("w1", split(col("bi"), " ").getItem(0))
+    val idx = graft.operators.LmIndex(root)
     (0 to 3).foreach { k =>
-      graft.operators.LmIndex.appendBatch(
-        spark, docBi.where(col("doc_id") % 4 === k), root, k)
-      if (k == 1) graft.operators.LmIndex.compact(spark, root)
+      idx.compactBefore(spark, k, maxDeltas = 1)
+      idx.appendBatch(spark, docBi.where(col("doc_id") % 4 === k), k)
     }
     // checkpoint replay of batch 2: the grouped delta must be REPLACED,
     // never double-counted
-    graft.operators.LmIndex.appendBatch(
-      spark, docBi.where(col("doc_id") % 4 === 2), root, 2)
-    val gotBi = graft.operators.LmIndex.counts(spark, root, "bi")
+    idx.appendBatch(spark, docBi.where(col("doc_id") % 4 === 2), 2)
+    val gotBi = idx.counts(spark, "bi")
       .as[(String, Long)].collect().toMap
-    val gotUni = graft.operators.LmIndex.counts(spark, root, "uni")
+    val gotUni = idx.counts(spark, "uni")
       .as[(String, Long)].collect().toMap
     val rows = docBi.select("bi", "w1").as[(String, String)].collect()
     val expBi = rows.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
@@ -208,17 +207,16 @@ class TrainingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("sketchidx").toString
     val ev = spark.read.parquet(s"$dir/events.parquet")
+    val idx = graft.operators.SketchIndex(root)
     (0 to 3).foreach { k =>
-      graft.operators.SketchIndex.appendBatch(
-        spark, ev.where(col("event_id") % 4 === k), root, k)
-      if (k == 1) graft.operators.SketchIndex.compact(spark, root)
+      idx.compactBefore(spark, k, maxDeltas = 1)
+      idx.appendBatch(spark, ev.where(col("event_id") % 4 === k), k)
     }
     // checkpoint replay of batch 3: grouped delta replaced, never doubled
-    graft.operators.SketchIndex.appendBatch(
-      spark, ev.where(col("event_id") % 4 === 3), root, 3)
+    idx.appendBatch(spark, ev.where(col("event_id") % 4 === 3), 3)
     // CMS cells == one-shot (counts additive; the one-shot cell value is
     // the sum over types colliding into the cell)
-    val gotCms = graft.operators.SketchIndex.cms(spark, root)
+    val gotCms = idx.cms(spark)
       .as[(Int, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     val perType = ev.groupBy("event_type")
       .agg(count(lit(1)).as("n"))
@@ -235,7 +233,7 @@ class TrainingOpsSpec extends AnyFunSuite {
     }.groupBy(_._1).map { case (k2, v) => k2 -> v.map(_._2).sum }
     assert(gotCms == expCms, "cms cells diverge from one-shot")
     // KMV: the k-th smallest distinct hash per type == one-shot
-    val gotKmv = graft.operators.SketchIndex.kmv(spark, root)
+    val gotKmv = idx.kmv(spark)
       .as[(String, Long)].collect().groupBy(_._1)
       .map { case (t, hs) => t -> hs.map(_._2).sorted.toSeq }
     val expHashes = ev.select(col("event_type"),
