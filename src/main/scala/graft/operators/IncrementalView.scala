@@ -32,29 +32,28 @@ final case class IncrementalView(store: DeltaStore, groupSchema: StructType)
     extends Maintained {
   import IncrementalView._
 
+  private def keys: Seq[String] = groupSchema.fieldNames.toSeq
+
   /** Apply one change-feed batch: `feed` carries the group columns, an
     * `op` column (insert / delete / update_pre / update_post — the
     * preimage variant of [[MorTable.changes]]), and `valueCol`. An
     * unknown op fails the job (raise_error), not silently mis-signs. */
-  def applyFeed(feed: DataFrame, groupCols: Seq[String],
-                valueCol: String, batchId: Int): Unit = {
+  def applyFeed(feed: DataFrame, valueCol: String, batchId: Int): Unit = {
     val sgn = when(col("op").isin("insert", "update_post"), lit(1))
       .when(col("op").isin("delete", "update_pre"), lit(-1))
       .otherwise(raise_error(concat(lit("unknown change-feed op: "), col("op"))))
     val delta = feed
-      .select(groupCols.map(col) :+ sgn.as("sgn") :+ col(valueCol).as("v"): _*)
-      .groupBy(groupCols.map(col): _*)
+      .select(keys.map(col) :+ sgn.as("sgn") :+ col(valueCol).as("v"): _*)
+      .groupBy(keys.map(col): _*)
       .agg(
         sum(Q.dec2(col("v")).cast(DecimalType(28, 2)) * col("sgn")).as("vsum"),
         sum(col("sgn").cast("long")).as("cnt"))
-      .select(groupCols.map(col) :+
+      .select(keys.map(col) :+
         col("vsum").cast(DecimalType(28, 2)) :+ col("cnt"): _*)
     store.append(
-      delta.withColumn("gbucket", store.gb(groupStruct(groupCols))),
-      batchId, within = groupCols.map(col))
+      delta.withColumn("gbucket", store.gb(groupStruct(keys))),
+      batchId, within = keys.map(col))
   }
-
-  private def keys: Seq[String] = groupSchema.fieldNames.toSeq
 
   /** The current view: fold of the live additive deltas; groups whose
     * membership netted to zero are gone. */

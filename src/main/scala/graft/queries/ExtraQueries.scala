@@ -1453,10 +1453,11 @@ object ExtraQueries {
     // additive; kmv keeps each batch's k smallest distinct hashes —
     // the k smallest of the union of per-batch k-smallest ARE the
     // corpus k smallest), and the compaction policy folding batches
-    // 0-1 before batch 2 proves all three survive their folds. Serving rebuilds q44's exact report from
-    // the MAINTAINED state — the corpus is never re-sketched — and
-    // the mergeability being LOSSLESS is what lets q44's one-shot
-    // oracle gate this entry VERBATIM.
+    // 0-1 before batch 2 proves all three survive their folds.
+    // Serving rebuilds q44's exact report from the MAINTAINED state —
+    // the corpus is never re-sketched — and the mergeability being
+    // LOSSLESS is what lets q44's one-shot oracle gate this entry
+    // VERBATIM.
     Q(
       "q181_incremental_sketches",
       (s, dir) => {

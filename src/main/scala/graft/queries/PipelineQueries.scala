@@ -102,7 +102,7 @@ object PipelineQueries {
           year(col("fetch_date")).as("yr"),
           month(col("fetch_date")).as("mon"),
           col("op"), col("price_usd")),
-      Seq("coin_id", "yr", "mon"), "price_usd", b)
+      "price_usd", b)
 
   /** q112/q115's report: fold the view's history, then read it as
     * (coin_id, yr, mon, sum_price, cnt). */
@@ -617,8 +617,7 @@ object PipelineQueries {
     // the four batches of [[replayBatches]] run as batch waves through
     // IncrementalRollup.mergeBatch, each upserting its rows into the
     // history MorTable and recomputing only the (coin, year, month)
-    // groups it touched into the rollup MorTable; both tables' compaction
-    // policy folds batches 0-1 before batch 2. The replay models how
+    // groups it touched into the rollup MorTable. The replay models how
     // late data actually arrives — in overlapping TIME windows whose
     // boundary years are written twice with batch-dependent values, so
     // later batches genuinely overwrite earlier ones (and can lower a
@@ -1301,9 +1300,9 @@ object PipelineQueries {
     // codegen stage, and append a 3-row partial-profile delta; the
     // current profile is the fold (min of mins / max of maxes / summed
     // counts — all mergeable exactly, no sketches needed). The
-    // compaction policy folds batches 0-2 into a base before batch 3. Oracle =
-    // the ONE-SHOT profile over the whole table: maintenance ≡
-    // recompute, the view-maintenance theorem for statistics.
+    // compaction policy folds batches 0-2 into a base before batch 3.
+    // Oracle = the ONE-SHOT profile over the whole table: maintenance
+    // ≡ recompute, the view-maintenance theorem for statistics.
     Q(
       "q108_incremental_stats",
       (s, dir) => {

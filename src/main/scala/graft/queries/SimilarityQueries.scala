@@ -1581,8 +1581,8 @@ object SimilarityQueries {
     // ingest batches each encode ONLY their own vectors and append the
     // codes to operators/CodeIndex's DeltaStore (O(batch) writes, one
     // commit per batch; the policy's fold before batch 2 proves codes
-    // survive it); the ADC search then serves the fixed query workload from
-    // the MAINTAINED store — the corpus is never re-encoded. Sign-
+    // survive it); the ADC search then serves the fixed query workload
+    // from the MAINTAINED store — the corpus is never re-encoded. Sign-
     // pattern codes are per-row deterministic, so the maintained table
     // is bit-identical to q98's inline one and the SAME oracle hashes
     // both: one green row certifies encode-once ingest, delta/base

@@ -655,10 +655,11 @@ object TextQueries {
     // stored state), committed as ONE grouped atomic delta holding
     // BOTH tables (numerator and denominator can never be at
     // different batch horizons); the policy's fold before batch 2
-    // proves counts survive the additive sum-by-key fold. Scoring then serves from
-    // the MAINTAINED model — the corpus is never re-counted. Counts
-    // are additive, so maintained ≡ one-shot recompute EXACTLY and
-    // q169's oracle gates this entry VERBATIM (the q109/q114 move).
+    // proves counts survive the additive sum-by-key fold. Scoring then
+    // serves from the MAINTAINED model — the corpus is never
+    // re-counted. Counts are additive, so maintained ≡ one-shot
+    // recompute EXACTLY and q169's oracle gates this entry VERBATIM
+    // (the q109/q114 move).
     Q(
       "q171_incremental_lm_counts",
       (s, dir) => {

@@ -38,18 +38,15 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * fold and aggregate run over the touched slice only; the scan under
   * it still lists and reads every bucket, because the store buckets by
   * the hash of (coin_id, fetch_date), which no (coin, month) group
-  * prunes. Both tables run [[graft.operators.Maintained]]'s policy at
-  * the start of every non-empty batch with `maxDeltas` 1: more than one
-  * committed delta below the batch folds them into the base, so a long
-  * stream lists and folds at most a base and two deltas per table.
+  * prunes. The tables get no compaction policy here: every batch adds
+  * one delta to each, so read cost grows with the number of batches
+  * until [[MorTable.compact]] folds them.
   *
   * `schema` is the batches' coin_history shape; the rollup's schema is
   * derived from it.
   */
 final case class IncrementalRollup(tableDir: String, rollupDir: String,
                                    schema: StructType) {
-  import IncrementalRollup.maxDeltas
-
   val table = MorTable(DeltaStore(tableDir), Seq("coin_id", "fetch_date"), schema)
   val rollup = MorTable(DeltaStore(rollupDir), Seq("coin_id", "year", "month"),
     new StructType()
@@ -63,8 +60,6 @@ final case class IncrementalRollup(tableDir: String, rollupDir: String,
     * batch backfills, one call per batch in id order. */
   def mergeBatch(spark: SparkSession, batch0: DataFrame, batchId: Int): Unit = {
     if (batch0.isEmpty) return
-    table.compactBefore(spark, batchId, maxDeltas)
-    rollup.compactBefore(spark, batchId, maxDeltas)
     val batch = batch0.dropDuplicates("coin_id", "fetch_date")
     table.upsert(batch, batchId)
 
@@ -95,10 +90,6 @@ final case class IncrementalRollup(tableDir: String, rollupDir: String,
 }
 
 object IncrementalRollup {
-
-  /** The live committed deltas either table keeps before a batch folds
-    * them, the threshold the batch-wave queries use. */
-  private val maxDeltas = 1
 
   /** Start the stream. `input` is a streaming DataFrame in coin_history
     * shape (coin_id, fetch_date, price_usd, ...). Trigger.AvailableNow

@@ -92,10 +92,10 @@ class AutoCompactSpec extends AnyFunSuite {
   /** Five batches under `compactBefore(k, maxDeltas = 2)` beside a twin
     * store that never compacts: the policy fires at k = 3 only, leaves
     * no live delta below 3, and every append result and the final read
-    * match the twin's. */
-  private def policyAcrossBatches[I <: graft.operators.Maintained](
-      tag: String, mk: String => I)(append: (I, Int) => Any)
-      (read: I => Seq[org.apache.spark.sql.DataFrame]): Unit = {
+    * match the twin's. Returns the policy side's append results. */
+  private def policyAcrossBatches[I <: graft.operators.Maintained, R](
+      tag: String, mk: String => I)(append: (I, Int) => R)
+      (read: I => Seq[org.apache.spark.sql.DataFrame]): Seq[R] = {
     val idx = mk(root(s"${tag}_policy"))
     val twin = mk(root(s"${tag}_twin"))
     val runs = (0 until 5).map { k =>
@@ -109,6 +109,7 @@ class AutoCompactSpec extends AnyFunSuite {
     assert(idx.store.deltaCount(Some(2)) == 0, tag)
     assert(twin.store.deltaCount(None) == 5, tag)
     assert(read(idx).map(rows) == read(twin).map(rows), tag)
+    runs.map(_._2)
   }
 
   test("compactBefore fires at the same k, empties the committed tail and keeps the read, in every Maintained family") {
@@ -178,20 +179,22 @@ class AutoCompactSpec extends AnyFunSuite {
     }(idx => Seq(idx.cells(spark)))
 
     // the per-batch results are the emitted pairs: batches 3 and 4 probe
-    // prior state through the folded base
+    // prior state through the folded base, and each emits some
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    policyAcrossBatches("emb", EmbIndex(_)) { (idx, k) =>
+    val embPairs = policyAcrossBatches("emb", EmbIndex(_)) { (idx, k) =>
       pairs(idx.upsertBatch(spark, vecs(k), k, width = 6, bucketCap = 128))
     }(_ => Nil)
+    assert(embPairs.drop(3).forall(_.nonEmpty), embPairs)
 
-    policyAcrossBatches("lsh", LshIndex(_)) { (idx, k) =>
+    val lshPairs = policyAcrossBatches("lsh", LshIndex(_)) { (idx, k) =>
       pairs(idx.upsertBatch(spark, Seq.tabulate(2)(j => (k * 2 + j).toLong)
           .map(id => (id, ("alpha beta gamma delta epsilon zeta eta theta " * 2) +
             s"tail $id ${id % 3}"))
           .toDF("doc_id", "text"),
         k, dfCap = 20, bucketCap = 20))
     }(_ => Nil)
+    assert(lshPairs.drop(3).forall(_.nonEmpty), lshPairs)
 
     policyAcrossBatches("stats", r => IncrementalStats(DeltaStore(r))) { (idx, k) =>
       idx.appendBatch(Seq.tabulate(4)(j => (k * 4 + j, if (j == k % 4) None
@@ -203,7 +206,7 @@ class AutoCompactSpec extends AnyFunSuite {
       idx.applyFeed(Seq.tabulate(4)(j =>
           (s"g${(j + k) % 3}", if (j == 3 && k > 0) "delete" else "insert",
             k * 10 + j)).toDF("g", "op", "v"),
-        Seq("g"), "v", k)
+        "v", k)
     }(idx => Seq(idx.view(spark)))
 
     val morSchema = StructType(Seq(

@@ -32,7 +32,7 @@ class IncrementalViewSpec extends AnyFunSuite {
       view.applyFeed(
         t.changes(spark, b - 1, b, preimage = true)
           .select(col("grp"), col("op"), col("v")),
-        Seq("grp"), "v", b)
+        "v", b)
 
     def viewRows: Seq[(String, Double, Long)] = rows(view)
 
@@ -87,7 +87,7 @@ class IncrementalViewSpec extends AnyFunSuite {
         view.applyFeed(
           t.changes(spark, bid - 1, bid, preimage = true)
             .select(col("grp"), col("op"), col("v")),
-          Seq("grp"), "v", bid)
+          "v", bid)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start().awaitTermination(120000)
@@ -113,7 +113,7 @@ class IncrementalViewSpec extends AnyFunSuite {
       Files.createTempDirectory("graft_ivm_bad_").toString, 4), gschema)
     val bad = Seq(("g", "bogus", 1)).toDF("grp", "op", "v")
     val e = intercept[Exception] {
-      view.applyFeed(bad, Seq("grp"), "v", 0)
+      view.applyFeed(bad, "v", 0)
     }
     assert(e.getMessage != null)
   }
