@@ -17,17 +17,18 @@ import org.apache.spark.sql.types._
   *
   * — the cheapest maintenance fold in the engine (the [[SketchIndex]]
   * shape, without even a merge rule to prove: sum-by-key IS the
-  * definition). Maintained cells therefore equal one-shot cells
-  * EXACTLY, which is what lets the incremental and streaming
-  * deployments (q226–q229) reuse the one-shot queries' DuckDB oracles
-  * VERBATIM — the statistic's arithmetic runs unchanged on the folded
-  * table.
+  * definition). The one-shot statistic is its report over the
+  * UNFOLDED row-grain cells (no index at all), and maintained cells sum
+  * to exactly those cells, which is what lets the incremental and
+  * streaming deployments (q226–q244, `graft.queries.CellStat`) reuse the
+  * one-shot queries' DuckDB oracles VERBATIM — the statistic's
+  * arithmetic runs unchanged on the folded table.
   *
   * Per batch: ONE map-combined grouped count to O(cells) rows (cells
   * are dim-sized by construction — the batch never lands raw), ONE
   * atomic [[DeltaStore]] delta. The read side sums live deltas by
-  * key; [[compact]] bakes the same fold into a base. appendBatch
-  * performs NO reads of stored state, so a checkpoint replay rewrites
+  * key; [[compact]] bakes the same fold into a base. Neither append
+  * performs reads of stored state, so a checkpoint replay rewrites
   * its delta from the batch alone — bit-identical, and safe to drive
   * from foreachBatch with batch id as the delta id (the q221/q225
   * streaming contract).
@@ -65,7 +66,9 @@ final case class StatCellIndex(root: String, schema: StructType,
 
   /** Count one batch's rows into cells (the key columns) and append as
     * the delta for `batchId` — one grouped aggregate, one atomic commit,
-    * no reads of stored state. The count variant only. */
+    * no reads of stored state. The count variant only: its count is
+    * NOT NULL, so its delta files carry a required `c` where
+    * [[appendAgg]]'s nullable sum writes an optional one. */
   def appendBatch(spark: SparkSession, batch: DataFrame, batchId: Int): Unit = {
     require(valueCols == Seq("c"), s"appendBatch counts into c, not $valueCols")
     store.heal()

@@ -1,8 +1,6 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.StatCellIndex
-import graft.streaming.Replay
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1075,13 +1073,12 @@ object FeatureQueries {
     // to NULL in both engines. Output = the 6 upper-triangle pairs,
     // exploded from the single aggregate row — bounded by k², never
     // the corpus.
-    Q(
-      "q208_correlation_matrix",
-      (s, dir) => corrFromMoments(
-        Tables.lineitem(s, dir).agg(corrMomentAggs.head,
-          corrMomentAggs.tail: _*)),
-      Some(corrOracleSql))
-  ) ++ corrMaintained.toVector
+    //
+    // q243/q244 are its batch-incremental and stream consumers through a
+    // ONE-ROW moment table, generated from the same CellStat value.
+    corr.oneShot,
+    corr.waves,
+    corr.stream)
 
   // ------------------------------------------------------------------
   // q208's moment machinery, shared verbatim with the maintained
@@ -1102,18 +1099,6 @@ object FeatureQueries {
       (for {
         i <- corrCols.indices; j <- (i + 1) until corrCols.length
       } yield (dc(corrCols(i)) * dc(corrCols(j)))
-        .as(s"sp_${corrCols(i)}_${corrCols(j)}"))
-  }
-
-  private[queries] def corrMomentAggs: Seq[Column] = {
-    val d18 = org.apache.spark.sql.types.DecimalType(18, 2)
-    def dc(c: String) = col(c).cast(d18)
-    Seq(count(lit(1)).as("n")) ++
-      corrCols.map(c => sum(dc(c)).as(s"s_$c")) ++
-      corrCols.map(c => sum(dc(c) * dc(c)).as(s"ss_$c")) ++
-      (for {
-        i <- corrCols.indices; j <- (i + 1) until corrCols.length
-      } yield sum(dc(corrCols(i)) * dc(corrCols(j)))
         .as(s"sp_${corrCols(i)}_${corrCols(j)}"))
   }
 
@@ -1206,54 +1191,19 @@ $selects
       .select(hash(col("l_orderkey"), col("l_linenumber")).as("h") +:
         corrCols.map(col): _*)
 
-  /** q243/q244: the maintained correlation matrix — see [[corrFromMoments]]. */
-  private[queries] def corrMaintained: Seq[Q] = Seq(
-    // ----------------------------------------------------------------
-    // q243/q244: INCREMENTAL + STREAMING CORRELATION MATRIX — q208's
-    // Pearson pairs through a ONE-ROW moment table (the smallest
-    // possible maintained state: n, Σx, Σx², Σxy per pair, all exact
-    // decimal). StatCellIndex.appendAgg sums the batch's row-grain
-    // addends in one map-combined aggregate; folded sums equal the
-    // one-shot sums exactly, so the report arithmetic and q208's
-    // oracle gate all three consumers VERBATIM.
-    Q(
-      "q243_corr_incremental",
-      (s, dir) => {
-        val idx = StatCellIndex(Q.fresh(s, "q243_moments", dir),
-          corrMomentSchema, corrValueCols)
-        Replay.waves(corrSource(s, dir), 3, col("h")) { (w, i) =>
-          idx.compactBefore(s, i, maxDeltas = 1)
-          idx.appendAgg(s, w.select(corrRowExprs: _*), i)
-        }
-        corrFromMoments(idx.cells(s).drop("k"))
-      },
-      Some(corrOracleSql)),
+  /** The moment row from additive moment rows: `k` is constant, so the
+    * group-by on the keys is the global sum, which keeps q208's one row
+    * (n = 0) over an empty table. */
+  private def corrReport(moments: DataFrame): DataFrame = {
+    val sums = corrValueCols.map(v =>
+      sum(col(v)).cast(corrMomentSchema(v).dataType).as(v))
+    corrFromMoments(moments.agg(sums.head, sums.tail: _*))
+  }
 
-    Q(
-      "q244_stream_corr",
-      (s, dir) => {
-        val out = Q.fresh(s, "q244_streamcorr", dir)
-        val idx = StatCellIndex(s"$out/store", corrMomentSchema, corrValueCols)
-        val src = corrSource(s, dir).localCheckpoint()
-        // the stream carries RAW measure rows (the production shape —
-        // and 4 narrow doubles, not 15 wide decimal addends, so the
-        // landing IO is the fact table's own width); the index computes
-        // the moment addends inside the micro-batch
-        val waves = Replay.split(src, 2, col("h"))
-          .map(_.select(corrCols.map(col): _*))
-        def fold(b: DataFrame, id: Int): Unit = {
-          idx.compactBefore(s, id, maxDeltas = 0)
-          idx.appendAgg(s, b.select(corrRowExprs: _*), id)
-        }
-        waves(0).repartition(32).write.parquet(s"$out/in")
-        Replay.drain(s, out, waves(0).schema)(fold)
-        waves(1).repartition(32).write.mode("append").parquet(s"$out/in")
-        // both waves are landed; the second drain reads only the
-        // landing files, so the pin is released before it runs
-        Q.unpin(src)
-        Replay.drain(s, out, waves(0).schema)(fold)
-        corrFromMoments(idx.cells(s).drop("k"))
-      },
-      Some(corrOracleSql))
-  )
+  /** The correlation matrix as a cell statistic: one row of exact
+    * decimal moment sums (n, sums, sums of squares and cross sums). */
+  private[graft] val corr = CellStat(
+    ("q208_correlation_matrix", "q243_corr_incremental", "q244_stream_corr"),
+    corrSource, Seq("h"), corrMomentSchema, corrValueCols,
+    _.select(corrRowExprs: _*), corrReport, corrOracleSql)
 }

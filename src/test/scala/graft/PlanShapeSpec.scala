@@ -134,4 +134,46 @@ class PlanShapeSpec extends AnyFunSuite {
     winSpecs.foreach(w => assert(w.contains("conv_id"),
       s"un-keyed window in the credit pass: $w"))
   }
+
+  /** Exchanges in a collected frame's final adaptive plan, query stages
+    * and subqueries included. */
+  private object Plans
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+      collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }.size
+  }
+
+  /** Files and dirs under this corpus's scratch roots modified at or
+    * after `t0`: a query that resets or writes a store shows here. */
+  private def scratchTouchedSince(t0: Long): Seq[String] = {
+    val probe = new java.io.File(Q.scratch(spark, "probe", dir))
+    val suffix = probe.getName.stripPrefix("graft_probe")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    Option(probe.getParentFile.listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("graft_") && f.getName.endsWith(suffix))
+      .flatMap(walk).filter(_.lastModified >= t0).map(_.getPath)
+  }
+
+  test("cell-statistic one-shots: exchange counts as before, no scratch write") {
+    // the counts of the hand-written one-shot bodies that preceded the
+    // generated entries (sf0.001)
+    val expected = Map(
+      "q205_revenue_concentration" -> 8, "q206_ab_test" -> 2,
+      "q207_benford_digits" -> 4, "q208_correlation_matrix" -> 1,
+      "q211_chi2_contingency" -> 1, "q213_mann_whitney_u" -> 2,
+      "q215_ks_two_sample" -> 5, "q218_spearman_rank_corr" -> 7,
+      "q223_kendall_tau_b" -> 14)
+    val got = expected.keys.toSeq.sorted.map { n =>
+      val t0 = System.currentTimeMillis()
+      val df = SparkEntry.queries(n)(spark, dir)
+      df.collect()
+      val touched = scratchTouchedSince(t0)
+      assert(touched.isEmpty, s"$n wrote scratch: $touched")
+      n -> Plans.exchanges(df)
+    }.toMap
+    assert(got == expected)
+  }
 }
