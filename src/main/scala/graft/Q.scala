@@ -90,6 +90,16 @@ object Q {
     case _ => ()
   }
 
+  /** Pin `df` with `localCheckpoint`, run `body` over the pinned frame,
+    * and [[unpin]] it in `finally`, on success or failure alike: a body
+    * that throws must not leave its blocks in the shared session. The
+    * [[unpin]] SAFETY rule holds: nothing may compute the pinned frame
+    * after `body` returns. */
+  def pinned[A](df: DataFrame)(body: DataFrame => A): A = {
+    val p = df.localCheckpoint()
+    try body(p) finally unpin(p)
+  }
+
   val Dec: DecimalType = DecimalType(18, 2)
   def dec2(c: Column): Column = c.cast(Dec)
   /** Exact sum of a 2-decimal double column, emitted as double. */

@@ -44,9 +44,9 @@ object SkewAudit {
 
     left.cache().count(); right.cache().count()
 
-    def unsalted() = graft.operators.AsOfJoin.asofBackwardNative(
+    def unsalted() = graft.operators.AsOfJoin.asof(
       left, right, "k", "rk", "t", "rt", Seq("p"))
-    def salted() = graft.operators.AsOfJoin.asofBackwardSalted(
+    def salted() = graft.operators.AsOfJoin.asofSalted(
       left, right, "k", "rk", "t", "rt", Seq("p"), buckets)
 
     // value preservation before timing anything
@@ -70,7 +70,7 @@ object SkewAudit {
     // operator): band (0, 20M] over the same corpus ≈ 2 right rows per
     // left row, so the join is occupancy-bounded and the measured
     // difference is the straggler, not output volume.
-    def bandUnsalted() = graft.operators.BandJoin.bandJoinNative(
+    def bandUnsalted() = graft.operators.BandJoin.bandJoin(
       left, right, "k", "rk", "t", "rt", 0L, 20000000L, Seq("p"))
     def bandSalted() = graft.operators.BandJoin.bandJoinSalted(
       left, right, "k", "rk", "t", "rt", 0L, 20000000L, Seq("p"), buckets)

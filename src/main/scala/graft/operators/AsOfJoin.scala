@@ -3,22 +3,35 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Backward as-of join: for every left row, attach the payload of the
-  * latest right row with the same key and rightTime <= leftTime.
+/** As-of join — pandas `merge_asof` over DataFrames: for every left
+  * row, attach the payload of ONE right row with the same key, chosen
+  * by time. [[asof]] is the one entry point; the caller says what to
+  * join and the `strategy` argument (or the planner, under `auto`)
+  * says how:
   *
-  * Spark has no native as-of join. The naive rewrite is a theta join
-  * (t_r <= t_l) + per-left-row max — quadratic per key. This operator
-  * uses the scalable union+window formulation instead: tag both inputs,
-  * union them, sort each key's timeline once, and carry the last-seen
-  * right payload forward with last(_, ignoreNulls) — one shuffle, one
-  * sort, linear in |L|+|R| per key, spill-safe. This is the shape that
-  * survives a 100 TB trade/quote-style workload.
+  *  - `direction`: `backward` (latest right with `rt <= lt`, the
+  *    trade/quote shape), `forward` (earliest right with `rt >= lt`,
+  *    the next-event shape) or `nearest` (the closer of the two, tie →
+  *    backward);
+  *  - `allowExactMatches = false`: the strict comparisons (`rt < lt`,
+  *    `rt > lt`) — a right row at exactly the left time never matches;
+  *  - `tolerance`: a bounded match distance in the time type's native
+  *    unit (micros for timestamps, days for dates, raw for integrals);
+  *    an out-of-bound match is a NULL payload, like no match.
   *
-  * Tie rule: right rows sort BEFORE left rows at equal timestamps, so
-  * `<=` (not `<`) semantics apply; duplicate right rows per (key, time)
-  * must be pre-deduplicated by the caller to keep results deterministic.
+  * Spark has no native as-of join; the naive rewrite is a theta join
+  * plus a per-left-row max, quadratic per key. Every strategy here is
+  * linear in |L|+|R| per key: the union+window formulation (one
+  * shuffle, one sort, spill-safe), the engine's sort-merge and
+  * broadcast operators ([[graft.plans.AsOfJoinPlan]], planned by
+  * [[graft.plans.GraftStrategies]]), and the composed two-join nearest.
+  *
+  * Contract for every strategy: rights are deduplicated per
+  * (key, time) by the caller; null keys group; null times order
+  * smallest. AsOfJoinSpec, StrictAsOfSpec and ToleranceAsOfSpec pin
+  * the strategies against each other and a brute-force oracle.
   */
 object AsOfJoin {
 
@@ -34,215 +47,113 @@ object AsOfJoin {
       " — rename them before the as-of join")
   }
 
-  /** @param payload right-side columns to carry (must not collide with
-    *                left column names). */
-  def asofBackward(left: DataFrame, right: DataFrame,
-                   leftKey: String, rightKey: String,
-                   leftTime: String, rightTime: String,
-                   payload: Seq[String]): DataFrame =
-    backwardWindow(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, strict = false)
+  private val Strategies = Seq("window", "composed", "sortmerge", "broadcast", "auto")
 
-  /** [[asofBackward]] with pandas `allow_exact_matches=False`: the
-    * match requires `rightTime < leftTime` STRICTLY — a right row
-    * stamped at exactly the left time never matches (the lookahead-
-    * bias guard). Same one-shuffle union+window plan; the only change
-    * is the equal-time tiebreak of the timeline sort (left rows sort
-    * BEFORE right rows, so the running carry excludes the exact-time
-    * row). Null times order smallest: a null-time left row matches
-    * nothing (nothing is strictly before null). */
-  def asofBackwardStrict(left: DataFrame, right: DataFrame,
-                         leftKey: String, rightKey: String,
-                         leftTime: String, rightTime: String,
-                         payload: Seq[String]): DataFrame =
-    backwardWindow(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, strict = true)
-
-  private def backwardWindow(left: DataFrame, right: DataFrame,
-                             leftKey: String, rightKey: String,
-                             leftTime: String, rightTime: String,
-                             payload: Seq[String],
-                             strict: Boolean): DataFrame = {
-    requireNoReserved(left, right)
-    val leftCols = left.columns.toSeq
-    def typedNull(df: DataFrame, c: String) =
-      lit(null).cast(df.schema(c).dataType).as(c)
-    // The payload travels as ONE struct column carried by a single
-    // last(ignoreNulls) — carrying each column independently would, when
-    // a right row holds a genuine NULL in one payload field, back-fill
-    // that field from an OLDER right row and emit a composite row mixing
-    // fields of different right rows. The struct is all-or-nothing.
-    val payloadType = StructType(payload.map(c => right.schema(c)))
-    val taggedLeft = left
-      .withColumn("__k", col(leftKey))
-      .withColumn("__t", col(leftTime))
-      .withColumn("__isLeft", lit(1))
-      .select(Seq(col("__k"), col("__t"), col("__isLeft")) ++
-        leftCols.map(col) :+ lit(null).cast(payloadType).as("__p"): _*)
-    val taggedRight = right
-      .withColumn("__k", col(rightKey))
-      .withColumn("__t", col(rightTime))
-      .withColumn("__isLeft", lit(0))
-      .select(Seq(col("__k"), col("__t"), col("__isLeft")) ++
-        leftCols.map(c => typedNull(left, c)) :+
-        struct(payload.map(col): _*).as("__p"): _*)
-    val unioned = taggedRight.unionByName(taggedLeft)
-
-    // equal-time tiebreak IS the <=/< semantics: right-before-left
-    // includes the exact-time right in the left row's backward frame;
-    // strict flips it so the frame stops short of the exact-time row
-    val tieBreak = if (strict) col("__isLeft").desc else col("__isLeft").asc
-    val w = Window.partitionBy("__k")
-      .orderBy(col("__t").asc, tieBreak)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    unioned
-      .withColumn("__p", last(col("__p"), ignoreNulls = true).over(w))
-      .where(col("__isLeft") === 1)
-      .select(leftCols.map(col) ++ payload.map(c => col("__p").getField(c).as(c)): _*)
+  /** Full pandas `merge_asof` parity in ONE entry point. `strategy`:
+    *  - `window`: the union+window formulation — tag both inputs,
+    *    union them, sort each key's timeline once and carry the
+    *    nearest right payload with `last`/`first(ignoreNulls)`. One
+    *    shuffle, any ordered time type; backward and forward only;
+    *  - `composed`: nearest only, from the two single-direction
+    *    sort-merge joins plus a nearer-match projection — one left
+    *    exchange more than the fused operator; the cross-check the
+    *    fused execs are pinned against;
+    *  - `sortmerge`: the native co-partitioned sort-merge operator
+    *    ([[graft.plans.AsOfJoinExec]]) — one exchange + sort per side,
+    *    nearest fused into the same pass;
+    *  - `broadcast`: the right side broadcast as a per-key sorted
+    *    index ([[graft.plans.BroadcastAsOfJoinExec]]); the left is
+    *    never shuffled or sorted. For a dim-sized right;
+    *  - `auto`: the planner picks broadcast or sort-merge from the
+    *    right side's size estimate vs
+    *    `spark.sql.autoBroadcastJoinThreshold`.
+    * UNBOUNDED nearest on a time type without distance arithmetic
+    * (e.g. decimal) plans `composed` under every strategy; a
+    * TOLERANCE on such a type throws — a distance bound needs distance
+    * arithmetic. `window` and the native strategies with a tolerance
+    * need an integral-backed time type. */
+  def asof(left: DataFrame, right: DataFrame,
+           leftKey: String, rightKey: String,
+           leftTime: String, rightTime: String,
+           payload: Seq[String],
+           direction: String = "backward",
+           strategy: String = "sortmerge",
+           tolerance: Option[Long] = None,
+           allowExactMatches: Boolean = true): DataFrame = {
+    require(Strategies.contains(strategy),
+      s"asof strategy must be ${Strategies.mkString(" | ")}, got $strategy")
+    val (forward, nearest) = direction match {
+      case "backward" => (false, false)
+      case "forward" => (true, false)
+      case "nearest" => (false, true)
+      case other => throw new IllegalArgumentException(
+        s"asof direction must be backward | forward | nearest, got $other")
+    }
+    require(strategy != "window" || !nearest,
+      "asof strategy window has no nearest form — use composed, sortmerge, broadcast or auto")
+    require(strategy != "composed" || nearest,
+      s"asof strategy composed is the nearest formulation, got direction $direction")
+    val strict = !allowExactMatches
+    if (strategy == "window")
+      window(left, right, leftKey, rightKey, leftTime, rightTime, payload,
+        forward, strict, tolerance)
+    else if (strategy == "composed" || (nearest && tolerance.isEmpty &&
+        !graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType)))
+      composed(left, right, leftKey, rightKey, leftTime, rightTime, payload,
+        strict, tolerance)
+    else
+      lower(left, right, Seq(leftKey), Seq(rightKey), leftTime, rightTime,
+        payload, broadcast = strategy match {
+          case "sortmerge" => Some(false)
+          case "broadcast" => Some(true)
+          case _ => None
+        }, forward, nearest, tolerance, strict)
   }
 
-  /** Forward as-of join, union+window formulation: for every left row,
-    * the payload of the EARLIEST right row with the same key and
-    * `rightTime >= leftTime` (the "next event after" shape — next
-    * order after a click, next quote after a trade). Mirror image of
-    * [[asofBackward]]: left rows sort BEFORE right rows at equal
-    * timestamps so `>=` semantics apply, and the nearest FOLLOWING
-    * payload is carried by first(ignoreNulls) over the forward frame.
-    * Same preconditions (right deduplicated per (key, time)). */
-  def asofForward(left: DataFrame, right: DataFrame,
-                  leftKey: String, rightKey: String,
-                  leftTime: String, rightTime: String,
-                  payload: Seq[String]): DataFrame =
-    forwardWindow(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, strict = false)
-
-  /** [[asofForward]] with pandas `allow_exact_matches=False`: the
-    * match requires `rightTime > leftTime` STRICTLY. Same plan, the
-    * equal-time tiebreak flipped (right rows sort before left rows, so
-    * the forward frame starts past the exact-time row). A null-time
-    * left row matches the key's first NON-null-time right (null orders
-    * smallest; only non-null times are strictly after it). */
-  def asofForwardStrict(left: DataFrame, right: DataFrame,
-                        leftKey: String, rightKey: String,
-                        leftTime: String, rightTime: String,
-                        payload: Seq[String]): DataFrame =
-    forwardWindow(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, strict = true)
-
-  private def forwardWindow(left: DataFrame, right: DataFrame,
-                            leftKey: String, rightKey: String,
-                            leftTime: String, rightTime: String,
-                            payload: Seq[String],
-                            strict: Boolean): DataFrame = {
-    requireNoReserved(left, right)
-    val leftCols = left.columns.toSeq
-    def typedNull(df: DataFrame, c: String) =
-      lit(null).cast(df.schema(c).dataType).as(c)
-    val payloadType = StructType(payload.map(c => right.schema(c)))
-    val taggedLeft = left
-      .withColumn("__k", col(leftKey))
-      .withColumn("__t", col(leftTime))
-      .withColumn("__isLeft", lit(1))
-      .select(Seq(col("__k"), col("__t"), col("__isLeft")) ++
-        leftCols.map(col) :+ lit(null).cast(payloadType).as("__p"): _*)
-    val taggedRight = right
-      .withColumn("__k", col(rightKey))
-      .withColumn("__t", col(rightTime))
-      .withColumn("__isLeft", lit(0))
-      .select(Seq(col("__k"), col("__t"), col("__isLeft")) ++
-        leftCols.map(c => typedNull(left, c)) :+
-        struct(payload.map(col): _*).as("__p"): _*)
-    val unioned = taggedRight.unionByName(taggedLeft)
-
-    // left (isLeft=1) sorts before right (isLeft=0) at equal __t, so the
-    // currentRow..following frame of a left row INCLUDES the equal-t
-    // right; strict flips the tiebreak to exclude it
-    val tieBreak = if (strict) col("__isLeft").asc else col("__isLeft").desc
-    val w = Window.partitionBy("__k")
-      .orderBy(col("__t").asc, tieBreak)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    unioned
-      .withColumn("__p", first(col("__p"), ignoreNulls = true).over(w))
-      .where(col("__isLeft") === 1)
-      .select(leftCols.map(col) ++ payload.map(c => col("__p").getField(c).as(c)): _*)
-  }
-
-  /** [[asofBackward]] semantics through the engine's NATIVE physical
-    * operator ([[graft.plans.AsOfJoinPlan]] →
-    * [[graft.plans.AsOfJoinExec]], planned by
-    * [[graft.plans.GraftStrategies]]): one co-partitioned sort-merge
-    * pass instead of the union+window formulation — no unioned superset
-    * of both inputs, no null-padded left columns on right rows, no
-    * window buffer. Same output contract and tie rules; AsOfJoinSpec
-    * pins the two paths against each other and a brute-force oracle.
+  /** The union+window formulation over (direction, strictness,
+    * tolerance).
     *
-    * The right time column is cast to the left's type when they differ
-    * (e.g. DATE → TIMESTAMP_NTZ), mirroring the union formulation's
-    * implicit coercion. A right side derived from the left's own scan
-    * is re-aliased to fresh exprIds automatically
-    * ([[graft.plans.PlanDedup]]) — self-derived joins are fine. */
-  def asofBackwardNative(left: DataFrame, right: DataFrame,
-                         leftKey: String, rightKey: String,
-                         leftTime: String, rightTime: String,
-                         payload: Seq[String]): DataFrame =
-    planNative(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = false)
-
-  /** [[asofForward]] semantics through the native sort-merge operator
-    * (forward needs no carried state: the first not-yet-passed right
-    * row per key IS the match). */
-  def asofForwardNative(left: DataFrame, right: DataFrame,
-                        leftKey: String, rightKey: String,
-                        leftTime: String, rightTime: String,
-                        payload: Seq[String]): DataFrame =
-    planNative(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = false, forward = true)
-
-  /** [[asofForward]] semantics through the broadcast operator (binary
-    * search flips to first-at-or-after). */
-  def asofForwardBroadcast(left: DataFrame, right: DataFrame,
-                           leftKey: String, rightKey: String,
-                           leftTime: String, rightTime: String,
-                           payload: Seq[String]): DataFrame =
-    planNative(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = true, forward = true)
-
-  /** Backward as-of with BOUNDED LOOKBACK (pandas
-    * `merge_asof(tolerance=)`), union+window formulation: identical to
-    * [[asofBackward]] except a backward match additionally requires
-    * `leftTime − rightTime <= tolerance`, in the time type's NATIVE
-    * unit (micros for timestamps, days for dates, raw for integrals —
-    * the band-join convention). An expired match yields a NULL payload
-    * exactly like no match; a null-time left row or null-time match
-    * never satisfies the bound (a null time has no distance — the
-    * nearest-join rule). Needs an integral-backed time type.
+    * The payload travels as ONE struct column carried by a single
+    * last/first(ignoreNulls) — carrying each column independently
+    * would, when a right row holds a genuine NULL in one payload
+    * field, back-fill that field from another right row and emit a
+    * composite row mixing fields of different right rows. The struct
+    * is all-or-nothing.
     *
-    * The matched right time travels as one extra struct field and the
-    * bound is applied in a final projection — the plan is the SAME one
-    * shuffle + one window as the unbounded join. Exactness note: this
-    * formulation compares via Column long arithmetic, which wraps for
-    * raw-Long times near ±2^63 — use [[asofBackwardToleranceNative]]
-    * (overflow-exact [[graft.plans.TimeRepr.cmpDiff]]) at those
-    * extremes; timestamps/dates cannot overflow.
-    */
-  def asofBackwardTolerance(left: DataFrame, right: DataFrame,
-                            leftKey: String, rightKey: String,
-                            leftTime: String, rightTime: String,
-                            payload: Seq[String],
-                            tolerance: Long): DataFrame = {
+    * The equal-time tiebreak of the timeline sort IS the `<=`/`<`
+    * semantics: backward sorts right rows BEFORE left rows at equal
+    * times so the frame up to the left row includes the exact-time
+    * right; forward sorts left first so the frame from the left row
+    * onward includes it; strict flips either tiebreak to exclude it.
+    *
+    * With a tolerance the matched right time (cast to the left's time
+    * type, as the native operator does) rides the struct as one more
+    * field and the bound is a final projection — the same one shuffle
+    * and one window. A null-time left row or match never satisfies
+    * the bound. Exactness note: the bound compares via Column long
+    * arithmetic, which wraps for raw-Long times near ±2^63 — the
+    * native strategies ([[graft.plans.TimeRepr.cmpDiff]]) are exact at
+    * those extremes; timestamps and dates cannot overflow. */
+  private def window(left: DataFrame, right: DataFrame,
+                     leftKey: String, rightKey: String,
+                     leftTime: String, rightTime: String,
+                     payload: Seq[String],
+                     forward: Boolean,
+                     strict: Boolean,
+                     tolerance: Option[Long]): DataFrame = {
     requireNoReserved(left, right)
-    require(tolerance >= 0L, s"tolerance must be >= 0, got $tolerance")
     val lType = left.schema(leftTime).dataType
-    require(graft.plans.TimeRepr.supported(lType),
-      s"as-of tolerance needs an integral-backed time type, got $lType")
+    tolerance.foreach { tol =>
+      require(tol >= 0L, s"tolerance must be >= 0, got $tol")
+      require(graft.plans.TimeRepr.supported(lType),
+        s"as-of tolerance needs an integral-backed time type, got $lType")
+    }
     val leftCols = left.columns.toSeq
     def typedNull(df: DataFrame, c: String) =
       lit(null).cast(df.schema(c).dataType).as(c)
-    // payload struct carries the matched right TIME as field __bt
-    // (cast to the left's time type, as the native operator does)
-    val payloadType = StructType(
-      payload.map(c => right.schema(c)) :+
-        org.apache.spark.sql.types.StructField("__bt", lType))
+    val matchTime = if (forward) "__ft" else "__bt"
+    val payloadType = StructType(payload.map(c => right.schema(c)) ++
+      tolerance.map(_ => StructField(matchTime, lType)))
     val taggedLeft = left
       .withColumn("__k", col(leftKey))
       .withColumn("__t", col(leftTime))
@@ -255,130 +166,53 @@ object AsOfJoin {
       .withColumn("__isLeft", lit(0))
       .select(Seq(col("__k"), col("__t"), col("__isLeft")) ++
         leftCols.map(c => typedNull(left, c)) :+
-        struct(payload.map(col) :+
-          col(rightTime).cast(lType).as("__bt"): _*).as("__p"): _*)
+        struct(payload.map(col) ++
+          tolerance.map(_ => col(rightTime).cast(lType).as(matchTime)): _*)
+          .as("__p"): _*)
     val unioned = taggedRight.unionByName(taggedLeft)
-    val w = Window.partitionBy("__k")
-      .orderBy(col("__t").asc, col("__isLeft").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val lt = epochLong(col(leftTime), lType)
-    val btCol = col("__p").getField("__bt")
-    val valid = col("__p").isNotNull && col(leftTime).isNotNull &&
-      btCol.isNotNull && (lt - epochLong(btCol, lType)) <= lit(tolerance)
+
+    val tieBreak =
+      if (forward == strict) col("__isLeft").asc else col("__isLeft").desc
+    val timeline = Window.partitionBy("__k").orderBy(col("__t").asc, tieBreak)
+    val carry =
+      if (forward)
+        first(col("__p"), ignoreNulls = true).over(
+          timeline.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+      else
+        last(col("__p"), ignoreNulls = true).over(
+          timeline.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    val out = tolerance match {
+      case None => payload.map(c => col("__p").getField(c).as(c))
+      case Some(tol) =>
+        val lt = epochLong(col(leftTime), lType)
+        val mt = col("__p").getField(matchTime)
+        val dist = if (forward) epochLong(mt, lType) - lt else lt - epochLong(mt, lType)
+        val valid = col("__p").isNotNull && col(leftTime).isNotNull &&
+          mt.isNotNull && dist <= lit(tol)
+        payload.map(c => when(valid, col("__p").getField(c)).as(c))
+    }
     unioned
-      .withColumn("__p", last(col("__p"), ignoreNulls = true).over(w))
+      .withColumn("__p", carry)
       .where(col("__isLeft") === 1)
-      .select(leftCols.map(col) ++ payload.map(c =>
-        when(valid, col("__p").getField(c)).as(c)): _*)
+      .select(leftCols.map(col) ++ out: _*)
   }
 
-  /** FORWARD as-of with a bounded lookAHEAD: [[asofForward]] except the
-    * match additionally requires `rightTime − leftTime <= tolerance`
-    * (native units; null times never satisfy the bound). Union+window
-    * formulation — same one-shuffle plan, the matched right time rides
-    * the payload struct; the native/broadcast twins are
-    * [[asofForwardToleranceNative]] / [[asofForwardToleranceBroadcast]]. */
-  def asofForwardTolerance(left: DataFrame, right: DataFrame,
-                           leftKey: String, rightKey: String,
-                           leftTime: String, rightTime: String,
-                           payload: Seq[String],
-                           tolerance: Long): DataFrame = {
-    requireNoReserved(left, right)
-    require(tolerance >= 0L, s"tolerance must be >= 0, got $tolerance")
-    val lType = left.schema(leftTime).dataType
-    require(graft.plans.TimeRepr.supported(lType),
-      s"as-of tolerance needs an integral-backed time type, got $lType")
-    val leftCols = left.columns.toSeq
-    def typedNull(df: DataFrame, c: String) =
-      lit(null).cast(df.schema(c).dataType).as(c)
-    val payloadType = StructType(
-      payload.map(c => right.schema(c)) :+
-        org.apache.spark.sql.types.StructField("__ft", lType))
-    val taggedLeft = left
-      .withColumn("__k", col(leftKey))
-      .withColumn("__t", col(leftTime))
-      .withColumn("__isLeft", lit(1))
-      .select(Seq(col("__k"), col("__t"), col("__isLeft")) ++
-        leftCols.map(col) :+ lit(null).cast(payloadType).as("__p"): _*)
-    val taggedRight = right
-      .withColumn("__k", col(rightKey))
-      .withColumn("__t", col(rightTime))
-      .withColumn("__isLeft", lit(0))
-      .select(Seq(col("__k"), col("__t"), col("__isLeft")) ++
-        leftCols.map(c => typedNull(left, c)) :+
-        struct(payload.map(col) :+
-          col(rightTime).cast(lType).as("__ft"): _*).as("__p"): _*)
-    val unioned = taggedRight.unionByName(taggedLeft)
-    val w = Window.partitionBy("__k")
-      .orderBy(col("__t").asc, col("__isLeft").desc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val lt = epochLong(col(leftTime), lType)
-    val ftCol = col("__p").getField("__ft")
-    val valid = col("__p").isNotNull && col(leftTime).isNotNull &&
-      ftCol.isNotNull && (epochLong(ftCol, lType) - lt) <= lit(tolerance)
-    unioned
-      .withColumn("__p", first(col("__p"), ignoreNulls = true).over(w))
-      .where(col("__isLeft") === 1)
-      .select(leftCols.map(col) ++ payload.map(c =>
-        when(valid, col("__p").getField(c)).as(c)): _*)
-  }
-
-  /** [[asofForwardTolerance]] through the native sort-merge pass. */
-  def asofForwardToleranceNative(left: DataFrame, right: DataFrame,
-                                 leftKey: String, rightKey: String,
-                                 leftTime: String, rightTime: String,
-                                 payload: Seq[String],
-                                 tolerance: Long): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(false), forward = true,
-      tolerance = Some(tolerance))
-
-  /** [[asofForwardTolerance]] through the broadcast index probe. */
-  def asofForwardToleranceBroadcast(left: DataFrame, right: DataFrame,
-                                    leftKey: String, rightKey: String,
-                                    leftTime: String, rightTime: String,
-                                    payload: Seq[String],
-                                    tolerance: Long): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(true), forward = true,
-      tolerance = Some(tolerance))
-
-  /** NEAREST as-of with tolerance: each DIRECTION is bounded
-    * independently (a stale backward match can lose to an in-bound
-    * forward one and vice versa), then the nearer survivor wins, tie →
-    * backward. Fused single-pass exec; needs an integral-backed time
-    * type (tolerance arithmetic — no composed fallback exists for
-    * distance-free types under a distance bound). */
-  def asofNearestToleranceNative(left: DataFrame, right: DataFrame,
-                                 leftKey: String, rightKey: String,
-                                 leftTime: String, rightTime: String,
-                                 payload: Seq[String],
-                                 tolerance: Long): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(false), nearest = true,
-      tolerance = Some(tolerance))
-
-  /** [[asofNearestToleranceNative]] with the broadcast strategy. */
-  def asofNearestToleranceBroadcast(left: DataFrame, right: DataFrame,
-                                    leftKey: String, rightKey: String,
-                                    leftTime: String, rightTime: String,
-                                    payload: Seq[String],
-                                    tolerance: Long): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(true), nearest = true,
-      tolerance = Some(tolerance))
-
-  /** [[asofNearestToleranceNative]] composed from the two tolerance'd
-    * single-direction native joins — the independent cross-check the
-    * fused execs are pinned against (ToleranceAsOfSpec). An
-    * out-of-bound direction nulls its whole payload struct INSIDE the
-    * single-direction join, so the nearer-survivor projection here is
-    * the unbounded composition's, verbatim. */
-  def asofNearestToleranceComposed(left: DataFrame, right: DataFrame,
-                                   leftKey: String, rightKey: String,
-                                   leftTime: String, rightTime: String,
-                                   payload: Seq[String],
-                                   tolerance: Long): DataFrame = {
+  /** NEAREST as-of composed from the two single-direction sort-merge
+    * joins — the backward join's output feeds the forward join as its
+    * left side (each native join only APPENDS payload columns, so no
+    * re-join on a synthetic row id is needed), and a final projection
+    * picks the nearer match per row. Strictness and the tolerance
+    * apply INSIDE each single-direction join (an out-of-bound
+    * direction nulls its whole payload), so the projection is the
+    * same for every (strict, tolerance). The matched right times are
+    * carried for the distance comparison and dropped from the output;
+    * payload columns keep their right-side names. */
+  private def composed(left: DataFrame, right: DataFrame,
+                       leftKey: String, rightKey: String,
+                       leftTime: String, rightTime: String,
+                       payload: Seq[String],
+                       strict: Boolean,
+                       tolerance: Option[Long]): DataFrame = {
     val bT = "__asof_bt"
     val fT = "__asof_ft"
     val bCols = payload.map(c => s"__b_$c")
@@ -386,21 +220,22 @@ object AsOfJoin {
     val internal = (bCols ++ fCols :+ bT :+ fT).toSet
     val hit = left.columns.filter(internal.contains)
     require(hit.isEmpty, s"left columns ${hit.mkString(", ")} collide with " +
-      "asofNearestToleranceComposed internal names — rename them first")
+      "the composed nearest as-of's internal names — rename them first")
     def renamed(prefix: String, timeAlias: String): DataFrame =
       right.select(
         Seq(col(rightKey), col(rightTime).as(timeAlias)) ++
           payload.map(c => col(c).as(s"${prefix}_$c")): _*)
-    val backward = planNativeOpt(
-      left, renamed("__b", bT),
-      leftKey, rightKey, leftTime, bT,
-      bCols :+ bT, broadcast = Some(false), tolerance = Some(tolerance))
-    val both = planNativeOpt(
-      backward, renamed("__f", fT),
-      leftKey, rightKey, leftTime, fT,
-      fCols :+ fT, broadcast = Some(false), forward = true,
-      tolerance = Some(tolerance))
+    val backward = lower(left, renamed("__b", bT),
+      Seq(leftKey), Seq(rightKey), leftTime, bT, bCols :+ bT,
+      broadcast = Some(false), forward = false, nearest = false,
+      tolerance, strict)
+    val both = lower(backward, renamed("__f", fT),
+      Seq(leftKey), Seq(rightKey), leftTime, fT, fCols :+ fT,
+      broadcast = Some(false), forward = true, nearest = false,
+      tolerance, strict)
     val lt = col(leftTime)
+    // backward wins when forward is absent OR its distance is >= the
+    // backward distance (tie → backward, pandas merge_asof nearest rule)
     val backWins = col(bT).isNotNull &&
       (col(fT).isNull || (lt - col(bT)) <= (col(fT) - lt))
     val out = payload.zip(bCols.zip(fCols)).map { case (c, (b, f)) =>
@@ -427,8 +262,8 @@ object AsOfJoin {
     }
   }
 
-  /** Backward as-of for a SKEWED fact side — the declarative skew
-    * mitigation for the custom exec tier.
+  /** [[asof]] through the native sort-merge operator for a SKEWED fact
+    * side — the declarative skew mitigation for the custom exec tier.
     *
     * WHY IT EXISTS: Spark's AQE skew handling
     * (`OptimizeSkewedJoin`, sql/core adaptive rules) pattern-matches
@@ -438,42 +273,25 @@ object AsOfJoin {
     * runtime-SPLIT — at 100 TB one hot key (one coin, one viral user)
     * is a single straggler task however many executors idle beside it.
     *
-    * RECIPE: the left salts into `buckets` sub-keys from stable row
-    * content ([[Salt.saltCol]] — deterministic, so task retries salt
-    * identically); the right REPLICATES into every salt bucket, so
-    * each sub-key still sees its key's FULL right timeline and every
-    * left row's match is exactly the unsalted one (SkewAsOfSpec pins
-    * value equality). The native sort-merge then runs on the composite
-    * key (key, salt): the hot key's rows spread over `buckets`
-    * partitions of the SAME exchange. Cost: the right side shuffles
-    * `buckets`×, so use a dim-sized right — or pre-split hot keys
-    * (filter + union) when both sides are big.
+    * RECIPE ([[SkewRoute.salt]]): the left salts into `buckets`
+    * sub-keys from stable row content; the right REPLICATES into every
+    * salt bucket, so each sub-key still sees its key's FULL right
+    * timeline and every left row's match is exactly the unsalted one,
+    * whichever direction the merge scans and whatever the tolerance or
+    * strictness (SkewAsOfSpec pins value equality). The native
+    * sort-merge then runs on the composite key (key, salt): the hot
+    * key's rows spread over `buckets` partitions of the SAME exchange.
+    * Cost: the right side shuffles `buckets`×, so use a dim-sized
+    * right — or pre-split hot keys (filter + union) when both sides
+    * are big.
     *
     * `stable` defaults to the left TIME column — under the hot-key
     * skew this operator targets, the hot key's many distinct times
     * spread uniformly; pass an id column instead when times themselves
-    * concentrate on few values. */
-  def asofBackwardSalted(left: DataFrame, right: DataFrame,
-                         leftKey: String, rightKey: String,
-                         leftTime: String, rightTime: String,
-                         payload: Seq[String],
-                         buckets: Int,
-                         stable: Option[Column] = None,
-                         tolerance: Option[Long] = None,
-                         strict: Boolean = false): DataFrame =
-    asofSalted(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, buckets, direction = "backward", stable, tolerance, strict)
-
-  /** [[asofBackwardSalted]] generalized over the DIRECTION — salting
-    * composes with forward/nearest exactly as with tolerance/strict:
-    * the salt only widens the equi-key and the right replicates per
-    * salt, so every sub-key evaluates the same comparisons the
-    * unsalted join would, whichever direction the merge scans
-    * (SkewAsOfSpec pins value equality per direction). Nearest
-    * requires a time type with distance arithmetic (the exec
-    * contract); there is no composed fallback in salted form, so
-    * unsupported types are rejected loudly rather than silently
-    * un-salted. */
+    * concentrate on few values. Nearest requires a time type with
+    * distance arithmetic (the exec contract); there is no composed
+    * fallback in salted form, so unsupported types are rejected
+    * loudly rather than silently un-salted. */
   def asofSalted(left: DataFrame, right: DataFrame,
                  leftKey: String, rightKey: String,
                  leftTime: String, rightTime: String,
@@ -489,22 +307,10 @@ object AsOfJoin {
       require(graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType),
         s"salted nearest as-of needs distance arithmetic on the time type; " +
           s"${left.schema(leftTime).dataType} has none (use the composed form)")
-    require(buckets >= 1 && buckets <= 4096,
-      s"salt buckets must be in [1, 4096], got $buckets")
     val saltC = "__asof_salt"
-    require(!(left.columns ++ right.columns).contains(saltC),
-      s"input column $saltC collides with the salting column — rename it")
-    val stableCol = stable.getOrElse(col(leftTime))
-    val saltedLeft = left.withColumn(saltC,
-      Salt.saltCol(stableCol, buckets).cast("int"))
-    val replRight = right
-      .withColumn(saltC, explode(sequence(lit(0), lit(buckets - 1))))
-      .withColumn(saltC, col(saltC).cast("int"))
-    // tolerance/strict ride the exec params untouched — the salt only
-    // widens the equi-key, and the right replicates per salt, so every
-    // sub-key evaluates the same bound/comparison the unsalted join
-    // would (SkewAsOfSpec pins the value equality)
-    planNativeKeys(saltedLeft, replRight,
+    val (saltedLeft, replRight) = SkewRoute.salt(left, right, saltC, buckets,
+      stable.getOrElse(col(leftTime)))
+    lower(saltedLeft, replRight,
       Seq(leftKey, saltC), Seq(rightKey, saltC),
       leftTime, rightTime, payload, broadcast = Some(false),
       forward = direction == "forward", nearest = direction == "nearest",
@@ -512,350 +318,35 @@ object AsOfJoin {
       .drop(saltC)
   }
 
-  /** [[asofBackwardTolerance]] semantics through the native sort-merge
-    * operator: the single co-partitioned merge pass carries the
-    * matched right time and applies the bound with overflow-exact
-    * integer arithmetic ([[graft.plans.TimeRepr.cmpDiff]]). */
-  def asofBackwardToleranceNative(left: DataFrame, right: DataFrame,
-                                  leftKey: String, rightKey: String,
-                                  leftTime: String, rightTime: String,
-                                  payload: Seq[String],
-                                  tolerance: Long): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(false), tolerance = Some(tolerance))
-
-  /** [[asofBackwardTolerance]] semantics through the broadcast
-    * operator: probe + binary search as usual, then the bound check
-    * against the matched index entry's time. */
-  def asofBackwardToleranceBroadcast(left: DataFrame, right: DataFrame,
-                                     leftKey: String, rightKey: String,
-                                     leftTime: String, rightTime: String,
-                                     payload: Seq[String],
-                                     tolerance: Long): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(true), tolerance = Some(tolerance))
-
-  /** [[asofBackwardNative]] with the BROADCAST physical strategy
-    * ([[graft.plans.BroadcastAsOfJoinExec]]): the right side collects
-    * into a per-key sorted index broadcast to every executor, and the
-    * left side is NEVER shuffled and NEVER sorted — a pure map pass
-    * (hash probe + binary search per row). The as-of analogue of
-    * choosing BroadcastHashJoin over SortMergeJoin: use it when the
-    * right side is dim-sized (fits the broadcast guardrails); the fact
-    * side's scan-in-place cost is the whole operator at 100 TB. */
-  def asofBackwardBroadcast(left: DataFrame, right: DataFrame,
-                            leftKey: String, rightKey: String,
-                            leftTime: String, rightTime: String,
-                            payload: Seq[String]): DataFrame =
-    planNative(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = true)
-
-  /** NEAREST as-of: for every left row, the payload of the right row
-    * whose time is CLOSEST to the left's (same key, either direction);
-    * ties prefer the backward (at-or-before) match, pandas-style.
-    *
-    * FUSED physical operator: one sort-merge pass tracks the backward
-    * carry and the forward lookahead simultaneously
-    * ([[graft.plans.AsOfJoinExec]] `nearest=true`), so nearest costs
-    * exactly what a single direction costs — one exchange + sort per
-    * side — instead of the composition's two left exchanges. Falls
-    * back to [[asofNearestComposed]] when the time type has no
-    * distance arithmetic (e.g. string/decimal times). */
-  def asofNearestNative(left: DataFrame, right: DataFrame,
-                        leftKey: String, rightKey: String,
-                        leftTime: String, rightTime: String,
-                        payload: Seq[String]): DataFrame =
-    if (graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType))
-      planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-        payload, broadcast = Some(false), nearest = true)
-    else
-      asofNearestComposed(left, right, leftKey, rightKey, leftTime,
-        rightTime, payload)
-
-  /** [[asofNearestNative]] semantics with the BROADCAST physical
-    * strategy: the right side broadcasts once as the sorted per-key
-    * index and each left row costs one hash probe + TWO binary
-    * searches — the left side is never shuffled or sorted. Falls back
-    * to [[asofNearestComposed]] for time types with no distance
-    * arithmetic, like its two siblings (instead of throwing at
-    * planning). */
-  def asofNearestBroadcast(left: DataFrame, right: DataFrame,
-                           leftKey: String, rightKey: String,
-                           leftTime: String, rightTime: String,
-                           payload: Seq[String]): DataFrame =
-    if (graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType))
-      planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-        payload, broadcast = Some(true), nearest = true)
-    else
-      asofNearestComposed(left, right, leftKey, rightKey, leftTime,
-        rightTime, payload)
-
-  /** [[asofNearestNative]] semantics, planner-chosen physical strategy
-    * (size-estimate rule, as [[asofBackwardAuto]]). */
-  def asofNearestAuto(left: DataFrame, right: DataFrame,
-                      leftKey: String, rightKey: String,
-                      leftTime: String, rightTime: String,
-                      payload: Seq[String]): DataFrame =
-    if (graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType))
-      planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-        payload, broadcast = None, nearest = true)
-    else
-      asofNearestComposed(left, right, leftKey, rightKey, leftTime,
-        rightTime, payload)
-
-  /** NEAREST as-of composed from the two native single-direction
-    * operators — the backward join's output feeds the forward join as
-    * its left side (each native op only APPENDS payload columns, so no
-    * re-join on a synthetic row id is ever needed), and a final
-    * projection picks the nearer match per row. Plan cost: the left
-    * side shuffles once per direction on the same key — one exchange
-    * MORE than the fused [[asofNearestNative]]; this formulation
-    * remains (a) the generic-time-type fallback and (b) the
-    * independent cross-check the fused execs are pinned against.
-    *
-    * The matched right TIME is carried internally for the distance
-    * comparison and dropped from the output. Payload columns keep
-    * their right-side names, like every other formulation. */
-  def asofNearestComposed(left: DataFrame, right: DataFrame,
-                          leftKey: String, rightKey: String,
-                          leftTime: String, rightTime: String,
-                          payload: Seq[String]): DataFrame = {
-    val bT = "__asof_bt"
-    val fT = "__asof_ft"
-    val bCols = payload.map(c => s"__b_$c")
-    val fCols = payload.map(c => s"__f_$c")
-    val internal = (bCols ++ fCols :+ bT :+ fT).toSet
-    val hit = left.columns.filter(internal.contains)
-    require(hit.isEmpty, s"left columns ${hit.mkString(", ")} collide with " +
-      "asofNearestNative internal names — rename them before the join")
-    def renamed(prefix: String, timeAlias: String): DataFrame =
-      right.select(
-        Seq(col(rightKey), col(rightTime).as(timeAlias)) ++
-          payload.map(c => col(c).as(s"${prefix}_$c")): _*)
-    val backward = planNative(
-      left, renamed("__b", bT),
-      leftKey, rightKey, leftTime, bT,
-      bCols :+ bT, broadcast = false)
-    val both = planNative(
-      backward, renamed("__f", fT),
-      leftKey, rightKey, leftTime, fT,
-      fCols :+ fT, broadcast = false, forward = true)
-    val lt = col(leftTime)
-    // backward wins when forward is absent OR its distance is >= the
-    // backward distance (tie → backward, pandas merge_asof nearest rule)
-    val backWins = col(bT).isNotNull &&
-      (col(fT).isNull || (lt - col(bT)) <= (col(fT) - lt))
-    val out = payload.zip(bCols.zip(fCols)).map { case (c, (b, f)) =>
-      when(backWins, col(b)).otherwise(col(f)).as(c)
+  /** Lowering to [[graft.plans.AsOfJoinPlan]]. The execs join on
+    * `Seq[Expression]` keys; the composite form exists for
+    * [[asofSalted]]'s (key, salt) pairs. */
+  private def lower(left: DataFrame, right: DataFrame,
+                    leftKeys: Seq[String], rightKeys: Seq[String],
+                    leftTime: String, rightTime: String,
+                    payload: Seq[String],
+                    broadcast: Option[Boolean],
+                    forward: Boolean,
+                    nearest: Boolean,
+                    tolerance: Option[Long],
+                    strict: Boolean): DataFrame =
+    graft.plans.TimeJoinInputs.lower(left, right, leftKeys, rightKeys,
+        leftTime, rightTime, payload) { j =>
+      graft.plans.AsOfJoinPlan(j.left, j.right, j.leftKeys, j.rightKeys,
+        j.leftTime, j.rightTime, j.payload, j.payloadOut, broadcast,
+        forward, nearest, tolerance, strict)
     }
-    both.select(left.columns.map(col).toSeq ++ out: _*)
-  }
-
-  /** [[asofBackwardNative]] semantics with the physical strategy left
-    * to the PLANNER: [[graft.plans.GraftStrategies]] broadcasts when
-    * the right side's size estimate fits
-    * `spark.sql.autoBroadcastJoinThreshold`, else sort-merges — the
-    * as-of analogue of an unhinted equi-join, for callers who don't
-    * know (or shouldn't hard-code) which side is dim-sized. */
-  def asofBackwardAuto(left: DataFrame, right: DataFrame,
-                       leftKey: String, rightKey: String,
-                       leftTime: String, rightTime: String,
-                       payload: Seq[String]): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = None)
-
-  /** [[asofForwardNative]] semantics, planner-chosen strategy. */
-  def asofForwardAuto(left: DataFrame, right: DataFrame,
-                      leftKey: String, rightKey: String,
-                      leftTime: String, rightTime: String,
-                      payload: Seq[String]): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = None, forward = true)
-
-  private def planNative(left: DataFrame, right: DataFrame,
-                         leftKey: String, rightKey: String,
-                         leftTime: String, rightTime: String,
-                         payload: Seq[String],
-                         broadcast: Boolean,
-                         forward: Boolean = false): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, Some(broadcast), forward)
-
-  private def planNativeOpt(left: DataFrame, right: DataFrame,
-                            leftKey: String, rightKey: String,
-                            leftTime: String, rightTime: String,
-                            payload: Seq[String],
-                            broadcast: Option[Boolean],
-                            forward: Boolean = false,
-                            nearest: Boolean = false,
-                            tolerance: Option[Long] = None,
-                            strict: Boolean = false): DataFrame =
-    planNativeKeys(left, right, Seq(leftKey), Seq(rightKey), leftTime,
-      rightTime, payload, broadcast, forward, nearest, tolerance, strict)
-
-  /** Multi-key lowering — the execs already join on `Seq[Expression]`
-    * keys; the composite form exists for [[asofBackwardSalted]]'s
-    * (key, salt) pairs and any caller with genuinely compound keys. */
-  private def planNativeKeys(left: DataFrame, right: DataFrame,
-                             leftKeys: Seq[String], rightKeys: Seq[String],
-                             leftTime: String, rightTime: String,
-                             payload: Seq[String],
-                             broadcast: Option[Boolean],
-                             forward: Boolean = false,
-                             nearest: Boolean = false,
-                             tolerance: Option[Long] = None,
-                             strict: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    val lType = left.schema(leftTime).dataType
-    val r0 =
-      if (right.schema(rightTime).dataType == lType) right
-      else right.withColumn(rightTime, col(rightTime).cast(lType))
-    val lPlan = left.queryExecution.analyzed
-    // exprId hygiene for self-derived right sides (see PlanDedup): a
-    // right child sharing the left's scan re-aliases to fresh exprIds
-    val rPlan = graft.plans.PlanDedup.freshRight(lPlan,
-      r0.queryExecution.analyzed)
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-             n: String) =
-      p.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(s"no column '$n' in ${p.output.map(_.name)}"))
-    val payloadAttrs = payload.map(attr(rPlan, _))
-    val payloadOut = payloadAttrs.map(a =>
-      AttributeReference(a.name, a.dataType, nullable = true)())
-    org.apache.spark.sql.GraftPlanApi.ofRows(left.sparkSession,
-      graft.plans.AsOfJoinPlan(lPlan, rPlan,
-        leftKeys.map(attr(lPlan, _)), rightKeys.map(attr(rPlan, _)),
-        attr(lPlan, leftTime), attr(rPlan, rightTime),
-        payloadAttrs, payloadOut, broadcast, forward, nearest, tolerance,
-        strict))
-  }
-
-  // ------------------------------------------------------------------
-  // STRICT variants (pandas merge_asof allow_exact_matches=False): the
-  // exact-time right row never matches. Backward requires rt < lt,
-  // forward rt > lt, nearest excludes the exact-time row from both
-  // directions. A comparison flip, not arithmetic — works for any
-  // ordered time type, and composes with tolerance (see [[asof]]).
-  // ------------------------------------------------------------------
-
-  /** [[asofBackwardStrict]] through the native sort-merge pass. */
-  def asofBackwardStrictNative(left: DataFrame, right: DataFrame,
-                               leftKey: String, rightKey: String,
-                               leftTime: String, rightTime: String,
-                               payload: Seq[String]): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(false), strict = true)
-
-  /** [[asofBackwardStrict]] through the broadcast index probe. */
-  def asofBackwardStrictBroadcast(left: DataFrame, right: DataFrame,
-                                  leftKey: String, rightKey: String,
-                                  leftTime: String, rightTime: String,
-                                  payload: Seq[String]): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(true), strict = true)
-
-  /** [[asofForwardStrict]] through the native sort-merge pass. */
-  def asofForwardStrictNative(left: DataFrame, right: DataFrame,
-                              leftKey: String, rightKey: String,
-                              leftTime: String, rightTime: String,
-                              payload: Seq[String]): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(false), forward = true, strict = true)
-
-  /** [[asofForwardStrict]] through the broadcast index probe. */
-  def asofForwardStrictBroadcast(left: DataFrame, right: DataFrame,
-                                 leftKey: String, rightKey: String,
-                                 leftTime: String, rightTime: String,
-                                 payload: Seq[String]): DataFrame =
-    planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-      payload, broadcast = Some(true), forward = true, strict = true)
-
-  /** NEAREST as-of excluding exact-time matches: the closer of the
-    * strictly-before and strictly-after right rows, tie → backward.
-    * Fused single-pass exec; falls back to
-    * [[asofNearestStrictComposed]] for distance-free time types. */
-  def asofNearestStrictNative(left: DataFrame, right: DataFrame,
-                              leftKey: String, rightKey: String,
-                              leftTime: String, rightTime: String,
-                              payload: Seq[String]): DataFrame =
-    if (graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType))
-      planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-        payload, broadcast = Some(false), nearest = true, strict = true)
-    else
-      asofNearestStrictComposed(left, right, leftKey, rightKey, leftTime,
-        rightTime, payload)
-
-  /** [[asofNearestStrictNative]] with the broadcast strategy. */
-  def asofNearestStrictBroadcast(left: DataFrame, right: DataFrame,
-                                 leftKey: String, rightKey: String,
-                                 leftTime: String, rightTime: String,
-                                 payload: Seq[String]): DataFrame =
-    if (graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType))
-      planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-        payload, broadcast = Some(true), nearest = true, strict = true)
-    else
-      asofNearestStrictComposed(left, right, leftKey, rightKey, leftTime,
-        rightTime, payload)
-
-  /** [[asofNearestStrictNative]] composed from the two strict
-    * single-direction native joins — the independent cross-check the
-    * fused strict execs are pinned against (StrictAsOfSpec), and the
-    * generic-time-type fallback. Projection identical to
-    * [[asofNearestComposed]] (the exact-time exclusion happens INSIDE
-    * each single-direction join). */
-  def asofNearestStrictComposed(left: DataFrame, right: DataFrame,
-                                leftKey: String, rightKey: String,
-                                leftTime: String, rightTime: String,
-                                payload: Seq[String]): DataFrame = {
-    val bT = "__asof_bt"
-    val fT = "__asof_ft"
-    val bCols = payload.map(c => s"__b_$c")
-    val fCols = payload.map(c => s"__f_$c")
-    val internal = (bCols ++ fCols :+ bT :+ fT).toSet
-    val hit = left.columns.filter(internal.contains)
-    require(hit.isEmpty, s"left columns ${hit.mkString(", ")} collide with " +
-      "asofNearestStrictComposed internal names — rename them first")
-    def renamed(prefix: String, timeAlias: String): DataFrame =
-      right.select(
-        Seq(col(rightKey), col(rightTime).as(timeAlias)) ++
-          payload.map(c => col(c).as(s"${prefix}_$c")): _*)
-    val backward = planNativeOpt(
-      left, renamed("__b", bT),
-      leftKey, rightKey, leftTime, bT,
-      bCols :+ bT, broadcast = Some(false), strict = true)
-    val both = planNativeOpt(
-      backward, renamed("__f", fT),
-      leftKey, rightKey, leftTime, fT,
-      fCols :+ fT, broadcast = Some(false), forward = true, strict = true)
-    val lt = col(leftTime)
-    val backWins = col(bT).isNotNull &&
-      (col(fT).isNull || (lt - col(bT)) <= (col(fT) - lt))
-    val out = payload.zip(bCols.zip(fCols)).map { case (c, (b, f)) =>
-      when(backWins, col(b)).otherwise(col(f)).as(c)
-    }
-    both.select(left.columns.map(col).toSeq ++ out: _*)
-  }
 
   /** [[asof]] with SKEW-AWARE automatic strategy selection — the
     * routing tier that makes the salt recipe automatic, so a caller
     * needs to know neither that the right side is dim-sized nor that
     * AQE will never runtime-split the custom exec's exchanges.
-    *
-    * Decision tree (see [[SkewRoute]] for the rationale and conf
-    * knobs; every route is value-identical, only the physical shape
-    * changes):
-    *   1. right fits `spark.sql.autoBroadcastJoinThreshold` →
-    *      broadcast exec (left never shuffles; key skew is moot);
-    *   2. else, left key's measured max-share >= the hot threshold →
-    *      [[asofSalted]] (hash-partitions on (key, __asof_salt)),
-    *      with the fan-out CAPPED by [[SkewRoute.guardedBuckets]]:
-    *      the salt replicates the whole right side per bucket, so the
-    *      bucket count shrinks as |right| grows until, below 2
-    *      affordable buckets, the salt costs more than the straggler
-    *      it removes and the route degrades to step 3;
-    *   3. else the plain co-partitioned sort-merge.
-    * Step 2 runs one eager, bounded sampling job at call time — the
-    * price of measured (rather than guessed) routing.
+    * [[SkewRoute.route]] decides: broadcast when the right fits the
+    * threshold, else [[asofSalted]] with the guarded bucket count when
+    * the left key is measured hot, else the plain sort-merge. Every
+    * route is value-identical; only the physical shape changes. The
+    * hot-key measurement runs one eager, bounded sampling job at call
+    * time — the price of measured (rather than guessed) routing.
     *
     * Nearest on a distance-free time type delegates straight to
     * [[asof]]'s composed fallback (no salted spelling exists — the
@@ -872,83 +363,21 @@ object AsOfJoin {
                    stable: Option[Column] = None): DataFrame = {
     require(Seq("backward", "forward", "nearest").contains(direction),
       s"direction must be backward|forward|nearest, got $direction")
-    val c = SkewRoute.conf(left)
+    def plain(strategy: String) =
+      asof(left, right, leftKey, rightKey, leftTime, rightTime, payload,
+        direction = direction, strategy = strategy,
+        tolerance = tolerance, allowExactMatches = allowExactMatches)
     val distanceFree = direction == "nearest" &&
       !graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType)
-    if (distanceFree)
-      asof(left, right, leftKey, rightKey, leftTime, rightTime, payload,
-        direction = direction, strategy = "sortmerge",
-        tolerance = tolerance, allowExactMatches = allowExactMatches)
-    else if (SkewRoute.rightFitsBroadcast(right))
-      asof(left, right, leftKey, rightKey, leftTime, rightTime, payload,
-        direction = direction, strategy = "broadcast",
-        tolerance = tolerance, allowExactMatches = allowExactMatches)
-    else {
-      val hot = SkewRoute
-        .hotKeyShare(left, leftKey, c.sampleBytes, c.minRows)
-        .exists(_ >= hotShare.getOrElse(c.hotShare))
-      // cost guard: replicated-right volume ≤ maxReplication × |left|;
-      // under 2 affordable buckets the salt cannot pay → plain SMJ
-      val b = SkewRoute.guardedBuckets(left, right,
-        buckets.getOrElse(c.buckets), c.maxReplication)
-      if (hot && b >= 2)
+    if (distanceFree) plain("sortmerge")
+    else SkewRoute.route(left, right, leftKey, hotShare, buckets) match {
+      case SkewRoute.Broadcast => plain("broadcast")
+      case SkewRoute.Salted(b) =>
         asofSalted(left, right, leftKey, rightKey, leftTime, rightTime,
           payload, b, direction, stable,
           tolerance, strict = !allowExactMatches)
-      else
-        asof(left, right, leftKey, rightKey, leftTime, rightTime, payload,
-          direction = direction, strategy = "sortmerge",
-          tolerance = tolerance, allowExactMatches = allowExactMatches)
+      case SkewRoute.SortMerge => plain("sortmerge")
     }
-  }
-
-  /** Full pandas `merge_asof` parity in ONE entry point:
-    * `direction` ∈ backward | forward | nearest, `strategy` ∈
-    * sortmerge | broadcast | auto (planner size-estimate rule),
-    * optional `tolerance` (native time units), and
-    * `allowExactMatches=false` for the strict comparisons — any
-    * combination plans through the native operator tier. UNBOUNDED
-    * nearest on a distance-free time type falls back to the composed
-    * two-join form WHATEVER the requested strategy (the composition
-    * itself plans sort-merge; broadcast/auto degrade the same way the
-    * named siblings asofNearestBroadcast/asofNearestAuto do, rather
-    * than throwing at planning). A TOLERANCE on such a type still
-    * throws — a distance bound needs distance arithmetic, and no
-    * composed spelling exists for it. */
-  def asof(left: DataFrame, right: DataFrame,
-           leftKey: String, rightKey: String,
-           leftTime: String, rightTime: String,
-           payload: Seq[String],
-           direction: String = "backward",
-           strategy: String = "sortmerge",
-           tolerance: Option[Long] = None,
-           allowExactMatches: Boolean = true): DataFrame = {
-    val broadcast = strategy match {
-      case "sortmerge" => Some(false)
-      case "broadcast" => Some(true)
-      case "auto" => None
-      case other => throw new IllegalArgumentException(
-        s"asof strategy must be sortmerge | broadcast | auto, got $other")
-    }
-    val (forward, nearest) = direction match {
-      case "backward" => (false, false)
-      case "forward" => (true, false)
-      case "nearest" => (false, true)
-      case other => throw new IllegalArgumentException(
-        s"asof direction must be backward | forward | nearest, got $other")
-    }
-    val strict = !allowExactMatches
-    if (nearest && tolerance.isEmpty &&
-        !graft.plans.AsOfNearest.supported(left.schema(leftTime).dataType)) {
-      if (strict)
-        asofNearestStrictComposed(left, right, leftKey, rightKey, leftTime,
-          rightTime, payload)
-      else
-        asofNearestComposed(left, right, leftKey, rightKey, leftTime,
-          rightTime, payload)
-    } else
-      planNativeOpt(left, right, leftKey, rightKey, leftTime, rightTime,
-        payload, broadcast, forward, nearest, tolerance, strict)
   }
 
   /** KEYLESS (global) as-of — pandas `merge_asof` with no `by`: every

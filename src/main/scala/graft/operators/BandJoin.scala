@@ -8,24 +8,34 @@ import org.apache.spark.sql.functions._
   * `(lo, hi]`, INNER semantics — the 1:N sibling of [[AsOfJoin]] and
   * the batch face of a stream-stream interval join. The attribution
   * query "every event within 24 h after each purchase" is
-  * `bandJoinNative(purchases, events, …, lo = 0, hi = 24h)`; the
+  * `bandJoin(purchases, events, …, lo = 0, hi = 24h, payload)`; the
   * reverse orientation "each event's purchases in the preceding 24 h"
   * is a NEGATIVE band `(−24h−1, −1]` on integral time units.
   *
-  * Three formulations, same contract (BandJoinSpec pins them against
-  * each other and a brute force):
-  *  - [[bandJoinNative]]: custom sort-merge physical operator — one
+  * [[bandJoin]] is the one entry point; its `strategy` picks one of
+  * four formulations with the same contract (BandJoinSpec pins them
+  * against each other and a brute force):
+  *  - `sortmerge`: the custom sort-merge physical operator — one
   *    exchange+sort per side, merge memory bounded by band OCCUPANCY
   *    ([[graft.plans.BandJoinExec]]);
-  *  - [[bandJoinBroadcast]]: dim-sized right broadcast as the per-key
+  *  - `broadcast`: dim-sized right broadcast as the per-key
   *    time-sorted index; fact side never shuffled/sorted, two binary
   *    searches + a contiguous slice per row;
-  *  - [[bandJoinBucketed]]: the pure-DataFrame composition (the q93
-  *    shape generalized) — explode each left row into the two
-  *    band-width buckets its band can touch, equi-join on
-  *    (key, bucket), post-filter the exact band. Kept as the
-  *    any-engine fallback and independent cross-check; requires
-  *    non-negative times (integer `div` truncation).
+  *  - `auto`: the planner picks one of the two from the right side's
+  *    size estimate vs `spark.sql.autoBroadcastJoinThreshold`;
+  *  - `bucketed`: the pure-DataFrame composition (the q93 shape
+  *    generalized) — explode each left row into the two band-width
+  *    buckets its band can touch, equi-join on (key, bucket),
+  *    post-filter the exact band. 2x left inflation + post-filter, the
+  *    price the native operator exists to remove; kept as the
+  *    any-engine cross-check. Inner only; requires non-negative times
+  *    (integer `div` truncation).
+  *
+  * `leftOuter = true` keeps every left row — one NULL-payload row when
+  * nothing is in its band (null-time lefts included): the attribution
+  * shape "every purchase, with its follow-up events when any" without
+  * a second join back onto the left. It takes the `sortmerge` or
+  * `broadcast` strategy.
   *
   * `lo`/`hi` are Longs in the time type's native unit (micros for
   * timestamps, days for dates, raw for integrals); times must be
@@ -33,65 +43,37 @@ import org.apache.spark.sql.functions._
   */
 object BandJoin {
 
-  def bandJoinNative(left: DataFrame, right: DataFrame,
-                     leftKey: String, rightKey: String,
-                     leftTime: String, rightTime: String,
-                     lo: Long, hi: Long,
-                     payload: Seq[String]): DataFrame =
-    plan(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
-      payload, broadcast = Some(false))
+  def bandJoin(left: DataFrame, right: DataFrame,
+               leftKey: String, rightKey: String,
+               leftTime: String, rightTime: String,
+               lo: Long, hi: Long,
+               payload: Seq[String],
+               strategy: String = "sortmerge",
+               leftOuter: Boolean = false): DataFrame = {
+    require(!leftOuter || strategy == "sortmerge" || strategy == "broadcast",
+      s"a left-outer band join takes strategy sortmerge or broadcast, got $strategy")
+    def native(broadcast: Option[Boolean]) =
+      lower(left, right, Seq(leftKey), Seq(rightKey), leftTime, rightTime,
+        lo, hi, payload, broadcast, leftOuter)
+    strategy match {
+      case "bucketed" =>
+        bucketed(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
+          payload)
+      case "sortmerge" => native(Some(false))
+      case "broadcast" => native(Some(true))
+      case "auto" => native(None)
+      case other => throw new IllegalArgumentException(
+        s"bandJoin strategy must be bucketed | sortmerge | broadcast | auto, got $other")
+    }
+  }
 
-  def bandJoinBroadcast(left: DataFrame, right: DataFrame,
-                        leftKey: String, rightKey: String,
-                        leftTime: String, rightTime: String,
-                        lo: Long, hi: Long,
-                        payload: Seq[String]): DataFrame =
-    plan(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
-      payload, broadcast = Some(true))
-
-  /** LEFT OUTER band join, sort-merge strategy: every left row
-    * survives — one NULL-payload row when nothing is in its band
-    * (null-time lefts included). The attribution shape "every
-    * purchase, with its follow-up events when any" without a second
-    * join back onto the left. */
-  def bandJoinLeftOuterNative(left: DataFrame, right: DataFrame,
-                              leftKey: String, rightKey: String,
-                              leftTime: String, rightTime: String,
-                              lo: Long, hi: Long,
-                              payload: Seq[String]): DataFrame =
-    plan(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
-      payload, broadcast = Some(false), leftOuter = true)
-
-  /** LEFT OUTER band join, broadcast strategy. */
-  def bandJoinLeftOuterBroadcast(left: DataFrame, right: DataFrame,
-                                 leftKey: String, rightKey: String,
-                                 leftTime: String, rightTime: String,
-                                 lo: Long, hi: Long,
-                                 payload: Seq[String]): DataFrame =
-    plan(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
-      payload, broadcast = Some(true), leftOuter = true)
-
-  /** Planner-chosen strategy (right-side size estimate vs
-    * `spark.sql.autoBroadcastJoinThreshold`, as the as-of family). */
-  def bandJoinAuto(left: DataFrame, right: DataFrame,
-                   leftKey: String, rightKey: String,
-                   leftTime: String, rightTime: String,
-                   lo: Long, hi: Long,
-                   payload: Seq[String]): DataFrame =
-    plan(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
-      payload, broadcast = None)
-
-  /** [[bandJoinAuto]] with SKEW-AWARE routing — the band twin of
-    * [[AsOfJoin.asofAutoSkew]], same [[SkewRoute]] decision tree:
+  /** [[bandJoin]] with SKEW-AWARE routing — the band twin of
+    * [[AsOfJoin.asofAutoSkew]], same [[SkewRoute.route]] decision:
     * dim-sized right → broadcast (fact side never shuffles, skew is
-    * moot); else measured hot left key → [[bandJoinSalted]], with the
-    * fan-out CAPPED by [[SkewRoute.guardedBuckets]] (the salt
-    * replicates the whole right side per bucket, so buckets shrink as
-    * |right| grows; under 2 affordable buckets the salt costs more
-    * than the straggler and the route degrades to plain SMJ); else
-    * the plain co-partitioned sort-merge. One eager bounded sampling
-    * job at call time buys the measured choice; every route is
-    * value-identical (SkewBandSpec). */
+    * moot); else measured hot left key → [[bandJoinSalted]] with the
+    * guarded bucket count; else the plain co-partitioned sort-merge.
+    * One eager bounded sampling job at call time buys the measured
+    * choice; every route is value-identical (SkewBandSpec). */
   def bandJoinAutoSkew(left: DataFrame, right: DataFrame,
                        leftKey: String, rightKey: String,
                        leftTime: String, rightTime: String,
@@ -101,32 +83,22 @@ object BandJoin {
                        hotShare: Option[Double] = None,
                        buckets: Option[Int] = None,
                        stable: Option[Column] = None): DataFrame = {
-    val c = SkewRoute.conf(left)
-    if (SkewRoute.rightFitsBroadcast(right))
-      plan(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
-        payload, broadcast = Some(true), leftOuter = leftOuter)
-    else {
-      val hot = SkewRoute
-        .hotKeyShare(left, leftKey, c.sampleBytes, c.minRows)
-        .exists(_ >= hotShare.getOrElse(c.hotShare))
-      // cost guard: replicated-right volume ≤ maxReplication × |left|
-      val b = SkewRoute.guardedBuckets(left, right,
-        buckets.getOrElse(c.buckets), c.maxReplication)
-      if (hot && b >= 2)
+    def plain(strategy: String) =
+      bandJoin(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
+        payload, strategy, leftOuter)
+    SkewRoute.route(left, right, leftKey, hotShare, buckets) match {
+      case SkewRoute.Broadcast => plain("broadcast")
+      case SkewRoute.Salted(b) =>
         bandJoinSalted(left, right, leftKey, rightKey, leftTime, rightTime,
           lo, hi, payload, b, stable, leftOuter)
-      else
-        plan(left, right, leftKey, rightKey, leftTime, rightTime, lo, hi,
-          payload, broadcast = Some(false), leftOuter = leftOuter)
+      case SkewRoute.SortMerge => plain("sortmerge")
     }
   }
 
   /** Bucket-explode composition: left rows duplicate into the (at most
     * two) band-width buckets their band overlaps, the join is a plain
-    * equi-join on (key, bucket), and the exact band is a post-filter.
-    * 2x left inflation + post-filter — the price the native operator
-    * exists to remove; non-negative times only (`div` truncates). */
-  def bandJoinBucketed(left: DataFrame, right: DataFrame,
+    * equi-join on (key, bucket), and the exact band is a post-filter. */
+  private def bucketed(left: DataFrame, right: DataFrame,
                        leftKey: String, rightKey: String,
                        leftTime: String, rightTime: String,
                        lo: Long, hi: Long,
@@ -159,17 +131,17 @@ object BandJoin {
     * user in the q93/q146 attribution shape) is a single straggler
     * task at 100 TB.
     *
-    * RECIPE (identical to the as-of salt, and it preserves band
-    * semantics the same way): the left salts into `buckets` sub-keys
-    * from stable row content ([[Salt.saltCol]] — deterministic under
-    * task retry); the right REPLICATES into every salt bucket, so each
-    * sub-key still sees its key's FULL right timeline and every left
-    * row's band — a per-LEFT-row predicate the salt never touches —
-    * matches exactly the unsalted pair set (SkewBandSpec pins value
-    * equality, inner and left-outer). The native sort-merge then runs
-    * on (key, salt): the hot key spreads over `buckets` partitions of
-    * the same exchange. Cost: the right shuffles `buckets`× — size the
-    * bucket count to the straggler, not to the cluster. */
+    * RECIPE ([[SkewRoute.salt]], identical to the as-of salt, and it
+    * preserves band semantics the same way): the left salts into
+    * `buckets` sub-keys from stable row content; the right REPLICATES
+    * into every salt bucket, so each sub-key still sees its key's FULL
+    * right timeline and every left row's band — a per-LEFT-row
+    * predicate the salt never touches — matches exactly the unsalted
+    * pair set (SkewBandSpec pins value equality, inner and
+    * left-outer). The native sort-merge then runs on (key, salt): the
+    * hot key spreads over `buckets` partitions of the same exchange.
+    * Cost: the right shuffles `buckets`× — size the bucket count to
+    * the straggler, not to the cluster. */
   def bandJoinSalted(left: DataFrame, right: DataFrame,
                      leftKey: String, rightKey: String,
                      leftTime: String, rightTime: String,
@@ -178,69 +150,29 @@ object BandJoin {
                      buckets: Int,
                      stable: Option[Column] = None,
                      leftOuter: Boolean = false): DataFrame = {
-    require(buckets >= 1 && buckets <= 4096,
-      s"salt buckets must be in [1, 4096], got $buckets")
     val saltC = "__band_salt"
-    require(!(left.columns ++ right.columns).contains(saltC),
-      s"input column $saltC collides with the salting column — rename it")
-    val stableCol = stable.getOrElse(col(leftTime))
-    val saltedLeft = left.withColumn(saltC,
-      Salt.saltCol(stableCol, buckets).cast("int"))
-    val replRight = right
-      .withColumn(saltC, explode(sequence(lit(0), lit(buckets - 1))))
-      .withColumn(saltC, col(saltC).cast("int"))
-    planKeys(saltedLeft, replRight,
+    val (saltedLeft, replRight) = SkewRoute.salt(left, right, saltC, buckets,
+      stable.getOrElse(col(leftTime)))
+    lower(saltedLeft, replRight,
       Seq(leftKey, saltC), Seq(rightKey, saltC),
       leftTime, rightTime, lo, hi, payload,
       broadcast = Some(false), leftOuter = leftOuter)
       .drop(saltC)
   }
 
-  private def plan(left: DataFrame, right: DataFrame,
-                   leftKey: String, rightKey: String,
-                   leftTime: String, rightTime: String,
-                   lo: Long, hi: Long,
-                   payload: Seq[String],
-                   broadcast: Option[Boolean],
-                   leftOuter: Boolean = false): DataFrame =
-    planKeys(left, right, Seq(leftKey), Seq(rightKey), leftTime, rightTime,
-      lo, hi, payload, broadcast, leftOuter)
-
-  /** Multi-key lowering — the exec already joins on `Seq[Expression]`
-    * keys; the composite form exists for [[bandJoinSalted]]'s
-    * (key, salt) pairs. */
-  private def planKeys(left: DataFrame, right: DataFrame,
-                       leftKeys: Seq[String], rightKeys: Seq[String],
-                       leftTime: String, rightTime: String,
-                       lo: Long, hi: Long,
-                       payload: Seq[String],
-                       broadcast: Option[Boolean],
-                       leftOuter: Boolean): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    val lType = left.schema(leftTime).dataType
-    val r0 =
-      if (right.schema(rightTime).dataType == lType) right
-      else right.withColumn(rightTime, col(rightTime).cast(lType))
-    val lPlan = left.queryExecution.analyzed
-    // A right side derived from the SAME scan as the left (the q93
-    // attribution shape: purchases filtered out of events) shares its
-    // attributes' exprIds — re-alias them so key/time/payload lookups
-    // bind to the right child, as the Analyzer's DeduplicateRelations
-    // does for ordinary joins.
-    val rPlan = graft.plans.PlanDedup.freshRight(lPlan,
-      r0.queryExecution.analyzed)
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-             n: String) =
-      p.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(
-          s"no column '$n' in ${p.output.map(_.name)}"))
-    val payloadAttrs = payload.map(attr(rPlan, _))
-    val payloadOut = payloadAttrs.map(a =>
-      AttributeReference(a.name, a.dataType, nullable = true)())
-    org.apache.spark.sql.GraftPlanApi.ofRows(left.sparkSession,
-      graft.plans.BandJoinPlan(lPlan, rPlan,
-        leftKeys.map(attr(lPlan, _)), rightKeys.map(attr(rPlan, _)),
-        attr(lPlan, leftTime), attr(rPlan, rightTime),
-        lo, hi, payloadAttrs, payloadOut, broadcast, leftOuter))
-  }
+  /** Lowering to [[graft.plans.BandJoinPlan]]; the composite key form
+    * exists for [[bandJoinSalted]]'s (key, salt) pairs. */
+  private def lower(left: DataFrame, right: DataFrame,
+                    leftKeys: Seq[String], rightKeys: Seq[String],
+                    leftTime: String, rightTime: String,
+                    lo: Long, hi: Long,
+                    payload: Seq[String],
+                    broadcast: Option[Boolean],
+                    leftOuter: Boolean): DataFrame =
+    graft.plans.TimeJoinInputs.lower(left, right, leftKeys, rightKeys,
+        leftTime, rightTime, payload) { j =>
+      graft.plans.BandJoinPlan(j.left, j.right, j.leftKeys, j.rightKeys,
+        j.leftTime, j.rightTime, lo, hi, j.payload, j.payloadOut,
+        broadcast, leftOuter)
+    }
 }

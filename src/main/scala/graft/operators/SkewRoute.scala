@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Stats-based SKEW ROUTING for the custom exec tier (as-of and band
@@ -10,18 +10,21 @@ import org.apache.spark.sql.functions._
   * SortMergeJoinExec/ShuffledHashJoinExec, so the exchanges feeding
   * [[graft.plans.AsOfJoinExec]]/[[graft.plans.BandJoinExec]] are
   * coalesced but never runtime-split — a hot key is one straggler task
-  * however many executors idle beside it. [[AsOfJoin.asofSalted]] /
-  * [[BandJoin.bandJoinSalted]] are the manual mitigation; this router
-  * picks them from measured key statistics so the caller does not have
-  * to know that AQE will not save them.
+  * however many executors idle beside it. [[salt]] is the manual
+  * mitigation behind [[AsOfJoin.asofSalted]] /
+  * [[BandJoin.bandJoinSalted]]; [[route]] picks it from measured key
+  * statistics for [[AsOfJoin.asofAutoSkew]] /
+  * [[BandJoin.bandJoinAutoSkew]], so the caller does not have to know
+  * that AQE will not save them.
   *
-  * DECISION TREE (the 100 TB order of preference):
+  * DECISION TREE ([[route]], the 100 TB order of preference):
   *   1. right side fits `spark.sql.autoBroadcastJoinThreshold` →
   *      BROADCAST exec. The fact side is never shuffled at all, so key
   *      skew is moot — strictly better than any salted shuffle.
   *   2. else measure the left's max single-key share from a bounded
   *      sample; share >= the hot threshold → the SALTED sort-merge
-  *      (hash-partitions on (key, salt)).
+  *      (hash-partitions on (key, salt)), with the fan-out capped by
+  *      [[guardedBuckets]];
   *   3. else the plain co-partitioned sort-merge.
   *
   * The measurement is one column-pruned pass over the left's key with
@@ -90,14 +93,52 @@ object SkewRoute {
     else Some(row.getLong(0).toDouble / row.getLong(1).toDouble)
   }
 
-  /** True when the broadcast strategy applies: threshold enabled and
-    * the right side's logical size estimate fits under it — the same
-    * rule GraftStrategies (and Spark's JoinSelection) uses. */
-  def rightFitsBroadcast(right: DataFrame): Boolean = {
-    val threshold = right.sparkSession.sessionState.conf
-      .autoBroadcastJoinThreshold
-    threshold > 0 &&
-      right.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+  /** True when the broadcast strategy applies: the rule
+    * [[graft.plans.GraftStrategies.fitsBroadcast]] applies at planning,
+    * evaluated on `right`'s own session conf and optimized plan. */
+  def rightFitsBroadcast(right: DataFrame): Boolean =
+    graft.plans.GraftStrategies.fitsBroadcast(
+      right.queryExecution.optimizedPlan, right.sparkSession.sessionState.conf)
+
+  /** The physical route [[route]] picks for one skew-aware join. */
+  sealed trait Route
+  case object Broadcast extends Route
+  final case class Salted(buckets: Int) extends Route
+  case object SortMerge extends Route
+
+  /** The decision tree above for a join of `left` (keyed on `leftKey`)
+    * with `right`; `hotShare`/`buckets` override the session conf.
+    * Step 2 runs one eager, bounded sampling job ([[hotKeyShare]]). */
+  def route(left: DataFrame, right: DataFrame, leftKey: String,
+            hotShare: Option[Double], buckets: Option[Int]): Route = {
+    val c = conf(left)
+    if (rightFitsBroadcast(right)) Broadcast
+    else {
+      val hot = hotKeyShare(left, leftKey, c.sampleBytes, c.minRows)
+        .exists(_ >= hotShare.getOrElse(c.hotShare))
+      // cost guard: replicated-right volume ≤ maxReplication × |left|;
+      // under 2 affordable buckets the salt cannot pay → plain SMJ
+      val b = guardedBuckets(left, right,
+        buckets.getOrElse(c.buckets), c.maxReplication)
+      if (hot && b >= 2) Salted(b) else SortMerge
+    }
+  }
+
+  /** The salt recipe: the left gets int column `saltCol` in
+    * [0, buckets) from `stable` row content ([[Salt.saltCol]] —
+    * deterministic, so task retries salt identically), and the right
+    * is REPLICATED once per bucket value. Joined on (key, saltCol),
+    * every left row still meets its key's full right side. */
+  def salt(left: DataFrame, right: DataFrame, saltCol: String,
+           buckets: Int, stable: Column): (DataFrame, DataFrame) = {
+    require(buckets >= 1 && buckets <= 4096,
+      s"salt buckets must be in [1, 4096], got $buckets")
+    require(!(left.columns ++ right.columns).contains(saltCol),
+      s"input column $saltCol collides with the salting column — rename it")
+    (left.withColumn(saltCol, Salt.saltCol(stable, buckets).cast("int")),
+      right
+        .withColumn(saltCol, explode(sequence(lit(0), lit(buckets - 1))))
+        .withColumn(saltCol, col(saltCol).cast("int")))
   }
 
   /** COST GUARD on the salted route: cap the salt fan-out so the

@@ -75,65 +75,62 @@ final case class TriIndex(root: String) extends Maintained {
     // re-read the pruned store per consumer.
     val tb = store.touched(batchNodes, col("node"))
     onPrunedRead("adj", tb)
-    val incident = store.read(spark, adjSchema, Some(tb),
+    graft.Q.pinned(store.read(spark, adjSchema, Some(tb),
         table = Some("adj"), excludeDelta = Some(waveId))
-      .join(batchNodes, Seq("node"), "left_semi")
-      .localCheckpoint()
-    val oldEdges = incident
-      .select(least(col("node"), col("nbr")).as("u"),
-        greatest(col("node"), col("nbr")).as("v"))
-      .distinct()
-    // maintained degrees for the nodes this fold orients: the fold's
-    // endpoints are the batch's (buckets tb) plus the incident rows'
-    // far ends — one bucket probe over the materialized frame; extra
-    // same-bucket nodes are harmless (every consumer joins inner on
-    // edge endpoints). Additive sum over those buckets plus the
-    // batch's own contribution (a node's rows all share its bucket —
-    // exact).
-    val td = (tb ++ store.touched(
-      incident.select(col("nbr").as("node")), col("node"))).distinct.sorted
-    onPrunedRead("deg", td)
-    val batchDeg = e.select(col("u").as("node"))
-      .unionAll(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("bd"))
-    val deg = store.read(spark, degSchema, Some(td),
-        table = Some("deg"), excludeDelta = Some(waveId))
-      .groupBy("node").agg(sum("d").as("sd"))
-      .join(batchDeg, Seq("node"), "full_outer")
-      .select(col("node"),
-        (coalesce(col("sd"), lit(0L)) + coalesce(col("bd"), lit(0L))).as("deg"))
+      .join(batchNodes, Seq("node"), "left_semi")) { incident =>
+      val oldEdges = incident
+        .select(least(col("node"), col("nbr")).as("u"),
+          greatest(col("node"), col("nbr")).as("v"))
+        .distinct()
+      // maintained degrees for the nodes this fold orients: the fold's
+      // endpoints are the batch's (buckets tb) plus the incident rows'
+      // far ends — one bucket probe over the materialized frame; extra
+      // same-bucket nodes are harmless (every consumer joins inner on
+      // edge endpoints). Additive sum over those buckets plus the
+      // batch's own contribution (a node's rows all share its bucket —
+      // exact).
+      val td = (tb ++ store.touched(
+        incident.select(col("nbr").as("node")), col("node"))).distinct.sorted
+      onPrunedRead("deg", td)
+      val batchDeg = e.select(col("u").as("node"))
+        .unionAll(e.select(col("v").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("bd"))
+      val degrees = store.read(spark, degSchema, Some(td),
+          table = Some("deg"), excludeDelta = Some(waveId))
+        .groupBy("node").agg(sum("d").as("sd"))
+        .join(batchDeg, Seq("node"), "full_outer")
+        .select(col("node"),
+          (coalesce(col("sd"), lit(0L)) + coalesce(col("bd"), lit(0L))).as("deg"))
       // materialized: the orientation consumes it twice, and real row
       // stats let the broadcast router see its true (node-grain) size
-      .localCheckpoint()
-    val all = oldEdges.withColumn("is_new", lit(false))
-      .unionByName(e.withColumn("is_new", lit(true)))
-    // O(batch) state append: both adjacency directions + degree counts.
-    // The commit reads ONLY the wave's own rows (e / batchDeg) — never
-    // incident, deg, or the store — while the wedge count reads only
-    // the two pinned frames plus e; they share no dependency, so OVERLAP
-    // them (the EmbIndex commit-under-verify move, guide §2.6): the
-    // state write hides under the wedge fold. Safe in every
-    // interleaving: reads exclude the wave's own delta (replay
-    // contract), so the count is identical whether the commit has
-    // landed or not, and a crash after either half replays identically.
-    val adjRows = e.select(col("u").as("node"), col("v").as("nbr"))
-      .unionAll(e.select(col("v").as("node"), col("u").as("nbr")))
-      .withColumn("tbl", lit("adj"))
-    val degRows = batchDeg.select(col("node"), col("bd").as("d"))
-      .withColumn("tbl", lit("deg"))
-    val commit = scala.concurrent.Future {
-      store.appendTables(
-        adjRows.unionByName(degRows, allowMissingColumns = true)
-          .withColumn("gbucket", store.gb(col("node"))),
-        waveId, within = Seq(col("node")))
-    }(scala.concurrent.ExecutionContext.global)
-    val delta =
-      try Triangles.countDeltaWithDeg(all, deg).head().getLong(0)
-      finally scala.concurrent.Await.result(
-        commit, scala.concurrent.duration.Duration.Inf)
-    graft.Q.unpin(incident)
-    graft.Q.unpin(deg)
-    delta
+      graft.Q.pinned(degrees) { deg =>
+        val all = oldEdges.withColumn("is_new", lit(false))
+          .unionByName(e.withColumn("is_new", lit(true)))
+        // O(batch) state append: both adjacency directions + degree counts.
+        // The commit reads ONLY the wave's own rows (e / batchDeg) — never
+        // incident, deg, or the store — while the wedge count reads only
+        // the two pinned frames plus e; they share no dependency, so OVERLAP
+        // them (the EmbIndex commit-under-verify move, guide §2.6): the
+        // state write hides under the wedge fold. Safe in every
+        // interleaving: reads exclude the wave's own delta (replay
+        // contract), so the count is identical whether the commit has
+        // landed or not, and a crash after either half replays identically.
+        val adjRows = e.select(col("u").as("node"), col("v").as("nbr"))
+          .unionAll(e.select(col("v").as("node"), col("u").as("nbr")))
+          .withColumn("tbl", lit("adj"))
+        val degRows = batchDeg.select(col("node"), col("bd").as("d"))
+          .withColumn("tbl", lit("deg"))
+        val commit = scala.concurrent.Future {
+          store.appendTables(
+            adjRows.unionByName(degRows, allowMissingColumns = true)
+              .withColumn("gbucket", store.gb(col("node"))),
+            waveId, within = Seq(col("node")))
+        }(scala.concurrent.ExecutionContext.global)
+        try Triangles.countDeltaWithDeg(all, deg).head().getLong(0)
+        finally scala.concurrent.Await.result(
+          commit, scala.concurrent.duration.Duration.Inf)
+      }
+    }
   }
 
   /** (n_nodes, n_edges) from the maintained degree table alone — the

@@ -40,8 +40,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
   *                   instead of composing two joins (two left
   *                   exchanges). Requires an integral- or
   *                   floating-backed time type (distance arithmetic);
-  *                   [[graft.operators.AsOfJoin.asofNearestNative]]
-  *                   falls back to the composition otherwise.
+  *                   [[graft.operators.AsOfJoin.asof]] plans the
+  *                   composed two-join form otherwise.
   *                   Mutually exclusive with `forward`.
   * @param tolerance  bounded match distance (pandas
   *                   `merge_asof(tolerance=)`), in the time type's

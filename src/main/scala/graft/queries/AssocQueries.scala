@@ -303,11 +303,11 @@ object AssocQueries {
           .select(col("user_id"), col("t_us"),
             col("event_id").as("touch_id"),
             col("event_type").as("channel0"))
-        val joined = BandJoin.bandJoinLeftOuterNative(
+        val joined = BandJoin.bandJoin(
           purch, touches,
           "user_id", "user_id", "c_us", "t_us",
           lo = -W - 1, hi = -1,
-          payload = Seq("touch_id", "channel0", "t_us"))
+          payload = Seq("touch_id", "channel0", "t_us"), leftOuter = true)
         val byConv = Window.partitionBy("conv_id")
         val credited = joined
           .withColumn("n", count("touch_id").over(byConv))
@@ -452,25 +452,25 @@ object AssocQueries {
         // derived ONCE, landed twice: without the pin each wave write
         // re-runs the distinct + self-join + threshold aggregate — the
         // query's single heaviest chain — from scratch
-        val edges = triEdges(s, dir).localCheckpoint()
         def latestTotalBelow(id: Long): Long =
           Replay.latestBelow(s"$out/total", id).map { k =>
             s.read.parquet(s"$out/total/state=$k").head().getLong(0)
           }.getOrElse(0L)
-        Replay.stream(s, out, Replay.split(edges, 2, col("u"), col("v")),
-            parts = 2) { (b, id) =>
-          // threshold 0 so the policy fires under this two-batch gate
-          idx.compactBefore(s, id, maxDeltas = 0)
-          val total = latestTotalBelow(id) + idx.foldWave(s, b, id)
-          s.createDataFrame(
-              java.util.List.of(org.apache.spark.sql.Row(total)),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("total",
-                  org.apache.spark.sql.types.LongType))))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$out/total/state=$id")
+        Q.pinned(triEdges(s, dir)) { edges =>
+          Replay.stream(s, out, Replay.split(edges, 2, col("u"), col("v")),
+              parts = 2) { (b, id) =>
+            // threshold 0 so the policy fires under this two-batch gate
+            idx.compactBefore(s, id, maxDeltas = 0)
+            val total = latestTotalBelow(id) + idx.foldWave(s, b, id)
+            s.createDataFrame(
+                java.util.List.of(org.apache.spark.sql.Row(total)),
+                org.apache.spark.sql.types.StructType(Seq(
+                  org.apache.spark.sql.types.StructField("total",
+                    org.apache.spark.sql.types.LongType))))
+              .coalesce(1).write.mode("overwrite")
+              .parquet(s"$out/total/state=$id")
+          }
         }
-        Q.unpin(edges)
         idx.stats(s)
           .select(col("n_nodes"), col("n_edges"),
             lit(latestTotalBelow(Long.MaxValue)).as("n_triangles"))
@@ -897,14 +897,14 @@ object AssocQueries {
         val idx = BasketIndex(s"$out/store")
         // derived ONCE: both wave writes filter this frame instead of
         // re-running the scan + brand join
-        val lines = basketLines(s, dir).localCheckpoint()
-        Replay.stream(s, out,
-            Replay.split(lines, 2, col("ok"), col("ln")).map(_.select("ok", "brand")),
-            parts = 8) { (b, id) =>
-          idx.compactBefore(s, id, maxDeltas = 0)
-          idx.appendWave(s, b, id)
+        Q.pinned(basketLines(s, dir)) { lines =>
+          Replay.stream(s, out,
+              Replay.split(lines, 2, col("ok"), col("ln")).map(_.select("ok", "brand")),
+              parts = 8) { (b, id) =>
+            idx.compactBefore(s, id, maxDeltas = 0)
+            idx.appendWave(s, b, id)
+          }
         }
-        Q.unpin(lines)
         basketReport(idx.pairs(s), idx.brands(s), idx.orderCount(s))
       },
       Some(basketOracleSql)),

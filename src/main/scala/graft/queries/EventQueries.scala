@@ -291,16 +291,16 @@ object EventQueries {
         val idx = Scd2Index(Q.fresh(s, "q209_scd2idx", dir))
         // derived ONCE: the midpoint agg and both wave filters consume
         // this frame — 3 scans of events become 1
-        val ev = scd2Events(s, dir).localCheckpoint()
-        // per-key time-split waves from the global midpoint (usable
-        // because us <= mid / us > mid splits EVERY key in time order)
-        val mid = ev.agg(
-          ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
-          .head().getLong(0)
-        idx.appendBatch(s, ev.where(col("us") <= mid), 1)
-        idx.compact(s)
-        idx.appendBatch(s, ev.where(col("us") > mid), 2)
-        Q.unpin(ev)
+        Q.pinned(scd2Events(s, dir)) { ev =>
+          // per-key time-split waves from the global midpoint (usable
+          // because us <= mid / us > mid splits EVERY key in time order)
+          val mid = ev.agg(
+            ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
+            .head().getLong(0)
+          idx.appendBatch(s, ev.where(col("us") <= mid), 1)
+          idx.compact(s)
+          idx.appendBatch(s, ev.where(col("us") > mid), 2)
+        }
         scd2Report(idx.intervals(s))
       },
       Some(scd2OracleSql)),
@@ -314,9 +314,9 @@ object EventQueries {
     // purchase would trivially look up itself and the query degenerates
     // to a projection.
     //
-    // Plan shape: one backward as-of join (AsOfJoin.asofBackward's
-    // union + keyed running-carry window — a single exchange on the
-    // user key, PlanShapeSpec pins it) of purchases against the
+    // Plan shape: one backward as-of join (AsOfJoin.asof's `window`
+    // strategy: union + keyed running-carry window — a single exchange
+    // on the user key, PlanShapeSpec pins it) of purchases against the
     // attribute stream, then a ~tiers-sized aggregate. Probing the RAW
     // attribute stream is exactly equivalent to probing the q192 SCD2
     // dimension (a run's payload is its first event's attribute) but
@@ -342,8 +342,9 @@ object EventQueries {
             floor(col("value") / lit(100.0)).cast("int").as("tier"))
         val purchases = ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("us"), col("value"))
-        AsOfJoin.asofBackward(purchases, attr,
-            "user_id", "u2", "us", "t_attr", payload = Seq("tier"))
+        AsOfJoin.asof(purchases, attr,
+            "user_id", "u2", "us", "t_attr", payload = Seq("tier"),
+            strategy = "window")
           .groupBy("tier")
           .agg(count(lit(1)).as("n_purchases"),
             countDistinct(col("user_id")).as("n_users"),
@@ -748,19 +749,19 @@ object EventQueries {
         val idx = Scd2Index(s"$out/store")
         // derived ONCE: the midpoint agg and both wave landing writes
         // consume this frame — 3 scans of events become 1
-        val ev = scd2Events(s, dir).localCheckpoint()
-        val mid = ev.agg(
-          ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
-          .head().getLong(0)
-        Replay.stream(s, out,
-            Seq(ev.where(col("us") <= mid), ev.where(col("us") > mid)),
-            parts = 2) { (b, id) =>
-          // threshold 0 so the policy fires under this gate; the firing
-          // itself is pinned in AutoCompactSpec
-          idx.compactBefore(s, id, maxDeltas = 0)
-          idx.appendBatch(s, b, id)
+        Q.pinned(scd2Events(s, dir)) { ev =>
+          val mid = ev.agg(
+            ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
+            .head().getLong(0)
+          Replay.stream(s, out,
+              Seq(ev.where(col("us") <= mid), ev.where(col("us") > mid)),
+              parts = 2) { (b, id) =>
+            // threshold 0 so the policy fires under this gate; the firing
+            // itself is pinned in AutoCompactSpec
+            idx.compactBefore(s, id, maxDeltas = 0)
+            idx.appendBatch(s, b, id)
+          }
         }
-        Q.unpin(ev)
         scd2Report(idx.intervals(s))
       },
       Some(scd2OracleSql)),
@@ -862,41 +863,41 @@ object EventQueries {
         // wave filters, and the late key set each consumed this frame —
         // without the cut that was ~9 scans of events per run (every
         // wave feeds BOTH bronze and silver)
-        val ev = scd2Events(s, dir).localCheckpoint()
-        val b = ev.agg(
-            ((min(col("us")) * 2 + max(col("us"))) / lit(3L)).cast("long"),
-            ((min(col("us")) + max(col("us")) * 2) / lit(3L)).cast("long"))
-          .head()
-        val (mid, hi) = (b.getLong(0), b.getLong(1))
-        // the late slice: a deterministic subset of EARLY events that
-        // arrives AFTER the middle third is already indexed
-        val isLate = col("us") <= mid && pmod(col("tie"), lit(7)) === 0
-        val w1 = ev.where(col("us") <= mid && !isLate)
-        val w2 = ev.where(col("us") > mid && col("us") <= hi)
-        val w3 = ev.where(col("us") > hi)
-        val late = ev.where(isLate)
-        val bronze = MorTable(DeltaStore(s"$root/bronze"), Seq("tie"), ev.schema)
-        bronze.upsert(w1, 1)
-        silver.appendBatch(s, w1, 1)
-        bronze.upsert(w2, 2)
-        silver.appendBatch(s, w2, 2)
-        bronze.upsert(late, 3)
-        val refused =
-          try { silver.appendBatch(s, late, 3); false }
-          catch { case _: IllegalArgumentException => true }
-        require(refused,
-          "q230: the horizon guard must refuse the out-of-order batch")
-        // repair: the affected keys' full history from bronze...
-        val affected = late.select("k").distinct()
-        val raw = bronze.snapshot(s)
-        val history = raw.join(affected, Seq("k"), "left_semi")
-        // ...BACKFILLED into the index as one catch-up delta
-        silver.backfill(s, history, 4)
-        // the fast path is live again: a later in-order batch appends
-        // through the guard, stitching onto rebuilt and untouched keys
-        bronze.upsert(w3, 5)
-        silver.appendBatch(s, w3, 5)
-        Q.unpin(ev)
+        Q.pinned(scd2Events(s, dir)) { ev =>
+          val b = ev.agg(
+              ((min(col("us")) * 2 + max(col("us"))) / lit(3L)).cast("long"),
+              ((min(col("us")) + max(col("us")) * 2) / lit(3L)).cast("long"))
+            .head()
+          val (mid, hi) = (b.getLong(0), b.getLong(1))
+          // the late slice: a deterministic subset of EARLY events that
+          // arrives AFTER the middle third is already indexed
+          val isLate = col("us") <= mid && pmod(col("tie"), lit(7)) === 0
+          val w1 = ev.where(col("us") <= mid && !isLate)
+          val w2 = ev.where(col("us") > mid && col("us") <= hi)
+          val w3 = ev.where(col("us") > hi)
+          val late = ev.where(isLate)
+          val bronze = MorTable(DeltaStore(s"$root/bronze"), Seq("tie"), ev.schema)
+          bronze.upsert(w1, 1)
+          silver.appendBatch(s, w1, 1)
+          bronze.upsert(w2, 2)
+          silver.appendBatch(s, w2, 2)
+          bronze.upsert(late, 3)
+          val refused =
+            try { silver.appendBatch(s, late, 3); false }
+            catch { case _: IllegalArgumentException => true }
+          require(refused,
+            "q230: the horizon guard must refuse the out-of-order batch")
+          // repair: the affected keys' full history from bronze...
+          val affected = late.select("k").distinct()
+          val raw = bronze.snapshot(s)
+          val history = raw.join(affected, Seq("k"), "left_semi")
+          // ...BACKFILLED into the index as one catch-up delta
+          silver.backfill(s, history, 4)
+          // the fast path is live again: a later in-order batch appends
+          // through the guard, stitching onto rebuilt and untouched keys
+          bronze.upsert(w3, 5)
+          silver.appendBatch(s, w3, 5)
+        }
         // index-only read — no repair leg, no bronze access
         scd2Report(silver.intervals(s))
       },

@@ -33,11 +33,12 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        AsOfJoin.asofBackward(
+        AsOfJoin.asof(
           ev, orders,
           leftKey = "user_id", rightKey = "o_custkey",
           leftTime = "ts", rightTime = "o_orderdate",
-          payload = Seq("asof_orderkey", "asof_totalprice"))
+          payload = Seq("asof_orderkey", "asof_totalprice"),
+          strategy = "window")
           .orderBy("event_id")
       },
       Some("""
@@ -77,11 +78,12 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        AsOfJoin.asofBackwardNative(
+        AsOfJoin.asof(
           ev, orders,
           leftKey = "user_id", rightKey = "o_custkey",
           leftTime = "ts", rightTime = "o_orderdate",
-          payload = Seq("asof_orderkey", "asof_totalprice"))
+          payload = Seq("asof_orderkey", "asof_totalprice"),
+          strategy = "sortmerge")
           .orderBy("event_id")
       },
       Some("""
@@ -120,11 +122,12 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        AsOfJoin.asofBackwardBroadcast(
+        AsOfJoin.asof(
           ev, orders,
           leftKey = "user_id", rightKey = "o_custkey",
           leftTime = "ts", rightTime = "o_orderdate",
-          payload = Seq("asof_orderkey", "asof_totalprice"))
+          payload = Seq("asof_orderkey", "asof_totalprice"),
+          strategy = "broadcast")
           .orderBy("event_id")
       },
       Some("""
@@ -163,11 +166,12 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("next_orderkey"),
             col("o_totalprice").as("next_totalprice"))
-        AsOfJoin.asofForwardNative(
+        AsOfJoin.asof(
           ev, orders,
           leftKey = "user_id", rightKey = "o_custkey",
           leftTime = "ts", rightTime = "o_orderdate",
-          payload = Seq("next_orderkey", "next_totalprice"))
+          payload = Seq("next_orderkey", "next_totalprice"),
+          direction = "forward", strategy = "sortmerge")
           .orderBy("event_id")
       },
       Some("""
@@ -207,11 +211,12 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("near_orderkey"),
             col("o_totalprice").as("near_totalprice"))
-        AsOfJoin.asofNearestNative(
+        AsOfJoin.asof(
           ev, orders,
           leftKey = "user_id", rightKey = "o_custkey",
           leftTime = "ts", rightTime = "o_orderdate",
-          payload = Seq("near_orderkey", "near_totalprice"))
+          payload = Seq("near_orderkey", "near_totalprice"),
+          direction = "nearest", strategy = "sortmerge")
           .orderBy("event_id")
       },
       Some("""
@@ -241,7 +246,7 @@ object ExtraQueries {
     // operator deployed as a continuous pipeline: the event stream is
     // micro-batched (several files, maxFilesPerTrigger) through
     // foreachBatch, each batch enriched against the STATIC deduped
-    // order dimension by asofBackwardBroadcast (dim broadcast once per
+    // order dimension by the broadcast as-of (dim broadcast once per
     // batch; the event stream is never shuffled or sorted — per-row
     // cost is a hash probe + binary search). As-of enrichment is
     // row-wise against a fixed right side, so the union of all batches
@@ -268,9 +273,10 @@ object ExtraQueries {
         graft.streaming.Replay.run(out, s.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", "2").parquet(s"$out/in")) {
           (b, _) =>
-            AsOfJoin.asofBackwardBroadcast(b, orders,
+            AsOfJoin.asof(b, orders,
                 "user_id", "o_custkey", "ts", "o_orderdate",
-                Seq("asof_orderkey", "asof_totalprice"))
+                Seq("asof_orderkey", "asof_totalprice"),
+                strategy = "broadcast")
               .write.mode("append").parquet(s"$out/enriched")
         }
         s.read.parquet(s"$out/enriched")
@@ -317,11 +323,12 @@ object ExtraQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        AsOfJoin.asofBackwardAuto(
+        AsOfJoin.asof(
           ev, orders,
           leftKey = "user_id", rightKey = "o_custkey",
           leftTime = "ts", rightTime = "o_orderdate",
-          payload = Seq("asof_orderkey", "asof_totalprice"))
+          payload = Seq("asof_orderkey", "asof_totalprice"),
+          strategy = "auto")
           .orderBy("event_id")
       },
       Some("""
@@ -1466,13 +1473,13 @@ object ExtraQueries {
         val out = Q.fresh(s, "q181_sketchidx", dir)
         // derived ONCE (the q221 move): four batch filters consume the
         // events scan — materialize once, filter blocks
-        val ev = Tables.events(s, dir).localCheckpoint()
         val idx = SketchIndex(out)
-        (0 to 3).foreach { k =>
-          idx.compactBefore(s, k, maxDeltas = 1)
-          idx.appendBatch(s, ev.where(col("event_id") % 4 === k), k)
+        Q.pinned(Tables.events(s, dir)) { ev =>
+          (0 to 3).foreach { k =>
+            idx.compactBefore(s, k, maxDeltas = 1)
+            idx.appendBatch(s, ev.where(col("event_id") % 4 === k), k)
+          }
         }
-        graft.Q.unpin(ev)
         serveSketchReport(s, idx)
       },
       Some(sketchOracleSql)),

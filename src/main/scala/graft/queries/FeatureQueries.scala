@@ -524,12 +524,12 @@ object FeatureQueries {
           .select(col("o_custkey"), col("o_orderdate"),
             col("o_orderkey").as("asof_orderkey"),
             col("o_totalprice").as("asof_totalprice"))
-        graft.operators.AsOfJoin.asofBackwardToleranceNative(
+        graft.operators.AsOfJoin.asof(
           ev, orders,
           leftKey = "user_id", rightKey = "o_custkey",
           leftTime = "ts", rightTime = "o_orderdate",
           payload = Seq("asof_orderkey", "asof_totalprice"),
-          tolerance = 8400L * 24 * 3600 * 1000000L) // 8400 days in micros
+          tolerance = Some(8400L * 24 * 3600 * 1000000L)) // 8400 days in micros
           .orderBy("event_id")
       },
       Some("""
@@ -634,12 +634,12 @@ object FeatureQueries {
           .where(col("__rn") === 1)
           .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
             col("event_id").as("p_event_id"), col("value").as("p_value"))
-        graft.operators.AsOfJoin.asofForwardToleranceNative(
+        graft.operators.AsOfJoin.asof(
           clicks, purchases,
           leftKey = "user_id", rightKey = "p_user",
           leftTime = "ts", rightTime = "p_ts",
-          payload = Seq("p_event_id", "p_value"),
-          tolerance = 2L * 24 * 3600 * 1000000L) // 2 days in micros
+          payload = Seq("p_event_id", "p_value"), direction = "forward",
+          tolerance = Some(2L * 24 * 3600 * 1000000L)) // 2 days in micros
           .orderBy("event_id")
       },
       Some("""
@@ -686,12 +686,12 @@ object FeatureQueries {
           .where(col("__rn") === 1)
           .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
             col("event_id").as("p_event_id"), col("value").as("p_value"))
-        graft.operators.AsOfJoin.asofNearestToleranceNative(
+        graft.operators.AsOfJoin.asof(
           clicks, purchases,
           leftKey = "user_id", rightKey = "p_user",
           leftTime = "ts", rightTime = "p_ts",
-          payload = Seq("p_event_id", "p_value"),
-          tolerance = 24L * 3600 * 1000000L) // 1 day in micros
+          payload = Seq("p_event_id", "p_value"), direction = "nearest",
+          tolerance = Some(24L * 3600 * 1000000L)) // 1 day in micros
           .orderBy("event_id")
       },
       Some("""
@@ -754,11 +754,11 @@ object FeatureQueries {
           .where(col("__rn") === 1)
           .select(col("user_id").as("p_user"), col("pd").as("p_d"),
             col("event_id").as("p_event_id"), col("value").as("p_value"))
-        graft.operators.AsOfJoin.asofBackwardStrictNative(
+        graft.operators.AsOfJoin.asof(
           clicks, purchases,
           leftKey = "user_id", rightKey = "p_user",
           leftTime = "d", rightTime = "p_d",
-          payload = Seq("p_event_id", "p_value"))
+          payload = Seq("p_event_id", "p_value"), allowExactMatches = false)
           .orderBy("event_id")
       },
       Some("""
@@ -805,11 +805,12 @@ object FeatureQueries {
           .where(col("__rn") === 1)
           .select(col("user_id").as("p_user"), col("pd").as("p_d"),
             col("event_id").as("p_event_id"), col("value").as("p_value"))
-        graft.operators.AsOfJoin.asofNearestStrictNative(
+        graft.operators.AsOfJoin.asof(
           clicks, purchases,
           leftKey = "user_id", rightKey = "p_user",
           leftTime = "d", rightTime = "p_d",
-          payload = Seq("p_event_id", "p_value"))
+          payload = Seq("p_event_id", "p_value"), direction = "nearest",
+          allowExactMatches = false)
           .orderBy("event_id")
       },
       Some("""

@@ -395,14 +395,14 @@ object JoinQueries {
         val purch = ev.where(col("event_type") === "purchase")
           .select(col("user_id"), col("event_id").as("purchase_id"),
             col("t_us").as("p_us"))
-        BandJoin.bandJoinLeftOuterNative(
+        BandJoin.bandJoin(
           purch,
           ev.select(col("user_id"), col("t_us"),
             col("event_id").as("attr_event_id"),
             col("event_type").as("attr_event_type")),
           "user_id", "user_id", "p_us", "t_us",
           lo = 0, hi = W,
-          payload = Seq("attr_event_id", "attr_event_type"))
+          payload = Seq("attr_event_id", "attr_event_type"), leftOuter = true)
           .select(col("purchase_id"), col("user_id"), col("p_us"),
             col("attr_event_id"), col("attr_event_type"))
           .orderBy(col("purchase_id"), col("attr_event_id"))
@@ -469,9 +469,10 @@ object JoinQueries {
           // event e attributes to purchase p iff t_e − t_p ∈ (0, W]
           // ⇔ t_p − t_e ∈ (−W−1, −1] on integer micros (q147's
           // exact reversal)
-          BandJoin.bandJoinBroadcast(b, purch,
+          BandJoin.bandJoin(b, purch,
               "user_id", "p_user", "t_us", "p_us",
-              lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
+              lo = -W - 1, hi = -1, payload = Seq("purchase_id"),
+              strategy = "broadcast")
             .select("purchase_id", "event_type")
             .write.mode("append").parquet(s"$out/pairs")
         }
@@ -520,7 +521,7 @@ object JoinQueries {
             parts = 2, perFile = true) { (b, _) =>
           // same band reversal as q152 (t_p − t_e ∈ (−W−1, −1]),
           // but through the co-partitioned sort-merge exec
-          BandJoin.bandJoinNative(b, purch,
+          BandJoin.bandJoin(b, purch,
               "user_id", "p_user", "t_us", "p_us",
               lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
             .select("purchase_id", "event_type")
@@ -636,17 +637,17 @@ object JoinQueries {
       if (broadcastDim)
         // fact-side left: every event picks up its preceding-24h
         // purchases from the broadcast index, then re-keys to purchases
-        BandJoin.bandJoinBroadcast(
+        BandJoin.bandJoin(
           ev.select(col("user_id"), col("event_id"), col("t_us"),
             col("event_type")),
           purch.select(col("user_id").as("p_user"), col("purchase_id"),
             col("p_us")),
           "user_id", "p_user", "t_us", "p_us",
           lo = -W - 1, hi = -1,
-          payload = Seq("purchase_id"))
+          payload = Seq("purchase_id"), strategy = "broadcast")
           .select(col("purchase_id"), col("event_type"))
       else
-        BandJoin.bandJoinNative(
+        BandJoin.bandJoin(
           purch, ev.select(col("user_id"), col("t_us"), col("event_type")),
           "user_id", "user_id", "p_us", "t_us",
           lo = 0, hi = W,

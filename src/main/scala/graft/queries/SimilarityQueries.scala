@@ -1090,15 +1090,15 @@ object SimilarityQueries {
         val out = Q.fresh(s, "q221_streamcc", dir)
         val idx = CcIndex(s"$out/store")
         // derived once, landed once (two wave writes filter it)
-        val pairs = nearDupPairs(s, dir).localCheckpoint()
-        Replay.stream(s, out,
-            Replay.split(pairs, 2, col("name_a"), col("name_b")),
-            parts = 2) { (b, id) =>
-          // threshold 0 so the policy fires under this two-batch gate
-          idx.compactBefore(s, id, maxDeltas = 0)
-          idx.appendWave(s, b, id)
+        Q.pinned(nearDupPairs(s, dir)) { pairs =>
+          Replay.stream(s, out,
+              Replay.split(pairs, 2, col("name_a"), col("name_b")),
+              parts = 2) { (b, id) =>
+            // threshold 0 so the policy fires under this two-batch gate
+            idx.compactBefore(s, id, maxDeltas = 0)
+            idx.appendWave(s, b, id)
+          }
         }
-        Q.unpin(pairs)
         idx.labels(s)
           .select(col("id").as("name"), col("comp").as("component"))
           .orderBy("name")
@@ -1426,46 +1426,46 @@ object SimilarityQueries {
         val out = Q.fresh(s, "q103_lshidx", dir)
         // scanned ONCE (the q221 move): four batch slices re-read the
         // text table otherwise
-        val docs = Tables.documents(s, dir).localCheckpoint()
-        // each batch's emission is localCheckpoint-materialized by
-        // upsertBatch, so the frames stay valid across later upserts —
-        // union them directly (the emit-parquet round trip was 5 extra
-        // jobs per replay for bytes nothing else read).
-        // CROSS-BATCH PIPELINE (LshIndex.upsertBatchPipelined): the
-        // only serial dependency between batches is the in-memory
-        // state chain — batch K+1's prep (shingle explode + counts)
-        // overlaps batch K's chain, K's exact-Jaccard verify and
-        // ordered store commit overlap K+1's chain, and prior-state
-        // reads come from the carried cache pieces instead of
-        // re-scanning the store. Bit-identical to the serial
-        // store-read replay (LshIndexSpec pins the equivalence).
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val batches = (0 to 3).map(k => docs.where(col("doc_id") % 4 === k))
-        val idx = graft.operators.LshIndex(s"$out/index")
-        var hist = Vector.empty[graft.operators.LshIndex.BatchState]
-        var commit: Future[Unit] = Future.unit
-        var prep = graft.operators.LshIndex.prepareBatch(s, batches(0))
-        val pairFutures = (0 to 3).map { k =>
-          val next =
-            if (k < 3) Some(Future(graft.operators.LshIndex.prepareBatch(s, batches(k + 1))))
-            else None
-          val (pairsF, st, cf) = idx.upsertBatchPipelined(
-            s, batches(k),
-            batchId = k, dfCap = dfCap, bucketCap = bucketCap,
-            prepared = Some(prep), history = Some(hist), prevCommit = commit)
-          hist = hist :+ st; commit = cf
-          next.foreach(f => prep = Await.result(f, Duration.Inf))
-          pairsF
+        Q.pinned(Tables.documents(s, dir)) { docs =>
+          // each batch's emission is localCheckpoint-materialized by
+          // upsertBatch, so the frames stay valid across later upserts —
+          // union them directly (the emit-parquet round trip was 5 extra
+          // jobs per replay for bytes nothing else read).
+          // CROSS-BATCH PIPELINE (LshIndex.upsertBatchPipelined): the
+          // only serial dependency between batches is the in-memory
+          // state chain — batch K+1's prep (shingle explode + counts)
+          // overlaps batch K's chain, K's exact-Jaccard verify and
+          // ordered store commit overlap K+1's chain, and prior-state
+          // reads come from the carried cache pieces instead of
+          // re-scanning the store. Bit-identical to the serial
+          // store-read replay (LshIndexSpec pins the equivalence).
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.ExecutionContext.Implicits.global
+          import scala.concurrent.duration.Duration
+          val batches = (0 to 3).map(k => docs.where(col("doc_id") % 4 === k))
+          val idx = graft.operators.LshIndex(s"$out/index")
+          var hist = Vector.empty[graft.operators.LshIndex.BatchState]
+          var commit: Future[Unit] = Future.unit
+          var prep = graft.operators.LshIndex.prepareBatch(s, batches(0))
+          val pairFutures = (0 to 3).map { k =>
+            val next =
+              if (k < 3) Some(Future(graft.operators.LshIndex.prepareBatch(s, batches(k + 1))))
+              else None
+            val (pairsF, st, cf) = idx.upsertBatchPipelined(
+              s, batches(k),
+              batchId = k, dfCap = dfCap, bucketCap = bucketCap,
+              prepared = Some(prep), history = Some(hist), prevCommit = commit)
+            hist = hist :+ st; commit = cf
+            next.foreach(f => prep = Await.result(f, Duration.Inf))
+            pairsF
+          }
+          val result = pairFutures.map(Await.result(_, Duration.Inf))
+            .reduce(_.unionByName(_)).orderBy("doc_a", "doc_b")
+          graft.operators.LshIndex.release(hist)
+          // every batch's pipeline (and its commit) has been awaited; the
+          // returned union reads the per-batch pair checkpoints, not docs
+          result
         }
-        val result = pairFutures.map(Await.result(_, Duration.Inf))
-          .reduce(_.unionByName(_)).orderBy("doc_a", "doc_b")
-        graft.operators.LshIndex.release(hist)
-        // every batch's pipeline (and its commit) has been awaited; the
-        // returned union reads the per-batch pair checkpoints, not docs
-        graft.Q.unpin(docs)
-        result
       },
       Some(s"""
         WITH e0 AS (
@@ -1530,16 +1530,16 @@ object SimilarityQueries {
         val r = adaptiveWidthLit(embCount(s, dir), 32)
         // derived ONCE (the q221 move): four batch filters consume the
         // embeddings scan
-        val vecs = Tables.embeddings(s, dir).localCheckpoint()
         val idx = graft.operators.EmbIndex(s"$out/index")
-        val perBatch = (0 to 3).map { k =>
-          idx.upsertBatch(
-            s, vecs.where(col("vec_id") % 4 === k),
-            batchId = k, width = r, bucketCap = 128)
+        val perBatch = Q.pinned(Tables.embeddings(s, dir)) { vecs =>
+          (0 to 3).map { k =>
+            idx.upsertBatch(
+              s, vecs.where(col("vec_id") % 4 === k),
+              batchId = k, width = r, bucketCap = 128)
+          }
         }
         // every batch is committed and its pairs checkpoint-materialized;
         // the returned union reads those checkpoints, not vecs
-        graft.Q.unpin(vecs)
         perBatch.reduce(_.unionByName(_)).orderBy("vec_a", "vec_b")
       },
       Some(s"""

@@ -64,11 +64,8 @@ object Replay {
     * The pin lives only as long as the waves: whatever reads the result
     * afterwards must read the store the body wrote, not `src`. */
   def waves(src: DataFrame, n: Int, key: Column*)
-           (body: (DataFrame, Int) => Unit): Unit = {
-    val pinned = src.localCheckpoint()
-    try split(pinned, n, key: _*).zipWithIndex.foreach(body.tupled)
-    finally graft.Q.unpin(pinned)
-  }
+           (body: (DataFrame, Int) => Unit): Unit =
+    graft.Q.pinned(src)(split(_, n, key: _*).zipWithIndex.foreach(body.tupled))
 
   /** Land each wave under `$root/in` (`repartition(parts)` files) and
     * [[drain]] after each one. The stream schema is `waves.head`'s. */

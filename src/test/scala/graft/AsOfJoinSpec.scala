@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dedicated edge-semantics spec for the THREE as-of implementations —
-  * the union+window formulation ([[AsOfJoin.asofBackward]]), the native
-  * sort-merge physical operator ([[AsOfJoin.asofBackwardNative]], one
+  * the union+window formulation ([[AsOfJoin.asof]] strategy `window`),
+  * the native sort-merge physical operator (`sortmerge`, one
   * co-partitioned merge pass), and the broadcast physical operator
-  * ([[AsOfJoin.asofBackwardBroadcast]], right side broadcast as a
+  * (`broadcast`, right side broadcast as a
   * sorted index, fact side a pure map). Every test runs against ALL,
   * pinning them to each other and to a brute-force per-key oracle:
   *
@@ -38,10 +38,12 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   private type Impl =
     (DataFrame, DataFrame, String, String, String, String, Seq[String]) => DataFrame
+  private def asof(direction: String, strategy: String): Impl =
+    AsOfJoin.asof(_, _, _, _, _, _, _, direction = direction, strategy = strategy)
   private val impls: Seq[(String, Impl)] = Seq(
-    "window" -> (AsOfJoin.asofBackward _),
-    "native" -> (AsOfJoin.asofBackwardNative _),
-    "broadcast" -> (AsOfJoin.asofBackwardBroadcast _))
+    "window" -> asof("backward", "window"),
+    "native" -> asof("backward", "sortmerge"),
+    "broadcast" -> asof("backward", "broadcast"))
 
   private def run(impl: Impl)(l: DataFrame, r: DataFrame)
       : Array[(String, Int, Int, Option[Int], Option[Int])] =
@@ -106,7 +108,7 @@ class AsOfJoinSpec extends AnyFunSuite {
   test("native plan contains AsOfJoinExec and exactly one exchange per side") {
     val l = leftDf(Seq(("k1", 10, 1), ("k2", 9, 2)))
     val r = rightDf(Seq(("k1", 5, Some(50), 500), ("k2", 10, Some(100), 1000)))
-    val df = AsOfJoin.asofBackwardNative(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+    val df = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), plan)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
@@ -116,7 +118,7 @@ class AsOfJoinSpec extends AnyFunSuite {
   test("broadcast plan: BroadcastExchange on the right, NO shuffle and NO sort of the left") {
     val l = leftDf(Seq(("k1", 10, 1), ("k2", 9, 2)))
     val r = rightDf(Seq(("k1", 5, Some(50), 500), ("k2", 10, Some(100), 1000)))
-    val df = AsOfJoin.asofBackwardBroadcast(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+    val df = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"), strategy = "broadcast")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastAsOfJoin"), plan)
     assert(plan.contains("BroadcastExchange"), plan)
@@ -129,14 +131,14 @@ class AsOfJoinSpec extends AnyFunSuite {
     val l = leftDf(Seq(("k1", 10, 1), ("k2", 9, 2)))
     val r = rightDf(Seq(("k1", 5, Some(50), 500), ("k2", 10, Some(100), 1000)))
     // tiny right side under the default 10 MB threshold → broadcast
-    val auto = AsOfJoin.asofBackwardAuto(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+    val auto = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"), strategy = "auto")
     assert(auto.queryExecution.executedPlan.toString.contains("BroadcastAsOfJoin"))
     // threshold disabled → the SAME unhinted call plans the sort-merge
     val conf = spark.conf
     val saved = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val sm = AsOfJoin.asofBackwardAuto(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+      val sm = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"), strategy = "auto")
       val plan = sm.queryExecution.executedPlan.toString
       assert(plan.contains("AsOfJoin") && !plan.contains("BroadcastAsOfJoin"), plan)
       // and both strategies return identical rows
@@ -145,9 +147,9 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   private val forwardImpls: Seq[(String, Impl)] = Seq(
-    "fwd-window" -> (AsOfJoin.asofForward _),
-    "fwd-native" -> (AsOfJoin.asofForwardNative _),
-    "fwd-broadcast" -> (AsOfJoin.asofForwardBroadcast _))
+    "fwd-window" -> asof("forward", "window"),
+    "fwd-native" -> asof("forward", "sortmerge"),
+    "fwd-broadcast" -> asof("forward", "broadcast"))
 
   for ((name, impl) <- forwardImpls) {
 
@@ -193,9 +195,9 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   private val nearestImpls: Seq[(String, Impl)] = Seq(
-    "near-composed" -> (AsOfJoin.asofNearestComposed _),
-    "near-fused" -> (AsOfJoin.asofNearestNative _),
-    "near-broadcast" -> (AsOfJoin.asofNearestBroadcast _))
+    "near-composed" -> asof("nearest", "composed"),
+    "near-fused" -> asof("nearest", "sortmerge"),
+    "near-broadcast" -> asof("nearest", "broadcast"))
 
   for ((name, impl) <- nearestImpls) {
 
@@ -264,9 +266,12 @@ class AsOfJoinSpec extends AnyFunSuite {
       .select(col("k"), col("left_id"), col("a"), col("b"))
       .as[(String, Int, Option[Int], Option[Int])]
       .collect().sortBy(x => (x._1, x._2)).toSeq
-    val composed = canon(AsOfJoin.asofNearestComposed(l, r, "k", "rk", "t", "rt", Seq("a", "b")))
-    val fused = canon(AsOfJoin.asofNearestNative(l, r, "k", "rk", "t", "rt", Seq("a", "b")))
-    val bcast = canon(AsOfJoin.asofNearestBroadcast(l, r, "k", "rk", "t", "rt", Seq("a", "b")))
+    val composed = canon(AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"),
+      direction = "nearest", strategy = "composed"))
+    val fused = canon(AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"),
+      direction = "nearest"))
+    val bcast = canon(AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"),
+      direction = "nearest", strategy = "broadcast"))
     assert(fused == composed, s"fused=$fused\ncomposed=$composed")
     assert(bcast == composed, s"bcast=$bcast\ncomposed=$composed")
     // and the rule itself, spelled out: k1's null-lt left takes the
@@ -279,12 +284,13 @@ class AsOfJoinSpec extends AnyFunSuite {
   test("fused nearest plans ONE exchange per side; the composition needs an extra left exchange") {
     val l = leftDf(Seq(("k1", 10, 1), ("k2", 9, 2)))
     val r = rightDf(Seq(("k1", 5, Some(50), 500), ("k2", 10, Some(100), 1000)))
-    val fused = AsOfJoin.asofNearestNative(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+    val fused = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"), direction = "nearest")
     val fusedPlan = fused.queryExecution.executedPlan.toString
     assert(fusedPlan.contains("AsOfJoin"), fusedPlan)
     val fusedEx = "Exchange hashpartitioning".r.findAllIn(fusedPlan).size
     assert(fusedEx == 2, s"fused nearest must cost ONE exchange per side, got $fusedEx:\n$fusedPlan")
-    val composed = AsOfJoin.asofNearestComposed(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+    val composed = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"),
+      direction = "nearest", strategy = "composed")
     val composedEx = "Exchange hashpartitioning".r
       .findAllIn(composed.queryExecution.executedPlan.toString).size
     assert(composedEx > fusedEx,
@@ -294,7 +300,8 @@ class AsOfJoinSpec extends AnyFunSuite {
   test("broadcast nearest: BroadcastExchange on the right, NO shuffle and NO sort of the left") {
     val l = leftDf(Seq(("k1", 10, 1), ("k2", 9, 2)))
     val r = rightDf(Seq(("k1", 5, Some(50), 500), ("k2", 10, Some(100), 1000)))
-    val df = AsOfJoin.asofNearestBroadcast(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+    val df = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"),
+      direction = "nearest", strategy = "broadcast")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastAsOfJoin"), plan)
     assert(plan.contains("BroadcastExchange"), plan)
@@ -305,13 +312,15 @@ class AsOfJoinSpec extends AnyFunSuite {
   test("nearest auto strategy: broadcasts a dim-sized right, sort-merges when disabled; identical rows") {
     val l = leftDf(Seq(("k1", 10, 1), ("k1", 14, 2), ("k2", 9, 3)))
     val r = rightDf(Seq(("k1", 8, Some(80), 800), ("k1", 20, Some(200), 2000)))
-    val auto = AsOfJoin.asofNearestAuto(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+    val auto = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"),
+      direction = "nearest", strategy = "auto")
     assert(auto.queryExecution.executedPlan.toString.contains("BroadcastAsOfJoin"))
     val conf = spark.conf
     val saved = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val sm = AsOfJoin.asofNearestAuto(l, r, "k", "rk", "t", "rt", Seq("a", "b"))
+      val sm = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b"),
+        direction = "nearest", strategy = "auto")
       val plan = sm.queryExecution.executedPlan.toString
       assert(plan.contains("AsOfJoin") && !plan.contains("BroadcastAsOfJoin"), plan)
       assert(sm.collect().toSet == auto.collect().toSet)
@@ -324,7 +333,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     // no operator support needed, the payload can carry `rt` itself
     val l = leftDf(Seq(("k1", 10, 1), ("k1", 30, 2)))
     val r = rightDf(Seq(("k1", 8, Some(80), 800), ("k1", 12, Some(120), 1200)))
-    val within5 = AsOfJoin.asofBackwardNative(l, r, "k", "rk", "t", "rt", Seq("a", "b", "rt"))
+    val within5 = AsOfJoin.asof(l, r, "k", "rk", "t", "rt", Seq("a", "b", "rt"))
       .withColumn("a", when(col("t") - col("rt") <= 5, col("a")))
       .withColumn("b", when(col("t") - col("rt") <= 5, col("b")))
       .select(col("t"), col("a"), col("b"))
@@ -350,8 +359,8 @@ class AsOfJoinSpec extends AnyFunSuite {
         (0 until 30).map(_ => (s"k$k", rnd.nextInt(1000),
           Some(rnd.nextInt(100)): Option[Int], rnd.nextInt(9999)))
       }.distinct.groupBy(r => (r._1, r._2)).map(_._2.head).toSeq
-      val viaWindow = run(AsOfJoin.asofBackward _)(leftDf(left), rightDf(right)).toSeq
-      val viaNative = run(AsOfJoin.asofBackwardNative _)(leftDf(left), rightDf(right)).toSeq
+      val viaWindow = run(asof("backward", "window"))(leftDf(left), rightDf(right)).toSeq
+      val viaNative = run(asof("backward", "sortmerge"))(leftDf(left), rightDf(right)).toSeq
       assert(viaNative == viaWindow)
     } finally {
       prev match {
@@ -370,10 +379,12 @@ class AsOfJoinSpec extends AnyFunSuite {
     def canon(df: DataFrame) = df
       .select("event_id", "user_id", "ts", "asof_orderkey")
       .orderBy("event_id").collect().toSeq
-    val viaWindow = canon(AsOfJoin.asofBackward(
-      ev, orders, "user_id", "o_custkey", "ts", "o_orderdate", Seq("asof_orderkey")))
-    val viaBroadcast = canon(AsOfJoin.asofBackwardBroadcast(
-      ev, orders, "user_id", "o_custkey", "ts", "o_orderdate", Seq("asof_orderkey")))
+    val viaWindow = canon(AsOfJoin.asof(
+      ev, orders, "user_id", "o_custkey", "ts", "o_orderdate", Seq("asof_orderkey"),
+      strategy = "window"))
+    val viaBroadcast = canon(AsOfJoin.asof(
+      ev, orders, "user_id", "o_custkey", "ts", "o_orderdate", Seq("asof_orderkey"),
+      strategy = "broadcast"))
     assert(viaWindow.nonEmpty)
     assert(viaBroadcast == viaWindow)
   }

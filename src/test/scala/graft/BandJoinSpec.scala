@@ -5,11 +5,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge-semantics spec for the THREE band-join formulations — native
-  * sort-merge ([[BandJoin.bandJoinNative]], deque bounded by band
-  * occupancy), broadcast ([[BandJoin.bandJoinBroadcast]], two binary
+/** Edge-semantics spec for the THREE band-join formulations of
+  * [[BandJoin.bandJoin]] — native sort-merge (`sortmerge`, deque
+  * bounded by band occupancy), broadcast (`broadcast`, two binary
   * searches per row), and the bucket-explode composition
-  * ([[BandJoin.bandJoinBucketed]]). Every case runs against all three
+  * (`bucketed`). Every case runs against all three
   * and a brute-force per-key scan. Band contract: same key AND
   * `rt − lt ∈ (lo, hi]` — lo EXCLUSIVE, hi INCLUSIVE; INNER semantics;
   * null times never match.
@@ -26,10 +26,12 @@ class BandJoinSpec extends AnyFunSuite {
   private type Impl =
     (DataFrame, DataFrame, String, String, String, String, Long, Long,
       Seq[String]) => DataFrame
+  private def band(strategy: String): Impl =
+    BandJoin.bandJoin(_, _, _, _, _, _, _, _, _, strategy = strategy)
   private val impls: Seq[(String, Impl)] = Seq(
-    "native" -> (BandJoin.bandJoinNative _),
-    "broadcast" -> (BandJoin.bandJoinBroadcast _),
-    "bucketed" -> (BandJoin.bandJoinBucketed _))
+    "native" -> band("sortmerge"),
+    "broadcast" -> band("broadcast"),
+    "bucketed" -> band("bucketed"))
 
   private def run(impl: Impl, lo: Long, hi: Long)(
       l: DataFrame, r: DataFrame): Seq[(String, Int, Int, Int)] =
@@ -108,7 +110,7 @@ class BandJoinSpec extends AnyFunSuite {
   test("native plan: one hash exchange per side; left never inflated") {
     val l = leftDf(Seq(("k1", 10, 1)))
     val r = rightDf(Seq(("k1", 12, 120)))
-    val df = BandJoin.bandJoinNative(l, r, "k", "rk", "t", "rt", 0, 5, Seq("payload"))
+    val df = BandJoin.bandJoin(l, r, "k", "rk", "t", "rt", 0, 5, Seq("payload"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BandJoin"), plan)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
@@ -119,7 +121,8 @@ class BandJoinSpec extends AnyFunSuite {
   test("broadcast plan: BroadcastExchange right, NO shuffle and NO sort of the left") {
     val l = leftDf(Seq(("k1", 10, 1)))
     val r = rightDf(Seq(("k1", 12, 120)))
-    val df = BandJoin.bandJoinBroadcast(l, r, "k", "rk", "t", "rt", 0, 5, Seq("payload"))
+    val df = BandJoin.bandJoin(l, r, "k", "rk", "t", "rt", 0, 5, Seq("payload"),
+      strategy = "broadcast")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastBandJoin"), plan)
     assert(plan.contains("BroadcastExchange"), plan)
@@ -130,13 +133,15 @@ class BandJoinSpec extends AnyFunSuite {
   test("auto strategy picks broadcast for a dim right, sort-merge when disabled; identical rows") {
     val l = leftDf(Seq(("k1", 10, 1), ("k1", 3, 2)))
     val r = rightDf(Seq(("k1", 12, 120), ("k1", 4, 40)))
-    val auto = BandJoin.bandJoinAuto(l, r, "k", "rk", "t", "rt", 0, 5, Seq("payload"))
+    val auto = BandJoin.bandJoin(l, r, "k", "rk", "t", "rt", 0, 5, Seq("payload"),
+      strategy = "auto")
     assert(auto.queryExecution.executedPlan.toString.contains("BroadcastBandJoin"))
     val conf = spark.conf
     val saved = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val sm = BandJoin.bandJoinAuto(l, r, "k", "rk", "t", "rt", 0, 5, Seq("payload"))
+      val sm = BandJoin.bandJoin(l, r, "k", "rk", "t", "rt", 0, 5, Seq("payload"),
+        strategy = "auto")
       val plan = sm.queryExecution.executedPlan.toString
       assert(plan.contains("BandJoin") && !plan.contains("BroadcastBandJoin"), plan)
       assert(sm.collect().toSet == auto.collect().toSet)
@@ -155,15 +160,17 @@ class BandJoinSpec extends AnyFunSuite {
     def canon(df: DataFrame) = df
       .select("purchase_id", "event_id")
       .as[(Long, Long)].collect().sortBy(identity).toSeq
-    val native = canon(BandJoin.bandJoinNative(
+    val native = canon(BandJoin.bandJoin(
       purch, ev, "user_id", "user_id", "p_us", "t_us", 0, W,
       Seq("event_id", "event_type")))
-    val bucketed = canon(BandJoin.bandJoinBucketed(
+    val bucketed = canon(BandJoin.bandJoin(
       purch, ev, "user_id", "user_id", "p_us", "t_us", 0, W,
-      Seq("event_id", "event_type")))
-    val bcast = canon(BandJoin.bandJoinBroadcast(
+      Seq("event_id", "event_type"),
+      strategy = "bucketed"))
+    val bcast = canon(BandJoin.bandJoin(
       purch, ev, "user_id", "user_id", "p_us", "t_us", 0, W,
-      Seq("event_id", "event_type")))
+      Seq("event_id", "event_type"),
+      strategy = "broadcast"))
     assert(native.nonEmpty)
     assert(native == bucketed)
     assert(native == bcast)

@@ -24,9 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     (always false vs NaN), or they diverge from the composed
   *     formulation on double/float time columns containing NaN.
   *
-  *  3. Unsupported-type fallback: asofNearestBroadcast must fall back
-  *     to the composed formulation (like its native/auto siblings)
-  *     instead of throwing at planning for distance-free time types.
+  *  3. Unsupported-type fallback: nearest under the broadcast strategy
+  *     must fall back to the composed formulation (like sortmerge and
+  *     auto) instead of throwing at planning for distance-free time
+  *     types.
   *
   *  4. Extreme-Long band bounds: `rt − lt` on raw LongType times near
   *     the extremes wraps; [[TimeRepr.cmpDiff]] must classify by the
@@ -64,10 +65,12 @@ class BroadcastIndexCacheSpec extends AnyFunSuite {
     // both joins broadcast the SAME right DataFrame; payload projections
     // differ (slot 2 vs slot 3) — under id-only caching the second join
     // would surface column `a`'s values labelled `b`
-    val step1 = AsOfJoin.asofBackwardBroadcast(
-      left, right, "k", "rk", "t", "rt", Seq("a"))
-    val step2 = AsOfJoin.asofBackwardBroadcast(
-      step1, right, "k", "rk", "t", "rt", Seq("b"))
+    val step1 = AsOfJoin.asof(
+      left, right, "k", "rk", "t", "rt", Seq("a"),
+      strategy = "broadcast")
+    val step2 = AsOfJoin.asof(
+      step1, right, "k", "rk", "t", "rt", Seq("b"),
+      strategy = "broadcast")
 
     val got = step2.select("k", "t", "left_id", "a", "b")
       .as[(String, Int, Int, Option[Int], Option[Int])]
@@ -84,11 +87,13 @@ class BroadcastIndexCacheSpec extends AnyFunSuite {
       ("k1", 8L, 80, 800), ("k1", 12L, 120, 1200), ("k1", 19L, 190, 1900))
       .toDF("rk", "rt", "a", "b")
 
-    val asOf = AsOfJoin.asofBackwardBroadcast(
-      left, right, "k", "rk", "t", "rt", Seq("a"))
+    val asOf = AsOfJoin.asof(
+      left, right, "k", "rk", "t", "rt", Seq("a"),
+      strategy = "broadcast")
     // band (0, 5]: right rows strictly after the left row, within 5
-    val both = BandJoin.bandJoinBroadcast(
-      asOf, right, "k", "rk", "t", "rt", 0L, 5L, Seq("b"))
+    val both = BandJoin.bandJoin(
+      asOf, right, "k", "rk", "t", "rt", 0L, 5L, Seq("b"),
+      strategy = "broadcast")
 
     val got = both.select("k", "t", "left_id", "a", "b")
       .as[(String, Long, Int, Option[Int], Int)]
@@ -111,12 +116,15 @@ class BroadcastIndexCacheSpec extends AnyFunSuite {
       df.select("left_id", "p").as[(Int, Option[Int])]
         .collect().sortBy(_._1).toSeq
 
-    val composed = collect(AsOfJoin.asofNearestComposed(
-      l, r, "k", "rk", "t", "rt", Seq("p")))
-    val native = collect(AsOfJoin.asofNearestNative(
-      l, r, "k", "rk", "t", "rt", Seq("p")))
-    val bcast = collect(AsOfJoin.asofNearestBroadcast(
-      l, r, "k", "rk", "t", "rt", Seq("p")))
+    val composed = collect(AsOfJoin.asof(
+      l, r, "k", "rk", "t", "rt", Seq("p"),
+      direction = "nearest", strategy = "composed"))
+    val native = collect(AsOfJoin.asof(
+      l, r, "k", "rk", "t", "rt", Seq("p"),
+      direction = "nearest"))
+    val bcast = collect(AsOfJoin.asof(
+      l, r, "k", "rk", "t", "rt", Seq("p"),
+      direction = "nearest", strategy = "broadcast"))
     assert(native == composed,
       s"fused sort-merge diverges from composed on NaN times: $native vs $composed")
     assert(bcast == composed,
@@ -132,19 +140,21 @@ class BroadcastIndexCacheSpec extends AnyFunSuite {
       .toDF("rk", "rt", "p")
     // decimal time: no fused distance arithmetic — must plan (not
     // throw) and match the composed formulation
-    val got = AsOfJoin.asofNearestBroadcast(
-        l, r, "k", "rk", "t", "rt", Seq("p"))
+    val got = AsOfJoin.asof(
+        l, r, "k", "rk", "t", "rt", Seq("p"),
+        direction = "nearest", strategy = "broadcast")
       .select("left_id", "p").as[(Int, Option[Int])]
       .collect().sortBy(_._1).toSeq
-    val composed = AsOfJoin.asofNearestComposed(
-        l, r, "k", "rk", "t", "rt", Seq("p"))
+    val composed = AsOfJoin.asof(
+        l, r, "k", "rk", "t", "rt", Seq("p"),
+        direction = "nearest", strategy = "composed")
       .select("left_id", "p").as[(Int, Option[Int])]
       .collect().sortBy(_._1).toSeq
     assert(got == composed)
   }
 
   test("asof() entry point: unbounded nearest on decimal times falls back for EVERY strategy") {
-    // Consistency across entry points: asofNearestBroadcast/-Auto fall
+    // Consistency across strategies: nearest broadcast/auto fall
     // back to the composed form for distance-free time types, so the
     // generic asof() must too — broadcast and auto included, not just
     // sortmerge (it used to throw at planning for those two).
@@ -152,8 +162,9 @@ class BroadcastIndexCacheSpec extends AnyFunSuite {
       .toDF("k", "t", "left_id")
     val r = Seq(("k1", BigDecimal("1.00"), 10), ("k1", BigDecimal("6.00"), 60))
       .toDF("rk", "rt", "p")
-    val composed = AsOfJoin.asofNearestComposed(
-        l, r, "k", "rk", "t", "rt", Seq("p"))
+    val composed = AsOfJoin.asof(
+        l, r, "k", "rk", "t", "rt", Seq("p"),
+        direction = "nearest", strategy = "composed")
       .select("left_id", "p").as[(Int, Option[Int])]
       .collect().sortBy(_._1).toSeq
     for (strategy <- Seq("sortmerge", "broadcast", "auto")) {
@@ -196,10 +207,11 @@ class BroadcastIndexCacheSpec extends AnyFunSuite {
       ("k1", Long.MaxValue - 50, 50)  // true diff vs left_id=2 is 50 → match
     ).toDF("rk", "rt", "p")
     for ((name, res) <- Seq(
-        "native" -> BandJoin.bandJoinNative(
+        "native" -> BandJoin.bandJoin(
           l, r, "k", "rk", "t", "rt", 0L, 100L, Seq("p")),
-        "broadcast" -> BandJoin.bandJoinBroadcast(
-          l, r, "k", "rk", "t", "rt", 0L, 100L, Seq("p")))) {
+        "broadcast" -> BandJoin.bandJoin(
+          l, r, "k", "rk", "t", "rt", 0L, 100L, Seq("p"),
+          strategy = "broadcast"))) {
       val got = res.select("left_id", "p").as[(Int, Int)]
         .collect().sorted.toSeq
       assert(got == Seq((2, 50)), s"[$name] got $got")

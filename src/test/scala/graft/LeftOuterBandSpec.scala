@@ -22,9 +22,12 @@ class LeftOuterBandSpec extends AnyFunSuite {
 
   private type Impl = (DataFrame, DataFrame, String, String, String, String,
     Long, Long, Seq[String]) => DataFrame
+  private def leftOuter(strategy: String): Impl =
+    BandJoin.bandJoin(_, _, _, _, _, _, _, _, _, strategy = strategy,
+      leftOuter = true)
   private val impls: Seq[(String, Impl)] = Seq(
-    "native" -> (BandJoin.bandJoinLeftOuterNative _),
-    "broadcast" -> (BandJoin.bandJoinLeftOuterBroadcast _))
+    "native" -> leftOuter("sortmerge"),
+    "broadcast" -> leftOuter("broadcast"))
 
   private def run(impl: Impl, lo: Long, hi: Long)(
       l: DataFrame, r: DataFrame): Seq[(String, Option[Int], Int, Option[Int])] =

@@ -56,7 +56,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q193_pit_feature_join")(spark, dir)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
-    // asofBackward plans as the union + running-last(carry) window —
+    // the window as-of plans as the union + running-last(carry) window —
     // ONE exchange keyed on the join key; every window must carry that
     // key in its partition spec (an unkeyed window would serialize)
     val winSpecs = "windowspecdefinition\\(__k#\\d+L".r.findAllIn(plan).toList
@@ -143,6 +143,16 @@ class PlanShapeSpec extends AnyFunSuite {
       collectWithSubqueries(df.queryExecution.executedPlan) {
         case e: org.apache.spark.sql.execution.exchange.Exchange => e
       }.size
+
+    private val joinOps =
+      Set("AsOfJoin", "BroadcastAsOfJoin", "BandJoin", "BroadcastBandJoin", "Window")
+
+    /** The distinct as-of/band operators (and window carries) in the
+      * final plan, sorted and joined with `+`. */
+    def joins(df: org.apache.spark.sql.DataFrame): String =
+      collectWithSubqueries(df.queryExecution.executedPlan) {
+        case p if joinOps(p.nodeName) => p.nodeName
+      }.distinct.sorted.mkString("+")
   }
 
   /** Files and dirs under this corpus's scratch roots modified at or
@@ -173,6 +183,38 @@ class PlanShapeSpec extends AnyFunSuite {
       val touched = scratchTouchedSince(t0)
       assert(touched.isEmpty, s"$n wrote scratch: $touched")
       n -> Plans.exchanges(df)
+    }.toMap
+    assert(got == expected)
+  }
+
+  test("as-of and band one-shots: join operator and exchange count as recorded") {
+    // final plans at sf0.001 when each body still called its own named
+    // join variant; a body that reaches another strategy through
+    // AsOfJoin.asof / BandJoin.bandJoin changes a row here
+    val expected = Map(
+      "q41_asof_join_latest_order" -> ("Window", 3),
+      "q122_asof_join_native" -> ("AsOfJoin+Window", 4),
+      "q123_asof_join_broadcast" -> ("BroadcastAsOfJoin+Window", 3),
+      "q124_asof_join_forward" -> ("AsOfJoin+Window", 4),
+      "q125_asof_join_nearest" -> ("AsOfJoin+Window", 4),
+      "q137_asof_join_auto" -> ("BroadcastAsOfJoin+Window", 3),
+      "q146_band_join_native" -> ("BandJoin", 7),
+      "q147_band_join_broadcast" -> ("BroadcastBandJoin", 6),
+      "q151_asof_tolerance" -> ("AsOfJoin+Window", 4),
+      "q153_band_join_left_outer" -> ("BandJoin", 3),
+      "q155_asof_tolerance_fwd" -> ("AsOfJoin+Window", 4),
+      "q156_asof_tolerance_nearest" -> ("AsOfJoin+Window", 4),
+      "q157_asof_strict" -> ("AsOfJoin+Window", 4),
+      "q158_asof_strict_nearest" -> ("AsOfJoin+Window", 4),
+      "q160_asof_global" -> ("BroadcastAsOfJoin", 3),
+      "q184_band_join_salted" -> ("BandJoin", 7),
+      "q185_asof_join_auto_skew" -> ("AsOfJoin+Window", 4),
+      "q193_pit_feature_join" -> ("Window", 4),
+      "q202_multitouch_attribution" -> ("BandJoin+Window", 5))
+    val got = expected.keys.toSeq.sorted.map { n =>
+      val df = SparkEntry.queries(n)(spark, dir)
+      df.collect()
+      n -> (Plans.joins(df), Plans.exchanges(df))
     }.toMap
     assert(got == expected)
   }

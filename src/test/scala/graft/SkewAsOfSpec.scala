@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ShuffledHashJoinExec, so the exchanges feeding AsOfJoinExec are
   * never runtime-split — a hot key is one straggler task.
   *
-  * Fact 2 (the recipe): [[AsOfJoin.asofBackwardSalted]] salts the left
+  * Fact 2 (the recipe): [[AsOfJoin.asofSalted]] salts the left
   * into (key, salt) sub-keys and replicates the right per salt, so the
   * hot key spreads over `buckets` partitions while every left row's
   * match is EXACTLY the unsalted one. This spec pins:
@@ -41,11 +41,11 @@ class SkewAsOfSpec extends AnyFunSuite {
 
   test("salted as-of == unsalted on a 90%-one-key corpus") {
     val (l, r) = skewed()
-    val unsalted = AsOfJoin.asofBackwardNative(
+    val unsalted = AsOfJoin.asof(
         l, r, "k", "rk", "t", "rt", Seq("p"))
       .select("k", "t", "left_id", "p")
       .as[(String, Int, Int, Option[Int])].collect().sortBy(_._3).toSeq
-    val salted = AsOfJoin.asofBackwardSalted(
+    val salted = AsOfJoin.asofSalted(
         l, r, "k", "rk", "t", "rt", Seq("p"), buckets = 8)
       .select("k", "t", "left_id", "p")
       .as[(String, Int, Int, Option[Int])].collect().sortBy(_._3).toSeq
@@ -77,7 +77,7 @@ class SkewAsOfSpec extends AnyFunSuite {
         tolerance = tol, allowExactMatches = false)
       .select("k", "t", "left_id", "p")
       .as[(String, Int, Int, Option[Int])].collect().sortBy(_._3).toSeq
-    val salted = AsOfJoin.asofBackwardSalted(
+    val salted = AsOfJoin.asofSalted(
         l, r, "k", "rk", "t", "rt", Seq("p"), buckets = 8,
         tolerance = tol, strict = true)
       .select("k", "t", "left_id", "p")
@@ -89,7 +89,7 @@ class SkewAsOfSpec extends AnyFunSuite {
 
   test("salted plan exchanges on (key, salt); AQE never splits the custom exec's exchange") {
     val (l, r) = skewed()
-    val df = AsOfJoin.asofBackwardSalted(
+    val df = AsOfJoin.asofSalted(
       l, r, "k", "rk", "t", "rt", Seq("p"), buckets = 8)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), plan)
@@ -109,18 +109,18 @@ class SkewAsOfSpec extends AnyFunSuite {
 
   test("salt bucket 1 degenerates to the unsalted join; reserved-name collision rejected") {
     val (l, r) = skewed()
-    val one = AsOfJoin.asofBackwardSalted(
+    val one = AsOfJoin.asofSalted(
         l, r, "k", "rk", "t", "rt", Seq("p"), buckets = 1)
       .select("left_id", "p").as[(Int, Option[Int])]
       .collect().sortBy(_._1).toSeq
-    val ref = AsOfJoin.asofBackwardNative(
+    val ref = AsOfJoin.asof(
         l, r, "k", "rk", "t", "rt", Seq("p"))
       .select("left_id", "p").as[(Int, Option[Int])]
       .collect().sortBy(_._1).toSeq
     assert(one == ref)
     val bad = l.withColumnRenamed("left_id", "__asof_salt")
     intercept[IllegalArgumentException] {
-      AsOfJoin.asofBackwardSalted(
+      AsOfJoin.asofSalted(
         bad, r, "k", "rk", "t", "rt", Seq("p"), buckets = 4)
     }
   }

@@ -48,7 +48,7 @@ class SkewBandSpec extends AnyFunSuite {
 
   test("salted band == unsalted on a 90%-one-key corpus (inner, pair grain)") {
     val (l, r) = skewed()
-    val unsalted = pairs(BandJoin.bandJoinNative(
+    val unsalted = pairs(BandJoin.bandJoin(
       l, r, "k", "rk", "t", "rt", lo = 0, hi = 100, payload = Seq("p")))
     val salted = pairs(BandJoin.bandJoinSalted(
       l, r, "k", "rk", "t", "rt", lo = 0, hi = 100, payload = Seq("p"),
@@ -59,8 +59,9 @@ class SkewBandSpec extends AnyFunSuite {
 
   test("salted LEFT OUTER band == unsalted: null-padded rows included") {
     val (l, r) = skewed()
-    val unsalted = pairs(BandJoin.bandJoinLeftOuterNative(
-      l, r, "k", "rk", "t", "rt", lo = 0, hi = 40, payload = Seq("p")))
+    val unsalted = pairs(BandJoin.bandJoin(
+      l, r, "k", "rk", "t", "rt", lo = 0, hi = 40, payload = Seq("p"),
+      leftOuter = true))
     val salted = pairs(BandJoin.bandJoinSalted(
       l, r, "k", "rk", "t", "rt", lo = 0, hi = 40, payload = Seq("p"),
       buckets = 8, leftOuter = true))
@@ -87,7 +88,7 @@ class SkewBandSpec extends AnyFunSuite {
     val one = pairs(BandJoin.bandJoinSalted(
       l, r, "k", "rk", "t", "rt", lo = 0, hi = 100, payload = Seq("p"),
       buckets = 1))
-    val ref = pairs(BandJoin.bandJoinNative(
+    val ref = pairs(BandJoin.bandJoin(
       l, r, "k", "rk", "t", "rt", lo = 0, hi = 100, payload = Seq("p")))
     assert(one == ref)
     intercept[IllegalArgumentException] {
@@ -134,7 +135,7 @@ class SkewBandSpec extends AnyFunSuite {
         l, r, "k", "rk", "t", "rt", Seq("p"), buckets = Some(8))
       assert(asof.queryExecution.executedPlan.toString
         .contains("__asof_salt"))
-      val want = AsOfJoin.asofBackwardNative(
+      val want = AsOfJoin.asof(
         l, r, "k", "rk", "t", "rt", Seq("p"))
       assert(pairs(asof) == pairs(want))
 
@@ -142,7 +143,7 @@ class SkewBandSpec extends AnyFunSuite {
         l, r, "k", "rk", "t", "rt", 0, 100, Seq("p"), buckets = Some(8))
       assert(band.queryExecution.executedPlan.toString
         .contains("__band_salt"))
-      val bandWant = BandJoin.bandJoinNative(
+      val bandWant = BandJoin.bandJoin(
         l, r, "k", "rk", "t", "rt", 0, 100, Seq("p"))
       assert(pairs(band) == pairs(bandWant))
     }

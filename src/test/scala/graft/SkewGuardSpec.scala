@@ -87,7 +87,7 @@ class SkewGuardSpec extends AnyFunSuite {
         val (l, r) = corpus(rightPerKey)
         val auto = AsOfJoin.asofAutoSkew(l, r, "k", "rk", "t", "rt",
           Seq("p"), hotShare = Some(0.5), buckets = Some(16))
-        val plain = AsOfJoin.asofBackwardNative(l, r, "k", "rk", "t", "rt",
+        val plain = AsOfJoin.asof(l, r, "k", "rk", "t", "rt",
           Seq("p"))
         val a = auto.select("left_id", "p").as[(Int, Option[Int])]
           .collect().sortBy(_._1).toSeq
@@ -116,7 +116,7 @@ class SkewGuardSpec extends AnyFunSuite {
         val auto = BandJoin.bandJoinAutoSkew(l, r, "k", "rk", "t", "rt",
           lo = 0L, hi = 20000L, payload = Seq("p"),
           hotShare = Some(0.5), buckets = Some(16))
-        val plain = BandJoin.bandJoinNative(l, r, "k", "rk", "t", "rt",
+        val plain = BandJoin.bandJoin(l, r, "k", "rk", "t", "rt",
           0L, 20000L, Seq("p"))
         assert(auto.count() == plain.count(),
           s"pair set changed at rightPerKey=$rightPerKey")

@@ -58,7 +58,7 @@ class StreamAsOfSpec extends AnyFunSuite {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, _: Long) =>
-          AsOfJoin.asofBackwardBroadcast(b, d, "k", "rk", "t", "rt", Seq("rate"))
+          AsOfJoin.asof(b, d, "k", "rk", "t", "rt", Seq("rate"), strategy = "broadcast")
             .write.mode("append").parquet(outDir)
         }
         .start()
@@ -72,9 +72,10 @@ class StreamAsOfSpec extends AnyFunSuite {
     val got = spark.read.parquet(outDir)
       .select("event_id", "k", "t", "rate")
       .as[(Int, String, Int, Option[Int])].collect().sortBy(_._1).toSeq
-    val expected = AsOfJoin.asofBackward(
+    val expected = AsOfJoin.asof(
         (wave1 ++ wave2).toDF("event_id", "k", "t"), d,
-        "k", "rk", "t", "rt", Seq("rate"))
+        "k", "rk", "t", "rt", Seq("rate"),
+        strategy = "window")
       .select("event_id", "k", "t", "rate")
       .as[(Int, String, Int, Option[Int])].collect().sortBy(_._1).toSeq
     assert(got.size == 60)

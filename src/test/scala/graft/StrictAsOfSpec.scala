@@ -38,6 +38,10 @@ class StrictAsOfSpec extends AnyFunSuite {
   private type Impl = (DataFrame, DataFrame, String, String, String, String,
     Seq[String]) => DataFrame
 
+  private def strictImpl(direction: String, strategy: String): Impl =
+    AsOfJoin.asof(_, _, _, _, _, _, _, direction = direction,
+      strategy = strategy, allowExactMatches = false)
+
   private def run(impl: Impl)(l: DataFrame, r: DataFrame)
       : Seq[(String, Option[Int], Int, Option[Int])] =
     impl(l, r, "k", "rk", "t", "rt", Seq("p"))
@@ -125,9 +129,9 @@ class StrictAsOfSpec extends AnyFunSuite {
   // ---- backward strict --------------------------------------------
 
   private val backImpls: Seq[(String, Impl)] = Seq(
-    "window" -> (AsOfJoin.asofBackwardStrict _),
-    "native" -> (AsOfJoin.asofBackwardStrictNative _),
-    "broadcast" -> (AsOfJoin.asofBackwardStrictBroadcast _))
+    "window" -> strictImpl("backward", "window"),
+    "native" -> strictImpl("backward", "sortmerge"),
+    "broadcast" -> strictImpl("backward", "broadcast"))
 
   for ((name, impl) <- backImpls) {
     test(s"[back-$name] exact-time right never matches; earlier one does") {
@@ -157,9 +161,9 @@ class StrictAsOfSpec extends AnyFunSuite {
   // ---- forward strict ---------------------------------------------
 
   private val fwdImpls: Seq[(String, Impl)] = Seq(
-    "window" -> (AsOfJoin.asofForwardStrict _),
-    "native" -> (AsOfJoin.asofForwardStrictNative _),
-    "broadcast" -> (AsOfJoin.asofForwardStrictBroadcast _))
+    "window" -> strictImpl("forward", "window"),
+    "native" -> strictImpl("forward", "sortmerge"),
+    "broadcast" -> strictImpl("forward", "broadcast"))
 
   for ((name, impl) <- fwdImpls) {
     test(s"[fwd-$name] exact-time right never matches; later one does") {
@@ -187,9 +191,9 @@ class StrictAsOfSpec extends AnyFunSuite {
   // ---- nearest strict ---------------------------------------------
 
   private val nearImpls: Seq[(String, Impl)] = Seq(
-    "composed" -> (AsOfJoin.asofNearestStrictComposed _),
-    "native" -> (AsOfJoin.asofNearestStrictNative _),
-    "broadcast" -> (AsOfJoin.asofNearestStrictBroadcast _))
+    "composed" -> strictImpl("nearest", "composed"),
+    "native" -> strictImpl("nearest", "sortmerge"),
+    "broadcast" -> strictImpl("nearest", "broadcast"))
 
   for ((name, impl) <- nearImpls) {
     test(s"[near-$name] exact-time excluded from BOTH directions") {
@@ -258,8 +262,11 @@ class StrictAsOfSpec extends AnyFunSuite {
       (k, t, id, m)
     }.sortBy(x => (x._1, x._3))
 
+  // the window formulation has no nearest form; nearest's third
+  // formulation is the composed two-join one
   for (direction <- Seq("backward", "forward", "nearest");
-       strategy <- Seq("sortmerge", "broadcast")) {
+       strategy <- Seq("sortmerge", "broadcast",
+         if (direction == "nearest") "composed" else "window")) {
     test(s"[asof $direction/$strategy] strict + tolerance vs brute force") {
       for (seed <- 631 to 633) {
         val (l, r) = randomData(seed)
@@ -294,8 +301,9 @@ class StrictAsOfSpec extends AnyFunSuite {
     val r = Seq(
       ("k1", Some(10), 100), ("k1", Some(10), 101), ("k1", Some(15), 150),
       ("k2", Some(10), 200), ("k2", Some(10), 201)).toDF("rk", "rt", "p")
-    val got = AsOfJoin.asofNearestStrictNative(
-        l, r, "k", "rk", "t", "rt", Seq("p"))
+    val got = AsOfJoin.asof(
+        l, r, "k", "rk", "t", "rt", Seq("p"),
+        direction = "nearest", allowExactMatches = false)
       .select(col("left_id"), col("p")).as[(Int, Option[Int])]
       .collect().sortBy(_._1).toSeq
     assert(got == Seq((1, Some(150)), (2, None)),
@@ -307,8 +315,8 @@ class StrictAsOfSpec extends AnyFunSuite {
     // backward must agree row-for-row
     val l = (0 until 20).map(i => ("k1", Some(i * 2), i))
     val r = (0 until 10).map(i => ("k1", Some(i * 4 + 1), i))
-    val strict = run(AsOfJoin.asofBackwardStrictNative _)(leftDf(l), rightDf(r))
-    val plain = AsOfJoin.asofBackwardNative(
+    val strict = run(strictImpl("backward", "sortmerge"))(leftDf(l), rightDf(r))
+    val plain = AsOfJoin.asof(
         leftDf(l), rightDf(r), "k", "rk", "t", "rt", Seq("p"))
       .select(col("k"), col("t"), col("left_id"), col("p"))
       .as[(String, Option[Int], Int, Option[Int])]

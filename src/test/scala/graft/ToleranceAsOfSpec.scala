@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge-semantics spec for the BOUNDED-LOOKBACK as-of join
   * (`merge_asof(tolerance=)`): every case runs against all THREE
-  * formulations — union+window ([[AsOfJoin.asofBackwardTolerance]]),
-  * native sort-merge ([[AsOfJoin.asofBackwardToleranceNative]]) and
-  * broadcast ([[AsOfJoin.asofBackwardToleranceBroadcast]]) — plus a
+  * formulations of [[AsOfJoin.asof]] — union+window (`window`),
+  * native sort-merge (`sortmerge`) and broadcast (`broadcast`; nearest
+  * swaps `window` for the `composed` two-join form) — plus a
   * brute-force per-key oracle. Contract:
   *   - match = latest right with `rt <= lt` AND `lt − rt <= tolerance`
   *     (boundary INCLUSIVE), in the time type's native unit;
@@ -30,10 +30,13 @@ class ToleranceAsOfSpec extends AnyFunSuite {
 
   private type Impl = (DataFrame, DataFrame, String, String, String, String,
     Seq[String], Long) => DataFrame
+  private def asof(direction: String, strategy: String): Impl =
+    (l, r, lk, rk, lt, rt, p, tol) =>
+      AsOfJoin.asof(l, r, lk, rk, lt, rt, p, direction, strategy, Some(tol))
   private val impls: Seq[(String, Impl)] = Seq(
-    "window" -> (AsOfJoin.asofBackwardTolerance _),
-    "native" -> (AsOfJoin.asofBackwardToleranceNative _),
-    "broadcast" -> (AsOfJoin.asofBackwardToleranceBroadcast _))
+    "window" -> asof("backward", "window"),
+    "native" -> asof("backward", "sortmerge"),
+    "broadcast" -> asof("backward", "broadcast"))
 
   private def run(impl: Impl, tol: Long)(l: DataFrame, r: DataFrame)
       : Seq[(String, Option[Int], Int, Option[Int])] =
@@ -110,9 +113,9 @@ class ToleranceAsOfSpec extends AnyFunSuite {
   // ---- FORWARD tolerance: all three formulations vs brute force ----
 
   private val fwdImpls: Seq[(String, Impl)] = Seq(
-    "window" -> (AsOfJoin.asofForwardTolerance _),
-    "native" -> (AsOfJoin.asofForwardToleranceNative _),
-    "broadcast" -> (AsOfJoin.asofForwardToleranceBroadcast _))
+    "window" -> asof("forward", "window"),
+    "native" -> asof("forward", "sortmerge"),
+    "broadcast" -> asof("forward", "broadcast"))
 
   private def bruteFwd(l: Seq[(String, Option[Int], Int)],
                        r: Seq[(String, Option[Int], Int)],
@@ -162,9 +165,9 @@ class ToleranceAsOfSpec extends AnyFunSuite {
   // ---- NEAREST tolerance: three formulations vs brute force ----
 
   private val nearImpls: Seq[(String, Impl)] = Seq(
-    "composed" -> (AsOfJoin.asofNearestToleranceComposed _),
-    "native" -> (AsOfJoin.asofNearestToleranceNative _),
-    "broadcast" -> (AsOfJoin.asofNearestToleranceBroadcast _))
+    "composed" -> asof("nearest", "composed"),
+    "native" -> asof("nearest", "sortmerge"),
+    "broadcast" -> asof("nearest", "broadcast"))
 
   private def bruteNear(l: Seq[(String, Option[Int], Int)],
                         r: Seq[(String, Option[Int], Int)],
@@ -254,8 +257,8 @@ class ToleranceAsOfSpec extends AnyFunSuite {
     val l = Seq(("k1", Long.MaxValue - 10, 1)).toDF("k", "t", "left_id")
     val r = Seq(("k1", Long.MinValue + 10, 99)).toDF("rk", "rt", "p")
     for ((name, impl) <- Seq(
-        "native" -> (AsOfJoin.asofBackwardToleranceNative _),
-        "broadcast" -> (AsOfJoin.asofBackwardToleranceBroadcast _))) {
+        "native" -> asof("backward", "sortmerge"),
+        "broadcast" -> asof("backward", "broadcast"))) {
       val got = impl(l, r, "k", "rk", "t", "rt", Seq("p"), 100L)
         .select("left_id", "p").as[(Int, Option[Int])].collect().toSeq
       assert(got == Seq((1, None)), s"[$name] got $got")

@@ -21,6 +21,23 @@ class UnpinSpec extends AnyFunSuite {
     assert((added -- after) == added, "unpin must drop the checkpointed RDD")
   }
 
+  test("pinned releases the pin when its body throws") {
+    import spark.implicits._
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var added = Set.empty[Int]
+    val thrown = intercept[IllegalStateException] {
+      Q.pinned((1 to 100).toDF("v")) { p =>
+        assert(p.count() == 100)
+        added = (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(thrown.getMessage == "body failed")
+    assert(added.nonEmpty, "pinned should register a persistent RDD")
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert((added -- after) == added, "a throwing body must not leak its pin")
+  }
+
   test("unpin is a no-op on a plain (non-checkpointed) frame") {
     import spark.implicits._
     Q.unpin(Seq(1, 2).toDF("v")) // must not throw
