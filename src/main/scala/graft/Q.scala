@@ -50,15 +50,15 @@ object Q {
   /** Fixed-location artifact dir a DuckDB oracle can read back. Unlike
     * [[scratch]] the root is NOT scale-dir-keyed — the oracle SQL is a
     * static string, so the path must be knowable without `dir` — and
-    * instead each SCALE gets its own `n=<count>` subdir (runs at
-    * different scales never overwrite each other) plus an `n` column in
-    * the data, which the oracle filters against the live corpus count.
-    * Assumes the default /tmp tmpdir (the gate's environment); a
-    * non-default java.io.tmpdir breaks only the oracle replay, not the
-    * engine. */
-  def oracleArtifact(tag: String, n: Long): String =
+    * instead each corpus gets its own subdir `key`: a content
+    * fingerprint the artifact also carries as columns, which the oracle
+    * matches against the live corpus (runs over different corpora never
+    * overwrite or shadow each other). Assumes the default /tmp tmpdir
+    * (the gate's environment); a non-default java.io.tmpdir breaks only
+    * the oracle replay, not the engine. */
+  def oracleArtifact(tag: String, key: String): String =
     System.getProperty("java.io.tmpdir", "/tmp").stripSuffix("/") +
-      s"/graft_${tag}_oracle/n=$n"
+      s"/graft_${tag}_oracle/$key"
 
   /** Recursive scratch delete, parallel across siblings: the commit-
     * protocol queries each clear a few-hundred-file scratch tree at

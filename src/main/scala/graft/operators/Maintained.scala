@@ -2,6 +2,18 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
+/** State that a batch loop folds into, batch by batch, with the policy
+  * the loop runs at the start of each batch (the one harness,
+  * [[graft.queries.Folded]], calls [[compactBefore]] before every fold).
+  * [[Maintained]] is the delta-store kind; the snapshot kind,
+  * [[graft.streaming.Versioned]], keeps no delta tail, so its policy
+  * never fires. */
+trait BatchState {
+  /** The policy at the start of batch `id`, given the live-delta
+    * threshold `maxDeltas`; returns whether it fired. */
+  def compactBefore(spark: SparkSession, id: Int, maxDeltas: Int): Boolean
+}
+
 /** A family of incrementally maintained state kept in one [[DeltaStore]]
   * (every DeltaStore family: the indexes, [[IncrementalStats]],
   * [[IncrementalView]] and [[MorTable]]), and its one batch-start
@@ -19,7 +31,7 @@ import org.apache.spark.sql.SparkSession
   * run stitching). [[compactBefore]] therefore folds at
   * `upTo = Some(id - 1)` and never above it.
   */
-trait Maintained {
+trait Maintained extends BatchState {
   def store: DeltaStore
 
   /** Fold the live deltas at or below `upTo` (all of them when None)

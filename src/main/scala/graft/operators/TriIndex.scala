@@ -133,6 +133,24 @@ final case class TriIndex(root: String) extends Maintained {
     }
   }
 
+  /** The running triangle count, versioned by wave id under
+    * `$root/total` (beside the store's own `data/` and manifests). */
+  private def total = graft.streaming.Versioned(s"$root/total")
+
+  /** [[foldWave]], then version the running count under `waveId`: the
+    * newest count below it plus the wave's triangles. Both read only
+    * what lies below `waveId`, so a replay rewrites the same delta and
+    * the same count. */
+  def fold(spark: SparkSession, newEdges: DataFrame, waveId: Int): Unit = {
+    val delta = foldWave(spark, newEdges, waveId)
+    total.fold(spark, waveId, spark.range(1).select(lit(0L).as("n")))(
+      _.select((col("n") + delta).as("n")).coalesce(1))
+  }
+
+  /** The maintained triangle count, as of the last [[fold]]. */
+  def triangles(spark: SparkSession): Long =
+    total.latest(spark).head().getLong(0)
+
   /** (n_nodes, n_edges) from the maintained degree table alone — the
     * report never re-scans the edge list: Σd counts each edge twice. */
   def stats(spark: SparkSession): DataFrame =

@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
-import graft.operators.{BasketIndex, TriIndex}
-import graft.streaming.Replay
+import graft.operators.{BasketIndex, Skyline, TriIndex}
+import graft.streaming.{Replay, Versioned}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Association / decision analytics: market-basket rules, sweep-line
@@ -213,17 +213,7 @@ object AssocQueries {
           .select("p_partkey", "p_retailprice", "p_size")
           .orderBy("p_partkey")
       },
-      Some("""
-        SELECT p_partkey, p_retailprice, p_size
-        FROM part p
-        WHERE p.p_retailprice IS NOT NULL AND p.p_size IS NOT NULL
-          AND NOT EXISTS (
-          SELECT 1 FROM part q
-          WHERE q.p_retailprice <= p.p_retailprice
-            AND q.p_size >= p.p_size
-            AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
-        ORDER BY p_partkey
-      """)),
+      Some(skylineOracleSql)),
 
     // ----------------------------------------------------------------
     // q201: LEAVE-ONE-OUT TARGET ENCODING — encode o_orderpriority by
@@ -411,23 +401,10 @@ object AssocQueries {
     // the pruned reads and the fold identity across random splits).
     // Edge waves split by hash — disjoint by construction (countDelta's
     // precondition) and order-free (triangle membership is
-    // append-order-independent). Held to q203's naive 3-way-self-join
-    // oracle VERBATIM.
-    Q(
-      "q224_triangle_count_incremental",
-      (s, dir) => {
-        val idx = TriIndex(s"${Q.fresh(s, "q224_triidx", dir)}/store")
-        // (no mid-stream compact here: the fold-through-compact path is
-        // exercised by q225's policy and TriIndexSpec; an identity
-        // rewrite of the whole adjacency would only re-pay state IO)
-        var total = 0L
-        Replay.waves(triEdges(s, dir), 3, col("u"), col("v")) { (w, i) =>
-          total += idx.foldWave(s, w, i)
-        }
-        idx.stats(s)
-          .select(col("n_nodes"), col("n_edges"), lit(total).as("n_triangles"))
-      },
-      Some(triangleOracleSql)),
+    // append-order-independent). The running count is versioned by
+    // wave id like q225's, and the shared policy folds waves 0-1 before
+    // wave 2. Held to q203's naive 3-way-self-join oracle VERBATIM.
+    tri.waves("q224_triangle_count_incremental"),
 
     // ----------------------------------------------------------------
     // q225: STREAMING triangle maintenance — q224's TriIndex fold
@@ -444,38 +421,7 @@ object AssocQueries {
     // same predecessors and rewrites its versions identically. The
     // report aggregates the maintained degree table, never the
     // accumulated edge list.
-    Q(
-      "q225_stream_triangles",
-      (s, dir) => {
-        val out = Q.fresh(s, "q225_streamtri", dir)
-        val idx = TriIndex(s"$out/store")
-        // derived ONCE, landed twice: without the pin each wave write
-        // re-runs the distinct + self-join + threshold aggregate — the
-        // query's single heaviest chain — from scratch
-        def latestTotalBelow(id: Long): Long =
-          Replay.latestBelow(s"$out/total", id).map { k =>
-            s.read.parquet(s"$out/total/state=$k").head().getLong(0)
-          }.getOrElse(0L)
-        Q.pinned(triEdges(s, dir)) { edges =>
-          Replay.stream(s, out, Replay.split(edges, 2, col("u"), col("v")),
-              parts = 2) { (b, id) =>
-            // threshold 0 so the policy fires under this two-batch gate
-            idx.compactBefore(s, id, maxDeltas = 0)
-            val total = latestTotalBelow(id) + idx.foldWave(s, b, id)
-            s.createDataFrame(
-                java.util.List.of(org.apache.spark.sql.Row(total)),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("total",
-                    org.apache.spark.sql.types.LongType))))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$out/total/state=$id")
-          }
-        }
-        idx.stats(s)
-          .select(col("n_nodes"), col("n_edges"),
-            lit(latestTotalBelow(Long.MaxValue)).as("n_triangles"))
-      },
-      Some(triangleOracleSql)),
+    tri.stream("q225_stream_triangles"),
 
     // ----------------------------------------------------------------
     // q220: STREAMING skyline maintenance — q214's fold deployed at
@@ -489,60 +435,12 @@ object AssocQueries {
     // VERSIONED state dir keyed by the STREAMING batch id; a batch
     // reads the newest state BELOW its own id, so a checkpoint replay
     // recomputes from the same predecessor and overwrites its own
-    // version — deterministic under the replay contract. Three waves,
-    // so the version-GC policy below has a superseded version to
-    // collect; the report reads the final version. AUTO-GC policy (the
-    // snapshot-state analog of delta auto-compaction): at batch start,
-    // versions below the batch's replay predecessor can never be read
-    // again — neither by this batch nor by a replay of it — and are
-    // deleted, bounding live state at two versions.
-    Q(
-      "q220_stream_skyline",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q220_streamsky", dir)
-        val parts = Tables.part(s, dir)
-          .select("p_partkey", "p_retailprice", "p_size")
-        def latestBelow(id: Long): Option[Long] =
-          graft.streaming.Replay.latestBelow(s"$out/sky", id)
-        graft.streaming.Replay.stream(s, out,
-            (0 until 3).map(i => parts.where(col("p_partkey") % 3 === i)),
-            parts = 2) { (b, id) =>
-          // version-GC policy: everything below the replay
-          // predecessor is unreachable — delete, then assert the
-          // bound (predecessor + at most this batch's own stale
-          // version from a crashed attempt)
-          latestBelow(id).foreach { keep =>
-            Option(new java.io.File(s"$out/sky").listFiles())
-              .toSeq.flatten
-              .filter(f => f.getName.startsWith("state=") &&
-                f.getName.stripPrefix("state=").toLong < keep)
-              .foreach(graft.Q.rmrf)
-            require(Option(new java.io.File(s"$out/sky").listFiles())
-              .toSeq.flatten.count(_.getName.startsWith("state=")) <= 2,
-              "q220: version GC did not bound live state")
-          }
-          val prev = latestBelow(id)
-            .map(k => s.read.parquet(s"$out/sky/state=$k"))
-            .getOrElse(b.limit(0))
-          graft.operators.Skyline
-            .skyline2d(prev.unionByName(b), "p_retailprice", "p_size")
-            .write.mode("overwrite").parquet(s"$out/sky/state=$id")
-        }
-        s.read.parquet(s"$out/sky/state=${latestBelow(Long.MaxValue).get}")
-          .select("p_partkey", "p_retailprice", "p_size")
-          .orderBy("p_partkey")
-      },
-      Some("""
-        SELECT p_partkey, p_retailprice, p_size
-        FROM part p
-        WHERE p.p_retailprice IS NOT NULL AND p.p_size IS NOT NULL
-          AND NOT EXISTS (
-          SELECT 1 FROM part q
-          WHERE q.p_retailprice <= p.p_retailprice
-            AND q.p_size >= p.p_size
-            AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
-        ORDER BY p_partkey
-      """)),
+    // version — deterministic under the replay contract. Versions below
+    // the replay predecessor are read neither by the batch nor by a
+    // replay of it, so each write deletes them (Versioned's GC rule),
+    // bounding live state at two versions; the report reads the final
+    // version.
+    skyline.stream("q220_stream_skyline"),
 
     // ----------------------------------------------------------------
     // q217: LOCAL CLUSTERING COEFFICIENTS over q203's thresholded
@@ -876,38 +774,8 @@ object AssocQueries {
     // (fresh x stored + fresh x fresh — disjoint and exact). Pair /
     // brand / order counts are then additive. q198's oracle VERBATIM,
     // three consumers.
-    Q(
-      "q245_basket_incremental",
-      (s, dir) => {
-        val idx = BasketIndex(Q.fresh(s, "q245_basket", dir))
-        // pinned by the wave driver: without the cut every wave re-runs
-        // the lineitem scan + brand broadcast join
-        Replay.waves(basketLines(s, dir), 3, col("ok"), col("ln")) { (w, i) =>
-          idx.compactBefore(s, i, maxDeltas = 1)
-          idx.appendWave(s, w.select("ok", "brand"), i)
-        }
-        basketReport(idx.pairs(s), idx.brands(s), idx.orderCount(s))
-      },
-      Some(basketOracleSql)),
-
-    Q(
-      "q246_stream_basket",
-      (s, dir) => {
-        val out = Q.fresh(s, "q246_streambasket", dir)
-        val idx = BasketIndex(s"$out/store")
-        // derived ONCE: both wave writes filter this frame instead of
-        // re-running the scan + brand join
-        Q.pinned(basketLines(s, dir)) { lines =>
-          Replay.stream(s, out,
-              Replay.split(lines, 2, col("ok"), col("ln")).map(_.select("ok", "brand")),
-              parts = 8) { (b, id) =>
-            idx.compactBefore(s, id, maxDeltas = 0)
-            idx.appendWave(s, b, id)
-          }
-        }
-        basketReport(idx.pairs(s), idx.brands(s), idx.orderCount(s))
-      },
-      Some(basketOracleSql)),
+    basket.waves("q245_basket_incremental"),
+    basket.stream("q246_stream_basket"),
 
     // ----------------------------------------------------------------
     // q214: INCREMENTAL SKYLINE maintenance — q200's Pareto frontier
@@ -927,39 +795,7 @@ object AssocQueries {
     // oracle VERBATIM over the full corpus (the q192→q209 move);
     // AssocPropertySpec pins maintained == one-shot across random
     // splits where later waves dominate earlier frontier rows.
-    Q(
-      "q214_skyline_incremental",
-      (s, dir) => {
-        val root = graft.Q.fresh(s, "q214_skyidx", dir)
-        val parts = Tables.part(s, dir)
-          .select("p_partkey", "p_retailprice", "p_size")
-        // waves by key parity — NOT time/value-ordered: the fold
-        // identity needs no append-order contract (unlike q209)
-        val waves = Seq(parts.where(col("p_partkey") % 2 === 0),
-          parts.where(col("p_partkey") % 2 === 1))
-        waves.zipWithIndex.foreach { case (w, i) =>
-          val prev =
-            if (i == 0) w.limit(0)
-            else s.read.parquet(s"$root/state=${i - 1}")
-          graft.operators.Skyline
-            .skyline2d(prev.unionByName(w), "p_retailprice", "p_size")
-            .write.parquet(s"$root/state=$i")
-        }
-        s.read.parquet(s"$root/state=${waves.length - 1}")
-          .select("p_partkey", "p_retailprice", "p_size")
-          .orderBy("p_partkey")
-      },
-      Some("""
-        SELECT p_partkey, p_retailprice, p_size
-        FROM part p
-        WHERE p.p_retailprice IS NOT NULL AND p.p_size IS NOT NULL
-          AND NOT EXISTS (
-          SELECT 1 FROM part q
-          WHERE q.p_retailprice <= p.p_retailprice
-            AND q.p_size >= p.p_size
-            AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
-        ORDER BY p_partkey
-      """))
+    skyline.waves("q214_skyline_incremental")
   )
 
   /** Supplier pairs sharing at least five orders: q203's edge list, and
@@ -995,6 +831,19 @@ object AssocQueries {
                 FROM e e1 JOIN e e2 ON e2.u = e1.v
                           JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v)
                  AS n_triangles
+      """
+
+  /** q200's NOT EXISTS dominance oracle, shared verbatim by q214/q220. */
+  private val skylineOracleSql = """
+        SELECT p_partkey, p_retailprice, p_size
+        FROM part p
+        WHERE p.p_retailprice IS NOT NULL AND p.p_size IS NOT NULL
+          AND NOT EXISTS (
+          SELECT 1 FROM part q
+          WHERE q.p_retailprice <= p.p_retailprice
+            AND q.p_size >= p.p_size
+            AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
+        ORDER BY p_partkey
       """
 
   /** Order lines with their brand, keyed by (ok, ln): q245/q246's waves. */
@@ -1891,4 +1740,37 @@ object AssocQueries {
 
   private[graft] val cellStats: Seq[CellStat] =
     Seq(chi2, kendall, ks, mwu, spearman, benford, ab, concentration)
+
+  // ------------------------------------------------------------------
+  // The other maintained families of this file, one Folded value each,
+  // generating their waves and stream entries in `defs`.
+
+  /** q203's count in a [[TriIndex]] (q224/q225): each batch's triangles
+    * with at least one new edge, added to the versioned running count. */
+  private[graft] val tri = Folded[TriIndex](triEdges,
+    Replay.split(_, _, col("u"), col("v")),
+    TriIndex(_), (idx, s, b, id) => idx.fold(s, b, id),
+    (idx, s) => idx.stats(s).select(col("n_nodes"), col("n_edges"),
+      lit(idx.triangles(s)).as("n_triangles")),
+    triangleOracleSql)
+
+  /** q198's rules from a [[BasketIndex]] (q245/q246), fed (order, brand)
+    * rows split on the order line. */
+  private[graft] val basket = Folded[BasketIndex](basketLines,
+    (src, n) => Replay.split(src, n, col("ok"), col("ln"))
+      .map(_.select("ok", "brand")),
+    BasketIndex(_), (idx, s, b, id) => idx.appendWave(s, b, id),
+    (idx, s) => basketReport(idx.pairs(s), idx.brands(s), idx.orderCount(s)),
+    basketOracleSql, parts = 8)
+
+  /** q200's frontier as a [[Versioned]] state (q214/q220): each batch
+    * writes skyline(frontier ∪ batch). */
+  private[graft] val skyline = Folded[Versioned](
+    (s, dir) => Tables.part(s, dir).select("p_partkey", "p_retailprice", "p_size"),
+    Replay.split(_, _, col("p_partkey")), Versioned(_),
+    (v, s, b, id) => v.fold(s, id, b.limit(0))(prev =>
+      Skyline.skyline2d(prev.unionByName(b), "p_retailprice", "p_size")),
+    (v, s) => v.latest(s).select("p_partkey", "p_retailprice", "p_size")
+      .orderBy("p_partkey"),
+    skylineOracleSql, pinStream = false)
 }

@@ -16,14 +16,11 @@ import org.apache.spark.sql.types.StructType
   * value column) and hands cells to `report`:
   *  - [[oneShot]]: `report` over the unfolded row-grain cells, with no
   *    store;
-  *  - [[waves]]: three hash waves of the source on `split`, each summed
-  *    into a [[StatCellIndex]], the compaction policy firing once, before
-  *    wave 2; `report` over the maintained cells;
-  *  - [[stream]]: the source minus `split` landed in two hash waves and
-  *    summed per micro-batch (threshold 0, so the policy fires under this
-  *    two-batch gate); `report` over the maintained cells. The index reads
-  *    no stored state while appending, so a replayed batch rewrites its
-  *    delta from the batch alone.
+  *  - [[waves]] and [[stream]]: hash waves of the source on `split`,
+  *    minus `split`, each summed into a [[StatCellIndex]] by the one
+  *    harness, [[Folded]]; `report` over the maintained cells. The index
+  *    reads no stored state while appending, so a replayed batch rewrites
+  *    its delta from the batch alone.
   *
   * Hence `report` must depend only on the per-key sums of the value
   * columns: it gets row-grain cells on the one-shot path and folded cells
@@ -43,26 +40,17 @@ private[graft] final case class CellStat(
   def oneShot: Q =
     Q(names._1, (s, dir) => report(rows(source(s, dir))), Some(oracle))
 
-  def waves: Q = Q(names._2, { (s, dir) =>
-    val idx = StatCellIndex(Q.fresh(s, names._2, dir), schema, valueCols)
-    Replay.waves(source(s, dir), 3, split.map(col): _*) { (w, i) =>
-      idx.compactBefore(s, i, maxDeltas = 1)
-      append(idx, s, w, i)
-    }
-    report(idx.cells(s))
-  }, Some(oracle))
+  /** The maintained consumers on the one harness: each wave is the
+    * source minus `split`, summed into a [[StatCellIndex]]; the stream
+    * lands it as 8 files per wave, unpinned. */
+  val folded: Folded[StatCellIndex] = Folded(source,
+    (src, n) => Replay.split(src, n, split.map(col): _*).map(_.drop(split: _*)),
+    StatCellIndex(_, schema, valueCols), append,
+    (idx, s) => report(idx.cells(s)), oracle, parts = 8, pinStream = false)
 
-  def stream: Q = Q(names._3, { (s, dir) =>
-    val out = Q.fresh(s, names._3, dir)
-    val idx = StatCellIndex(s"$out/store", schema, valueCols)
-    Replay.stream(s, out,
-        Replay.split(source(s, dir), 2, split.map(col): _*).map(_.drop(split: _*)),
-        parts = 8) { (b, id) =>
-      idx.compactBefore(s, id, maxDeltas = 0)
-      append(idx, s, b, id)
-    }
-    report(idx.cells(s))
-  }, Some(oracle))
+  def waves: Q = folded.waves(names._2)
+
+  def stream: Q = folded.stream(names._3)
 
   /** Sums batch `b`'s row-grain cells into `idx` as delta `id`. A count
     * family's rows carry `c = 1`, so counting them is summing `c`; it

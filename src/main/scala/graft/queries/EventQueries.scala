@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
-import graft.operators.{DeltaStore, MorTable, Scd2, Scd2Index}
-import graft.streaming.Replay
+import graft.operators.{DeltaStore, Funnel, MorTable, Scd2, Scd2Index}
+import graft.streaming.{Replay, Versioned}
 
 /** Event-stream analytics: distribution drift, retention cohorts,
   * ordered conversion funnels, and SCD2 validity intervals — the
@@ -200,40 +200,7 @@ object EventQueries {
           Seq("view", "click", "purchase"),
           maxGapUs = 7L * 24 * 3600 * 1000000L)
       },
-      Some("""
-        WITH ev AS (
-          SELECT user_id, event_type,
-                 epoch_us(CAST(ts AS TIMESTAMP)) AS us
-          FROM events
-        ), s1 AS (
-          SELECT user_id, MIN(us) AS t1 FROM ev
-          WHERE event_type = 'view' GROUP BY 1
-        ), s2 AS (
-          SELECT e.user_id, MIN(e.us) AS t2
-          FROM ev e JOIN s1 USING (user_id)
-          WHERE e.event_type = 'click'
-            AND e.us >= s1.t1 AND e.us <= s1.t1 + 604800000000
-          GROUP BY 1
-        ), s3 AS (
-          SELECT e.user_id, MIN(e.us) AS t3
-          FROM ev e JOIN s2 USING (user_id)
-          WHERE e.event_type = 'purchase'
-            AND e.us >= s2.t2 AND e.us <= s2.t2 + 604800000000
-          GROUP BY 1
-        ), staged AS (
-          SELECT '1_view' AS stage FROM s1
-          UNION ALL SELECT '2_click' FROM s2
-          UNION ALL SELECT '3_purchase' FROM s3
-        ), counts AS (
-          SELECT stage, COUNT(*) AS n_users FROM staged GROUP BY 1
-        )
-        SELECT stage, n_users,
-               CAST(n_users AS DOUBLE) /
-                 MAX(CASE WHEN stage = '1_view' THEN n_users END) OVER ()
-                 AS conv_pct
-        FROM counts
-        ORDER BY stage
-      """)),
+      Some(funnelOracleSql)),
 
     // ----------------------------------------------------------------
     // q192: SCD2 VALIDITY INTERVALS — compress each user's event-grain
@@ -268,12 +235,12 @@ object EventQueries {
     // ----------------------------------------------------------------
     // q209: INCREMENTAL SCD2 MAINTENANCE — q192's validity intervals
     // kept up to date under APPENDED attribute events, the way the
-    // dimension actually grows in production: the stream lands in two
-    // time-split waves (every wave-2 event is later than every wave-1
-    // event — the CDC append shape), each wave is compressed to its
-    // own runs ONCE (O(batch); the batch windows never see stored
+    // dimension actually grows in production: the stream lands in three
+    // time slices (every event of a slice is later than every event of
+    // the slice before — the CDC append shape), each wave is compressed
+    // to its own runs ONCE (O(batch); the batch windows never see stored
     // state) and committed atomically to operators/Scd2Index's
-    // fragment store, with a mid-stream COMPACT between the waves so
+    // fragment store, with the shared policy's COMPACT before wave 2 so
     // the fold path itself sits under the gate. The read side stitches
     // fragments at RUN grain — new events close the open interval and
     // open new ones; the corpus is never re-windowed.
@@ -285,25 +252,7 @@ object EventQueries {
     // green row certifies the ingest protocol, the mid-stream compact,
     // and the stitched read end-to-end). Scd2IndexSpec additionally
     // pins random multi-batch splits and the out-of-order guard.
-    Q(
-      "q209_scd2_incremental",
-      (s, dir) => {
-        val idx = Scd2Index(Q.fresh(s, "q209_scd2idx", dir))
-        // derived ONCE: the midpoint agg and both wave filters consume
-        // this frame — 3 scans of events become 1
-        Q.pinned(scd2Events(s, dir)) { ev =>
-          // per-key time-split waves from the global midpoint (usable
-          // because us <= mid / us > mid splits EVERY key in time order)
-          val mid = ev.agg(
-            ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
-            .head().getLong(0)
-          idx.appendBatch(s, ev.where(col("us") <= mid), 1)
-          idx.compact(s)
-          idx.appendBatch(s, ev.where(col("us") > mid), 2)
-        }
-        scd2Report(idx.intervals(s))
-      },
-      Some(scd2OracleSql)),
+    scd2.waves("q209_scd2_incremental"),
 
     // ----------------------------------------------------------------
     // q193: POINT-IN-TIME FEATURE JOIN — the feature-store lookup that
@@ -628,7 +577,7 @@ object EventQueries {
     // ----------------------------------------------------------------
     // q210: STREAMING FUNNEL — q191's ordered conversion funnel
     // maintained at the ingestion edge through Replay.stream (waves
-    // split by event_id parity, so the resume path itself sits under
+    // split by a hash of event_id, so the resume path itself sits under
     // the gate).
     //
     // WHY the maintained state is the stage-event CANDIDATE LOG and
@@ -660,72 +609,7 @@ object EventQueries {
     // predecessor (the q220 idempotence pattern). The in-loop
     // compaction sits under the gate: the report reads the final
     // pruned state. Held to q191's DuckDB oracle VERBATIM.
-    Q(
-      "q210_stream_funnel",
-      (s, dir) => {
-        val out = graft.Q.fresh(s, "q210_streamfunnel", dir)
-        val gap = 7L * 24 * 3600 * 1000000L
-        val stages = Seq("view", "click", "purchase")
-        val ev = Tables.df(s, dir, "events")
-          .selectExpr("event_id", "user_id",
-            s"${Tables.eventsTsMicrosSql(s, dir)} as us", "event_type")
-        def latestBelow(id: Long): Option[String] =
-          graft.streaming.Replay.latestBelow(s"$out/state", id)
-            .map(k => s"$out/state/state=$k")
-        graft.streaming.Replay.stream(s, out,
-            Seq(ev.where(col("event_id") % 2 === 0),
-              ev.where(col("event_id") % 2 === 1)),
-            parts = 2, perFile = true) { (b, id) =>
-          val rows = b.where(col("event_type")
-              .isin("view", "click", "purchase"))
-            .select("user_id", "event_type", "us")
-          val prev = latestBelow(id)
-            .map(s.read.parquet(_)).getOrElse(rows.limit(0))
-          graft.operators.Funnel.pruneCandidates(
-              prev.unionByName(rows),
-              "user_id", "event_type", "us", stages, gap)
-            .write.mode("overwrite").parquet(s"$out/state/state=$id")
-        }
-        // report over the final in-loop-pruned state — the gate
-        // certifies per-batch prune folds + report == one-shot funnel
-        graft.operators.Funnel.report(
-          s.read.parquet(latestBelow(Long.MaxValue).get),
-          "user_id", "event_type", "us", stages, maxGapUs = gap)
-      },
-      Some("""
-        WITH ev AS (
-          SELECT user_id, event_type,
-                 epoch_us(CAST(ts AS TIMESTAMP)) AS us
-          FROM events
-        ), s1 AS (
-          SELECT user_id, MIN(us) AS t1 FROM ev
-          WHERE event_type = 'view' GROUP BY 1
-        ), s2 AS (
-          SELECT e.user_id, MIN(e.us) AS t2
-          FROM ev e JOIN s1 USING (user_id)
-          WHERE e.event_type = 'click'
-            AND e.us >= s1.t1 AND e.us <= s1.t1 + 604800000000
-          GROUP BY 1
-        ), s3 AS (
-          SELECT e.user_id, MIN(e.us) AS t3
-          FROM ev e JOIN s2 USING (user_id)
-          WHERE e.event_type = 'purchase'
-            AND e.us >= s2.t2 AND e.us <= s2.t2 + 604800000000
-          GROUP BY 1
-        ), staged AS (
-          SELECT '1_view' AS stage FROM s1
-          UNION ALL SELECT '2_click' FROM s2
-          UNION ALL SELECT '3_purchase' FROM s3
-        ), counts AS (
-          SELECT stage, COUNT(*) AS n_users FROM staged GROUP BY 1
-        )
-        SELECT stage, n_users,
-               CAST(n_users AS DOUBLE) /
-                 MAX(CASE WHEN stage = '1_view' THEN n_users END) OVER ()
-                 AS conv_pct
-        FROM counts
-        ORDER BY stage
-      """)),
+    funnel.stream("q210_stream_funnel"),
 
     // ----------------------------------------------------------------
     // q216: STREAMING SCD2 maintenance — Scd2Index driven from a
@@ -742,29 +626,7 @@ object EventQueries {
     // Replay.stream's resume a re-processed wave 1 would stitch
     // duplicated runs and fail the n_events columns, so the resume
     // path itself is under the gate.
-    Q(
-      "q216_stream_scd2",
-      (s, dir) => {
-        val out = Q.fresh(s, "q216_streamscd2", dir)
-        val idx = Scd2Index(s"$out/store")
-        // derived ONCE: the midpoint agg and both wave landing writes
-        // consume this frame — 3 scans of events become 1
-        Q.pinned(scd2Events(s, dir)) { ev =>
-          val mid = ev.agg(
-            ((min(col("us")) + max(col("us"))) / lit(2L)).cast("long"))
-            .head().getLong(0)
-          Replay.stream(s, out,
-              Seq(ev.where(col("us") <= mid), ev.where(col("us") > mid)),
-              parts = 2) { (b, id) =>
-            // threshold 0 so the policy fires under this gate; the firing
-            // itself is pinned in AutoCompactSpec
-            idx.compactBefore(s, id, maxDeltas = 0)
-            idx.appendBatch(s, b, id)
-          }
-        }
-        scd2Report(idx.intervals(s))
-      },
-      Some(scd2OracleSql)),
+    scd2.stream("q216_stream_scd2"),
 
     // ----------------------------------------------------------------
     // q222: LATE-DATA SCD2 through the merge-on-read escape hatch —
@@ -904,6 +766,42 @@ object EventQueries {
       Some(scd2OracleSql))
   )
 
+  /** q191's funnel oracle, shared verbatim by q210. */
+  private val funnelOracleSql = """
+        WITH ev AS (
+          SELECT user_id, event_type,
+                 epoch_us(CAST(ts AS TIMESTAMP)) AS us
+          FROM events
+        ), s1 AS (
+          SELECT user_id, MIN(us) AS t1 FROM ev
+          WHERE event_type = 'view' GROUP BY 1
+        ), s2 AS (
+          SELECT e.user_id, MIN(e.us) AS t2
+          FROM ev e JOIN s1 USING (user_id)
+          WHERE e.event_type = 'click'
+            AND e.us >= s1.t1 AND e.us <= s1.t1 + 604800000000
+          GROUP BY 1
+        ), s3 AS (
+          SELECT e.user_id, MIN(e.us) AS t3
+          FROM ev e JOIN s2 USING (user_id)
+          WHERE e.event_type = 'purchase'
+            AND e.us >= s2.t2 AND e.us <= s2.t2 + 604800000000
+          GROUP BY 1
+        ), staged AS (
+          SELECT '1_view' AS stage FROM s1
+          UNION ALL SELECT '2_click' FROM s2
+          UNION ALL SELECT '3_purchase' FROM s3
+        ), counts AS (
+          SELECT stage, COUNT(*) AS n_users FROM staged GROUP BY 1
+        )
+        SELECT stage, n_users,
+               CAST(n_users AS DOUBLE) /
+                 MAX(CASE WHEN stage = '1_view' THEN n_users END) OVER ()
+                 AS conv_pct
+        FROM counts
+        ORDER BY stage
+      """
+
   /** (k, tie, us, attr) per event: the Scd2Index input of q209, q216,
     * q222 and q230. */
   private def scd2Events(s: org.apache.spark.sql.SparkSession, dir: String) =
@@ -958,4 +856,41 @@ object EventQueries {
         FROM runs
         ORDER BY user_id, island
       """
+
+  /** `n` slices of `ev` cut at equal `us` steps between its bounds: every
+    * event of slice `i` is earlier than every event of slice `i + 1`,
+    * the append order [[Scd2Index]]'s horizon guard requires. */
+  private def timeSlices(ev: org.apache.spark.sql.DataFrame, n: Int) = {
+    val b = ev.agg(min("us"), max("us")).head()
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    val cuts = Long.MinValue +: (1 until n).map(i => lo + (hi - lo) / n * i) :+
+      Long.MaxValue
+    (0 until n).map(i => ev.where(col("us") > cuts(i) && col("us") <= cuts(i + 1)))
+  }
+
+  /** q192's intervals maintained in an [[Scd2Index]] (q209/q216), fed
+    * time slices of the events. */
+  private[graft] val scd2 = Folded[Scd2Index](scd2Events, timeSlices,
+    Scd2Index(_), (idx, s, b, id) => idx.appendBatch(s, b, id),
+    (idx, s) => scd2Report(idx.intervals(s)), scd2OracleSql)
+
+  /** q191's funnel from a [[Versioned]] candidate log (q210): each batch
+    * writes the pruned union of the log and its stage events. */
+  private[graft] val funnel = {
+    val gap = 7L * 24 * 3600 * 1000000L
+    val stages = Seq("view", "click", "purchase")
+    Folded[Versioned](
+      (s, dir) => Tables.df(s, dir, "events").selectExpr("event_id", "user_id",
+        s"${Tables.eventsTsMicrosSql(s, dir)} as us", "event_type"),
+      Replay.split(_, _, col("event_id")), Versioned(_),
+      (v, s, b, id) => {
+        val rows = b.where(col("event_type").isin(stages: _*))
+          .select("user_id", "event_type", "us")
+        v.fold(s, id, rows.limit(0))(prev => Funnel.pruneCandidates(
+          prev.unionByName(rows), "user_id", "event_type", "us", stages, gap))
+      },
+      (v, s) => Funnel.report(v.latest(s), "user_id", "event_type", "us",
+        stages, maxGapUs = gap),
+      funnelOracleSql, pinStream = false)
+  }
 }

@@ -272,12 +272,11 @@ object ExtraQueries {
             col("o_totalprice").as("asof_totalprice"))
         graft.streaming.Replay.run(out, s.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", "2").parquet(s"$out/in")) {
-          (b, _) =>
-            AsOfJoin.asof(b, orders,
+          (b, id) =>
+            graft.streaming.Replay.writeBatch(AsOfJoin.asof(b, orders,
                 "user_id", "o_custkey", "ts", "o_orderdate",
                 Seq("asof_orderkey", "asof_totalprice"),
-                strategy = "broadcast")
-              .write.mode("append").parquet(s"$out/enriched")
+                strategy = "broadcast"), s"$out/enriched", id)
         }
         s.read.parquet(s"$out/enriched")
           .select("event_id", "user_id", "ts", "asof_orderkey", "asof_totalprice")
@@ -377,12 +376,11 @@ object ExtraQueries {
         graft.streaming.Replay.stream(s, out,
             Seq(ev.where(col("event_id") % 2 === 0),
               ev.where(col("event_id") % 2 === 1)),
-            parts = 2, perFile = true) { (b, _) =>
-          AsOfJoin.asofSalted(b, orders,
+            parts = 2, perFile = true) { (b, id) =>
+          graft.streaming.Replay.writeBatch(AsOfJoin.asofSalted(b, orders,
               "user_id", "o_custkey", "ts", "o_orderdate",
               payload = Seq("asof_orderkey", "asof_totalprice"),
-              buckets = 8)
-            .write.mode("append").parquet(s"$out/joined")
+              buckets = 8), s"$out/joined", id)
         }
         s.read.parquet(s"$out/joined")
           .select("event_id", "user_id", "ts", "asof_orderkey",
@@ -1454,7 +1452,7 @@ object ExtraQueries {
     // ----------------------------------------------------------------
     // q181: INCREMENTALLY-MAINTAINED mergeable sketches — q44's three
     // sketch families (count-min, k-minimum-values, ε-grid) maintained
-    // across four event_id % 4 ingest batches through operators/
+    // across three hash-split ingest batches through operators/
     // SketchIndex: each batch contributes O(sketch)-sized slices in
     // ONE grouped atomic commit (cms cells additive; grid cells
     // additive; kmv keeps each batch's k smallest distinct hashes —
@@ -1465,24 +1463,7 @@ object ExtraQueries {
     // the corpus is never re-sketched — and the mergeability being
     // LOSSLESS is what lets q44's one-shot oracle gate this entry
     // VERBATIM.
-    Q(
-      "q181_incremental_sketches",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        import graft.operators.SketchIndex
-        val out = Q.fresh(s, "q181_sketchidx", dir)
-        // derived ONCE (the q221 move): four batch filters consume the
-        // events scan — materialize once, filter blocks
-        val idx = SketchIndex(out)
-        Q.pinned(Tables.events(s, dir)) { ev =>
-          (0 to 3).foreach { k =>
-            idx.compactBefore(s, k, maxDeltas = 1)
-            idx.appendBatch(s, ev.where(col("event_id") % 4 === k), k)
-          }
-        }
-        serveSketchReport(s, idx)
-      },
-      Some(sketchOracleSql)),
+    sketch.waves("q181_incremental_sketches"),
 
     // ----------------------------------------------------------------
     // q183: q181's sketch maintenance as an actual STREAM CONSUMER —
@@ -1495,26 +1476,21 @@ object ExtraQueries {
     // the maintained state with q181's exact report — and because the
     // merge is lossless whatever the batch boundaries, q44's one-shot
     // oracle STILL gates it verbatim: the same answer from the batch
-    // build, the 4-batch replay, and the streaming consumer.
-    Q(
-      "q183_stream_sketch_maintenance",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        import graft.operators.SketchIndex
-        val out = Q.fresh(s, "q183_streamsketch", dir)
-        val ev = Tables.events(s, dir)
-        val in = ev.select("event_id", "event_type", "user_id", "value")
-        val idx = SketchIndex(s"$out/state")
-        graft.streaming.Replay.stream(s, out,
-            Seq(in.where(col("event_id") % 2 === 0),
-              in.where(col("event_id") % 2 === 1)),
-            parts = 2, perFile = true) { (b, id) =>
-          idx.appendBatch(s, b, id)
-        }
-        serveSketchReport(s, idx)
-      },
-      Some(sketchOracleSql))
+    // build, the 3-batch replay, and the streaming consumer.
+    sketch.stream("q183_stream_sketch_maintenance")
   )
+
+  /** q44's sketches maintained in a [[graft.operators.SketchIndex]]
+    * (q181/q183), fed events split on event_id. Lazy: `defs` initializes
+    * first. */
+  private[graft] lazy val sketch = Folded[graft.operators.SketchIndex](
+    (s, dir) => Tables.events(s, dir)
+      .select("event_id", "event_type", "user_id", "value"),
+    graft.streaming.Replay.split(_, _, col("event_id")),
+    graft.operators.SketchIndex(_),
+    (idx, s, b, id) => idx.appendBatch(s, b, id),
+    (idx, s) => serveSketchReport(s, idx), sketchOracleSql, pinStream = false)
+
   /** q44/q181's shared oracle: the ONE-SHOT sketch build spelled in
     * DuckDB — q181's incrementally-maintained sketches must reproduce
     * it exactly (mergeability is lossless).

@@ -465,16 +465,15 @@ object JoinQueries {
         graft.streaming.Replay.stream(s, out,
             Seq(ev.where(col("event_id") % 2 === 0),
               ev.where(col("event_id") % 2 === 1)),
-            parts = 2, perFile = true) { (b, _) =>
+            parts = 2, perFile = true) { (b, id) =>
           // event e attributes to purchase p iff t_e − t_p ∈ (0, W]
           // ⇔ t_p − t_e ∈ (−W−1, −1] on integer micros (q147's
           // exact reversal)
-          BandJoin.bandJoin(b, purch,
+          graft.streaming.Replay.writeBatch(BandJoin.bandJoin(b, purch,
               "user_id", "p_user", "t_us", "p_us",
               lo = -W - 1, hi = -1, payload = Seq("purchase_id"),
               strategy = "broadcast")
-            .select("purchase_id", "event_type")
-            .write.mode("append").parquet(s"$out/pairs")
+            .select("purchase_id", "event_type"), s"$out/pairs", id)
         }
         val attributed = s.read.parquet(s"$out/pairs")
           .groupBy("purchase_id")
@@ -518,14 +517,13 @@ object JoinQueries {
         graft.streaming.Replay.stream(s, out,
             Seq(ev.where(col("event_id") % 2 === 0),
               ev.where(col("event_id") % 2 === 1)),
-            parts = 2, perFile = true) { (b, _) =>
+            parts = 2, perFile = true) { (b, id) =>
           // same band reversal as q152 (t_p − t_e ∈ (−W−1, −1]),
           // but through the co-partitioned sort-merge exec
-          BandJoin.bandJoin(b, purch,
+          graft.streaming.Replay.writeBatch(BandJoin.bandJoin(b, purch,
               "user_id", "p_user", "t_us", "p_us",
               lo = -W - 1, hi = -1, payload = Seq("purchase_id"))
-            .select("purchase_id", "event_type")
-            .write.mode("append").parquet(s"$out/pairs")
+            .select("purchase_id", "event_type"), s"$out/pairs", id)
         }
         val attributed = s.read.parquet(s"$out/pairs")
           .groupBy("purchase_id")

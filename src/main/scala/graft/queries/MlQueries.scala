@@ -22,6 +22,35 @@ object MlQueries {
       "s -> (CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE)) * " +
       "(CAST(s[1] AS DOUBLE) - CAST(s[2] AS DOUBLE))), (x, y) -> x + y)"
 
+  /** The embeddings' content fingerprint, as (artifact column, DuckDB
+    * aggregate) pairs: the count, Σ vec_id and the bounds of the first
+    * component, which both engines compute exactly (no hash function, no
+    * float rounding). Two corpora of equal size get apart artifacts. */
+  private val embFingerprint = Seq("n" -> "COUNT(*)", "id_sum" -> "SUM(vec_id)",
+    "e1_min" -> "MIN(embedding[1])", "e1_max" -> "MAX(embedding[1])")
+
+  /** The oracle's `WHERE` over an artifact: its fingerprint is the live
+    * corpus's. The oracle reads artifacts `union_by_name`, so one written
+    * without these columns matches nothing instead of failing the read. */
+  private[graft] def embArtifactSql: String = embFingerprint
+    .map { case (c, agg) => s"$c = (SELECT $agg FROM embeddings)" }
+    .mkString(" AND ")
+
+  /** [[embFingerprint]]'s values over `emb`, computed by Spark. */
+  private def fingerprint(emb: org.apache.spark.sql.DataFrame): Seq[Any] = {
+    val e1 = element_at(col("embedding"), 1)
+    emb.agg(count(lit(1)), sum("vec_id"), min(e1), max(e1)).head().toSeq
+  }
+
+  /** Writes oracle artifact `tag` with fingerprint `fp` as its columns,
+    * under a subdir keyed by the same values. */
+  private def writeArtifact(tag: String, df: org.apache.spark.sql.DataFrame,
+                            fp: Seq[Any]): Unit =
+    embFingerprint.map(_._1).zip(fp)
+      .foldLeft(df) { case (d, (c, v)) => d.withColumn(c, lit(v)) }
+      .coalesce(1).write.mode("overwrite")
+      .parquet(Q.oracleArtifact(tag, fp.mkString("_")))
+
   def defs: Vector[Q] = Vector(
     // ----------------------------------------------------------------
     // q64: per-group closed-form OLS (simple regression of extended
@@ -194,7 +223,8 @@ object MlQueries {
     // score from integer micro-unit LUT sums, exact cosine re-rank —
     // is pure arithmetic, so the oracle HASH-GATES it: the entry
     // persists the trained codebook as a DuckDB-readable parquet
-    // sidecar (Q.oracleArtifact: fixed root, scale-keyed subdir) and
+    // sidecar (Q.oracleArtifact: fixed root, a subdir keyed by the
+    // corpus's content fingerprint, which the oracle matches) and
     // the oracle replays the whole serve pipeline from that artifact.
     // Fold orders mirror exactly (dotSql ≡ DotProductF; the LUT is
     // quantized BIGINTs so the per-candidate sum is order-free).
@@ -210,9 +240,7 @@ object MlQueries {
         val codebook = graft.ml.PqIndex.trainIfAbsent(s, emb,
           s"${Q.scratch(s, "q101_pq", dir)}/codebook_n${n}_m8_k64_s42",
           m = 8, k = 64)
-        codebook.withColumn("n", lit(n))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(Q.oracleArtifact("q101_pq", n))
+        writeArtifact("q101_pq", codebook, fingerprint(emb))
         val codes = graft.ml.PqIndex.encode(emb, codebook)
         graft.ml.PqIndex.searchTopK(emb, codebook, codes,
             pmod(col("vec_id"), lit(100)) === 0 && col("vec_id") <= 2000,
@@ -222,8 +250,9 @@ object MlQueries {
       Some(s"""
         WITH cb AS (
           SELECT sub, code, centroid
-          FROM read_parquet('/tmp/graft_q101_pq_oracle/*/*.parquet')
-          WHERE n = (SELECT COUNT(*) FROM embeddings)
+          FROM read_parquet('/tmp/graft_q101_pq_oracle/*/*.parquet',
+                            union_by_name = true)
+          WHERE $embArtifactSql
         ), nrm AS (
           SELECT vec_id, embedding,
                  SQRT(${SimilarityQueries.dotSql("embedding", "embedding")}) AS nn
@@ -300,12 +329,9 @@ object MlQueries {
         val (cells, centroids) = graft.ml.IvfIndex.buildOrLoad(s, emb,
           nlist = 16,
           path = s"${Q.scratch(s, "q102_ivf", dir)}/kmeans_n${n}_l16_s42")
-        centroids.withColumn("n", lit(n))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(Q.oracleArtifact("q102_centroids", n))
-        cells.select(col("vec_id"), col("cell_id")).withColumn("n", lit(n))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(Q.oracleArtifact("q102_cells", n))
+        val fp = fingerprint(emb)
+        writeArtifact("q102_centroids", centroids, fp)
+        writeArtifact("q102_cells", cells.select(col("vec_id"), col("cell_id")), fp)
         graft.ml.IvfIndex.searchTopK(cells, centroids,
             pmod(col("vec_id"), lit(100)) === 0 && col("vec_id") <= 2000,
             k = 5, nprobe = 4)
@@ -314,12 +340,14 @@ object MlQueries {
       Some(s"""
         WITH cent AS (
           SELECT cell_id, centroid
-          FROM read_parquet('/tmp/graft_q102_centroids_oracle/*/*.parquet')
-          WHERE n = (SELECT COUNT(*) FROM embeddings)
+          FROM read_parquet('/tmp/graft_q102_centroids_oracle/*/*.parquet',
+                            union_by_name = true)
+          WHERE $embArtifactSql
         ), cells AS (
           SELECT vec_id, cell_id
-          FROM read_parquet('/tmp/graft_q102_cells_oracle/*/*.parquet')
-          WHERE n = (SELECT COUNT(*) FROM embeddings)
+          FROM read_parquet('/tmp/graft_q102_cells_oracle/*/*.parquet',
+                            union_by_name = true)
+          WHERE $embArtifactSql
         ), nrm AS (
           SELECT vec_id, embedding,
                  ${SimilarityQueries.dotSql("embedding", "embedding")} AS n2

@@ -1628,8 +1628,8 @@ object PipelineQueries {
             .option("maxFilesPerTrigger", "2").parquet(s"$out/in")
             .withColumn("wmts", col("ts").cast("timestamp")),
           "wmts", "3650 days", Seq("event_id"))
-        graft.streaming.Replay.run(out, deduped) { (b, _) =>
-          b.drop("wmts").write.mode("append").parquet(s"$out/deduped")
+        graft.streaming.Replay.run(out, deduped) { (b, id) =>
+          graft.streaming.Replay.writeBatch(b.drop("wmts"), s"$out/deduped", id)
         }
         s.read.parquet(s"$out/deduped")
           .select("event_id", "ts", "user_id", "event_type", "value")
@@ -1918,8 +1918,8 @@ object PipelineQueries {
         graft.streaming.Replay.stream(s, out,
             Seq(train.where(col("doc_id") % 2 === 0),
               train.where(col("doc_id") % 2 === 1)),
-            parts = 2, perFile = true) { (b, _) =>
-          b.withColumn("toks", expr(toksExpr))
+            parts = 2, perFile = true) { (b, id) =>
+          graft.streaming.Replay.writeBatch(b.withColumn("toks", expr(toksExpr))
             .select(col("doc_id"), explode(expr(trisExpr)).as("tri"))
             .join(broadcast(evalTris), Seq("tri"), "left")
             .groupBy("doc_id")
@@ -1928,8 +1928,7 @@ object PipelineQueries {
             .withColumn("contamination_q",
               floor(col("n_hits").cast("double") / col("n_tris").cast("double")
                 * lit(1000000.0) + lit(0.5)).cast("bigint"))
-            .where(col("contamination_q") < 50000)
-            .write.mode("append").parquet(s"$out/kept")
+            .where(col("contamination_q") < 50000), s"$out/kept", id)
         }
         s.read.parquet(s"$out/kept")
           .select("doc_id", "n_tris", "n_hits", "contamination_q")

@@ -313,15 +313,14 @@ object ProfileQueries {
           // State keyed by the STREAMING batch id and written with
           // overwrite: foreachBatch is at-least-once, so a replayed
           // micro-batch REWRITES its own contribution instead of
-          // double-counting it (the q216/q220 idempotence pattern —
-          // a bare append would inflate n_rows on replay).
-          b.select(col("user_id").as("k"))
+          // double-counting it (a bare append would inflate n_rows on
+          // replay).
+          graft.streaming.Replay.writeBatch(b.select(col("user_id").as("k"))
             .groupBy("k").agg(count(lit(1)).as("n_rows"))
             .join(broadcast(parents.withColumn("__p", lit(1))),
               Seq("k"), "left")
             .select(col("k"), col("n_rows"),
-              col("__p").isNull.as("orphan"))
-            .write.mode("overwrite").parquet(s"$out/keys/batch=$id")
+              col("__p").isNull.as("orphan")), s"$out/keys", id)
         }
         val state = s.read.parquet(s"$out/keys")
           .groupBy("k")

@@ -3,7 +3,6 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.functions.DotProductF
 import graft.operators.{CcIndex, ConnectedComponents}
-import graft.streaming.Replay
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -235,6 +234,17 @@ object SimilarityQueries {
         SELECT id AS name, MIN(r) AS component
         FROM reach GROUP BY id ORDER BY name
       """
+
+  /** q62's components maintained in a [[CcIndex]] (q219/q221), fed
+    * near-dup edges split on the pair. */
+  private[graft] val cc = Folded[CcIndex](nearDupPairs,
+    graft.streaming.Replay.split(_, _, col("name_a"), col("name_b")),
+    CcIndex(_),
+    (idx, s, b, id) => idx.appendWave(s, b, id),
+    (idx, s) => idx.labels(s)
+      .select(col("id").as("name"), col("comp").as("component"))
+      .orderBy("name"),
+    dedupComponentsOracleSql)
 
   /** The q35 pipeline as a reusable stage: MinHash band LSH candidates,
     * then exact capped-shingle Jaccard on candidates only. Returns
@@ -1044,24 +1054,7 @@ object SimilarityQueries {
     // oracle VERBATIM; the fold identity is
     // additionally property-pinned across random splits in
     // ConnectedComponentsPropertySpec.
-    Q(
-      "q219_dedup_components_incremental",
-      (s, dir) => {
-        val idx = CcIndex(Q.fresh(s, "q219_ccidx", dir))
-        // pinned by the wave driver: each wave's fold evaluates its edge
-        // frame several times (bucket collects + condense joins), and
-        // without the cut every evaluation re-runs the levenshtein
-        // blocking join — in production the edge waves ARE the input
-        Replay.waves(nearDupPairs(s, dir), 3,
-            col("name_a"), col("name_b")) { (w, i) =>
-          idx.compactBefore(s, i, maxDeltas = 1)
-          idx.appendWave(s, w, i)
-        }
-        idx.labels(s)
-          .select(col("id").as("name"), col("comp").as("component"))
-          .orderBy("name")
-      },
-      Some(dedupComponentsOracleSql)),
+    cc.waves("q219_dedup_components_incremental"),
 
     // ----------------------------------------------------------------
     // q221: STREAMING connected components — q219's CcIndex fold driven
@@ -1084,26 +1077,7 @@ object SimilarityQueries {
     // TWICE on one checkpoint, putting the resume path itself under
     // the gate; per-wave commits stay bounded by moved rows (touched
     // components + batch — the q219 state-IO discipline).
-    Q(
-      "q221_stream_dedup_components",
-      (s, dir) => {
-        val out = Q.fresh(s, "q221_streamcc", dir)
-        val idx = CcIndex(s"$out/store")
-        // derived once, landed once (two wave writes filter it)
-        Q.pinned(nearDupPairs(s, dir)) { pairs =>
-          Replay.stream(s, out,
-              Replay.split(pairs, 2, col("name_a"), col("name_b")),
-              parts = 2) { (b, id) =>
-            // threshold 0 so the policy fires under this two-batch gate
-            idx.compactBefore(s, id, maxDeltas = 0)
-            idx.appendWave(s, b, id)
-          }
-        }
-        idx.labels(s)
-          .select(col("id").as("name"), col("comp").as("component"))
-          .orderBy("name")
-      },
-      Some(dedupComponentsOracleSql)),
+    cc.stream("q221_stream_dedup_components"),
 
     // ----------------------------------------------------------------
     // q63: the SAME dedup-component problem solved by alternating

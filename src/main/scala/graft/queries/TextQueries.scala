@@ -773,11 +773,11 @@ object TextQueries {
         graft.streaming.Replay.stream(s, out,
             Seq(in.where(col("doc_id") % 2 === 0),
               in.where(col("doc_id") % 2 === 1)),
-            parts = 2, perFile = true) { (b, _) =>
-          b.select(col("doc_id"), col("source"), scoreQ.as("score_q"))
-            .join(broadcast(cuts), Seq("source"))
-            .where(col("score_q") >= col("cut_q"))
-            .write.mode("append").parquet(s"$out/kept")
+            parts = 2, perFile = true) { (b, id) =>
+          graft.streaming.Replay.writeBatch(
+            b.select(col("doc_id"), col("source"), scoreQ.as("score_q"))
+              .join(broadcast(cuts), Seq("source"))
+              .where(col("score_q") >= col("cut_q")), s"$out/kept", id)
         }
         s.read.parquet(s"$out/kept")
           .select("doc_id", "source", "score_q", "cut_q")

@@ -17,7 +17,9 @@ import org.apache.spark.sql.types.StructType
   * `append`.
   *
   * The batch-incremental twin is [[waves]]: the same body contract over
-  * hash waves of one pinned frame, without landing or a checkpoint.
+  * waves of one pinned frame, without landing or a checkpoint. Every
+  * maintained family runs both through one harness,
+  * [[graft.queries.Folded]].
   *
   * Contract for a body: AvailableNow runs a lifecycle's micro-batches
   * serially, and batch `id - 1`'s checkpoint commit precedes batch `id`,
@@ -25,7 +27,9 @@ import org.apache.spark.sql.types.StructType
   * horizon [[graft.operators.Maintained.compactBefore]] folds at),
   * while batch `id` itself may be a replay of a crashed attempt, so a
   * body whose output must be exactly-once rewrites, rather than adds
-  * to, what it wrote under `id`.
+  * to, what it wrote under `id`: a row-wise sink through [[writeBatch]],
+  * a snapshot state through [[Versioned]], a delta store by replacing
+  * its delta `id`.
   *
   * Each lifecycle runs on a clone of the session, so a per-session
   * executor classloader would recompile every batch's generated code;
@@ -44,28 +48,26 @@ object Replay {
     id.toInt
   }
 
-  /** Newest version `K` below `id` among the `state=K` dirs of `dir`:
-    * the predecessor a versioned-state batch reads, so that a replay of
-    * batch `id` recomputes from the same input. */
-  def latestBelow(dir: String, id: Long): Option[Long] =
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .map(_.getName).filter(_.startsWith("state="))
-      .map(_.stripPrefix("state=").toLong).filter(_ < id)
-      .maxOption
-
   /** `n` disjoint waves of `src`: wave `i` holds the rows whose `key`
     * hashes to `i` mod `n`. */
   def split(src: DataFrame, n: Int, key: Column*): Seq[DataFrame] =
     (0 until n).map(i => src.where(pmod(hash(key: _*), lit(n)) === i))
 
   /** The batch-incremental driver: pin `src` with `localCheckpoint`, run
-    * `body(wave, i)` over its [[split]] for `i = 0 until n` in order,
-    * and release the pin in `finally`, on success or failure alike.
+    * `body(wave, i)` over the waves `split` cuts from it, in order, and
+    * release the pin in `finally`, on success or failure alike.
     * The pin lives only as long as the waves: whatever reads the result
     * afterwards must read the store the body wrote, not `src`. */
-  def waves(src: DataFrame, n: Int, key: Column*)
+  def waves(src: DataFrame, split: DataFrame => Seq[DataFrame])
            (body: (DataFrame, Int) => Unit): Unit =
-    graft.Q.pinned(src)(split(_, n, key: _*).zipWithIndex.foreach(body.tupled))
+    graft.Q.pinned(src)(split(_).zipWithIndex.foreach(body.tupled))
+
+  /** A row-wise sink's write of batch `id`: `rows` overwrite
+    * `$dir/batch=<id>`, so a replayed batch replaces its rows instead of
+    * adding them a second time. Reading `dir` back yields every batch's
+    * rows once, plus the `batch` partition column. */
+  def writeBatch(rows: DataFrame, dir: String, id: Int): Unit =
+    rows.write.mode("overwrite").parquet(s"$dir/batch=$id")
 
   /** Land each wave under `$root/in` (`repartition(parts)` files) and
     * [[drain]] after each one. The stream schema is `waves.head`'s. */

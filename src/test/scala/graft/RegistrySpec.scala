@@ -31,7 +31,7 @@ class RegistrySpec extends AnyFunSuite {
       n + "\u0000" + SparkEntry.oracleSql.getOrElse(n, "-") + "\u0000"
     }
     assert(sha256(pairs) ==
-      "4a30848a6e792d39dd180089a6106743e8912994f9dce6d942e5c7210e6657cc")
+      "5f4bbc4b5f4d210c89676a8f68cca7f1fa3e716292ec635d7856818168d376d4")
   }
 
   /** The query files in `SparkEntry`'s order; each name is followed by

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Replay
+import graft.streaming.{Replay, Versioned}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,9 +9,10 @@ import scala.collection.mutable.ArrayBuffer
 
 /** The checkpoint-resume driver every stream query runs: resume
   * processes only new files, per-file batching, failure surfacing,
-  * the wave-0 error-if-exists landing, the batch-id guard and the
-  * versioned-state lookup; and the batch-wave driver: hash split and
-  * the pin released on success and failure. */
+  * the wave-0 error-if-exists landing, the batch-id guard, the
+  * versioned-state lookup and the replay-safe row-wise sink; and the
+  * batch-wave driver: hash split and the pin released on success and
+  * failure. */
 class ReplaySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -83,16 +84,26 @@ class ReplaySpec extends AnyFunSuite {
 
   test("latestBelow: empty dir, gaps, and id equal to an existing version") {
     val dir = tmp()
-    assert(Replay.latestBelow(dir, Long.MaxValue).isEmpty)
-    assert(Replay.latestBelow(s"$dir/missing", 5).isEmpty)
+    assert(Versioned(dir).latestBelow(Long.MaxValue).isEmpty)
+    assert(Versioned(s"$dir/missing").latestBelow(5).isEmpty)
     Seq("state=0", "state=3", "state=7", "_SUCCESS").foreach { n =>
       new java.io.File(s"$dir/$n").mkdirs()
     }
-    assert(Replay.latestBelow(dir, 0).isEmpty)
-    assert(Replay.latestBelow(dir, 5).contains(3L))
-    assert(Replay.latestBelow(dir, 3).contains(0L))
-    assert(Replay.latestBelow(dir, 7).contains(3L))
-    assert(Replay.latestBelow(dir, Long.MaxValue).contains(7L))
+    assert(Versioned(dir).latestBelow(0).isEmpty)
+    assert(Versioned(dir).latestBelow(5).contains(3L))
+    assert(Versioned(dir).latestBelow(3).contains(0L))
+    assert(Versioned(dir).latestBelow(7).contains(3L))
+    assert(Versioned(dir).latestBelow(Long.MaxValue).contains(7L))
+  }
+
+  test("writeBatch: a replayed batch id stores each of its rows once") {
+    val dir = tmp()
+    val rows = spark.range(0, 10).toDF("v")
+    Replay.writeBatch(rows.where(col("v") < 5), dir, 0)
+    Replay.writeBatch(rows.where(col("v") >= 5), dir, 1)
+    Replay.writeBatch(rows.where(col("v") >= 5), dir, 1)
+    assert(spark.read.parquet(dir).select("v").as[Long].collect().sorted.toSeq ==
+      (0L until 10L))
   }
 
   private def pinned() = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -110,7 +121,7 @@ class ReplaySpec extends AnyFunSuite {
     val before = pinned()
     val seen = ArrayBuffer.empty[(Int, Long)]
     var during = Set.empty[Int]
-    Replay.waves(spark.range(0, 60).toDF("v"), 4, col("v")) { (w, i) =>
+    Replay.waves(spark.range(0, 60).toDF("v"), Replay.split(_, 4, col("v"))) { (w, i) =>
       during = pinned() -- before
       seen += ((i, w.count()))
     }
@@ -124,7 +135,7 @@ class ReplaySpec extends AnyFunSuite {
     val before = pinned()
     val seen = ArrayBuffer.empty[Int]
     val e = intercept[IllegalStateException] {
-      Replay.waves(spark.range(0, 60).toDF("v"), 3, col("v")) { (_, i) =>
+      Replay.waves(spark.range(0, 60).toDF("v"), Replay.split(_, 3, col("v"))) { (_, i) =>
         seen += i
         if (i == 1) throw new IllegalStateException("wave boom")
       }
